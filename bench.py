@@ -13,6 +13,10 @@ oracle SQL over the same parquet — reported per query as
 Timing method: median of 3 runs after 1 warm-up; Spark queries are
 materialized with a noop write (full execution, no driver collect
 cost); DuckDB with fetchall on the same connection.
+
+The four op tiers (sf, 10×, 100×, 1000×) are rows of `TIERS`, each run
+by `_run_tier`; `tools/measure.py` resolves its `--tier` through the
+same table.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import os
 import statistics
 import sys
 import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -73,44 +78,7 @@ SCALE_HEADLINE = (
     "dedup_ngram_jaccard", # 15k docs, 9× pair work (real duplicates)
     "sim_knn_exact",       # 10 queries × 5k corpus vectors
 )
-# Median-of-3 after warm-up: the r4 verdict noted DuckDB's jaccard
-# time swings 7-12 s run-to-run on this corpus, which moved the
-# recorded scale ratio between 0.44× and 0.87× while Spark's own
-# times stayed stable — a single sample was the noisiest number in
-# the whole evidence chain. ~45 s extra wall per bench run.
-SCALE_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_RUNS", "3"))
 
-# 100× tier (VERDICT r5 item 3): the 10× corpus proved the per-query
-# gap AMORTIZES but not that it CROSSES — 9 headline queries stayed
-# individually >2× DuckDB at sf0.1 because Spark's fixed ~0.2-0.4 s
-# scheduling+py4j floor dominates sub-second work. This tier grows
-# the fact tables ~100× sf0.1 (lineitem 60M rows, orders 15M, events
-# 10M, embeddings 200k, documents ×10 — ~sf10-equivalent, a few GB of
-# parquet) and records per-query Spark/DuckDB ratios for exactly the
-# nine letter-weak queries, so the crossover itself is on the record.
-# dedup_ngram_jaccard is excluded: its pair work grows quadratically
-# in the duplicate factor (documents ×10 → 100× pairs) and it already
-# beats DuckDB 0.2-0.3× at both smaller tiers.
-SCALE100_TABLES = {
-    "lineitem": ("l_orderkey", 100),
-    "orders": ("o_orderkey", 100),
-    "events": ("event_id", 100),
-    "embeddings": ("vec_id", 100),
-    "documents": ("doc_id", 10),
-}
-SCALE100_SHIFT_GROUPS = ({"lineitem", "orders"},)
-SCALE100_HEADLINE = (
-    "agg_hash",
-    "agg_partial_final",
-    "join_multiway",
-    "join_asof",
-    "win_topk_per_group",
-    "agg_pivot",
-    "distinct_rows",
-    "sim_knn_exact",
-    "text_tf_idf",
-)
-SCALE100_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE100_RUNS", "3"))
 
 # Dedicated bucketed-vs-shuffle section (VERDICT r6 item 4): the
 # fact-fact core (orders⋈lineitem + groupBy on the join key, ~15M
@@ -120,7 +88,7 @@ SCALE100_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE100_RUNS", "3"))
 # (the honest in-engine twin), and DuckDB with the 15M-row transfer
 # collapsed (COUNT/SUM wrap: strictly LESS DuckDB work, ratio
 # conservative against Spark — fetchall of 15M tuples would time the
-# Python transfer, not the join). Kept OUT of SCALE100_HEADLINE so
+# Python transfer, not the join). Kept OUT of the 100× op tuple so
 # the tier total stays comparable round-over-round; this workload
 # class (mass per-key output) is reported on its own.
 _BUCKETED_DUCK_WRAP = (
@@ -128,51 +96,329 @@ _BUCKETED_DUCK_WRAP = (
     "FROM ({sql})"
 )
 
-# 1000× tier: lineitem 600M rows / orders 150M / events 100M /
-# embeddings 2M (~sf100-equivalent, ~4.9 GB parquet, ~40 s one-time
-# map-side build). Measured r6: agg_hash crosses to 1.28×,
-# agg_partial_final 1.48×, win_topk_per_group 0.86× (Spark WINS),
-# join_asof 0.089× (Spark 11× faster — DuckDB's native ASOF collapses
-# at 100M events), sim_knn_exact 2.2× with the HOF fold (trajectory
-# 8×→3.8×→2.2×; an unrolled-64-term dot was measured 6× SLOWER —
-# codegen fallback — and rejected), then 0.8× after the Arrow-numpy
-# dim-major scorer with per-batch partial top-k (10.9 s → 2.3 s vs
-# DuckDB 2.8 s; bit-parity restamp-proven, BASELINE.md §7 addendum 3).
-# distinct_rows stays ~6-7×, and the floor is the SCAN, not the
-# distinct: decomposed at 60M rows (32-file parquet, local[32]),
-# max() over the same 3 columns costs 0.77 s vs 0.14 s for one long
-# column, while full distinct costs 0.74 s — i.e. materializing the
-# two dictionary-encoded string columns into per-row UTF8Strings is
-# ~100% of the query and the hash-distinct adds ~0. A packed-long
-# rewrite (unix_micros<<16 | ascii·2 with exact-fallback union) was
-# prototyped and measured NO faster (0.95 s vs 0.83 s — it pays a
-# second scan), confirming the partial+final distinct plan is already
-# optimal; DuckDB's edge is compressed execution (dictionary vectors
-# flow through its pipeline unmaterialized), a reader-level gap no
-# Spark plan change can close. agg_pivot's analogous string-key cost
-# WAS closable (level-1 INT type codes → fast hash map, advagg.py).
-# join_multiway is EXCLUDED by design: at 600M×150M the mandatory
-# shuffle meets DuckDB's shared-memory hash join (measured once:
-# Spark 37-50 s on a 16 GB heap vs DuckDB 5-6 s) and the default 8 GB
-# driver heap cannot hold the build side — the one-off numbers and the
-# floor analysis live in BASELINE.md §7.
-SCALE1000_TABLES = {
-    "lineitem": ("l_orderkey", 1000),
-    "orders": ("o_orderkey", 1000),
-    "events": ("event_id", 1000),
-    "embeddings": ("vec_id", 1000),
-}
-SCALE1000_SHIFT_GROUPS = ({"lineitem", "orders"},)
-SCALE1000_HEADLINE = (
-    "agg_hash",
-    "agg_partial_final",
-    "distinct_rows",
-    "win_topk_per_group",
-    "agg_pivot",
-    "join_asof",
-    "sim_knn_exact",
-)
-SCALE1000_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE1000_RUNS", "2"))
+
+def _bucketed_study(spark, ops: dict, corpus: str, con, tier_detail: dict) -> dict:
+    """The bucketed-vs-shuffle side study of the 100× tier, run inside
+    the tier's steal window. The shuffle twin is built inline so both
+    formulations read the identical corpus; the full star on the same
+    layout (join_star_bucketed, BASELINE addendum 15) is compared with
+    the tier's raw join_multiway time."""
+    from pyspark.sql import functions as F
+
+    from lambda_hive_spark.helpers import dsum
+    from lambda_hive_spark.io import table
+
+    metric = "scale100_bucketed_factfact_sec"
+    runs = tier_detail["runs"]
+    star_raw = tier_detail["queries"].get("join_multiway")
+    star_duck = tier_detail["duckdb_sec"].get("join_multiway")
+    bk_op = ops["join_bucket_colocated_read"]
+    try:
+        bk_spark = round(_time_spark(bk_op.fn, spark, corpus, runs), 4)
+        o = table(spark, corpus, "orders")
+        li = table(spark, corpus, "lineitem")
+        shuffle_twin = (
+            o.join(li, o.o_orderkey == li.l_orderkey)
+            .groupBy("o_orderkey")
+            .agg(
+                F.count(F.lit(1)).alias("n_items"),
+                dsum("l_extendedprice").alias("order_value"),
+            )
+        )
+        bk_shuffle = round(
+            _time_spark(lambda _s, _d: shuffle_twin, spark, corpus, runs), 4
+        )
+        bk_duck = round(
+            _time_duck(con, _BUCKETED_DUCK_WRAP.format(sql=bk_op.oracle), runs), 4
+        )
+        st_spark = round(
+            _time_spark(ops["join_star_bucketed"].fn, spark, corpus, runs), 4
+        )
+    except Exception as ex:  # never let the side study kill the artifact
+        return {"metric": metric, "error": f"{type(ex).__name__}: {ex}"[:300]}
+    return {
+        "metric": metric,
+        "bucketed_read_sec": bk_spark,
+        "same_query_shuffle_sec": bk_shuffle,
+        "duckdb_wrapped_sec": bk_duck,
+        "bucketed_vs_shuffle": round(bk_spark / bk_shuffle, 3) if bk_shuffle else None,
+        "star_bucketed_sec": st_spark,
+        "star_raw_sec": star_raw,
+        "star_bucketed_vs_raw": round(st_spark / star_raw, 3) if star_raw else None,
+        "star_bucketed_vs_duckdb": round(st_spark / star_duck, 3) if star_duck else None,
+    }
+
+
+class Tier(NamedTuple):
+    """One timed op tier: its ops run against DuckDB's twin on a corpus
+    of the fixtures with `tables` replicated by `_scale_corpus` (None:
+    the fixtures as they are)."""
+
+    section: str  # BENCH_DETAIL key; also the corpus's scratch name
+    name: str  # TIERS key; the tools/measure.py --tier value
+    metric: str
+    ops: tuple[str, ...]
+    runs: int
+    tables: dict | None = None  # {table: (key column, copies)}
+    shift_groups: tuple = ()
+    skip_env: str | None = None  # set to "0" to skip the tier
+    # (detail key, study) run after the ops, inside the steal window
+    side: tuple[str, Callable] | None = None
+
+
+TIERS = {t.name: t for t in (
+    Tier("headline", "sf", "headline_total_wall_sec", HEADLINE, N_RUNS),
+    # Median-of-3 after warm-up: the r4 verdict noted DuckDB's jaccard
+    # time swings 7-12 s run-to-run on this corpus, which moved the
+    # recorded scale ratio between 0.44× and 0.87× while Spark's own
+    # times stayed stable — a single sample was the noisiest number in
+    # the whole evidence chain. ~45 s extra wall per bench run.
+    Tier(
+        "scale",
+        "10x",
+        "scale_multirowgroup_total_wall_sec",
+        SCALE_HEADLINE,
+        int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_RUNS", "3")),
+        SCALE_TABLES,
+        SCALE_SHIFT_GROUPS,
+        "SPARK_GRAFT_BENCH_SCALE",
+    ),
+    # 100× tier (VERDICT r5 item 3): the 10× corpus proved the per-query
+    # gap AMORTIZES but not that it CROSSES — 9 headline queries stayed
+    # individually >2× DuckDB at sf0.1 because Spark's fixed ~0.2-0.4 s
+    # scheduling+py4j floor dominates sub-second work. This tier grows
+    # the fact tables ~100× sf0.1 (lineitem 60M rows, orders 15M, events
+    # 10M, embeddings 200k, documents ×10 — ~sf10-equivalent, a few GB of
+    # parquet) and records per-query Spark/DuckDB ratios for exactly the
+    # nine letter-weak queries, so the crossover itself is on the record.
+    # dedup_ngram_jaccard is excluded: its pair work grows quadratically
+    # in the duplicate factor (documents ×10 → 100× pairs) and it already
+    # beats DuckDB 0.2-0.3× at both smaller tiers.
+    Tier(
+        "scale100",
+        "100x",
+        "scale100_crossover_total_wall_sec",
+        ("agg_hash", "agg_partial_final", "join_multiway", "join_asof",
+         "win_topk_per_group", "agg_pivot", "distinct_rows", "sim_knn_exact",
+         "text_tf_idf"),
+        int(os.environ.get("SPARK_GRAFT_BENCH_SCALE100_RUNS", "3")),
+        {
+            "lineitem": ("l_orderkey", 100),
+            "orders": ("o_orderkey", 100),
+            "events": ("event_id", 100),
+            "embeddings": ("vec_id", 100),
+            "documents": ("doc_id", 10),
+        },
+        ({"lineitem", "orders"},),
+        "SPARK_GRAFT_BENCH_SCALE100",
+        side=("bucketed", _bucketed_study),
+    ),
+    # 1000× tier: lineitem 600M rows / orders 150M / events 100M /
+    # embeddings 2M (~sf100-equivalent, ~4.9 GB parquet, ~40 s one-time
+    # map-side build). Measured r6: agg_hash crosses to 1.28×,
+    # agg_partial_final 1.48×, win_topk_per_group 0.86× (Spark WINS),
+    # join_asof 0.089× (Spark 11× faster — DuckDB's native ASOF collapses
+    # at 100M events), sim_knn_exact 2.2× with the HOF fold (trajectory
+    # 8×→3.8×→2.2×; an unrolled-64-term dot was measured 6× SLOWER —
+    # codegen fallback — and rejected), then 0.8× after the Arrow-numpy
+    # dim-major scorer with per-batch partial top-k (10.9 s → 2.3 s vs
+    # DuckDB 2.8 s; bit-parity restamp-proven, BASELINE.md §7 addendum 3).
+    # distinct_rows stays ~6-7×, and the floor is the SCAN, not the
+    # distinct: decomposed at 60M rows (32-file parquet, local[32]),
+    # max() over the same 3 columns costs 0.77 s vs 0.14 s for one long
+    # column, while full distinct costs 0.74 s — i.e. materializing the
+    # two dictionary-encoded string columns into per-row UTF8Strings is
+    # ~100% of the query and the hash-distinct adds ~0. A packed-long
+    # rewrite (unix_micros<<16 | ascii·2 with exact-fallback union) was
+    # prototyped and measured NO faster (0.95 s vs 0.83 s — it pays a
+    # second scan), confirming the partial+final distinct plan is already
+    # optimal; DuckDB's edge is compressed execution (dictionary vectors
+    # flow through its pipeline unmaterialized), a reader-level gap no
+    # Spark plan change can close. agg_pivot's analogous string-key cost
+    # WAS closable (level-1 INT type codes → fast hash map, advagg.py).
+    # join_multiway is EXCLUDED by design: at 600M×150M the mandatory
+    # shuffle meets DuckDB's shared-memory hash join (measured once:
+    # Spark 37-50 s on a 16 GB heap vs DuckDB 5-6 s) and the default 8 GB
+    # driver heap cannot hold the build side — the one-off numbers and the
+    # floor analysis live in BASELINE.md §7.
+    Tier(
+        "scale1000",
+        "1000x",
+        "scale1000_crossover_total_wall_sec",
+        ("agg_hash", "agg_partial_final", "distinct_rows", "win_topk_per_group",
+         "agg_pivot", "join_asof", "sim_knn_exact"),
+        int(os.environ.get("SPARK_GRAFT_BENCH_SCALE1000_RUNS", "2")),
+        {
+            "lineitem": ("l_orderkey", 1000),
+            "orders": ("o_orderkey", 1000),
+            "events": ("event_id", 1000),
+            "embeddings": ("vec_id", 1000),
+        },
+        ({"lineitem", "orders"},),
+        "SPARK_GRAFT_BENCH_SCALE1000",
+    ),
+)}
+
+
+def tier_corpus(spark, t: Tier, sf_dir: str) -> str:
+    """The sf-dir-shaped corpus a tier runs on (built once, cached)."""
+    if t.tables is None:
+        return sf_dir
+    return _scale_corpus(spark, sf_dir, t.section, t.tables, t.shift_groups)
+
+
+def _enabled(skip_env: str | None) -> bool:
+    return skip_env is None or os.environ.get(skip_env, "1") != "0"
+
+
+def _run_tier(spark, t: Tier, sf_dir: str, ops: dict) -> dict:
+    """Time every op of a tier against its DuckDB twin: median-of-runs
+    seconds per op, Spark/DuckDB ratios, and the hypervisor steal the
+    tier's wall-clock absorbed (side study included)."""
+    from lambda_hive_spark.testing import duck_connection
+
+    corpus = tier_corpus(spark, t, sf_dir)
+    con = duck_connection(corpus)
+    queries: dict[str, float] = {}
+    duck: dict[str, float] = {}
+    ratio: dict[str, float] = {}
+    st0 = _proc_stat_sample()
+    for name in t.ops:
+        op_ = ops[name]
+        queries[name] = round(_time_spark(op_.fn, spark, corpus, t.runs), 4)
+        if op_.oracle:
+            duck[name] = round(_time_duck(con, op_.oracle, t.runs), 4)
+            if duck[name]:
+                ratio[name] = round(queries[name] / duck[name], 3)
+    out = {
+        "metric": t.metric,
+        "value": round(sum(queries.values()), 4),
+        "queries": queries,
+        "duckdb_sec": duck,
+        "duckdb_total_sec": round(sum(duck.values()), 4),
+        "ratio_vs_duckdb": ratio,
+        "runs": t.runs,
+    }
+    if t.tables is not None:
+        out["copies"] = {name: c for name, (_, c) in t.tables.items()}
+    if t.side is not None:
+        key, study = t.side
+        out[key] = study(spark, ops, corpus, con, out)
+    con.close()
+    out["steal_pct"] = _steal_pct(st0, _proc_stat_sample())
+    return out
+
+
+def _lake_section(spark, sf_dir: str) -> dict:
+    """Lake write-path section at the 100× tier (VERDICT r9 item 2)."""
+    st0 = _proc_stat_sample()
+    try:  # corpus build included: never let the side study kill the artifact
+        corpus = tier_corpus(spark, TIERS["100x"], sf_dir)
+        return {
+            "metric": "scale100_lake_write_path",
+            **_lake_write_bench(spark, corpus),
+            "steal_pct": _steal_pct(st0, _proc_stat_sample()),
+        }
+    except Exception as ex:
+        return {
+            "metric": "scale100_lake_write_path",
+            "error": f"{type(ex).__name__}: {ex}"[:300],
+        }
+
+
+def _streaming_section(spark, sf_dir: str, ops: dict) -> dict:
+    """Streaming family wall-clock (VERDICT r10 item 6): the 13 stream_*
+    ops had never appeared in any timed tier. One true availableNow
+    micro-batch pipeline is timed end-to-end: stream_sink streams the
+    events fixture through the exactly-once parquet committer
+    (checkpointed), reads the sink back and aggregates — op fn + noop
+    sink, median-of-3 after warm-up, the same methodology as every
+    other tier. Each run re-streams into a fresh uuid-named landing
+    dir, sink and checkpoint, so nothing is cached across runs; all
+    of them are deleted once the timed runs finish."""
+    import shutil
+
+    from lambda_hive_spark.streaming import core as stream_core
+
+    root = stream_core._SCRATCH
+    os.makedirs(root, exist_ok=True)
+    before = set(os.listdir(root))
+    st0 = _proc_stat_sample()
+    try:
+        s_sec = round(_time_spark(ops["stream_sink"].fn, spark, sf_dir, 3), 4)
+        return {
+            "metric": "streaming_availablenow_wall_sec",
+            "stream_sink_sec": s_sec,
+            "runs": 3,
+            "steal_pct": _steal_pct(st0, _proc_stat_sample()),
+        }
+    except Exception as ex:  # never let the side study kill the artifact
+        return {
+            "metric": "streaming_availablenow_wall_sec",
+            "error": f"{type(ex).__name__}: {ex}"[:300],
+        }
+    finally:
+        for name in set(os.listdir(root)) - before:
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+
+
+def compact_line(full: dict) -> str:
+    """The LAST stdout line. Only the LAST 2000 chars of stdout are
+    recorded, plus the parse of the final line (BENCH_r06's `tail`
+    truncated the full object and `parsed` came back null — VERDICT r6
+    item 8). So the full metrics object goes to a sidecar
+    file + an EARLIER stdout line, and the LAST line is a compact
+    summary guaranteed to fit the tail window: contract fields
+    (metric/value/unit/queries/sf) plus per-tier totals and the ratio
+    that acceptance is graded on."""
+
+    def tier_total(d: dict | None) -> dict | None:
+        if d is None:
+            return None
+        return {
+            "value": d["value"],
+            "duckdb_total_sec": d["duckdb_total_sec"],
+            "ratio": round(d["value"] / d["duckdb_total_sec"], 3)
+            if d["duckdb_total_sec"]
+            else None,
+            "steal_pct": d.get("steal_pct"),
+        }
+
+    duck_total = sum(full["duckdb_sec"].values())
+    lake = full["lake"]
+    compact = {
+        "metric": full["metric"],
+        "value": full["value"],
+        "unit": "sec",
+        "queries": full["queries"],
+        "sf": full["sf"],
+        "duckdb_total_sec": round(duck_total, 4),
+        "ratio_vs_duckdb": round(full["value"] / duck_total, 3) if duck_total else None,
+        "steal_pct": full["steal_pct"],
+        "scale": tier_total(full["scale"]),
+        "scale100": tier_total(full["scale100"]),
+        "scale1000": tier_total(full["scale1000"]),
+        # write-path headline: DV bytes as a fraction of COW on the
+        # same 1% MERGE batch (the O(changed rows) claim in one number)
+        "lake": (
+            {
+                "bulk_load_sec": lake["bulk_load"]["sec"],
+                "merge_dv_vs_cow_bytes_1pct": lake["merge_dv_vs_cow_1pct"][
+                    "bytes_ratio"
+                ],
+                "merge_dv_vs_cow_sec_1pct": lake["merge_dv_vs_cow_1pct"]["sec_ratio"],
+            }
+            if lake and "error" not in lake
+            else ({"error": lake["error"]} if lake else None)
+        ),
+        "streaming": full["streaming"],
+        "detail": "BENCH_DETAIL.json",
+    }
+    line = json.dumps(compact)
+    if len(line) > 1900:  # belt-and-braces: never exceed the tail window
+        compact["queries"] = {"total_only": full["value"]}
+        line = json.dumps(compact)
+    return line
 
 
 def _scale_corpus(
@@ -373,24 +619,37 @@ def _steal_pct(before, after) -> float | None:
     return round(100.0 * (after[0] - before[0]) / (after[1] - before[1]), 2)
 
 
-def _time_spark(fn, spark, sf_dir: str, runs: int = N_RUNS) -> float:
-    times = []
-    for i in range(runs + 1):
+def _spark_samples(
+    fn, spark, sf_dir: str, runs: int, warmup: int = 1
+) -> list[tuple[float, float]]:
+    """(build_s, exec_s) for each timed run of an op: build is the op
+    fn call (driver-side plan assembly), exec the noop-sink action
+    (plan + schedule + execute). The first `warmup` runs fill the plan
+    and file-index caches and are dropped."""
+    out = []
+    for i in range(warmup + runs):
         t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        if i > 0:  # first run is warm-up (plan + file-index caches)
-            times.append(dt)
-    return statistics.median(times)
+        df = fn(spark, sf_dir)
+        t1 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        if i >= warmup:
+            out.append((t1 - t0, time.perf_counter() - t1))
+    return out
 
 
-def _time_duck(con, sql: str, runs: int = N_RUNS) -> float:
+def _time_spark(fn, spark, sf_dir: str, runs: int = N_RUNS) -> float:
+    return statistics.median(
+        b + e for b, e in _spark_samples(fn, spark, sf_dir, runs)
+    )
+
+
+def _time_duck(con, sql: str, runs: int = N_RUNS, warmup: int = 1) -> float:
     times = []
-    for i in range(runs + 1):
+    for i in range(warmup + runs):
         t0 = time.perf_counter()
         con.execute(sql).fetchall()
         dt = time.perf_counter() - t0
-        if i > 0:
+        if i >= warmup:
             times.append(dt)
     return statistics.median(times)
 
@@ -407,313 +666,49 @@ def main() -> None:
 
     from lambda_hive_spark.registry import all_ops
     from lambda_hive_spark.session import get_spark
-    from lambda_hive_spark.testing import duck_connection
 
     ops = all_ops()
     spark = get_spark("lambda_hive_spark_bench")
-    con = duck_connection(sf_dir)
 
-    queries: dict[str, float] = {}
-    duck: dict[str, float] = {}
-    _st0 = _proc_stat_sample()
-    for name in HEADLINE:
-        op_ = ops[name]
-        queries[name] = round(_time_spark(op_.fn, spark, sf_dir), 4)
-        if op_.oracle:
-            duck[name] = round(_time_duck(con, op_.oracle), 4)
-    headline_steal = _steal_pct(_st0, _proc_stat_sample())
+    def run(t: Tier) -> dict | None:
+        return _run_tier(spark, t, sf_dir, ops) if _enabled(t.skip_env) else None
 
-    # Multi-rowgroup section (skippable via SPARK_GRAFT_BENCH_SCALE=0
-    # for quick iteration loops).
-    scale: dict | None = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE", "1") != "0":
-        scale_dir = _scale_corpus(spark, sf_dir)
-        scale_con = duck_connection(scale_dir)
-        s_queries: dict[str, float] = {}
-        s_duck: dict[str, float] = {}
-        _st0 = _proc_stat_sample()
-        for name in SCALE_HEADLINE:
-            op_ = ops[name]
-            s_queries[name] = round(_time_spark(op_.fn, spark, scale_dir, SCALE_RUNS), 4)
-            if op_.oracle:
-                s_duck[name] = round(_time_duck(scale_con, op_.oracle, SCALE_RUNS), 4)
-        scale_con.close()
-        scale = {
-            "metric": "scale_multirowgroup_total_wall_sec",
-            "value": round(sum(s_queries.values()), 4),
-            "queries": s_queries,
-            "duckdb_sec": s_duck,
-            "duckdb_total_sec": round(sum(s_duck.values()), 4),
-            "copies": {t: c for t, (_, c) in SCALE_TABLES.items()},
-            "runs": SCALE_RUNS,
-            "steal_pct": _steal_pct(_st0, _proc_stat_sample()),
-        }
+    # Run order: sf, 10×, 100× (+ bucketed study), the lake write path
+    # and the streaming drain, then 1000×.
+    head, scale, scale100 = [run(TIERS[k]) for k in ("sf", "10x", "100x")]
+    lake = _lake_section(spark, sf_dir) if _enabled("SPARK_GRAFT_BENCH_LAKE") else None
+    streaming = (
+        _streaming_section(spark, sf_dir, ops)
+        if _enabled("SPARK_GRAFT_BENCH_STREAMING")
+        else None
+    )
+    scale1000 = run(TIERS["1000x"])
 
-    # 100× crossover section (VERDICT r5 item 3): per-query ratios for
-    # the nine queries that run >2× DuckDB at sub-second sf0.1 sizes.
-    # Skippable via SPARK_GRAFT_BENCH_SCALE100=0.
-    scale100: dict | None = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE100", "1") != "0":
-        s100_dir = _scale_corpus(
-            spark, sf_dir, "scale100", SCALE100_TABLES, SCALE100_SHIFT_GROUPS
-        )
-        s100_con = duck_connection(s100_dir)
-        x_queries: dict[str, float] = {}
-        x_duck: dict[str, float] = {}
-        x_ratio: dict[str, float] = {}
-        _st0 = _proc_stat_sample()
-        for name in SCALE100_HEADLINE:
-            op_ = ops[name]
-            x_queries[name] = round(
-                _time_spark(op_.fn, spark, s100_dir, SCALE100_RUNS), 4
-            )
-            if op_.oracle:
-                x_duck[name] = round(
-                    _time_duck(s100_con, op_.oracle, SCALE100_RUNS), 4
-                )
-                x_ratio[name] = round(x_queries[name] / x_duck[name], 3)
-
-        # bucketed-vs-shuffle fact-fact section (see comment at
-        # _BUCKETED_DUCK_WRAP); shuffle twin built inline so both
-        # formulations read the identical scale corpus
-        from pyspark.sql import functions as _F
-
-        from lambda_hive_spark.helpers import dsum as _dsum
-        from lambda_hive_spark.io import table as _table
-
-        bk_op = ops["join_bucket_colocated_read"]
-        try:
-            bk_spark = round(
-                _time_spark(bk_op.fn, spark, s100_dir, SCALE100_RUNS), 4
-            )
-            _o = _table(spark, s100_dir, "orders")
-            _li = _table(spark, s100_dir, "lineitem")
-            shuffle_twin = (
-                _o.join(_li, _o.o_orderkey == _li.l_orderkey)
-                .groupBy("o_orderkey")
-                .agg(
-                    _F.count(_F.lit(1)).alias("n_items"),
-                    _dsum("l_extendedprice").alias("order_value"),
-                )
-            )
-            bk_shuffle = round(
-                _time_spark(
-                    lambda _s, _d: shuffle_twin, spark, s100_dir, SCALE100_RUNS
-                ),
-                4,
-            )
-            bk_duck = round(
-                _time_duck(
-                    s100_con,
-                    _BUCKETED_DUCK_WRAP.format(sql=bk_op.oracle),
-                    SCALE100_RUNS,
-                ),
-                4,
-            )
-            # the FULL star on the same layout (r9 registered op;
-            # BASELINE addendum 15) — raw twin is join_multiway above
-            st_spark = round(
-                _time_spark(
-                    ops["join_star_bucketed"].fn, spark, s100_dir, SCALE100_RUNS
-                ),
-                4,
-            )
-            bucketed = {
-                "metric": "scale100_bucketed_factfact_sec",
-                "bucketed_read_sec": bk_spark,
-                "same_query_shuffle_sec": bk_shuffle,
-                "duckdb_wrapped_sec": bk_duck,
-                "bucketed_vs_shuffle": round(bk_spark / bk_shuffle, 3)
-                if bk_shuffle
-                else None,
-                "star_bucketed_sec": st_spark,
-                "star_raw_sec": x_queries.get("join_multiway"),
-                "star_bucketed_vs_raw": round(
-                    st_spark / x_queries["join_multiway"], 3
-                )
-                if x_queries.get("join_multiway")
-                else None,
-                "star_bucketed_vs_duckdb": round(
-                    st_spark / x_duck["join_multiway"], 3
-                )
-                if x_duck.get("join_multiway")
-                else None,
-            }
-        except Exception as ex:  # never let the side study kill the artifact
-            bucketed = {
-                "metric": "scale100_bucketed_factfact_sec",
-                "error": f"{type(ex).__name__}: {ex}"[:300],
-            }
-        s100_con.close()
-        scale100 = {
-            "metric": "scale100_crossover_total_wall_sec",
-            "value": round(sum(x_queries.values()), 4),
-            "queries": x_queries,
-            "duckdb_sec": x_duck,
-            "duckdb_total_sec": round(sum(x_duck.values()), 4),
-            "ratio_vs_duckdb": x_ratio,
-            "copies": {t: c for t, (_, c) in SCALE100_TABLES.items()},
-            "runs": SCALE100_RUNS,
-            "bucketed": bucketed,
-            "steal_pct": _steal_pct(_st0, _proc_stat_sample()),
-        }
-
-    # Lake write-path section at the 100× tier (VERDICT r9 item 2).
-    # Skippable via SPARK_GRAFT_BENCH_LAKE=0.
-    lake: dict | None = None
-    if os.environ.get("SPARK_GRAFT_BENCH_LAKE", "1") != "0":
-        _st0 = _proc_stat_sample()
-        try:  # corpus build included: never let the side study kill the artifact
-            lake_corpus = _scale_corpus(
-                spark, sf_dir, "scale100", SCALE100_TABLES, SCALE100_SHIFT_GROUPS
-            )
-            lake = {
-                "metric": "scale100_lake_write_path",
-                **_lake_write_bench(spark, lake_corpus),
-                "steal_pct": _steal_pct(_st0, _proc_stat_sample()),
-            }
-        except Exception as ex:
-            lake = {
-                "metric": "scale100_lake_write_path",
-                "error": f"{type(ex).__name__}: {ex}"[:300],
-            }
-
-    # Streaming family wall-clock (VERDICT r10 item 6): the 13 stream_*
-    # ops had never appeared in any timed tier. One true availableNow
-    # micro-batch pipeline is timed end-to-end: stream_sink streams the
-    # events fixture through the exactly-once parquet committer
-    # (checkpointed), reads the sink back and aggregates — op fn + noop
-    # sink, median-of-3 after warm-up, the same methodology as every
-    # other tier. Each run re-streams into a fresh uuid-named scratch
-    # dir, so nothing is cached across runs. Additions-only harness
-    # change; skippable via SPARK_GRAFT_BENCH_STREAMING=0.
-    streaming: dict | None = None
-    if os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "1") != "0":
-        _st0 = _proc_stat_sample()
-        try:
-            s_sec = round(_time_spark(ops["stream_sink"].fn, spark, sf_dir, 3), 4)
-            streaming = {
-                "metric": "streaming_availablenow_wall_sec",
-                "stream_sink_sec": s_sec,
-                "runs": 3,
-                "steal_pct": _steal_pct(_st0, _proc_stat_sample()),
-            }
-        except Exception as ex:  # never let the side study kill the artifact
-            streaming = {
-                "metric": "streaming_availablenow_wall_sec",
-                "error": f"{type(ex).__name__}: {ex}"[:300],
-            }
-
-    # 1000× crossover section. Skippable via SPARK_GRAFT_BENCH_SCALE1000=0.
-    scale1000: dict | None = None
-    if os.environ.get("SPARK_GRAFT_BENCH_SCALE1000", "1") != "0":
-        s1k_dir = _scale_corpus(
-            spark, sf_dir, "scale1000", SCALE1000_TABLES, SCALE1000_SHIFT_GROUPS
-        )
-        s1k_con = duck_connection(s1k_dir)
-        k_queries: dict[str, float] = {}
-        k_duck: dict[str, float] = {}
-        k_ratio: dict[str, float] = {}
-        _st0 = _proc_stat_sample()
-        for name in SCALE1000_HEADLINE:
-            op_ = ops[name]
-            k_queries[name] = round(
-                _time_spark(op_.fn, spark, s1k_dir, SCALE1000_RUNS), 4
-            )
-            if op_.oracle:
-                k_duck[name] = round(_time_duck(s1k_con, op_.oracle, SCALE1000_RUNS), 4)
-                k_ratio[name] = round(k_queries[name] / k_duck[name], 3)
-        s1k_con.close()
-        scale1000 = {
-            "metric": "scale1000_crossover_total_wall_sec",
-            "value": round(sum(k_queries.values()), 4),
-            "queries": k_queries,
-            "duckdb_sec": k_duck,
-            "duckdb_total_sec": round(sum(k_duck.values()), 4),
-            "ratio_vs_duckdb": k_ratio,
-            "copies": {t: c for t, (_, c) in SCALE1000_TABLES.items()},
-            "runs": SCALE1000_RUNS,
-            "steal_pct": _steal_pct(_st0, _proc_stat_sample()),
-        }
-
-    total = round(sum(queries.values()), 4)
     full = {
-        "metric": "headline_total_wall_sec",
-        "value": total,
+        "metric": head["metric"],
+        "value": head["value"],
         "unit": "sec",
-        "queries": queries,
+        "queries": head["queries"],
         "sf": float(sf),
-        "duckdb_sec": duck,
-        "duckdb_total_sec": round(sum(duck.values()), 4),
+        "duckdb_sec": head["duckdb_sec"],
+        "duckdb_total_sec": head["duckdb_total_sec"],
         "scale": scale,
         "scale100": scale100,
         "lake": lake,
         "streaming": streaming,
         "scale1000": scale1000,
-        "steal_pct": headline_steal,
+        "steal_pct": head["steal_pct"],
         "config": {
             "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
             "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
             "aqe": spark.conf.get("spark.sql.adaptive.enabled"),
         },
     }
-    # The driver records only the LAST 2000 chars of stdout plus the
-    # parse of the final line (BENCH_r06's `tail` truncated the full
-    # object and `parsed` came back null — VERDICT r6 item 8). So the
-    # full metrics object goes to a sidecar file + an EARLIER stdout
-    # line, and the LAST line is a compact summary guaranteed to fit
-    # the tail window: contract fields (metric/value/unit/queries/sf)
-    # plus per-tier totals and the ratio that acceptance is graded on.
     repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as f:
         json.dump(full, f, indent=1)
     print(json.dumps(full))  # full object, not the final line
-
-    def _tier(d: dict | None) -> dict | None:
-        if d is None:
-            return None
-        return {
-            "value": d["value"],
-            "duckdb_total_sec": d["duckdb_total_sec"],
-            "ratio": round(d["value"] / d["duckdb_total_sec"], 3)
-            if d["duckdb_total_sec"]
-            else None,
-            "steal_pct": d.get("steal_pct"),
-        }
-
-    compact = {
-        "metric": "headline_total_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": queries,
-        "sf": float(sf),
-        "duckdb_total_sec": round(sum(duck.values()), 4),
-        "ratio_vs_duckdb": round(total / sum(duck.values()), 3) if duck else None,
-        "steal_pct": headline_steal,
-        "scale": _tier(scale),
-        "scale100": _tier(scale100),
-        "scale1000": _tier(scale1000),
-        # write-path headline: DV bytes as a fraction of COW on the
-        # same 1% MERGE batch (the O(changed rows) claim in one number)
-        "lake": (
-            {
-                "bulk_load_sec": lake["bulk_load"]["sec"],
-                "merge_dv_vs_cow_bytes_1pct": lake["merge_dv_vs_cow_1pct"][
-                    "bytes_ratio"
-                ],
-                "merge_dv_vs_cow_sec_1pct": lake["merge_dv_vs_cow_1pct"]["sec_ratio"],
-            }
-            if lake and "error" not in lake
-            else ({"error": lake["error"]} if lake else None)
-        ),
-        "streaming": streaming,
-        "detail": "BENCH_DETAIL.json",
-    }
-    line = json.dumps(compact)
-    if len(line) > 1900:  # belt-and-braces: never exceed the tail window
-        compact["queries"] = {"total_only": total}
-        line = json.dumps(compact)
-    print(line)
+    print(compact_line(full))
     spark.stop()
 
 

@@ -80,9 +80,18 @@ def scratch_dir(name: str) -> str:
 
 def landing_dir(sf_dir: str) -> str:
     """A directory the file-stream source can watch, containing the
-    events fixture (symlink — zero copy, fixture stays read-only)."""
+    events fixture (symlinks — zero copy, fixture stays read-only).
+    The file source does not descend into subdirectories, so an
+    `events.parquet` that is a directory of part files (the bench
+    scale corpora) lands as one symlink per part file."""
     land = scratch_dir("landing")
-    os.symlink(os.path.join(sf_dir, "events.parquet"), os.path.join(land, "events.parquet"))
+    src = os.path.join(sf_dir, "events.parquet")
+    if not os.path.isdir(src):
+        os.symlink(src, os.path.join(land, "events.parquet"))
+        return land
+    for name in sorted(os.listdir(src)):
+        if name.endswith(".parquet") and not name.startswith(("_", ".")):
+            os.symlink(os.path.join(src, name), os.path.join(land, name))
     return land
 
 
@@ -110,6 +119,16 @@ def events_stream(
     return _normalize_timestamps(df)
 
 
+def await_or_stop(query, timeout_s: float, name: str) -> None:
+    """Wait for a streaming query to finish; if it is still running at
+    `timeout_s`, stop it and raise TimeoutError — a sink read now would
+    return a partial mid-stream result, so fail loudly instead. The
+    checkpoint stays where it is."""
+    if not query.awaitTermination(timeout_s):
+        query.stop()
+        raise TimeoutError(f"streaming query {name} did not finish in {timeout_s}s")
+
+
 def run_available_now(
     df: DataFrame, mode: str = "append", timeout_s: int = 300
 ) -> DataFrame:
@@ -129,11 +148,7 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_s):
-        # Still running at timeout: reading the memory sink now would
-        # return a partial mid-stream table. Stop and fail loudly.
-        query.stop()
-        raise TimeoutError(f"streaming query {name} did not finish in {timeout_s}s")
+    await_or_stop(query, timeout_s, name)
     return df.sparkSession.table(name)
 
 
@@ -150,7 +165,7 @@ def to_parquet_sink(df: DataFrame, out_dir: str, timeout_s: int = 300) -> None:
         .trigger(availableNow=True)
         .start()
     )
-    query.awaitTermination(timeout_s)
+    await_or_stop(query, timeout_s, f"parquet sink to {out_dir}")
 
 
 def cleanup_scratch() -> None:

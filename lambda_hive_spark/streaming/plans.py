@@ -335,7 +335,5 @@ def run_upsert(stream: DataFrame, state_dir: str, timeout_s: int = 300) -> str:
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(timeout_s):
-        query.stop()
-        raise TimeoutError("run_upsert did not finish in time")
+    _core.await_or_stop(query, timeout_s, "run_upsert")
     return state_path

@@ -37,11 +37,12 @@ from lambda_hive_spark.helpers import dsum, flat_exact_agg, hier_exact_agg
 # contract test runs against each. History (ADVICE r10): the r10
 # single-level rewrite was briefly adopted by agg_hash / join_multiway
 # and then REVERTED (corpus-sized groups overflow the int64 group
-# total at 100 TB — tools/r10_q1_variants.py); flat_exact_agg is the
-# KEY-BOUNDED-GROUPS form, and since r11 agg_partial_final is its
-# production caller (agg_pivot keeps its inline INT-code conditional
-# form: the shared guarded-micros value computes once per row there,
-# which the generic helper's per-sum expressions would redo 6×).
+# total at 100 TB — `git show cb260b8:tools/r10_q1_variants.py`);
+# flat_exact_agg is the KEY-BOUNDED-GROUPS form, and since r11
+# agg_partial_final is its production caller (agg_pivot keeps its
+# inline INT-code conditional form: the shared guarded-micros value
+# computes once per row there, which the generic helper's per-sum
+# expressions would redo 6×).
 BOTH = pytest.mark.parametrize("agg", [hier_exact_agg, flat_exact_agg], ids=["hier", "flat"])
 
 

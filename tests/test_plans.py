@@ -390,8 +390,8 @@ def test_headline_shuffle_counts_do_not_regress(spark):
     # any scale. r10 re-adjudicated the single-level try_sum rewrite
     # (1.67×/1.14× at sf0.1, parity EXACT) and REJECTED it for both:
     # their groups are corpus-sized, so the int64 group total
-    # overflows at 100 TB (tools/r10_q1_variants.py; the ops'
-    # docstrings and BASELINE §7 addendum 18 carry the record).
+    # overflows at 100 TB (`git show cb260b8:tools/r10_q1_variants.py`;
+    # the ops' docstrings and BASELINE §7 addendum 18 carry the record).
     AUDITED_MAX = {
         "agg_hash": 2,
         # r8: single-level long-micros try_sum (advagg.py) — Catalyst's
@@ -717,7 +717,8 @@ def test_tfidf_reuses_tf_shuffle_stage(spark):
 # r11 (VERDICT r10 item 3): the five >25-static-Exchange diamond
 # pipelines rely on AQE RUNTIME stage reuse to execute their repeated
 # subtrees once — nothing pinned that until now. Minimums are the
-# counts probed at sf0.01 on Spark 4.1 (tools/r11_reuse_probe.py).
+# counts probed at sf0.01 on Spark 4.1; re-probe with
+# `tools/measure.py bytes --sf-dir <sf0.01 dir> <op>`.
 _DIAMOND_REUSE_MIN = {
     "text_lang_divergence_tv": 8,
     "dedup_near_minhash": 6,

@@ -165,6 +165,46 @@ def test_parquet_sink_roundtrip(spark, events_batch, arrival_dirs, tmp_path):
     assert any(d.startswith("event_date=") for d in os.listdir(out))
 
 
+def test_parquet_sink_timeout_stops_query_and_raises(spark, arrival_dirs, tmp_path):
+    """A drain that cannot finish inside its timeout (three one-file
+    micro-batches against 10 ms) stops the query and raises instead of
+    returning as if the sink were complete."""
+    stream = core.events_stream(spark, arrival_dirs, max_files_per_trigger=1)
+    with pytest.raises(TimeoutError):
+        core.to_parquet_sink(stream, str(tmp_path / "sink_out"), timeout_s=0.01)
+    assert spark.streams.active == []
+
+
+def test_stream_ops_read_events_part_file_directory(spark, tmp_path):
+    """A corpus whose events.parquet is a directory of part files (the
+    bench scale-corpus layout): the landing dir links each part file,
+    so scan_stream and stream_sink deliver every row."""
+    import pyarrow.parquet as pq
+
+    from lambda_hive_spark.io import TABLES
+    from lambda_hive_spark.registry import all_ops
+    from lambda_hive_spark.testing import assert_parity, duck_connection
+
+    corpus = tmp_path / "corpus"
+    parts = corpus / "events.parquet"
+    parts.mkdir(parents=True)
+    events = pq.read_table(os.path.join(SF_SMALL, "events.parquet"))
+    half = events.num_rows // 2
+    pq.write_table(events.slice(0, half), str(parts / "part-00000.parquet"))
+    pq.write_table(events.slice(half), str(parts / "part-00001.parquet"))
+    (parts / "_SUCCESS").touch()
+    for t in TABLES:
+        if t != "events":
+            os.symlink(os.path.join(SF_SMALL, f"{t}.parquet"), corpus / f"{t}.parquet")
+    land = core.landing_dir(str(corpus))
+    assert sorted(os.listdir(land)) == ["part-00000.parquet", "part-00001.parquet"]
+    con = duck_connection(str(corpus))
+    ops = all_ops()
+    for name in ("scan_stream", "stream_sink"):
+        assert_parity(ops[name].fn(spark, str(corpus)), con, ops[name].oracle, name)
+    con.close()
+
+
 def test_streaming_session_windows_converge(spark, events_batch, arrival_dirs):
     """session_window in a real watermarked streaming query: every
     emitted session matches the batch result (sessions still open at

@@ -195,7 +195,7 @@ def _inject_zipf(tbl: pa.Table, name: str) -> pa.Table:
     Spark↔DuckDB parity-green under it (both engines read the same
     perturbed parquet), and must not OOM or stall on the hot key —
     the mechanism tests (salting, AQE skew split) get their A/B in
-    tools/skew_ab.py."""
+    `git show cb260b8:tools/skew_ab.py`."""
     hot_cols = {
         "events": [("user_id", True), ("ts", False)],
         "lineitem": [("l_orderkey", True)],
