@@ -83,6 +83,7 @@ import os
 import re
 import shutil
 import uuid
+from typing import Callable, NamedTuple
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -223,21 +224,6 @@ def _check_reserved(schema: StructType) -> None:
             f"column names {bad} are reserved for the deletion-vector "
             "read path (_read_snapshot_files join keys)"
         )
-
-
-def _dv_moved(consumed_paths, snapshot: dict, head: dict) -> bool:
-    """True when any consumed file's deletion-vector entry differs
-    between the snapshot a rewrite scanned and the head it is about to
-    commit against. A DV delete mutates LOGICAL content without
-    changing any path, so the rewriters' path-existence conflict check
-    alone would let a rewrite publish survivor files scanned pre-DV —
-    silently resurrecting the deleted rows (lost update; Delta treats
-    this exact race as a conflict). Symmetric twin of
-    _delete_where_dv's own `h.get('dv') != dv_at_read` guard
-    (ADVICE r8)."""
-    at_read = {f["path"]: f.get("dv") for f in snapshot["files"]}
-    at_head = {f["path"]: f.get("dv") for f in head["files"]}
-    return any(at_head.get(p) != at_read.get(p) for p in consumed_paths)
 
 
 def _log_dir(path: str) -> str:
@@ -464,9 +450,22 @@ def _write_data_files(
     return entries
 
 
+_CARRIED = (
+    "key",
+    "schema",
+    "txns",
+    "bloom",
+    "constraints",
+    "partition_by",
+    "generated",
+    "write_tuning",
+)
+
+
 def _commit(path: str, build_entry):
     """Atomic OCC commit loop. ``build_entry(head_manifest | None)``
-    returns the next manifest's fields (files/action); the loop stamps
+    returns the next manifest's fields (files/action, plus any
+    ``_CARRIED`` field it changes); the loop stamps
     the version, stages the JSON, and publishes with a
     create-exclusive link. On losing the race it re-reads the new head
     and re-applies. Returns the committed version."""
@@ -478,31 +477,17 @@ def _commit(path: str, build_entry):
         version = head_v + 1
         entry["version"] = version
         entry["parent"] = head_v or None
-        # Index metadata rides along unless the builder sets it
-        # explicitly: a bloom index stays live across appends/merges
-        # (files it never saw are conservatively kept at probe time).
-        if head is not None and "bloom" not in entry and head.get("bloom"):
-            entry["bloom"] = head["bloom"]
-        if entry.get("bloom") is None:  # restore-to-preindex: drop, not null
-            entry.pop("bloom", None)
-        if head is not None and "constraints" not in entry and head.get("constraints"):
-            entry["constraints"] = head["constraints"]
-        if entry.get("constraints") is None:
-            entry.pop("constraints", None)
-        # The partition spec is table identity: it rides every commit
-        # unless the builder changes it explicitly (repartition_table).
-        if head is not None and "partition_by" not in entry and head.get("partition_by"):
-            entry["partition_by"] = head["partition_by"]
-        if entry.get("partition_by") is None:
-            entry.pop("partition_by", None)
-        if head is not None and "generated" not in entry and head.get("generated"):
-            entry["generated"] = head["generated"]
-        if entry.get("generated") is None:
-            entry.pop("generated", None)
-        if head is not None and "write_tuning" not in entry and head.get("write_tuning"):
-            entry["write_tuning"] = head["write_tuning"]
-        if entry.get("write_tuning") is None:
-            entry.pop("write_tuning", None)
+        # Table identity, the txn ledger and index/governance metadata
+        # ride every commit unless the builder sets them explicitly; a
+        # builder's None drops the field (restore-to-preindex, an
+        # un-partitioning repartition_table). A bloom index stays live
+        # across appends/merges: files it never saw are conservatively
+        # kept at probe time.
+        for k in _CARRIED:
+            if k not in entry and head is not None:
+                entry[k] = head.get(k)
+            if entry.get(k) is None:
+                entry.pop(k, None)
         # Operation metrics, derived from the manifest diff alone (zero
         # data I/O — file row counts are footer stats already in hand):
         # net_rows is the commit's logical row delta (+batch for an
@@ -688,10 +673,8 @@ def append(spark: SparkSession, path: str, df: DataFrame, *, merge_schema: bool 
                 schema_json = StructType(head_schema.fields + batch_new).json()
         return {
             "action": "append",
-            "key": head["key"],
             "files": head["files"] + new_files,
             "schema": schema_json,
-            "txns": head.get("txns", {}),
         }
 
     return _commit(path, build)
@@ -761,18 +744,12 @@ def append_idempotent(
             raise DuplicateBatch
         txns = dict(head.get("txns", {}))
         txns[writer_id] = batch_id
-        return {
-            "action": "append",
-            "key": head["key"],
-            "files": head["files"] + new_files,
-            "schema": head.get("schema"),
-            "txns": txns,
-        }
+        return {"action": "append", "files": head["files"] + new_files, "txns": txns}
 
     try:
         return _commit(path, build)
     except DuplicateBatch:
-        _discard_orphans(new_files)
+        _discard(path, [f["path"] for f in new_files])
         return current_version(path)
 
 
@@ -946,14 +923,7 @@ def bloom_index(
         # replaces its entry, other columns' indexes carry forward
         blooms = dict(head.get("bloom") or {})
         blooms[col] = {"m": m_bits, "k": k, "sidecar": sidecar}
-        return {
-            "action": "bloom_index",
-            "key": head["key"],
-            "files": head["files"],
-            "schema": head.get("schema"),
-            "txns": head.get("txns", {}),
-            "bloom": blooms,
-        }
+        return {"action": "bloom_index", "files": head["files"], "bloom": blooms}
 
     return _commit(path, build)
 
@@ -1317,153 +1287,6 @@ def _write_change_files(df: DataFrame, path: str) -> list[str]:
     ]
 
 
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    *,
-    key: str | None = None,
-    track_changes: bool = False,
-    merge_schema: bool = False,
-    deletion_vectors: bool = False,
-) -> int:
-    """Upsert `updates` by the table key: rows with matching keys are
-    replaced, new keys are inserted. Only data files whose footer
-    (min,max) key range intersects the updates' key range are
-    rewritten; all others carry over by reference — the stats-pruned
-    copy-on-write MERGE. The anti-join runs with the updates' keys
-    broadcast (a MERGE batch is bounded; the TABLE is not).
-
-    With ``track_changes=True`` the commit also writes a row-level
-    change feed (Delta CDF shape): matched pre-images
-    (`update_preimage`), their replacements (`update_postimage`), and
-    brand-new keys (`insert`), each tagged in a `_change_type` column
-    and recorded in the manifest — `read_changes` serves them without
-    diffing snapshots. Costs two extra broadcast joins against the
-    bounded updates batch, nothing against the table.
-
-    ``deletion_vectors=True`` switches to MERGE-ON-READ
-    (_merge_upsert_dv): matched rows are DV-deleted in place (their
-    positions land in a log sidecar) and the updates batch appends as
-    post-image files — write amplification is O(batch + matched rows),
-    never O(touched files rewritten), the trickle-UPDATE completion of
-    the DV delete story. Same logical result, same CDF semantics
-    (tests pin DV-MERGE ≡ COW-MERGE row-for-row and feed-for-feed);
-    compact()/optimize() later materializes."""
-    m0 = read_manifest(path)
-    _schema0 = _manifest_schema(m0)
-    updates = _apply_generated(
-        updates, m0.get("generated") or {}, _schema0.fieldNames() if _schema0 else None
-    )
-    _check_reserved(updates.schema)
-    if deletion_vectors:
-        return _merge_upsert_dv(spark, path, updates, key, track_changes, merge_schema)
-    while True:
-        m = read_manifest(path)
-        key = key or m["key"]
-        _validate_constraints(updates, m.get("constraints") or {})
-        # The same silent-drift contract append carries: an updates
-        # batch with columns the table lacks refuses unless the caller
-        # opts into evolution (unionByName(allowMissingColumns) below
-        # would otherwise widen the schema as a side effect of MERGE).
-        head_schema = _manifest_schema(m)
-        batch_new = []
-        if head_schema is not None:
-            head_names = set(head_schema.fieldNames())
-            batch_new = [f for f in updates.schema.fields if f.name not in head_names]
-            if batch_new and not merge_schema:
-                raise SchemaMismatch(
-                    f"merge batch adds columns {[f.name for f in batch_new]}; "
-                    "pass merge_schema=True to evolve"
-                )
-        lo, hi = updates.agg(F.min(key), F.max(key)).collect()[0]
-        if lo is None:
-            raise ValueError("merge_upsert: updates batch is empty")
-
-        touched = [
-            f
-            for f in m["files"]
-            if f["min_key"] is None or not (f["max_key"] < lo or f["min_key"] > hi)
-        ]
-        touched_paths = {f["path"] for f in touched}
-
-        change_files: list[str] = []
-        if touched:
-            # Read under the snapshot schema so pre-evolution files
-            # null-fill evolved columns; an updates batch may likewise
-            # omit them (allowMissingColumns null-fills its side).
-            affected = _read_snapshot_files(spark, m, touched_paths)
-            # MERGE-source joins carry NO broadcast hint: the source is
-            # caller-sized — a trickle batch broadcasts via AQE anyway,
-            # but a fact-sized backfill MERGE under a forced hint would
-            # ship the whole source to every executor (the r8-judge
-            # corpus-broadcast defect class). AQE decides from the
-            # real size; join outputs are strategy-independent.
-            survivors = affected.join(
-                updates.select(key), on=key, how="left_anti"
-            )
-            merged = survivors.unionByName(updates, allowMissingColumns=True)
-            new_files = _write_data_files(merged, path, key, m.get("partition_by"))
-            if track_changes:
-                pre = affected.join(
-                    updates.select(key), on=key, how="left_semi"
-                ).withColumn("_change_type", F.lit("update_preimage"))
-                matched_keys = pre.select(key)
-                post = updates.join(
-                    matched_keys, on=key, how="left_semi"
-                ).withColumn("_change_type", F.lit("update_postimage"))
-                ins = updates.join(
-                    matched_keys, on=key, how="left_anti"
-                ).withColumn("_change_type", F.lit("insert"))
-                feed = pre.unionByName(post, allowMissingColumns=True).unionByName(
-                    ins, allowMissingColumns=True
-                )
-                change_files = _write_change_files(feed, path)
-        else:
-            new_files = _write_data_files(updates, path, key, m.get("partition_by"))
-            if track_changes:
-                change_files = _write_change_files(
-                    updates.withColumn("_change_type", F.lit("insert")), path
-                )
-
-        def build(head):
-            # A racing append's files are carried over; but if a racing
-            # commit rewrote/removed any file WE rewrote, our survivors
-            # were computed from a stale copy — conflict, recompute.
-            head_paths = {f["path"] for f in head["files"]}
-            if not touched_paths <= head_paths:
-                raise CommitConflict
-            if _dv_moved(touched_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            head_kept = [f for f in head["files"] if f["path"] not in touched_paths]
-            schema_json = head.get("schema")
-            if batch_new:  # opted-in evolution: record the widened schema
-                hs = _manifest_schema(head)
-                if hs is not None:
-                    have = set(hs.fieldNames())
-                    add = [f for f in batch_new if f.name not in have]
-                    if add:
-                        schema_json = StructType(hs.fields + add).json()
-            entry = {
-                "action": "merge",
-                "key": head["key"],
-                "files": head_kept + new_files,
-                "schema": schema_json,
-                "txns": head.get("txns", {}),
-            }
-            if track_changes:
-                entry["changes"] = change_files
-            return entry
-
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)  # unreferenced; recompute from new head
-            for p in change_files:
-                if os.path.exists(p):
-                    os.remove(p)
-
-
 _DV_PREFIX = "dv-"
 
 
@@ -1499,150 +1322,186 @@ def _read_files_with_pos(spark: SparkSession, m: dict, paths) -> DataFrame:
     return df
 
 
-def _delete_where_dv(
-    spark: SparkSession,
-    path: str,
-    predicate: str,
-    prune: dict | None,
-    track_changes: bool,
-) -> int:
-    """Merge-on-read DELETE (Delta deletion-vector shape): matched row
-    POSITIONS are recorded in a parquet sidecar under the log and the
-    touched manifest entries gain/extend a ``dv`` field — zero data
-    files rewritten. At 100 TB with trickle deletes (GDPR erasure, a
-    bad producer's rows) this turns per-delete write amplification
-    from O(touched files) into O(deleted rows); reads subtract the
-    positions in _read_snapshot_files' single anti-join, and any
-    rewrite verb (compact/optimize/zorder/merge/COW-delete)
-    materializes the deletes for the files it touches. An entry whose
-    deletions reach its row count is dropped outright (the physical
-    file stays for time travel until vacuum). Repeat deletes merge:
-    the new sidecar carries old ∪ new positions for the files it
-    updates, so a reader consults exactly ONE sidecar per entry."""
+def _write_dv(spark: SparkSession, path: str, m: dict, doomed: DataFrame):
+    """Record the ``doomed`` rows (a _read_files_with_pos selection
+    over snapshot ``m``) as deletion vectors: ONE parquet sidecar under
+    the log holds their positions plus the prior positions of every
+    file they touch, so a reader consults exactly one sidecar per
+    entry (files sharing an old sidecar but not touched here keep
+    referencing it unchanged). Returns ``(sidecar_dir, new_dv,
+    full_drop)``: the sidecar (None when no row matched), each touched
+    file's new ``dv`` field, and the files whose cumulative deletions
+    reach their row count — those entries are dropped outright (the
+    physical file stays for time travel until vacuum)."""
+    counts = {
+        r["_dv_file"]: r["n"]
+        for r in doomed.groupBy("_dv_file")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()  # bounded: one row per touched FILE
+    }
+    if not counts:
+        return None, {}, set()
+    at_read = {f["path"]: f for f in m["files"]}
+    plain = {u: _plain_path(u) for u in counts}
+    prior_dirs = sorted(
+        {
+            at_read[p]["dv"]["sidecar"]
+            for p in plain.values()
+            if at_read.get(p, {}).get("dv")
+        }
+    )
+    merged = doomed.select("_dv_file", "_dv_pos")
+    if prior_dirs:
+        merged = merged.unionByName(
+            spark.read.parquet(*prior_dirs)
+            .select("_dv_file", "_dv_pos")
+            .filter(F.col("_dv_file").isin(list(counts)))
+        )
+    sidecar = os.path.join(_log_dir(path), f"{_DV_PREFIX}{uuid.uuid4().hex}")
+    merged.write.mode("errorifexists").parquet(sidecar)
+    new_dv: dict[str, dict] = {}
+    full_drop: set[str] = set()
+    for u, n in counts.items():
+        f = at_read.get(plain[u], {})
+        total = (f.get("dv") or {}).get("deleted", 0) + n
+        if total >= f.get("rows", 0):
+            full_drop.add(plain[u])
+        else:
+            new_dv[plain[u]] = {"sidecar": sidecar, "deleted": total}
+    return sidecar, new_dv, full_drop
+
+
+class _Rewrite(NamedTuple):
+    """One attempt of a rewrite commit, planned against a snapshot.
+    ``read`` is its read set; ``drop`` the head entries the commit
+    removes (None: the read set — copy-on-write replaces what it
+    read); ``dv`` the entries it re-stamps with a new deletion vector
+    (merge-on-read). ``data``, ``changes`` and ``sidecar`` are what the
+    attempt wrote (``changes`` None: no change feed is tracked).
+    ``fields(head)`` returns the verb's own manifest fields and may
+    raise CommitConflict for a verb-specific rule."""
+
+    action: str
+    read: set
+    data: list
+    drop: set | None = None
+    dv: dict | None = None
+    changes: list | None = None
+    sidecar: str | None = None
+    fields: Callable[[dict], dict] | None = None
+
+
+def _rewrite(path: str, plan: Callable[[dict], _Rewrite | None]) -> int:
+    """The one commit path for verbs that replace (copy-on-write) or
+    DV-stamp (merge-on-read) files they read. ``plan(m)`` does one
+    attempt's Spark work against snapshot ``m`` and returns its
+    _Rewrite (None: nothing to commit; the snapshot version is
+    returned). The commit conflicts unless every read file is still in
+    the head with the ``dv`` it had when read: a racing commit either
+    rewrote/removed the input, or DV-deleted rows of it. The second
+    case changes LOGICAL content without changing any path, so a
+    path-only check would let a rewrite publish survivors scanned
+    pre-DV — silently resurrecting the deleted rows (lost update;
+    Delta treats this exact race as a conflict) — and a DV writer
+    would fold stale positions. The new file list is the head minus
+    ``drop``, ``dv`` entries re-stamped, plus the attempt's data files,
+    so files added by racing appends carry over. A losing attempt's
+    writes are discarded and the verb re-plans against the new head."""
     while True:
         m = read_manifest(path)
-        cand = (
-            plan_files(path, predicates=prune, version=m["version"])
-            if prune
-            else m["files"]
-        )
-        cand_paths = sorted({f["path"] for f in cand})
+        w = plan(m)
+        if w is None:
+            return m["version"]
         dv_at_read = {f["path"]: f.get("dv") for f in m["files"]}
-        rows_by_path = {f["path"]: f["rows"] for f in m["files"]}
-        new_dv: dict[str, dict] = {}
-        full_drop: set[str] = set()
-        sidecar_dir: str | None = None
-        change_files: list[str] = []
-        if cand_paths:
-            live = _read_files_with_pos(spark, m, cand_paths)
-            doomed = live.filter(f"coalesce(({predicate}), false)")
-            counts = {
-                r["_dv_file"]: r["n"]
-                for r in doomed.groupBy("_dv_file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()  # bounded: one row per touched FILE
-            }
-            if counts:
-                plain = {u: _plain_path(u) for u in counts}
-                updated = set(plain.values())
-                prior_dirs = sorted(
-                    {
-                        dv_at_read[p]["sidecar"]
-                        for p in updated
-                        if dv_at_read.get(p)
-                    }
-                )
-                merged = doomed.select("_dv_file", "_dv_pos")
-                if prior_dirs:
-                    # fold the updated files' OLD positions into the new
-                    # sidecar; files sharing those old sidecars but not
-                    # updated here keep referencing them unchanged
-                    merged = merged.unionByName(
-                        spark.read.parquet(*prior_dirs)
-                        .select("_dv_file", "_dv_pos")
-                        .filter(F.col("_dv_file").isin(list(counts)))
-                    )
-                sidecar_dir = os.path.join(
-                    _log_dir(path), f"{_DV_PREFIX}{uuid.uuid4().hex}"
-                )
-                merged.write.mode("errorifexists").parquet(sidecar_dir)
-                for u, n in counts.items():
-                    p = plain[u]
-                    total = ((dv_at_read.get(p) or {}).get("deleted", 0)) + n
-                    if total >= rows_by_path.get(p, 0):
-                        full_drop.add(p)
-                    else:
-                        new_dv[p] = {"sidecar": sidecar_dir, "deleted": total}
-                if track_changes:
-                    change_files = _write_change_files(
-                        doomed.drop("_dv_file", "_dv_pos").withColumn(
-                            "_change_type", F.lit("delete")
-                        ),
-                        path,
-                    )
+        drop = w.read if w.drop is None else w.drop
+        new_dv = w.dv or {}
 
         def build(head):
-            by_path = {f["path"]: f for f in head["files"]}
-            for p in set(new_dv) | full_drop:
-                h = by_path.get(p)
-                # conflict if a racing commit rewrote the file or moved
-                # its DV under us — merging would lose their positions
-                if h is None or h.get("dv") != dv_at_read.get(p):
+            at_head = {f["path"]: f for f in head["files"]}
+            for p in w.read:
+                if p not in at_head or at_head[p].get("dv") != dv_at_read.get(p):
                     raise CommitConflict
-            files = []
-            for f in head["files"]:
-                p = f["path"]
-                if p in full_drop:
-                    continue
-                if p in new_dv:
-                    f = {**f, "dv": new_dv[p]}
-                files.append(f)
-            entry = {
-                "action": "delete_dv",
-                "key": head["key"],
-                "files": files,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-            }
-            if track_changes:
-                entry["changes"] = change_files
+            entry = w.fields(head) if w.fields else {}
+            entry["action"] = w.action
+            entry["files"] = [
+                {**f, "dv": new_dv[f["path"]]} if f["path"] in new_dv else f
+                for f in head["files"]
+                if f["path"] not in drop
+            ] + w.data
+            if w.changes is not None:
+                entry["changes"] = w.changes
             return entry
 
         try:
             return _commit(path, build)
         except CommitConflict:
-            if sidecar_dir and os.path.isdir(sidecar_dir):
-                shutil.rmtree(sidecar_dir)
-            for p in change_files:
-                if os.path.exists(p):
-                    os.remove(p)
+            _discard(path, [f["path"] for f in w.data] + (w.changes or []), w.sidecar)
 
 
-def _merge_upsert_dv(
+def _discard(path: str, written: list[str], sidecar: str | None = None) -> None:
+    """Delete what a commit that will never publish wrote: the whole
+    ``data/<uuid>`` or ``changes/<uuid>`` directory of every written
+    file (Spark's _SUCCESS and .crc files go with it) and the DV
+    sidecar. No manifest references any of it."""
+    dirs = {
+        os.path.join(path, *os.path.relpath(p, path).split(os.sep)[:2])
+        for p in written
+    }
+    for d in sorted(dirs) + ([sidecar] if sidecar else []):
+        if os.path.isdir(d):
+            shutil.rmtree(d)
+
+
+def merge_upsert(
     spark: SparkSession,
     path: str,
     updates: DataFrame,
-    key: str | None,
-    track_changes: bool,
-    merge_schema: bool,
+    *,
+    key: str | None = None,
+    track_changes: bool = False,
+    merge_schema: bool = False,
+    deletion_vectors: bool = False,
 ) -> int:
-    """MERGE-ON-READ upsert (merge_upsert deletion_vectors=True):
-    matched rows' POSITIONS are recorded in a parquet sidecar (the same
-    dv machinery _delete_where_dv uses — repeat merges fold prior
-    positions so a reader consults ONE sidecar per entry) and the
-    updates batch lands as ordinary post-image data files. Zero
-    survivor rows are rewritten: update = DV-delete of the pre-image +
-    append of the post-image, so a trickle of updates against 100 TB
-    costs O(batch + matched positions), not O(touched files). Footer
-    stats still prune: only files whose (min,max) key range intersects
-    the batch are even scanned for matches. An entry whose cumulative
-    deletions reach its row count is dropped outright. The CDF feed
-    (track_changes=True) is the COW merge's exactly: matched
-    pre-images, their post-images, and brand-new keys."""
-    while True:
-        m = read_manifest(path)
-        key = key or m["key"]
+    """Upsert `updates` by the table key: rows with matching keys are
+    replaced, new keys are inserted. Only data files whose footer
+    (min,max) key range intersects the updates' key range are
+    rewritten; all others carry over by reference — the stats-pruned
+    copy-on-write MERGE. The anti-join runs with the updates' keys
+    broadcast (a MERGE batch is bounded; the TABLE is not).
+
+    With ``track_changes=True`` the commit also writes a row-level
+    change feed (Delta CDF shape): matched pre-images
+    (`update_preimage`), their replacements (`update_postimage`), and
+    brand-new keys (`insert`), each tagged in a `_change_type` column
+    and recorded in the manifest — `read_changes` serves them without
+    diffing snapshots. Costs two extra broadcast joins against the
+    bounded updates batch, nothing against the table.
+
+    ``deletion_vectors=True`` switches to MERGE-ON-READ: matched rows
+    are DV-deleted in place (their positions land in a log sidecar;
+    repeat merges fold prior positions so a reader consults ONE
+    sidecar per entry) and the updates batch appends as post-image
+    files — update = DV-delete of the pre-image + append of the
+    post-image, so write amplification is O(batch + matched rows),
+    never O(touched files rewritten), the trickle-UPDATE completion of
+    the DV delete story. Footer stats still prune which files are
+    scanned for matches. Same logical result, same CDF semantics
+    (tests pin DV-MERGE ≡ COW-MERGE row-for-row and feed-for-feed);
+    compact()/optimize() later materializes."""
+    m0 = read_manifest(path)
+    _schema0 = _manifest_schema(m0)
+    updates = _apply_generated(
+        updates, m0.get("generated") or {}, _schema0.fieldNames() if _schema0 else None
+    )
+    _check_reserved(updates.schema)
+
+    def plan(m):
+        k = key or m["key"]
         _validate_constraints(updates, m.get("constraints") or {})
+        # The same silent-drift contract append carries: an updates
+        # batch with columns the table lacks refuses unless the caller
+        # opts into evolution (unionByName(allowMissingColumns) below
+        # would otherwise widen the schema as a side effect of MERGE).
         head_schema = _manifest_schema(m)
         batch_new = []
         if head_schema is not None:
@@ -1653,128 +1512,78 @@ def _merge_upsert_dv(
                     f"merge batch adds columns {[f.name for f in batch_new]}; "
                     "pass merge_schema=True to evolve"
                 )
-        lo, hi = updates.agg(F.min(key), F.max(key)).collect()[0]
+        lo, hi = updates.agg(F.min(k), F.max(k)).collect()[0]
         if lo is None:
             raise ValueError("merge_upsert: updates batch is empty")
-        touched_paths = sorted(
+        touched = sorted(
             f["path"]
             for f in m["files"]
             if f["min_key"] is None or not (f["max_key"] < lo or f["min_key"] > hi)
         )
-        dv_at_read = {f["path"]: f.get("dv") for f in m["files"]}
-        rows_by_path = {f["path"]: f["rows"] for f in m["files"]}
+        # MERGE-source joins carry NO broadcast hint: the source is
+        # caller-sized — a trickle batch broadcasts via AQE anyway,
+        # but a fact-sized backfill MERGE under a forced hint would
+        # ship the whole source to every executor (the r8-judge
+        # corpus-broadcast defect class). AQE decides from the
+        # real size; join outputs are strategy-independent.
+        pre = sidecar = None
         new_dv: dict[str, dict] = {}
-        full_drop: set[str] = set()
-        sidecar_dir: str | None = None
-        change_files: list[str] = []
-        pre = None
-        if touched_paths:
-            live = _read_files_with_pos(spark, m, touched_paths)
-            # unhinted — caller-sized MERGE source, see the COW path.
-            doomed = live.join(
-                updates.select(key), on=key, how="left_semi"
+        drop = set(touched)
+        batch = updates
+        if touched and deletion_vectors:
+            doomed = _read_files_with_pos(spark, m, touched).join(
+                updates.select(k), on=k, how="left_semi"
             )
-            counts = {
-                r["_dv_file"]: r["n"]
-                for r in doomed.groupBy("_dv_file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()  # bounded: one row per touched FILE
-            }
-            if counts:
-                plain = {u: _plain_path(u) for u in counts}
-                updated = set(plain.values())
-                prior_dirs = sorted(
-                    {
-                        dv_at_read[p]["sidecar"]
-                        for p in updated
-                        if dv_at_read.get(p)
-                    }
-                )
-                merged = doomed.select("_dv_file", "_dv_pos")
-                if prior_dirs:
-                    merged = merged.unionByName(
-                        spark.read.parquet(*prior_dirs)
-                        .select("_dv_file", "_dv_pos")
-                        .filter(F.col("_dv_file").isin(list(counts)))
-                    )
-                sidecar_dir = os.path.join(
-                    _log_dir(path), f"{_DV_PREFIX}{uuid.uuid4().hex}"
-                )
-                merged.write.mode("errorifexists").parquet(sidecar_dir)
-                for u, n in counts.items():
-                    p = plain[u]
-                    total = ((dv_at_read.get(p) or {}).get("deleted", 0)) + n
-                    if total >= rows_by_path.get(p, 0):
-                        full_drop.add(p)
-                    else:
-                        new_dv[p] = {"sidecar": sidecar_dir, "deleted": total}
-            if track_changes:
-                pre = doomed.drop("_dv_file", "_dv_pos").withColumn(
-                    "_change_type", F.lit("update_preimage")
-                )
-        new_files = _write_data_files(updates, path, key, m.get("partition_by"))
+            sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
+            pre = doomed.drop("_dv_file", "_dv_pos")
+        elif touched:
+            # Read under the snapshot schema so pre-evolution files
+            # null-fill evolved columns; an updates batch may likewise
+            # omit them (allowMissingColumns null-fills its side).
+            affected = _read_snapshot_files(spark, m, touched)
+            pre = affected.join(updates.select(k), on=k, how="left_semi")
+            batch = affected.join(
+                updates.select(k), on=k, how="left_anti"
+            ).unionByName(updates, allowMissingColumns=True)
+        data = _write_data_files(batch, path, k, m.get("partition_by"))
+        changes = None
         if track_changes:
+            feed = updates.withColumn("_change_type", F.lit("insert"))
             if pre is not None:
-                # unhinted — matched set is up to MERGE-source-sized.
-                matched_keys = pre.select(key)
+                pre = pre.withColumn("_change_type", F.lit("update_preimage"))
+                matched_keys = pre.select(k)
                 post = updates.join(
-                    matched_keys, on=key, how="left_semi"
+                    matched_keys, on=k, how="left_semi"
                 ).withColumn("_change_type", F.lit("update_postimage"))
                 ins = updates.join(
-                    matched_keys, on=key, how="left_anti"
+                    matched_keys, on=k, how="left_anti"
                 ).withColumn("_change_type", F.lit("insert"))
                 feed = pre.unionByName(post, allowMissingColumns=True).unionByName(
                     ins, allowMissingColumns=True
                 )
-            else:
-                feed = updates.withColumn("_change_type", F.lit("insert"))
-            change_files = _write_change_files(feed, path)
+            changes = _write_change_files(feed, path)
 
-        def build(head):
-            by_path = {f["path"]: f for f in head["files"]}
-            for p in touched_paths:
-                h = by_path.get(p)
-                # conflict if a racing commit rewrote a scanned file or
-                # moved its DV under us (our match scan and sidecar
-                # fold were computed against the stale positions)
-                if h is None or h.get("dv") != dv_at_read.get(p):
-                    raise CommitConflict
-            files = []
-            for f in head["files"]:
-                p = f["path"]
-                if p in full_drop:
-                    continue
-                if p in new_dv:
-                    f = {**f, "dv": new_dv[p]}
-                files.append(f)
-            schema_json = head.get("schema")
-            if batch_new:  # opted-in evolution: record the widened schema
-                hs = _manifest_schema(head)
-                if hs is not None:
-                    have = set(hs.fieldNames())
-                    add = [f for f in batch_new if f.name not in have]
-                    if add:
-                        schema_json = StructType(hs.fields + add).json()
-            entry = {
-                "action": "merge_dv",
-                "key": head["key"],
-                "files": files + new_files,
-                "schema": schema_json,
-                "txns": head.get("txns", {}),
-            }
-            if track_changes:
-                entry["changes"] = change_files
-            return entry
+        def fields(head):
+            # opted-in evolution: record the widened schema
+            hs = _manifest_schema(head)
+            if hs is None:
+                return {}
+            have = set(hs.fieldNames())
+            add = [f for f in batch_new if f.name not in have]
+            return {"schema": StructType(hs.fields + add).json()} if add else {}
 
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
-            if sidecar_dir and os.path.isdir(sidecar_dir):
-                shutil.rmtree(sidecar_dir)
-            for p in change_files:
-                if os.path.exists(p):
-                    os.remove(p)
+        return _Rewrite(
+            "merge_dv" if deletion_vectors else "merge",
+            set(touched),
+            data,
+            drop=drop,
+            dv=new_dv,
+            changes=changes,
+            sidecar=sidecar,
+            fields=fields,
+        )
+
+    return _rewrite(path, plan)
 
 
 def delete_where(
@@ -1806,64 +1615,60 @@ def delete_where(
     (compile_prune_box) — sound sargable bounds only, so pruning can
     never drop a row the predicate matches.
 
-    ``deletion_vectors=True`` switches to MERGE-ON-READ (Delta DV
-    shape, _delete_where_dv): matched positions land in a log sidecar
-    instead of rewriting survivor files — O(deleted rows) write
-    amplification for trickle deletes; compact()/optimize() later
-    materializes. Same predicate/prune/track_changes semantics, same
+    ``deletion_vectors=True`` switches to MERGE-ON-READ (Delta
+    deletion-vector shape): matched row POSITIONS land in a log
+    sidecar and the touched manifest entries gain/extend a ``dv``
+    field — zero data files rewritten, so per-delete write
+    amplification for trickle deletes (GDPR erasure, a bad producer's
+    rows) is O(deleted rows), not O(touched files). Reads subtract the
+    positions in _read_snapshot_files' single anti-join, and any
+    rewrite verb (compact/optimize/zorder/merge/COW-delete)
+    materializes the deletes for the files it touches. Such a delete
+    conflicts only with racing commits on the files whose DV it
+    changes. Same predicate/prune/track_changes semantics, same
     logical result (tests pin DV ≡ COW row-for-row)."""
     if prune == "auto":
         prune = compile_prune_box(predicate) or None
-    if deletion_vectors:
-        return _delete_where_dv(spark, path, predicate, prune, track_changes)
-    while True:
-        m = read_manifest(path)
-        key = m["key"]
-        if prune:
-            touched_files = plan_files(
-                path, predicates=prune, version=m["version"]
-            )
-        else:
-            touched_files = m["files"]
-        touched_paths = {f["path"] for f in touched_files}
+    hit = f"coalesce(({predicate}), false)"
 
-        new_files: list[dict] = []
-        change_files: list[str] = []
-        if touched_paths:
-            affected = _read_snapshot_files(spark, m, touched_paths)
-            survivors = affected.filter(f"NOT coalesce(({predicate}), false)")
-            new_files = _write_data_files(survivors, path, key, m.get("partition_by"))
-            if track_changes:
-                doomed = affected.filter(f"coalesce(({predicate}), false)")
-                change_files = _write_change_files(
+    def plan(m):
+        cand = (
+            plan_files(path, predicates=prune, version=m["version"])
+            if prune
+            else m["files"]
+        )
+        touched = sorted({f["path"] for f in cand})
+        data: list[dict] = []
+        doomed = sidecar = None
+        new_dv: dict[str, dict] = {}
+        drop = set(touched)
+        if touched and deletion_vectors:
+            doomed = _read_files_with_pos(spark, m, touched).filter(hit)
+            sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
+            doomed = doomed.drop("_dv_file", "_dv_pos") if sidecar else None
+        elif touched:
+            affected = _read_snapshot_files(spark, m, touched)
+            survivors = affected.filter(f"NOT {hit}")
+            data = _write_data_files(survivors, path, m["key"], m.get("partition_by"))
+            doomed = affected.filter(hit)
+        changes = None
+        if track_changes:
+            changes = []
+            if doomed is not None:
+                changes = _write_change_files(
                     doomed.withColumn("_change_type", F.lit("delete")), path
                 )
+        return _Rewrite(
+            "delete_dv" if deletion_vectors else "delete",
+            (set(new_dv) | drop) if deletion_vectors else set(touched),
+            data,
+            drop=drop,
+            dv=new_dv,
+            changes=changes,
+            sidecar=sidecar,
+        )
 
-        def build(head):
-            head_paths = {f["path"] for f in head["files"]}
-            if not touched_paths <= head_paths:
-                raise CommitConflict  # a racing commit rewrote our input
-            if _dv_moved(touched_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            kept = [f for f in head["files"] if f["path"] not in touched_paths]
-            entry = {
-                "action": "delete",
-                "key": head["key"],
-                "files": kept + new_files,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-            }
-            if track_changes:
-                entry["changes"] = change_files
-            return entry
-
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
-            for p in change_files:
-                if os.path.exists(p):
-                    os.remove(p)
+    return _rewrite(path, plan)
 
 
 def partitions(path: str, version: int | None = None) -> list[dict]:
@@ -1949,8 +1754,9 @@ def update_where(
     net_rows is 0 by construction on both paths."""
     if prune == "auto":
         prune = compile_prune_box(predicate) or None
-    while True:
-        m = read_manifest(path)
+    hit = f"coalesce(({predicate}), false)"
+
+    def plan(m):
         key = m["key"]
         gen = m.get("generated") or {}
         bad = sorted(c for c in set_exprs if c in gen)
@@ -1964,14 +1770,12 @@ def update_where(
             missing = sorted(c for c in set_exprs if c not in schema.fieldNames())
             if missing:
                 raise SchemaMismatch(f"update_where: no such columns: {missing}")
-        touched_files = (
+        cand = (
             plan_files(path, predicates=prune, version=m["version"])
             if prune
             else m["files"]
         )
-        touched_paths = {f["path"] for f in touched_files}
-        dv_at_read = {f["path"]: f.get("dv") for f in m["files"]}
-        rows_by_path = {f["path"]: f["rows"] for f in m["files"]}
+        touched = sorted({f["path"] for f in cand})
         cols = schema.fieldNames() if schema is not None else None
 
         def _post_images(matched: DataFrame) -> DataFrame:
@@ -1987,127 +1791,48 @@ def update_where(
             _validate_constraints(out, m.get("constraints") or {})
             return out
 
-        change_files: list[str] = []
+        data: list[dict] = []
+        matched = sidecar = None
         new_dv: dict[str, dict] = {}
-        full_drop: set[str] = set()
-        sidecar_dir: str | None = None
-        if deletion_vectors:
-            new_files: list[dict] = []
-            if touched_paths:
-                live = _read_files_with_pos(spark, m, sorted(touched_paths))
-                doomed = live.filter(f"coalesce(({predicate}), false)")
-                counts = {
-                    r["_dv_file"]: r["n"]
-                    for r in doomed.groupBy("_dv_file")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()  # bounded: one row per touched FILE
-                }
-                if counts:
-                    plain = {u: _plain_path(u) for u in counts}
-                    prior_dirs = sorted(
-                        {
-                            dv_at_read[p]["sidecar"]
-                            for p in set(plain.values())
-                            if dv_at_read.get(p)
-                        }
-                    )
-                    merged = doomed.select("_dv_file", "_dv_pos")
-                    if prior_dirs:
-                        merged = merged.unionByName(
-                            spark.read.parquet(*prior_dirs)
-                            .select("_dv_file", "_dv_pos")
-                            .filter(F.col("_dv_file").isin(list(counts)))
-                        )
-                    sidecar_dir = os.path.join(
-                        _log_dir(path), f"{_DV_PREFIX}{uuid.uuid4().hex}"
-                    )
-                    merged.write.mode("errorifexists").parquet(sidecar_dir)
-                    for u, n in counts.items():
-                        p = plain[u]
-                        total = ((dv_at_read.get(p) or {}).get("deleted", 0)) + n
-                        if total >= rows_by_path.get(p, 0):
-                            full_drop.add(p)
-                        else:
-                            new_dv[p] = {"sidecar": sidecar_dir, "deleted": total}
-                    pre = doomed.drop("_dv_file", "_dv_pos")
-                    new_files = _write_data_files(
-                        _post_images(pre), path, key, m.get("partition_by")
-                    )
-                    if track_changes:
-                        feed = pre.withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        ).unionByName(
-                            _post_images(pre).withColumn(
-                                "_change_type", F.lit("update_postimage")
-                            ),
-                            allowMissingColumns=True,
-                        )
-                        change_files = _write_change_files(feed, path)
-        else:
-            new_files = []
-            if touched_paths:
-                affected = _read_snapshot_files(spark, m, touched_paths)
-                matched = affected.filter(f"coalesce(({predicate}), false)")
-                survivors = affected.filter(f"NOT coalesce(({predicate}), false)")
-                out = survivors.unionByName(_post_images(matched))
-                new_files = _write_data_files(out, path, key, m.get("partition_by"))
-                if track_changes:
-                    feed = matched.withColumn(
-                        "_change_type", F.lit("update_preimage")
-                    ).unionByName(
-                        _post_images(matched).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        ),
-                        allowMissingColumns=True,
-                    )
-                    change_files = _write_change_files(feed, path)
+        drop = set(touched)
+        if touched and deletion_vectors:
+            doomed = _read_files_with_pos(spark, m, touched).filter(hit)
+            sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
+            if sidecar:
+                matched = doomed.drop("_dv_file", "_dv_pos")
+                data = _write_data_files(
+                    _post_images(matched), path, key, m.get("partition_by")
+                )
+        elif touched:
+            affected = _read_snapshot_files(spark, m, touched)
+            matched = affected.filter(hit)
+            survivors = affected.filter(f"NOT {hit}")
+            out = survivors.unionByName(_post_images(matched))
+            data = _write_data_files(out, path, key, m.get("partition_by"))
+        changes = None
+        if track_changes:
+            changes = []
+            if matched is not None:
+                feed = matched.withColumn(
+                    "_change_type", F.lit("update_preimage")
+                ).unionByName(
+                    _post_images(matched).withColumn(
+                        "_change_type", F.lit("update_postimage")
+                    ),
+                    allowMissingColumns=True,
+                )
+                changes = _write_change_files(feed, path)
+        return _Rewrite(
+            "update_dv" if deletion_vectors else "update",
+            set(touched),
+            data,
+            drop=drop,
+            dv=new_dv,
+            changes=changes,
+            sidecar=sidecar,
+        )
 
-        def build(head):
-            by_path = {f["path"]: f for f in head["files"]}
-            if deletion_vectors:
-                for p in touched_paths:
-                    h = by_path.get(p)
-                    if h is None or h.get("dv") != dv_at_read.get(p):
-                        raise CommitConflict  # rewrote or DV'd our input
-                files = []
-                for f in head["files"]:
-                    p = f["path"]
-                    if p in full_drop:
-                        continue
-                    if p in new_dv:
-                        f = {**f, "dv": new_dv[p]}
-                    files.append(f)
-                files = files + new_files
-                action = "update_dv"
-            else:
-                if not touched_paths <= set(by_path):
-                    raise CommitConflict  # a racing commit rewrote our input
-                if _dv_moved(touched_paths, m, head):
-                    raise CommitConflict  # racing DV delete on our input
-                files = [
-                    f for f in head["files"] if f["path"] not in touched_paths
-                ] + new_files
-                action = "update"
-            entry = {
-                "action": action,
-                "key": head["key"],
-                "files": files,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-            }
-            if track_changes:
-                entry["changes"] = change_files
-            return entry
-
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
-            if sidecar_dir and os.path.isdir(sidecar_dir):
-                shutil.rmtree(sidecar_dir)
-            for p in change_files:
-                if os.path.exists(p):
-                    os.remove(p)
+    return _rewrite(path, plan)
 
 
 def replace_where(
@@ -2149,15 +1874,14 @@ def replace_where(
         df, m0.get("generated") or {}, _schema0.fieldNames() if _schema0 else None
     )
     _check_reserved(df.schema)
-    while True:
-        m = read_manifest(path)
+
+    def plan(m):
         pby = m.get("partition_by")
         if not pby:
             raise ValueError(
                 "replace_where requires a partitioned table "
                 "(create(partition_by=...) or repartition_table)"
             )
-        key = m["key"]
         _validate_constraints(df, m.get("constraints") or {})
         head_schema = _manifest_schema(m)
         if head_schema is not None and [
@@ -2209,8 +1933,8 @@ def replace_where(
                 f"predicate — rows outside the replaced region are refused"
             )
 
-        new_files = _write_data_files(df, path, key, pby)
-        change_files: list[str] = []
+        data = _write_data_files(df, path, m["key"], pby)
+        changes = None
         if track_changes:
             feed = df.withColumn("_change_type", F.lit("insert"))
             if doomed_paths:
@@ -2218,17 +1942,9 @@ def replace_where(
                     "_change_type", F.lit("delete")
                 )
                 feed = pre.unionByName(feed, allowMissingColumns=True)
-            change_files = _write_change_files(feed, path)
+            changes = _write_change_files(feed, path)
 
-        snapshot_tuples = set(by_tuple)
-
-        def build(head):
-            head_paths = {f["path"] for f in head["files"]}
-            if not doomed_paths <= head_paths:
-                raise CommitConflict  # a racing commit rewrote our input
-            if _dv_moved(doomed_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            kept = []
+        def region_fields(head):
             for f in head["files"]:
                 if f["path"] in doomed_paths:
                     continue
@@ -2239,33 +1955,20 @@ def replace_where(
                 )
                 if t in replaced:
                     raise CommitConflict  # racing append INTO the replaced region
-                if t is None or t not in snapshot_tuples:
+                if t is None or t not in by_tuple:
                     # a racing commit introduced a tuple (or an
                     # un-tupled file) this evaluation never saw — the
                     # predicate may select it, so recompute against the
                     # new head rather than guess (pessimistic for
                     # out-of-region new tuples, but one cheap loop)
                     raise CommitConflict
-                kept.append(f)
-            entry = {
-                "action": "replace_where",
-                "key": head["key"],
-                "files": kept + new_files,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-                "predicate": predicate,
-            }
-            if track_changes:
-                entry["changes"] = change_files
-            return entry
+            return {"predicate": predicate}
 
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
-            for p in change_files:
-                if os.path.exists(p):
-                    os.remove(p)
+        return _Rewrite(
+            "replace_where", doomed_paths, data, changes=changes, fields=region_fields
+        )
+
+    return _rewrite(path, plan)
 
 
 def repartition_table(
@@ -2281,34 +1984,28 @@ def repartition_table(
     spec, which is exactly what this rewrite restores. Any racing
     commit conflicts and the rewrite recomputes (it claims the whole
     snapshot as its read set)."""
-    while True:
-        m = read_manifest(path)
+
+    def plan(m):
         old_paths = {f["path"] for f in m["files"]}
         df = (
             _read_snapshot_files(spark, m, old_paths)
             if old_paths
             else read(spark, path)
         )
-        new_files = _write_data_files(df, path, m["key"], partition_by)
 
-        def build(head):
+        def spec(head):
             if {f["path"] for f in head["files"]} != old_paths:
                 raise CommitConflict  # whole-snapshot read set
-            if _dv_moved(old_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            return {
-                "action": "repartition",
-                "key": head["key"],
-                "files": new_files,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-                "partition_by": list(partition_by) if partition_by else None,
-            }
+            return {"partition_by": list(partition_by) if partition_by else None}
 
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
+        return _Rewrite(
+            "repartition",
+            old_paths,
+            _write_data_files(df, path, m["key"], partition_by),
+            fields=spec,
+        )
+
+    return _rewrite(path, plan)
 
 
 def read_changes(spark: SparkSession, path: str, version: int) -> DataFrame:
@@ -2418,44 +2115,20 @@ def zorder_cluster(
     skip most files. A normal versioned commit: older versions still
     resolve to the old layout, and the txns ledger and schema carry
     forward. Rows are bit-identical — only placement changes."""
-    while True:
-        m = read_manifest(path)
+
+    def plan(m):
         old_paths = {f["path"] for f in m["files"]}
         df = _read_snapshot_files(spark, m, old_paths)
         z = _zvalue_expr(spark, df, cols)
         clustered = df.repartitionByRange(num_files, z.alias("_z"))
-        new_files = _write_data_files(
+        data = _write_data_files(
             clustered, path, m["key"], m.get("partition_by"), cluster=False
         )
+        return _Rewrite(
+            "zorder", old_paths, data, fields=lambda head: {"zorder_by": list(cols)}
+        )
 
-        def build(head):
-            head_paths = {f["path"] for f in head["files"]}
-            if not old_paths <= head_paths:
-                raise CommitConflict
-            if _dv_moved(old_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            racing = [f for f in head["files"] if f["path"] not in old_paths]
-            return {
-                "action": "zorder",
-                "key": head["key"],
-                "files": new_files + racing,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-                "zorder_by": list(cols),
-            }
-
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
-
-
-def _discard_orphans(files: list[dict]) -> None:
-    """Delete data files written for a commit that lost a write-write
-    race (they are referenced by no manifest)."""
-    for f in files:
-        if os.path.exists(f["path"]):
-            os.remove(f["path"])
+    return _rewrite(path, plan)
 
 
 def compact(spark: SparkSession, path: str, num_files: int = 1) -> int:
@@ -2465,35 +2138,17 @@ def compact(spark: SparkSession, path: str, num_files: int = 1) -> int:
     clustering write supersedes `num_files`: the result is one file
     per partition tuple — the densest layout the partition contract
     allows."""
-    while True:
-        m = read_manifest(path)
+
+    def plan(m):
         old_paths = {f["path"] for f in m["files"]}
         # Compact under the snapshot schema: the rewrite MATERIALIZES
         # evolved columns (null-filled for pre-evolution rows) so the
         # output files are self-describing at the current schema.
         df = _read_snapshot_files(spark, m, old_paths).repartition(num_files)
-        new_files = _write_data_files(df, path, m["key"], m.get("partition_by"))
+        data = _write_data_files(df, path, m["key"], m.get("partition_by"))
+        return _Rewrite("compact", old_paths, data)
 
-        def build(head):
-            head_paths = {f["path"] for f in head["files"]}
-            if not old_paths <= head_paths:
-                raise CommitConflict  # a racing commit rewrote our input
-            if _dv_moved(old_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            # carry files added by racing appends since we snapshotted
-            racing = [f for f in head["files"] if f["path"] not in old_paths]
-            return {
-                "action": "compact",
-                "key": head["key"],
-                "files": new_files + racing,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-            }
-
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
+    return _rewrite(path, plan)
 
 
 def history(path: str) -> list[dict]:
@@ -2648,14 +2303,7 @@ def add_constraint(spark: SparkSession, path: str, name: str, expr: str) -> int:
     def build(head):
         cons = dict(head.get("constraints") or {})
         cons[name] = expr
-        return {
-            "action": "add_constraint",
-            "key": head["key"],
-            "files": head["files"],
-            "schema": head.get("schema"),
-            "txns": head.get("txns", {}),
-            "constraints": cons,
-        }
+        return {"action": "add_constraint", "files": head["files"], "constraints": cons}
 
     return _commit(path, build)
 
@@ -2670,10 +2318,7 @@ def drop_constraint(path: str, name: str) -> int:
         cons.pop(name, None)
         return {
             "action": "drop_constraint",
-            "key": head["key"],
             "files": head["files"],
-            "schema": head.get("schema"),
-            "txns": head.get("txns", {}),
             "constraints": cons or None,
         }
 
@@ -2724,10 +2369,8 @@ def restore(spark: SparkSession, path: str, version: int) -> int:
         return {
             "action": "restore",
             "restored_from": version,
-            "key": head["key"],
             "files": target["files"],
             "schema": target.get("schema"),
-            "txns": head.get("txns", {}),
             "bloom": target.get("bloom"),
             # layout identity travels WITH the files: a head spec the
             # restored files were never written under would break
@@ -2762,8 +2405,7 @@ def optimize_small_files(
     def _live(f: dict) -> int:
         return f["rows"] - ((f.get("dv") or {}).get("deleted", 0))
 
-    while True:
-        m = read_manifest(path)
+    def plan(m):
         small = [f for f in m["files"] if _live(f) < target_rows]
         pby = m.get("partition_by")
         if pby:
@@ -2785,31 +2427,14 @@ def optimize_small_files(
                 for f in fs
             ]
         if not small or (len(small) == 1 and not small[0].get("dv")):
-            return m["version"]
+            return None
         small_paths = {f["path"] for f in small}
         n_bins = max(1, (sum(_live(f) for f in small) + target_rows - 1) // target_rows)
         df = _read_snapshot_files(spark, m, small_paths).repartition(n_bins)
-        new_files = _write_data_files(df, path, m["key"], m.get("partition_by"))
+        data = _write_data_files(df, path, m["key"], m.get("partition_by"))
+        return _Rewrite("optimize", small_paths, data)
 
-        def build(head):
-            head_paths = {f["path"] for f in head["files"]}
-            if not small_paths <= head_paths:
-                raise CommitConflict  # someone rewrote our input files
-            if _dv_moved(small_paths, m, head):
-                raise CommitConflict  # racing DV delete on our input
-            kept = [f for f in head["files"] if f["path"] not in small_paths]
-            return {
-                "action": "optimize",
-                "key": head["key"],
-                "files": kept + new_files,
-                "schema": head.get("schema"),
-                "txns": head.get("txns", {}),
-            }
-
-        try:
-            return _commit(path, build)
-        except CommitConflict:
-            _discard_orphans(new_files)
+    return _rewrite(path, plan)
 
 
 def clone(spark: SparkSession, source: str, target: str) -> int:
@@ -2914,12 +2539,15 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
                 os.remove(p)
                 deleted.append(p)
         os.remove(_manifest_path(path, v))
-    # prune now-empty uuid data dirs (walk nested hive partition dirs —
-    # a partitioned write's files live under __p_col=value subtrees)
-    data_root = os.path.join(path, _DATA)
-    if os.path.isdir(data_root):
-        for d in os.listdir(data_root):
-            full = os.path.join(data_root, d)
+    # prune now-empty uuid data and change dirs (walk nested hive
+    # partition dirs — a partitioned write's files live under
+    # __p_col=value subtrees)
+    for area in (_DATA, _CHANGES):
+        root = os.path.join(path, area)
+        if not os.path.isdir(root):
+            continue
+        for d in os.listdir(root):
+            full = os.path.join(root, d)
             if os.path.isdir(full) and not any(
                 n.endswith(".parquet")
                 for _, _, names in os.walk(full)
@@ -2934,8 +2562,8 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
     # unreferenced at that instant, so the sweep deleted it and the
     # delete then committed a manifest pointing at a missing sidecar —
     # an unreadable head (ADVICE r8). A sidecar orphaned by a LOST
-    # commit race never reaches any manifest, and its writer already
-    # rmtree's it on CommitConflict, so nothing leaks.
+    # commit race never reaches any manifest, and _rewrite's cleanup
+    # (_discard) removes it on CommitConflict, so nothing leaks.
     referenced = set()
     for v in keep_versions:
         for bl in (read_manifest(path, v).get("bloom") or {}).values():

@@ -43,6 +43,5 @@ from lambda_hive_spark.operators import (  # noqa: F401
     lake,
     retrieval,
     orchestration,
-    staged_r9,
     lakesql_ops,
 )

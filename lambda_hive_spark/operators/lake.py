@@ -27,6 +27,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lambda_hive_spark import catalog as cat
 from lambda_hive_spark import lakehouse as lh
 from lambda_hive_spark.io import table
 from lambda_hive_spark.operators.scans import _scratch
@@ -2354,3 +2355,197 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift = persisted.exceptAll(rebuilt).unionAll(rebuilt.exceptAll(persisted))
     assert drift.count() == 0, "streamed index drifted from full rebuild"
     return result
+
+
+LAKE_DV_ORACLE = """
+WITH s AS (
+  SELECT o_orderkey, o_custkey, o_totalprice
+  FROM orders
+  WHERE NOT COALESCE(o_orderkey % 5 = 0 AND o_totalprice < 150000.0, FALSE)
+    AND NOT COALESCE(o_custkey % 7 = 0, FALSE)
+)
+SELECT o_orderkey, o_custkey, o_totalprice FROM s WHERE o_orderkey % 11 <> 0
+UNION ALL
+SELECT o_orderkey, o_custkey, -o_totalprice AS o_totalprice
+FROM orders WHERE o_orderkey % 11 = 0
+"""
+
+
+@op("lake_deletion_vector", oracle=LAKE_DV_ORACLE, tags=("side_effect",))
+def lake_deletion_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Merge-on-read DELETE lifecycle through the table layer: orders
+    lands range-partitioned by key into 8 files; TWO successive DV
+    deletes (a priced slice of every 5th key, then every 7th
+    customer's orders) record positions in log sidecars — the
+    manifest's physical file set is asserted IDENTICAL across both
+    commits (zero data files moved: the write-amplification contract
+    copy-on-write cannot make), repeat-delete positions merge into
+    one sidecar per entry, the pre-delete version stays readable, the
+    tracked second delete's change feed serves exactly the NEWLY
+    deleted pre-images; then a MERGE-ON-READ upsert (r9:
+    merge_upsert(deletion_vectors=True)) replaces every 11th order
+    with a negated-price post-image — matched survivors DV out, the
+    batch appends, and every pre-existing file entry either keeps its
+    exact path or is dropped outright (never rewritten). Batch keys
+    whose rows were already DV-deleted come back as INSERTS of the
+    batch row (the oracle's UNION ALL arm covers deleted keys too).
+    Finally a compact() MATERIALIZES everything (no dv survives;
+    physical rows equal the logical count) with net_rows == 0 for the
+    layout-only commit. The head read-back must equal the relational
+    expression (NOT COALESCE per predicate: DELETE removes only
+    p IS TRUE, so NULL-predicate rows survive — the heavy-null lesson
+    lake_delete_where carries).
+
+    Scale: this is THE trickle-mutation answer at 100 TB — GDPR
+    erasure or a bad producer's rows cost O(deleted positions), a
+    trickle UPDATE costs O(batch + matched positions), never O(touched
+    files rewritten); reads pay one broadcast anti-join at the single
+    choke point every verb scans through (lakehouse.py
+    _read_snapshot_files)."""
+    path = _fresh_table_dir("dv", sf_dir)
+    base = table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    lh.create(spark, path, base.repartitionByRange(8, "o_orderkey"), key="o_orderkey")
+    files_v1 = sorted(f["path"] for f in lh.read_manifest(path)["files"])
+    n_base = base.count()
+
+    lh.delete_where(
+        spark,
+        path,
+        "o_orderkey % 5 = 0 AND o_totalprice < 150000.0",
+        deletion_vectors=True,
+    )
+    n_mid = lh.read(spark, path).count()
+    v2 = lh.delete_where(
+        spark,
+        path,
+        "o_custkey % 7 = 0",
+        deletion_vectors=True,
+        track_changes=True,
+    )
+    head = lh.read(spark, path)
+    n_head = head.count()
+    m = lh.read_manifest(path)
+    assert (
+        sorted(f["path"] for f in m["files"]) == files_v1
+    ), "DV delete moved data files"
+    assert lh.read(spark, path, version=1).count() == n_base  # time travel
+    assert lh.read(spark, path, version=2).count() == n_mid  # mid-state too
+    feed = lh.read_changes(spark, path, v2)
+    assert feed.count() == n_mid - n_head, "feed must carry NEW pre-images only"
+
+    batch = base.filter("o_orderkey % 11 = 0").withColumn(
+        "o_totalprice", -F.col("o_totalprice")
+    )
+    pre_merge_paths = {f["path"] for f in m["files"]}
+    lh.merge_upsert(spark, path, batch, deletion_vectors=True)
+    mm = lh.read_manifest(path)
+    assert mm["action"] == "merge_dv"
+    surviving_old = {f["path"] for f in mm["files"] if f["path"] in pre_merge_paths}
+    assert surviving_old <= pre_merge_paths, "merge rewrote a pre-existing file"
+    assert any(
+        f["path"] not in pre_merge_paths for f in mm["files"]
+    ), "merge appended no post-image files"
+    n_merged = lh.read(spark, path).count()
+
+    lh.compact(spark, path, num_files=2)
+    mc = lh.read_manifest(path)
+    assert not any(f.get("dv") for f in mc["files"]), "compact left a dv"
+    assert sum(f["rows"] for f in mc["files"]) == n_merged, "compact kept deleted rows"
+    assert mc["metrics"]["net_rows"] == 0, "materialization is layout-only"
+    return lh.read(spark, path)
+
+
+CATALOG_TXN_ORACLE = """
+WITH led AS (
+  SELECT o_orderkey AS k, o_totalprice AS amt FROM orders WHERE o_orderkey % 4 = 1
+), bal AS (
+  SELECT o_custkey AS k, CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS amt
+  FROM orders WHERE o_orderkey % 4 = 1 GROUP BY o_custkey
+), delta AS (
+  SELECT o_orderkey AS k, o_totalprice AS amt FROM orders WHERE o_orderkey % 4 = 3
+)
+SELECT 'ledger_pre' AS tbl, CAST(COUNT(*) AS BIGINT) AS n_rows FROM led
+UNION ALL SELECT 'balances_pre', CAST(COUNT(*) AS BIGINT) FROM bal
+UNION ALL SELECT 'ledger_post', CAST((SELECT COUNT(*) FROM led) + COUNT(*) AS BIGINT) FROM delta
+UNION ALL SELECT 'balances_post', CAST((SELECT COUNT(*) FROM bal) + COUNT(*) AS BIGINT) FROM delta
+"""
+
+
+@op("catalog_txn_atomic", oracle=CATALOG_TXN_ORACLE, tags=("side_effect",))
+def catalog_txn_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Atomic multi-table transaction through the name catalog
+    (catalog.py): a ledger and a balances table register under names,
+    one Transaction appends a delta batch to BOTH and publishes the
+    two pointer moves in ONE catalog commit. The op reads both tables
+    THROUGH the catalog at the pre- and post-transaction catalog
+    snapshots and returns the four (table, phase) row counts — the
+    oracle recomputes them relationally, so the driver hash-gates that
+    NO catalog snapshot shows a torn transaction (ledger moved,
+    balances not). In-op asserts: the transaction is exactly one
+    catalog version; at the PRE snapshot neither table shows the
+    delta even though both per-table commits already exist in the
+    table logs (the pin IS the isolation); a racing second
+    transaction on the same base raises CatalogConflict and publishes
+    nothing.
+
+    Scale: the catalog is a pointer file — transaction cost is
+    O(tables touched) metadata, independent of data size; this is the
+    Iceberg-REST-catalog shape, the only multi-table atomicity design
+    that survives 100 TB (coordinating data-file publication would
+    not)."""
+    root = _fresh_table_dir("cattxn", sf_dir)
+    led_path = f"{root}/ledger"
+    bal_path = f"{root}/balances"
+    seed = (
+        table(spark, sf_dir, "orders")
+        .filter("o_orderkey % 4 = 1")
+        .select(F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("amt"))
+    )
+    bal_seed = (
+        table(spark, sf_dir, "orders")
+        .filter("o_orderkey % 4 = 1")
+        .groupBy(F.col("o_custkey").alias("k"))
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
+            .cast("double")
+            .alias("amt")
+        )
+    )
+    lh.create(spark, led_path, seed.repartition(4), key="k")
+    lh.create(spark, bal_path, bal_seed.repartition(4), key="k")
+    c = cat.Catalog(root)
+    c.create_table("ledger", led_path)
+    c.create_table("balances", bal_path)
+    pre_v = cat.current_version(root)
+
+    delta = (
+        table(spark, sf_dir, "orders")
+        .filter("o_orderkey % 4 = 3")
+        .select(F.col("o_orderkey").alias("k"), F.col("o_totalprice").alias("amt"))
+    )
+    txn = c.transaction()
+    rival = c.transaction()  # same base — must lose
+    lh.append(spark, txn.path("ledger"), delta)
+    lh.append(spark, txn.path("balances"), delta)
+    txn.stage("ledger")
+    txn.stage("balances")
+    # staged but unpublished: catalog readers still see the base pins
+    assert c.read(spark, "ledger").count() == seed.count()
+    post_v = txn.commit()
+    assert post_v == pre_v + 1, "transaction must be ONE catalog commit"
+    rival.stage("ledger")
+    try:
+        rival.commit()
+        raise AssertionError("racing transaction on the same base committed")
+    except cat.CatalogConflict:
+        pass
+
+    rows = [
+        ("ledger_pre", c.read(spark, "ledger", catalog_version=pre_v).count()),
+        ("balances_pre", c.read(spark, "balances", catalog_version=pre_v).count()),
+        ("ledger_post", c.read(spark, "ledger", catalog_version=post_v).count()),
+        ("balances_post", c.read(spark, "balances", catalog_version=post_v).count()),
+    ]
+    return spark.createDataFrame(rows, "tbl string, n_rows long")

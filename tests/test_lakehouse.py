@@ -20,6 +20,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from lambda_hive_spark import lakehouse as lh
+from tests.conftest import SF_DIR as SF
 
 
 def _mk(spark, tmp_path, n=100, files=4):
@@ -382,6 +383,8 @@ def test_vacuum_reclaims_change_files(spark, tmp_path):
     deleted = lh.vacuum(path, keep_last=1)
     assert all(not os.path.exists(p) for p in chg)
     assert any(p in deleted for p in chg)
+    # the emptied changes/<uuid> dir (Spark's _SUCCESS/.crc) goes too
+    assert os.listdir(os.path.join(path, "changes")) == []
 
 
 def test_ivm_two_cycles_track_full_recompute(spark, tmp_path):
@@ -2141,6 +2144,150 @@ def test_update_where_prunes_and_conflicts_on_racing_dv(spark, tmp_path, monkeyp
     assert all(got[i] == 0 for i in range(90, 95)) and 95 not in got
 
 
+def _mk_range(spark, tmp_path, partition_by=None):
+    """ids 0..99 (val = id * 10, b = id // 25) in four key-range
+    files, so a narrow id predicate touches exactly one file."""
+    path = str(tmp_path / "rtbl")
+    df = spark.range(100).select(
+        F.col("id").cast("long"),
+        (F.col("id") * 10).alias("val"),
+        (F.col("id") / 25).cast("long").alias("b"),
+    )
+    lh.create(spark, path, df.repartitionByRange(4, "id"), key="id", partition_by=partition_by)
+    return path
+
+
+def _unreferenced(path):
+    """Data files, change files, uuid dirs under data/ and changes/,
+    and DV sidecars that no manifest of the table references."""
+    log = lh._log_dir(path)
+    refs = set()
+    for n in os.listdir(log):
+        if n.endswith(".json") and n[:-5].isdigit():
+            m = lh.read_manifest(path, int(n[:-5]))
+            refs.update(f["path"] for f in m["files"])
+            refs.update(f["dv"]["sidecar"] for f in m["files"] if f.get("dv"))
+            refs.update(m.get("changes", []))
+    stray = [
+        os.path.join(log, n)
+        for n in os.listdir(log)
+        if n.startswith(lh._DV_PREFIX) and os.path.join(log, n) not in refs
+    ]
+    for area in (lh._DATA, lh._CHANGES):
+        root = os.path.join(path, area)
+        for d in os.listdir(root) if os.path.isdir(root) else []:
+            files = [
+                os.path.join(r, n)
+                for r, _, names in os.walk(os.path.join(root, d))
+                for n in names
+                if n.endswith(".parquet")
+            ]
+            stray += [f for f in files if f not in refs]
+            if not any(f in refs for f in files):
+                stray.append(os.path.join(root, d))
+    return stray
+
+
+def _upd(spark):
+    return spark.createDataFrame(
+        [(i, -1, 0) for i in range(5)] + [(200, -1, 8)], "id long, val long, b long"
+    )
+
+
+# verb → (partitioned table?, call, expected {id: val} after the race
+# deleted ids 6 and 7 and the verb re-planned against it)
+_BASE = {i: i * 10 for i in range(100) if i not in (6, 7)}
+_RACED_REWRITES = {
+    "merge_cow": (
+        False,
+        lambda s, p: lh.merge_upsert(s, p, _upd(s), track_changes=True),
+        {**_BASE, **{i: -1 for i in (0, 1, 2, 3, 4, 200)}},
+    ),
+    "merge_dv": (
+        False,
+        lambda s, p: lh.merge_upsert(
+            s, p, _upd(s), track_changes=True, deletion_vectors=True
+        ),
+        {**_BASE, **{i: -1 for i in (0, 1, 2, 3, 4, 200)}},
+    ),
+    "delete_cow": (
+        False,
+        lambda s, p: lh.delete_where(s, p, "id < 5", prune="auto", track_changes=True),
+        {i: v for i, v in _BASE.items() if i >= 5},
+    ),
+    "delete_dv": (
+        False,
+        lambda s, p: lh.delete_where(
+            s, p, "id < 5", prune="auto", track_changes=True, deletion_vectors=True
+        ),
+        {i: v for i, v in _BASE.items() if i >= 5},
+    ),
+    "update_cow": (
+        False,
+        lambda s, p: lh.update_where(
+            s, p, "id < 5", {"val": "-1"}, prune="auto", track_changes=True
+        ),
+        {**_BASE, **{i: -1 for i in range(5)}},
+    ),
+    "update_dv": (
+        False,
+        lambda s, p: lh.update_where(
+            s, p, "id < 5", {"val": "-1"}, prune="auto", track_changes=True,
+            deletion_vectors=True,
+        ),
+        {**_BASE, **{i: -1 for i in range(5)}},
+    ),
+    "replace_where": (
+        True,
+        lambda s, p: lh.replace_where(
+            s, p, "b = 0",
+            s.range(25).select(
+                F.col("id").cast("long"), (-F.col("id")).alias("val"), F.lit(0).cast("long").alias("b")
+            ),
+            track_changes=True,
+        ),
+        {**_BASE, **{i: -i for i in range(25)}},
+    ),
+    "repartition_table": (False, lambda s, p: lh.repartition_table(s, p, ["b"]), _BASE),
+    "zorder_cluster": (
+        False, lambda s, p: lh.zorder_cluster(s, p, ["id", "val"], num_files=2), _BASE
+    ),
+    "compact": (False, lambda s, p: lh.compact(s, p, num_files=1), _BASE),
+    "optimize_small_files": (
+        False, lambda s, p: lh.optimize_small_files(s, p, target_rows=1000), _BASE
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_RACED_REWRITES))
+def test_every_rewriter_retries_a_racing_dv_delete_and_leaves_no_orphans(
+    spark, tmp_path, monkeypatch, verb
+):
+    """A DV delete of ids 6 and 7 (inside every verb's read set, and
+    on the very file a DV delete of id < 5 stamps) commits between the
+    verb's snapshot read and its commit. Every rewrite path must lose,
+    re-plan against the new head and commit rows that honour both
+    writers — and the losing attempt's data dirs, change-feed dirs and
+    DV sidecar must be gone: after the commit nothing under data/,
+    changes/ or _log/dv-* is unreferenced."""
+    partitioned, call, expect = _RACED_REWRITES[verb]
+    path = _mk_range(spark, tmp_path, ["b"] if partitioned else None)
+    real = lh._commit
+    commits = []
+
+    def racy(p, build):
+        commits.append(p)
+        if len(commits) == 1:  # the race's own commit is commits[1]
+            lh.delete_where(spark, path, "id IN (6, 7)", deletion_vectors=True)
+        return real(p, build)
+
+    monkeypatch.setattr(lh, "_commit", racy)
+    call(spark, path)
+    assert len(commits) >= 3, f"{verb} never conflicted on the racing DV delete"
+    assert _rows(lh.read(spark, path)) == sorted(expect.items())
+    assert _unreferenced(path) == []
+
+
 # ---------------------------------------------------------------------------
 # Named refs: tags/branches over versions (create / re-point / drop),
 # read(ref=) resolution, and the vacuum horizon guard.
@@ -2217,3 +2364,52 @@ def test_vacuum_never_reaps_ref_target(spark, tmp_path):
     with pytest.raises(FileNotFoundError):
         lh.read_manifest(path, 1)
     assert lh.read(spark, path).count() == 10  # head intact throughout
+
+
+# ---------------------------------------------------------------------------
+# The deletion-vector and catalog-transaction lake ops, checked against
+# their shipping oracles with an order-insensitive row compare.
+# ---------------------------------------------------------------------------
+
+
+def _compare(sdf, con, sql):
+    ddf = con.execute(sql).fetchdf()
+    pdf = sdf.toPandas()
+    cols = sorted(pdf.columns)
+    assert cols == sorted(ddf.columns)
+    s = sorted(map(str, pdf[cols].itertuples(index=False, name=None)))
+    d = sorted(map(str, ddf[cols].itertuples(index=False, name=None)))
+    assert s == d
+
+
+def test_r9_ops_are_registered():
+    from lambda_hive_spark.registry import all_ops
+
+    ops = all_ops()
+    assert "lake_deletion_vector" in ops
+    assert "catalog_txn_atomic" in ops
+    assert "side_effect" in ops["lake_deletion_vector"].tags
+    assert "side_effect" in ops["catalog_txn_atomic"].tags
+    # round-9 lifted the round-8 freeze: 351 + staged pair +
+    # join_star_bucketed + lake_update_where + events_global_seq;
+    # round-10 build added the lake SQL surface (lake_sql_dml,
+    # lake_sql_insert) and named refs (lake_named_refs) → 359
+    assert len(ops) == 359
+
+
+def test_lake_deletion_vector_matches_oracle(spark, duck):
+    from lambda_hive_spark.operators.lake import (
+        LAKE_DV_ORACLE,
+        lake_deletion_vector,
+    )
+
+    _compare(lake_deletion_vector(spark, SF), duck, LAKE_DV_ORACLE)
+
+
+def test_catalog_txn_atomic_matches_oracle(spark, duck):
+    from lambda_hive_spark.operators.lake import (
+        CATALOG_TXN_ORACLE,
+        catalog_txn_atomic,
+    )
+
+    _compare(catalog_txn_atomic(spark, SF), duck, CATALOG_TXN_ORACLE)
