@@ -44,7 +44,6 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -68,13 +67,9 @@ def _cat_path(root: str, version: int) -> str:
 
 def current_version(root: str) -> int:
     try:
-        names = os.listdir(_cat_dir(root))
+        return max(lh._versions(_cat_dir(root)), default=0)
     except FileNotFoundError:
         return 0
-    return max(
-        (int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()),
-        default=0,
-    )
 
 
 def _read(root: str, version: int | None = None) -> dict:
@@ -88,22 +83,16 @@ def _read(root: str, version: int | None = None) -> dict:
 def _commit(root: str, build) -> int:
     """Same OCC publish idiom as lakehouse._commit: build(head) returns
     the next catalog state's ``tables`` dict (or raises), the loop
-    stamps the version and publishes with a create-exclusive link."""
+    stamps the version and publishes it through lakehouse._publish."""
     os.makedirs(_cat_dir(root), exist_ok=True)
     while True:
         head_v = current_version(root)
         head = _read(root, head_v)
         tables = build(head)
         entry = {"version": head_v + 1, "parent": head_v or None, "tables": tables}
-        staged = os.path.join(_cat_dir(root), f".tmp-{uuid.uuid4().hex}.json")
-        with open(staged, "w") as fh:
-            json.dump(entry, fh, indent=1, sort_keys=True)
-        try:
-            os.link(staged, _cat_path(root, head_v + 1))
-            os.unlink(staged)
+        if lh._publish(_cat_path(root, head_v + 1), entry):
             return head_v + 1
-        except FileExistsError:
-            os.unlink(staged)  # lost the race — rebuild against new head
+        # lost the race — rebuild against the new head
 
 
 class Catalog:

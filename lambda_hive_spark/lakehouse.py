@@ -153,19 +153,26 @@ def _manifest_schema(m: dict) -> StructType | None:
 
 
 def _read_snapshot_files(
-    spark: SparkSession, m: dict, paths, apply_dv: bool = True
+    spark: SparkSession, m: dict, paths, *, pos: bool = False, apply_dv: bool = True
 ) -> DataFrame:
-    """Scan a file set under the manifest's schema: files written
-    before a column evolved in null-fill it (Spark's parquet reader
-    resolves an explicit read schema by name, absent columns → NULL).
-    No footer merge — schema authority is the log, O(1) per query.
+    """The one read path from a snapshot's manifest to a DataFrame.
+    Scans a file set of snapshot ``m`` under the manifest's schema:
+    files written before a column evolved in null-fill it (Spark's
+    parquet reader resolves an explicit read schema by name, absent
+    columns → NULL). No footer merge — schema authority is the log,
+    O(1) per query.
+
+    An empty file set resolves to an empty DataFrame at the manifest
+    schema. A manifest written before schema tracking infers it from
+    the snapshot's files (``limit(0)``), and raises ValueError when the
+    snapshot has none.
 
     MERGE-ON-READ: entries carrying a deletion vector (``dv`` — see
     delete_where(deletion_vectors=True)) have their deleted row
     positions subtracted here, via ONE left-anti join against the
     referenced sidecars on (_metadata.file_path, _metadata.row_index).
     This is the single choke point every verb reads through (scan,
-    merge, COW delete, compact, zorder, optimize, restore-validate,
+    merge, delete, update, compact, zorder, optimize, restore-validate,
     clone), so a DV'd row is invisible everywhere at once, and any
     rewriting verb MATERIALIZES the deletes for the files it rewrites
     as a side effect (its outputs are scanned post-DV; the new entries
@@ -178,34 +185,42 @@ def _read_snapshot_files(
     compact()/optimize(), which resets the DVs). Enforced by
     test_no_corpus_sized_forced_broadcast.
 
+    ``pos=True`` keeps each live row's address (`_dv_file` = Spark's
+    _metadata.file_path URI, `_dv_pos` = _metadata.row_index): the DV
+    write path's input, so a repeat delete records only NEWLY deleted
+    positions. Addresses stay in Spark's own URI rendering end-to-end,
+    so no path/URI normalization is trusted for row identity; the
+    driver maps them to manifest paths through _plain_path.
+
     ``apply_dv=False`` serves the physical rows (bloom_index: its
     input_file_name() attribution is scan-scoped and breaks under the
     anti-join; a bloom that still admits deleted keys is conservative
     — pruning keeps a file the probe then finds empty, never the
     reverse)."""
-    reader = spark.read
     schema = _manifest_schema(m)
-    if schema is not None:
-        reader = reader.schema(schema)
+    if not paths:
+        if schema is not None:
+            return spark.createDataFrame([], schema)
+        if not m["files"]:
+            raise ValueError(f"empty snapshot with no recorded schema: v{m['version']}")
+        return _read_snapshot_files(spark, m, [f["path"] for f in m["files"]]).limit(0)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(*sorted(paths))
     pset = set(paths)
     dv_dirs = sorted(
         {f["dv"]["sidecar"] for f in m["files"] if f.get("dv") and f["path"] in pset}
     ) if apply_dv else []
-    if not dv_dirs:
-        return reader.parquet(*sorted(paths))
-    df = reader.parquet(*sorted(paths)).select(
+    if not (dv_dirs or pos):
+        return df
+    df = df.select(
         "*",
         F.col("_metadata.file_path").alias("_dv_file"),
         F.col("_metadata.row_index").alias("_dv_pos"),
     )
-    dv = spark.read.parquet(*dv_dirs).select("_dv_file", "_dv_pos")
-    keep = [c for c in df.columns if c not in ("_dv_file", "_dv_pos")]
-    # No broadcast hint on the DV side: a trickle-delete DV is tiny
-    # and AQE broadcasts it anyway, but a bulk DV-delete's sidecar is
-    # O(deleted rows) — table-fraction-sized — and a forced broadcast
-    # there is the r8-judge defect class (every executor ships the
-    # whole delete set). AQE picks BHJ vs SMJ from the real size.
-    return df.join(dv, ["_dv_file", "_dv_pos"], "left_anti").select(*keep)
+    if dv_dirs:
+        dv = spark.read.parquet(*dv_dirs).select("_dv_file", "_dv_pos")
+        df = df.join(dv, ["_dv_file", "_dv_pos"], "left_anti")
+    return df if pos else df.drop("_dv_file", "_dv_pos")
 
 
 _RESERVED_COLS = ("_dv_file", "_dv_pos")
@@ -213,11 +228,11 @@ _RESERVED_COLS = ("_dv_file", "_dv_pos")
 
 def _check_reserved(schema: StructType) -> None:
     """Refuse user columns named like the DV read path's working
-    columns: _read_snapshot_files/_read_files_with_pos project
-    _dv_file/_dv_pos from _metadata and anti-join on them, so a user
-    column with either name would be dropped by the keep-select and
-    make the join keys ambiguous (ADVICE r8). Enforced at create and
-    at every schema-widening write."""
+    columns: _read_snapshot_files projects _dv_file/_dv_pos from
+    _metadata and anti-join on them, so a user column with either name
+    would be dropped after the join and make the join keys ambiguous
+    (ADVICE r8). Enforced at create and at every schema-widening
+    write."""
     bad = [f.name for f in schema.fields if f.name in _RESERVED_COLS]
     if bad:
         raise SchemaMismatch(
@@ -234,16 +249,39 @@ def _manifest_path(path: str, version: int) -> str:
     return os.path.join(_log_dir(path), f"{version:08d}.json")
 
 
+def _versions(log_dir: str) -> list[int]:
+    """The versions published in a versioned log dir (``NNNNNNNN.json``
+    names; the table log and the catalog log), ascending. Raises
+    FileNotFoundError when the dir does not exist."""
+    return sorted(
+        int(n[:-5]) for n in os.listdir(log_dir) if n.endswith(".json") and n[:-5].isdigit()
+    )
+
+
+def _publish(target: str, entry: dict) -> bool:
+    """Publish ``entry`` as the JSON file ``target``, atomically and
+    create-exclusively: stage a temp file beside it, then os.link it
+    into place (the POSIX put-if-absent every commit relies on).
+    Returns False, leaving ``target`` untouched, when it already
+    exists — the caller lost the race."""
+    staged = os.path.join(os.path.dirname(target), f".tmp-{uuid.uuid4().hex}.json")
+    with open(staged, "w") as fh:
+        json.dump(entry, fh, indent=1, sort_keys=True)
+    try:
+        os.link(staged, target)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.unlink(staged)
+
+
 def current_version(path: str) -> int:
     """Highest committed version, 0 if the table does not exist."""
     try:
-        names = os.listdir(_log_dir(path))
+        return max(_versions(_log_dir(path)), default=0)
     except FileNotFoundError:
         return 0
-    versions = [
-        int(n[:-5]) for n in names if n.endswith(".json") and n[:-5].isdigit()
-    ]
-    return max(versions, default=0)
 
 
 def read_manifest(path: str, version: int | None = None) -> dict:
@@ -446,6 +484,10 @@ def _write_data_files(
                 os.path.relpath(root, out), df.schema, list(partition_by)
             )
             entries.append(st)
+    if not entries:
+        # no rows: Spark still leaves its _SUCCESS/.crc markers, in a
+        # directory no manifest can name
+        shutil.rmtree(out)
     entries.sort(key=lambda e: e["path"])
     return entries
 
@@ -516,15 +558,9 @@ def _commit(path: str, build_entry):
         if dv_delta:
             entry["metrics"]["rows_dv_deleted"] = dv_delta
             entry["metrics"]["net_rows"] -= dv_delta
-        staged = os.path.join(_log_dir(path), f".tmp-{uuid.uuid4().hex}.json")
-        with open(staged, "w") as fh:
-            json.dump(entry, fh, indent=1, sort_keys=True)
-        try:
-            os.link(staged, _manifest_path(path, version))
-            os.unlink(staged)
+        if _publish(_manifest_path(path, version), entry):
             return version
-        except FileExistsError:
-            os.unlink(staged)  # lost the race — rebuild against new head
+        # lost the race — rebuild against the new head
 
 
 def _apply_generated(
@@ -700,11 +736,6 @@ def read(
             raise ValueError("read: pass version OR ref, not both")
         version = resolve_ref(path, ref)
     m = read_manifest(path, version)
-    if not m["files"]:
-        schema = _manifest_schema(m)
-        if schema is None:
-            raise ValueError(f"empty snapshot with no recorded schema: {path}")
-        return spark.createDataFrame([], schema)
     return _read_snapshot_files(spark, m, [f["path"] for f in m["files"]])
 
 
@@ -770,11 +801,6 @@ def read_incremental(
     m_new = read_manifest(path, to_version)
     old_paths = {f["path"] for f in read_manifest(path, since_version)["files"]}
     added = [f["path"] for f in m_new["files"] if f["path"] not in old_paths]
-    if not added:
-        schema = _manifest_schema(m_new)
-        if schema is None:
-            raise ValueError(f"empty increment with no recorded schema: {path}")
-        return spark.createDataFrame([], schema)
     return _read_snapshot_files(spark, m_new, added)
 
 
@@ -972,11 +998,24 @@ def plan_files(
     scan over the touched files only, from ONE manifest read, before
     Spark lists anything."""
     m = read_manifest(path, version)
+    return _prune(m, key_min=key_min, key_max=key_max, predicates=predicates, point=point)
+
+
+def _bounds(m: dict, key_min=None, key_max=None, predicates=None, point=None) -> dict:
+    """The {col: (lo, hi)} box the bounds name; a later source wins a
+    column: ``predicates``, ``point`` equalities, the table-key range."""
     bounds = dict(predicates or {})
     for col, v in (point or {}).items():
         bounds[col] = (v, v)  # equality also prunes on footer stats
     if key_min is not None or key_max is not None:
         bounds[m["key"]] = (key_min, key_max)
+    return bounds
+
+
+def _prune(m: dict, *, key_min=None, key_max=None, predicates=None, point=None) -> list[dict]:
+    """plan_files on the manifest ``m`` the caller already holds (no
+    bounds: every entry)."""
+    bounds = _bounds(m, key_min, key_max, predicates, point)
     blooms = m.get("bloom") or {}
     probes: list[tuple[dict, list[int]]] = []
     for col, v in (point or {}).items():
@@ -1052,24 +1091,13 @@ def scan(
     column; effective multi-column skipping requires the layout to
     cluster those columns (see zorder_cluster)."""
     m = read_manifest(path, version)
-    files = plan_files(
-        path,
-        key_min=key_min,
-        key_max=key_max,
-        predicates=predicates,
-        point=point,
-        version=version,
+    files = _prune(
+        m, key_min=key_min, key_max=key_max, predicates=predicates, point=point
     )
-    bounds = dict(predicates or {})
-    if key_min is not None or key_max is not None:
-        bounds[m["key"]] = (key_min, key_max)
-    if not files:
-        schema = _manifest_schema(m)
-        if schema is None:  # pre-schema-tracking manifest: derive from the data
-            return read(spark, path, version).limit(0)
-        return spark.createDataFrame([], schema)
     df = _read_snapshot_files(spark, m, [f["path"] for f in files])
-    for col, (lo, hi) in bounds.items():
+    if not files:
+        return df  # already empty: no row filters
+    for col, (lo, hi) in _bounds(m, key_min, key_max, predicates).items():
         if lo is not None:
             df = df.filter(F.col(col) >= lo)
         if hi is not None:
@@ -1290,49 +1318,18 @@ def _write_change_files(df: DataFrame, path: str) -> list[str]:
 _DV_PREFIX = "dv-"
 
 
-def _read_files_with_pos(spark: SparkSession, m: dict, paths) -> DataFrame:
-    """Live rows of a file set WITH their physical address columns
-    (`_dv_file` = Spark's _metadata.file_path URI, `_dv_pos` =
-    _metadata.row_index) — the DV write path's input. Rows already
-    covered by an entry's deletion vector are subtracted, so a repeat
-    delete records only NEWLY deleted positions. Addresses stay in
-    Spark's own URI rendering end-to-end (sidecar rows are compared
-    only against _metadata.file_path produced by the same scanner),
-    so no path/URI normalization is ever trusted for row identity;
-    the driver-side manifest mapping goes through _plain_path exactly
-    like the bloom index's input_file_name attribution."""
-    reader = spark.read
-    schema = _manifest_schema(m)
-    if schema is not None:
-        reader = reader.schema(schema)
-    df = reader.parquet(*sorted(paths)).select(
-        "*",
-        F.col("_metadata.file_path").alias("_dv_file"),
-        F.col("_metadata.row_index").alias("_dv_pos"),
-    )
-    pset = set(paths)
-    dv_dirs = sorted(
-        {f["dv"]["sidecar"] for f in m["files"] if f.get("dv") and f["path"] in pset}
-    )
-    if dv_dirs:
-        dv = spark.read.parquet(*dv_dirs).select("_dv_file", "_dv_pos")
-        # unhinted on purpose — see _read_snapshot_files: bulk DVs are
-        # O(deleted rows); AQE chooses the join strategy.
-        df = df.join(dv, ["_dv_file", "_dv_pos"], "left_anti")
-    return df
-
-
 def _write_dv(spark: SparkSession, path: str, m: dict, doomed: DataFrame):
-    """Record the ``doomed`` rows (a _read_files_with_pos selection
-    over snapshot ``m``) as deletion vectors: ONE parquet sidecar under
-    the log holds their positions plus the prior positions of every
-    file they touch, so a reader consults exactly one sidecar per
-    entry (files sharing an old sidecar but not touched here keep
-    referencing it unchanged). Returns ``(sidecar_dir, new_dv,
-    full_drop)``: the sidecar (None when no row matched), each touched
-    file's new ``dv`` field, and the files whose cumulative deletions
-    reach their row count — those entries are dropped outright (the
-    physical file stays for time travel until vacuum)."""
+    """Record the ``doomed`` rows (a ``_read_snapshot_files(pos=True)``
+    selection over snapshot ``m``) as deletion vectors: ONE parquet
+    sidecar under the log holds their positions plus the prior
+    positions of every file they touch, so a reader consults exactly
+    one sidecar per entry (files sharing an old sidecar but not
+    touched here keep referencing it unchanged). Returns
+    ``(sidecar_dir, new_dv, full_drop)``: the sidecar (None when no
+    row matched), each touched file's new ``dv`` field, and the files
+    whose cumulative deletions reach their row count — those entries
+    are dropped outright (the physical file stays for time travel
+    until vacuum)."""
     counts = {
         r["_dv_file"]: r["n"]
         for r in doomed.groupBy("_dv_file")
@@ -1515,11 +1512,7 @@ def merge_upsert(
         lo, hi = updates.agg(F.min(k), F.max(k)).collect()[0]
         if lo is None:
             raise ValueError("merge_upsert: updates batch is empty")
-        touched = sorted(
-            f["path"]
-            for f in m["files"]
-            if f["min_key"] is None or not (f["max_key"] < lo or f["min_key"] > hi)
-        )
+        touched = sorted(f["path"] for f in _prune(m, predicates={k: (lo, hi)}))
         # MERGE-source joins carry NO broadcast hint: the source is
         # caller-sized — a trickle batch broadcasts via AQE anyway,
         # but a fact-sized backfill MERGE under a forced hint would
@@ -1531,7 +1524,7 @@ def merge_upsert(
         drop = set(touched)
         batch = updates
         if touched and deletion_vectors:
-            doomed = _read_files_with_pos(spark, m, touched).join(
+            doomed = _read_snapshot_files(spark, m, touched, pos=True).join(
                 updates.select(k), on=k, how="left_semi"
             )
             sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
@@ -1620,8 +1613,9 @@ def delete_where(
     sidecar and the touched manifest entries gain/extend a ``dv``
     field — zero data files rewritten, so per-delete write
     amplification for trickle deletes (GDPR erasure, a bad producer's
-    rows) is O(deleted rows), not O(touched files). Reads subtract the
-    positions in _read_snapshot_files' single anti-join, and any
+    rows) is O(deleted rows), not O(touched files). Every read,
+    this delete's own position scan (``pos=True``) included, subtracts
+    the positions in _read_snapshot_files' single anti-join, and any
     rewrite verb (compact/optimize/zorder/merge/COW-delete)
     materializes the deletes for the files it touches. Such a delete
     conflicts only with racing commits on the files whose DV it
@@ -1632,18 +1626,13 @@ def delete_where(
     hit = f"coalesce(({predicate}), false)"
 
     def plan(m):
-        cand = (
-            plan_files(path, predicates=prune, version=m["version"])
-            if prune
-            else m["files"]
-        )
-        touched = sorted({f["path"] for f in cand})
+        touched = sorted({f["path"] for f in _prune(m, predicates=prune)})
         data: list[dict] = []
         doomed = sidecar = None
         new_dv: dict[str, dict] = {}
         drop = set(touched)
         if touched and deletion_vectors:
-            doomed = _read_files_with_pos(spark, m, touched).filter(hit)
+            doomed = _read_snapshot_files(spark, m, touched, pos=True).filter(hit)
             sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
             doomed = doomed.drop("_dv_file", "_dv_pos") if sidecar else None
         elif touched:
@@ -1770,12 +1759,7 @@ def update_where(
             missing = sorted(c for c in set_exprs if c not in schema.fieldNames())
             if missing:
                 raise SchemaMismatch(f"update_where: no such columns: {missing}")
-        cand = (
-            plan_files(path, predicates=prune, version=m["version"])
-            if prune
-            else m["files"]
-        )
-        touched = sorted({f["path"] for f in cand})
+        touched = sorted({f["path"] for f in _prune(m, predicates=prune)})
         cols = schema.fieldNames() if schema is not None else None
 
         def _post_images(matched: DataFrame) -> DataFrame:
@@ -1796,7 +1780,7 @@ def update_where(
         new_dv: dict[str, dict] = {}
         drop = set(touched)
         if touched and deletion_vectors:
-            doomed = _read_files_with_pos(spark, m, touched).filter(hit)
+            doomed = _read_snapshot_files(spark, m, touched, pos=True).filter(hit)
             sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
             if sidecar:
                 matched = doomed.drop("_dv_file", "_dv_pos")
@@ -1987,11 +1971,7 @@ def repartition_table(
 
     def plan(m):
         old_paths = {f["path"] for f in m["files"]}
-        df = (
-            _read_snapshot_files(spark, m, old_paths)
-            if old_paths
-            else read(spark, path)
-        )
+        df = _read_snapshot_files(spark, m, old_paths)
 
         def spec(head):
             if {f["path"] for f in head["files"]} != old_paths:
@@ -2030,14 +2010,6 @@ def read_changes(spark: SparkSession, path: str, version: int) -> DataFrame:
             else set()
         )
         added = [f["path"] for f in m["files"] if f["path"] not in prev]
-        schema = _manifest_schema(m)
-        if not added:
-            base = (
-                spark.createDataFrame([], schema)
-                if schema is not None
-                else read(spark, path, version).limit(0)
-            )
-            return base.withColumn("_change_type", F.lit("insert"))
         return _read_snapshot_files(spark, m, added).withColumn(
             "_change_type", F.lit("insert")
         )
@@ -2054,11 +2026,8 @@ def read_changes(spark: SparkSession, path: str, version: int) -> DataFrame:
             raise ValueError(
                 f"version {version} is a {action} committed without track_changes"
             )
-        if not m["changes"]:
-            return read(spark, path, version).limit(0).withColumn(
-                "_change_type", F.lit("insert")
-            )
-        return spark.read.parquet(*m["changes"])
+        if m["changes"]:
+            return spark.read.parquet(*m["changes"])
     if action == "restore":
         # a restore DOES change logical content, but not row-by-row in
         # any feed-expressible way: refusing beats serving a silently
@@ -2068,9 +2037,10 @@ def read_changes(spark: SparkSession, path: str, version: int) -> DataFrame:
             f"version {version} is a restore; change feed undefined across "
             "it — resync from the snapshot"
         )
-    # compact / zorder / optimize / index / constraint commits:
-    # physical layout or metadata only, no logical change
-    return read(spark, path, version).limit(0).withColumn(
+    # an empty tracked feed, or a compact / zorder / optimize / index /
+    # constraint commit (physical layout or metadata only, no logical
+    # change); limit(0) plans as an empty local relation: no job
+    return _read_snapshot_files(spark, m, []).limit(0).withColumn(
         "_change_type", F.lit("insert")
     )
 
@@ -2226,15 +2196,8 @@ def create_ref(
         raise FileNotFoundError(f"no lake table at {path}")
     _check_ref_target(path, v)
     entry = {"name": name, "version": v, "kind": kind}
-    staged = os.path.join(_log_dir(path), f".tmp-ref-{uuid.uuid4().hex}.json")
-    with open(staged, "w") as fh:
-        json.dump(entry, fh, sort_keys=True)
-    try:
-        os.link(staged, _ref_file(path, name))
-    except FileExistsError:
-        raise FileExistsError(f"ref name taken: {name}") from None
-    finally:
-        os.unlink(staged)
+    if not _publish(_ref_file(path, name), entry):
+        raise FileExistsError(f"ref name taken: {name}")
     return entry
 
 
@@ -2500,14 +2463,17 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
         for e in list_refs(path).values()
         if os.path.exists(_manifest_path(path, e["version"]))
     )
-    all_versions = sorted(
-        int(n[:-5])
-        for n in os.listdir(_log_dir(path))
-        if n.endswith(".json") and n[:-5].isdigit()
-    )
-    live = set()
+    all_versions = _versions(_log_dir(path))
+    # one read of each retained manifest: the data files, bloom
+    # sidecars and DV sidecars it still references
+    live: set[str] = set()
+    referenced: set[str] = set()
+    dv_referenced: set[str] = set()
     for v in keep_versions:
-        live.update(f["path"] for f in read_manifest(path, v)["files"])
+        mk = read_manifest(path, v)
+        live.update(f["path"] for f in mk["files"])
+        referenced.update(bl["sidecar"] for bl in (mk.get("bloom") or {}).values())
+        dv_referenced.update(f["dv"]["sidecar"] for f in mk["files"] if f.get("dv"))
     deleted = []
     # Ownership guard: only files under THIS table's data dir are ever
     # deleted — a shallow clone's manifests reference the source's
@@ -2564,19 +2530,10 @@ def vacuum(path: str, keep_last: int = 1) -> list[str]:
     # an unreadable head (ADVICE r8). A sidecar orphaned by a LOST
     # commit race never reaches any manifest, and _rewrite's cleanup
     # (_discard) removes it on CommitConflict, so nothing leaks.
-    referenced = set()
-    for v in keep_versions:
-        for bl in (read_manifest(path, v).get("bloom") or {}).values():
-            referenced.add(bl["sidecar"])
     for full in sorted(dropped_bloom - referenced):
         if os.path.exists(full):
             os.remove(full)
             deleted.append(full)
-    dv_referenced = set()
-    for v in keep_versions:
-        for f in read_manifest(path, v)["files"]:
-            if f.get("dv"):
-                dv_referenced.add(f["dv"]["sidecar"])
     for full in sorted(dropped_dv - dv_referenced):
         if os.path.isdir(full):
             shutil.rmtree(full)

@@ -255,6 +255,35 @@ def test_scan_empty_range_returns_empty_with_schema(spark, tmp_path):
     assert out.columns == ["id", "val"] and out.count() == 0
 
 
+def test_scan_reads_one_snapshot_under_a_racing_dv_merge(spark, tmp_path, monkeypatch):
+    """scan resolves the head once. A DV merge of key 3 that commits
+    right after that manifest read must not leak into the scan: neither
+    its post-image file nor its new deletion vector, so key 3 comes
+    back once, at its pre-merge value."""
+    path = str(tmp_path / "torn")
+    df = spark.range(20).select(
+        F.col("id").cast("long"), F.col("id").cast("double").alias("val")
+    )
+    lh.create(spark, path, df.repartition(2), key="id")
+    upd = spark.createDataFrame([(3, 300.0)], "id long, val double")
+    real = lh.read_manifest
+    fired = []
+
+    def racing(p, version=None):
+        m = real(p, version)
+        if not fired:  # the merge's own manifest reads pass through
+            fired.append(True)
+            lh.merge_upsert(spark, path, upd, deletion_vectors=True)
+        return m
+
+    monkeypatch.setattr(lh, "read_manifest", racing)
+    got = [(r["id"], r["val"]) for r in lh.scan(spark, path, key_min=0, key_max=100).collect()]
+    monkeypatch.undo()
+    assert fired and lh.current_version(path) == 2
+    assert len({k for k, _ in got}) == len(got) == 20
+    assert sorted(got) == sorted((r["id"], r["val"]) for r in lh.read(spark, path, 1).collect())
+
+
 def test_append_idempotent_dedups_replayed_batches(spark, tmp_path):
     path = _mk(spark, tmp_path, n=10)
     b = spark.range(10, 15).select("id", (F.col("id") * 10).alias("val"))
@@ -2285,6 +2314,19 @@ def test_every_rewriter_retries_a_racing_dv_delete_and_leaves_no_orphans(
     call(spark, path)
     assert len(commits) >= 3, f"{verb} never conflicted on the racing DV delete"
     assert _rows(lh.read(spark, path)) == sorted(expect.items())
+    assert _unreferenced(path) == []
+
+
+def test_empty_partitioned_write_leaves_no_marker_dir(spark, tmp_path):
+    """A partitioned write of no rows writes no parquet file, only
+    Spark's _SUCCESS/.crc markers; that data/<uuid>/ must not stay
+    behind, because no manifest can ever name it. Here the winning
+    delete of the whole b = 1 partition writes zero survivors."""
+    path = str(tmp_path / "marker")
+    df = spark.range(8).select(F.col("id").cast("long"), (F.col("id") % 2).alias("b"))
+    lh.create(spark, path, df, key="id", partition_by=["b"])
+    lh.delete_where(spark, path, "b = 1", prune="auto")
+    assert sorted(r["id"] for r in lh.read(spark, path).collect()) == [0, 2, 4, 6]
     assert _unreferenced(path) == []
 
 
