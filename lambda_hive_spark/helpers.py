@@ -21,11 +21,14 @@ Only ACCUMULATION across rows needs the decimal detour.
 Helpers come in pairs: a PySpark Column builder and a DuckDB SQL
 string builder, generated from the same parameters so the two sides
 cannot drift.
+
+One non-numeric primitive lives here too: `sorted_pairs`, the only
+"all i<j pairs of a sorted array" expansion in the operator layer.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 18 digits total (scale 6 → 12 integer digits, values to 1e12): the
@@ -325,4 +328,19 @@ def hier_exact_agg(
         .agg(*partials)
         .groupBy(*keys)
         .agg(*finals)
+    )
+
+
+def sorted_pairs(df: DataFrame, ids: str, a: str, b: str) -> DataFrame:
+    """Every i<j pair of each row's `ids` array, as columns `a`, `b`
+    (empty and null arrays yield no rows). Two chained Generates:
+    posexplode picks each anchor at 0-based i, then explode walks the
+    1-based slice from i+2 — exactly the elements after the anchor.
+    Both run in codegen; the nested transform+flatten form builds each
+    row's whole pair array in the interpreted HOF evaluator first
+    (measured 1.09–1.31× slower on dedup_ngram_jaccard at 10×)."""
+    i = F.col("__lhs_i")
+    anchors = df.select(ids, F.posexplode(ids).alias("__lhs_i", a))
+    return anchors.select(
+        a, F.explode(F.slice(ids, i + F.lit(2), F.size(ids) - i - 1)).alias(b)
     )

@@ -1120,14 +1120,18 @@ def _parse_lit(s: str):
     return float(s) if ("." in s or "e" in s or "E" in s) else int(s)
 
 
-def _split_top_and(s: str) -> list[str]:
-    """Split on AND at paren depth 0, outside string literals. BETWEEN
-    clauses are placeholder-substituted before this runs, so their
-    internal AND never reaches here."""
-    import re
+def _split_top(s: str, word: str) -> list[str]:
+    """Split on the keyword `word` (AND / OR, any case) at paren depth
+    0, outside string literals, where it stands as a whole word:
+    letters, digits and `_` on either side make it part of an
+    identifier (`x_and`, `nd_and`, `order_id`). BETWEEN clauses are
+    placeholder-substituted before this runs, so their internal AND
+    never reaches here."""
+    parts, depth, in_str, start, i, n = [], 0, False, 0, 0, len(word)
 
-    parts, depth, in_str, start = [], 0, False, 0
-    i = 0
+    def _ident(j: int) -> bool:
+        return 0 <= j < len(s) and (s[j].isalnum() or s[j] == "_")
+
     while i < len(s):
         c = s[i]
         if in_str:
@@ -1141,15 +1145,15 @@ def _split_top_and(s: str) -> list[str]:
             depth += 1
         elif c == ")":
             depth -= 1
-        elif depth == 0 and re.match(r"(?i)\bAND\b", s[i : i + 3]):
-            # word boundary on both sides
-            if (i == 0 or not s[i - 1].isalnum()) and not (
-                len(s) > i + 3 and (s[i + 3].isalnum() or s[i + 3] == "_")
-            ):
-                parts.append(s[start:i])
-                start = i + 3
-                i += 3
-                continue
+        elif (
+            depth == 0
+            and s[i : i + n].upper() == word
+            and not _ident(i - 1)
+            and not _ident(i + n)
+        ):
+            parts.append(s[start:i])
+            start = i = i + n
+            continue
         i += 1
     parts.append(s[start:])
     return [p.strip() for p in parts if p.strip()]
@@ -1161,30 +1165,7 @@ def _has_top_level_or(s: str) -> bool:
     OR c` — splitting such an expression on AND would emit bounds the
     predicate does NOT imply (unsound pruning). Any top-level OR
     therefore voids the whole expression's contribution."""
-    depth, in_str, i = 0, False, 0
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "'":
-                in_str = s[i + 1 : i + 2] == "'"
-                i += 2 if in_str else 1
-                continue
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and c in "oO"
-            and s[i : i + 2].upper() == "OR"
-            and (i == 0 or not (s[i - 1].isalnum() or s[i - 1] == "_"))
-            and not (len(s) > i + 2 and (s[i + 2].isalnum() or s[i + 2] == "_"))
-        ):
-            return True
-        i += 1
-    return False
+    return len(_split_top(s, "OR")) > 1
 
 
 def _strip_outer_parens(s: str) -> str:
@@ -1254,9 +1235,9 @@ def compile_prune_box(predicate: str) -> dict:
         expr = _strip_outer_parens(expr)
         if _has_top_level_or(expr):
             return  # (a AND b) OR c implies none of a, b, c
-        for part in _split_top_and(expr):
+        for part in _split_top(expr, "AND"):
             part = _strip_outer_parens(part)
-            if len(_split_top_and(part)) > 1:  # (a AND b) nested group
+            if len(_split_top(part, "AND")) > 1:  # (a AND b) nested group
                 _walk(part)  # re-enters with its own OR guard
                 continue
             mo = re.match(r"^__BETWEEN_(\d+)__$", part)

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lambda_hive_spark.helpers import dsum, sql_dsum
+from lambda_hive_spark.helpers import dsum, sorted_pairs, sql_dsum
 from lambda_hive_spark.io import register_views, table
 from lambda_hive_spark.operators.scans import _scratch
 from lambda_hive_spark.registry import op
@@ -1542,8 +1542,8 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     recommendation candidates.
 
     Scale shape: ONE shuffle of the item set by order key, then pair
-    expansion MAP-SIDE from each order's collected item array (HOF
-    double loop over the sorted array) — pairs per order is
+    expansion MAP-SIDE from each order's collected item array
+    (helpers.sorted_pairs over the sorted array) — pairs per order is
     (basket size choose 2), bounded by real basket sizes, and the
     quadratic term never crosses the wire unaggregated: the map-side
     partial aggregation collapses pairs before the (part_a, part_b)
@@ -1568,18 +1568,8 @@ def basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = items.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_list("l_partkey")).alias("parts")
     )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("parts"),
-            lambda a, i: F.transform(
-                F.slice(F.col("parts"), i + 2, F.size("parts")),
-                lambda b: F.struct(a.alias("part_a"), b.alias("part_b")),
-            ),
-        )
-    )
     pairs = (
-        baskets.select(F.explode(pair_structs).alias("p"))
-        .select("p.part_a", "p.part_b")
+        sorted_pairs(baskets, "parts", "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(F.count(F.lit(1)).alias("n_both"))
         .filter(F.col("n_both") >= _BASKET_MIN_SUPPORT)

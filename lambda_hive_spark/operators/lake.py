@@ -32,6 +32,7 @@ from lambda_hive_spark import lakehouse as lh
 from lambda_hive_spark.io import table
 from lambda_hive_spark.operators.scans import _scratch
 from lambda_hive_spark.registry import op
+from lambda_hive_spark.streaming import core
 
 
 def _fresh_table_dir(name: str, sf_dir: str) -> str:
@@ -2320,9 +2321,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("ann maintenance stream did not drain in 300s")
+        core.await_or_stop(q, 300, "stream_ann_index_maintenance")
 
     run_pass()
     v_base, v_lists = lh.current_version(base_path), lh.current_version(lists_path)

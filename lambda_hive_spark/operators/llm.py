@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lambda_hive_spark.helpers import davg, dot, dsum, sql_davg, sql_dot, sql_dsum
+from lambda_hive_spark.helpers import davg, dot, dsum, sorted_pairs, sql_davg, sql_dot, sql_dsum
 from lambda_hive_spark.io import par_table, table
 from lambda_hive_spark.registry import op
 
@@ -111,6 +111,49 @@ WHERE (p.shared / (len(x.shingles) + len(y.shingles) - p.shared)) >= 0.6
 """
 
 
+def _jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every doc pair that shares a 3-gram shingle, scored with its
+    exact Jaccard: (doc_a, doc_b, jaccard), doc_a < doc_b, unfiltered.
+    The one scored-pair pipeline behind dedup_ngram_jaccard and
+    dedup_threshold_sweep (the plan is documented on the former)."""
+    par = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    max_df = int(os.environ.get("SPARK_GRAFT_JACCARD_MAX_DF", "10000"))
+    sh = _docs_with_shingles(spark, sf_dir)
+    # Carry each doc's shingle count INSIDE the bucket structs instead
+    # of joining it back at the end: the former final two
+    # broadcast-joins re-ran the whole shingling pass once per side to
+    # build (doc_id, n_sh) — measured 2.6 s → 1.4 s at sf0.1 when the
+    # count rides along. Shuffle rows widen by one long per side;
+    # sort_array orders structs by leading field, so doc_a < doc_b
+    # pair order is unchanged.
+    e = sh.select(
+        F.struct(F.col("doc_id"), F.size("shingles").cast("long").alias("n_sh")).alias("d"),
+        F.explode("shingles").alias("s"),
+    )
+    buckets = (
+        e.repartition(par, "s")
+        .groupBy("s")
+        .agg(F.sort_array(F.collect_list("d")).alias("ids"))
+        .filter(F.size("ids").between(2, max_df))
+    )
+    # na/nb are functionally dependent on doc_a/doc_b — adding them to
+    # the grouping keys keeps cardinality identical.
+    pairs = (
+        sorted_pairs(buckets, "ids", "a", "b")
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.col("a.n_sh").alias("na"),
+            F.col("b.n_sh").alias("nb"),
+        )
+        .repartition(par, "doc_a", "doc_b")
+        .groupBy("doc_a", "doc_b", "na", "nb")
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
+    return pairs.select("doc_a", "doc_b", jac.alias("jaccard"))
+
+
 @op("dedup_ngram_jaccard", oracle=_JACCARD_ORACLE)
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT 3-gram Jaccard near-dup pairs (J ≥ 0.6), bucket-pair plan:
@@ -142,15 +185,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     create huge buckets, which the df-cap already bounds.
 
     r11 (guide §1.2 "per-task work"): each bucket's i<j pair expansion
-    is two chained Generate nodes (posexplode over the sorted ids,
-    then explode over the j>i slice) instead of the former
-    interpreted nested transform+flatten that materialized the whole
-    pair-struct array per bucket before its own explode — same pair
-    stream, same order, but the per-pair construction runs in
-    codegen'd Generates rather than the interpreted HOF evaluator.
-    Interleaved A/B at the 10× corpus (real duplicates, 9× pair work):
-    1.21× at the one ≤3%-steal session, 1.09–1.31× across four
-    sessions, every session positive; parity EXACT at sf0.1 and 10×.
+    is helpers.sorted_pairs — two chained codegen'd Generates instead
+    of the former interpreted nested transform+flatten. Interleaved A/B
+    at the 10× corpus (real duplicates, 9× pair work): 1.21× at the
+    one ≤3%-steal session, 1.09–1.31× across four sessions, every
+    session positive; parity EXACT at sf0.1 and 10×.
 
     r11 measured + REJECTED (tools/r11_shuffle_bytes.py): xxhash64-
     encoding shingles to int64 for the bucket exchange (VERDICT r10
@@ -165,53 +204,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     says EXACT. Carrying na/nb in the pair rows stays cheaper than any
     join-back: a sizes join would re-run the tokenize+shingle pass —
     the dominant 100 TB cost — once more per side."""
-    par = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    max_df = int(os.environ.get("SPARK_GRAFT_JACCARD_MAX_DF", "10000"))
-    sh = _docs_with_shingles(spark, sf_dir)
-    # Carry each doc's shingle count INSIDE the bucket structs instead
-    # of joining it back at the end: the former final two
-    # broadcast-joins re-ran the whole shingling pass once per side to
-    # build (doc_id, n_sh) — measured 2.6 s → 1.4 s at sf0.1 when the
-    # count rides along. Shuffle rows widen by one long per side;
-    # sort_array orders structs by leading field, so doc_a < doc_b
-    # pair order is unchanged.
-    e = sh.select(
-        F.struct(F.col("doc_id"), F.size("shingles").cast("long").alias("n_sh")).alias("d"),
-        F.explode("shingles").alias("s"),
-    )
-    buckets = (
-        e.repartition(par, "s")
-        .groupBy("s")
-        .agg(F.sort_array(F.collect_list("d")).alias("ids"))
-        .filter(F.size("ids").between(2, max_df))
-    )
-    # i<j pair expansion: posexplode picks each anchor (0-based i),
-    # the second explode walks the 1-based slice starting at i+2 —
-    # exactly the elements after the anchor in the sorted bucket.
-    t1 = buckets.select("ids", F.posexplode("ids").alias("i", "a"))
-    t2 = t1.select(
-        "a",
-        F.explode(
-            F.slice("ids", F.col("i") + F.lit(2), F.size("ids") - F.col("i") - 1)
-        ).alias("b"),
-    )
-    # na/nb are functionally dependent on doc_a/doc_b — adding them to
-    # the grouping keys keeps cardinality identical.
-    pairs = (
-        t2.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n_sh").alias("na"),
-            F.col("b.n_sh").alias("nb"),
-        )
-        .repartition(par, "doc_a", "doc_b")
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))
-    return pairs.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= 0.6
-    )
+    return _jaccard_pairs(spark, sf_dir).filter(F.col("jaccard") >= 0.6)
 
 
 _N_BANDS = 8
@@ -1470,21 +1463,7 @@ def dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    n = F.size("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice("ids", i + F.lit(2), n - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    cand = sorted_pairs(buckets, "ids", "doc_a", "doc_b").distinct()
     a = sh.withColumnsRenamed({"doc_id": "doc_a", "shingles": "sh_a"})
     b = sh.withColumnsRenamed({"doc_id": "doc_b", "shingles": "sh_b"})
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("long")
@@ -1606,63 +1585,17 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the shared-shingle pair computation — the diagnostic a
     curation team reads before fixing the production threshold (too
     low → real content merged; too high → boilerplate survives). The
-    pair pipeline is dedup_ngram_jaccard's bucket-pair plan; the sweep
-    adds only a 5-row broadcast cross join over the (tiny) scored-pair
-    set, NOT five re-computations."""
-    par = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    max_df = int(os.environ.get("SPARK_GRAFT_JACCARD_MAX_DF", "10000"))
-    sh = _docs_with_shingles(spark, sf_dir)
-    sizes = sh.select("doc_id", F.size("shingles").cast("long").alias("n_sh"))
-    e = sh.select("doc_id", F.explode("shingles").alias("s"))
-    buckets = (
-        e.repartition(par, "s")
-        .groupBy("s")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
-        .filter(F.size("ids").between(2, max_df))
-    )
-    n = F.size("ids")
-    pair_arr = F.flatten(
-        F.transform(
-            "ids",
-            lambda x, i: F.transform(
-                F.slice("ids", i + F.lit(2), n - i - 1),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    pairs = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .repartition(par, "doc_a", "doc_b")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    # Semi-join-prune sizes to the ids that actually appear in a
-    # candidate pair before broadcasting (r8 judge finding: the
-    # unpruned table is one row per corpus document, so the forced
-    # broadcast shipped the whole doc-size table to every executor at
-    # 10^9+ docs). The pruned bound is |pairs|, small by construction
-    # of the max_df-capped bucketing.
-    pair_ids = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    pair_sizes = sizes.join(pair_ids, "doc_id", "left_semi")
-    jac = (
-        pairs.join(
-            F.broadcast(pair_sizes.withColumnsRenamed({"doc_id": "doc_a", "n_sh": "na"})), "doc_a"
-        )
-        .join(F.broadcast(pair_sizes.withColumnsRenamed({"doc_id": "doc_b", "n_sh": "nb"})), "doc_b")
-        .select(
-            (F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared"))).alias("j")
-        )
-    )
+    scored pairs are dedup_ngram_jaccard's pipeline (`_jaccard_pairs`,
+    unfiltered); the sweep adds only a 5-row broadcast cross join over
+    them, NOT five re-computations. The corpus is scanned and shingled
+    once: doc sizes ride inside the pair rows, so no size table is
+    joined back."""
     th = spark.createDataFrame([(t,) for t in (0.5, 0.6, 0.7, 0.8, 0.9)], "threshold double")
     return (
-        jac.crossJoin(F.broadcast(th))
+        _jaccard_pairs(spark, sf_dir)
+        .crossJoin(F.broadcast(th))
         .groupBy("threshold")
-        .agg(F.count(F.when(F.col("j") >= F.col("threshold"), 1)).alias("n_pairs"))
+        .agg(F.count(F.when(F.col("jaccard") >= F.col("threshold"), 1)).alias("n_pairs"))
     )
 
 

@@ -273,9 +273,7 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    if not query.awaitTermination(300):
-        query.stop()
-        raise TimeoutError("stream_progress_metrics did not drain in 300s")
+    core.await_or_stop(query, 300, "stream_progress_metrics")
     progress = query.recentProgress
     total_in = sum(int(p["numInputRows"]) for p in progress)
     n_batches = len([p for p in progress if int(p["numInputRows"]) > 0])
@@ -339,9 +337,7 @@ def stream_sink_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise TimeoutError("stream_sink_lake did not drain in 300s")
+        core.await_or_stop(q, 300, "stream_sink_lake")
 
     land = core.landing_dir(sf_dir)
     run_pass()

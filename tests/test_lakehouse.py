@@ -752,6 +752,10 @@ def test_compile_prune_box_shapes():
     assert c("(id > 1 AND (id < 9 AND val = 0))") == {"id": (1, 9), "val": (0, 0)}
     # intersect: tightest bounds win
     assert c("id >= 2 AND id >= 5 AND id <= 9 AND id <= 7") == {"id": (5, 7)}
+    # `_` is an identifier character: AND inside a column name is no keyword
+    assert c("x_and >= 5") == {"x_and": (5, None)}
+    assert c("k > 3 AND nd_and < 10") == {"k": (3, None), "nd_and": (None, 10)}
+    assert lh._split_top("col_and = 5", "AND") == ["col_and = 5"]
 
 
 def test_compile_prune_box_is_conservative():

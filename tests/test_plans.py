@@ -436,16 +436,50 @@ def test_cache_reuse_serves_from_memory(spark):
         table(spark, SF_DIR, "customer").unpersist()
 
 
-def test_jaccard_pair_expansion_is_chained_generates(spark):
-    """r11: the i<j pair expansion must stay two chained Generate
-    nodes (posexplode anchor + explode of the j>i slice) — the codegen
-    path measured 1.2x over the interpreted nested-transform+flatten
-    form at the 10x corpus. A plan that regresses to a single Generate
-    over a flattened pair array re-enters the interpreted HOF
-    evaluator for every pair (perf fence, not a correctness failure)."""
-    plan = _plan(spark, "dedup_ngram_jaccard")
+# op -> Generate nodes its plan needs: helpers.sorted_pairs' two, plus
+# the shingle explode (dedup_ngram_jaccard, dedup_threshold_sweep) or
+# the band-signature explode (dedup_minhash_md5).
+_PAIR_EXPANSION_GENERATES = {
+    "dedup_ngram_jaccard": 3,
+    "dedup_minhash_md5": 3,
+    "dedup_threshold_sweep": 3,
+    "basket_pair_lift": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_PAIR_EXPANSION_GENERATES))
+def test_jaccard_pair_expansion_is_chained_generates(spark, name):
+    """r11: every i<j pair expansion must stay two chained Generate
+    nodes (helpers.sorted_pairs: posexplode anchor + explode of the
+    j>i slice) — the codegen path measured 1.2x over the interpreted
+    nested-transform+flatten form at the 10x corpus. A plan that
+    regresses to a single Generate over a flattened pair array
+    re-enters the interpreted HOF evaluator for every pair (perf
+    fence, not a correctness failure)."""
+    plan = _plan(spark, name)
     assert "Generate posexplode" in plan, plan[:600]
-    assert plan.count("Generate ") >= 3  # shingle explode + anchor + slice
+    assert "flatten(" not in plan, plan[:600]
+    assert plan.count("Generate ") >= _PAIR_EXPANSION_GENERATES[name]
+
+
+def test_sorted_pairs_is_all_i_lt_j_combinations(spark):
+    """helpers.sorted_pairs yields exactly itertools.combinations(arr,
+    2) per row — no pair lost at either end of the slice arithmetic,
+    none for an empty, single-element or null array."""
+    from itertools import combinations
+
+    from lambda_hive_spark.helpers import sorted_pairs
+
+    arrays = {0: [], 1: [7], 2: [3, 9], 3: [1, 2, 4, 8, 16], 4: None}
+    df = spark.createDataFrame(list(arrays.items()), "k int, ids array<int>")
+    got = {
+        k: sorted(
+            (r["a"], r["b"])
+            for r in sorted_pairs(df.filter(df.k == k), "ids", "a", "b").collect()
+        )
+        for k in arrays
+    }
+    assert got == {k: list(combinations(v or [], 2)) for k, v in arrays.items()}
 
 
 def test_generate_has_no_inferred_prefilter(spark):
@@ -547,17 +581,19 @@ def test_bucketed_read_twin_reuses_layout_with_no_exchange(spark):
 
 
 def test_no_corpus_sized_forced_broadcast(spark):
-    """r8 judge finding: dedup_near_minhash / dedup_threshold_sweep
-    force-broadcast a per-document size table (one row per corpus doc)
-    and dedup_apply_representative force-broadcasts a corpus-fraction
-    drop list. Fixed by semi-join-pruning sizes to candidate ids before
-    the hint (bounded by |pairs|) and un-hinting the drop-list join
-    (AQE decides). Two guards so it cannot regress:
+    """r8 judge finding: dedup_near_minhash (and the former
+    dedup_threshold_sweep) force-broadcast a per-document size table
+    (one row per corpus doc) and dedup_apply_representative
+    force-broadcasts a corpus-fraction drop list. Fixed by
+    semi-join-pruning sizes to candidate ids before the hint (bounded
+    by |pairs|) and un-hinting the drop-list join (AQE decides). Two
+    guards so it cannot regress:
 
     1. source level — no `F.broadcast(sizes` / `F.broadcast(dropped`
        call site anywhere in operators/;
-    2. plan level — both size-table consumers plan the LeftSemi prune
-       upstream of their broadcast joins."""
+    2. plan level — dedup_near_minhash, the remaining size-table
+       consumer, plans the LeftSemi prune upstream of its broadcast
+       joins."""
     import glob
     import os
 
@@ -589,9 +625,21 @@ def test_no_corpus_sized_forced_broadcast(spark):
         "sources and bulk DV sidecars must stay unhinted (AQE decides)"
     )
 
-    for name in ("dedup_near_minhash", "dedup_threshold_sweep"):
-        plan = _plan(spark, name)
-        assert "LeftSemi" in plan, f"{name} lost the candidate-id size prune"
+    plan = _plan(spark, "dedup_near_minhash")
+    assert "LeftSemi" in plan, "dedup_near_minhash lost the candidate-id size prune"
+
+
+def test_threshold_sweep_scans_documents_once(spark):
+    """dedup_threshold_sweep runs dedup_ngram_jaccard's scored-pair
+    pipeline, whose doc sizes ride inside the pair rows, so the corpus
+    is read and shingled once. A size table joined back in scans
+    `documents` a second time — at 100 TB a second tokenize pass."""
+    df = OPS["dedup_threshold_sweep"].fn(spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    scans = [l for l in final.splitlines() if "FileScan" in l and "documents" in l]
+    assert len(scans) == 1, scans
 
 
 def test_star_bucketed_zero_fact_exchange_and_bounded_shuffles(spark):
@@ -714,17 +762,16 @@ def test_tfidf_reuses_tf_shuffle_stage(spark):
     assert plan.count("ReusedQueryStage") + plan.count("ReusedExchange") >= 1, plan[:800]
 
 
-# r11 (VERDICT r10 item 3): the five >25-static-Exchange diamond
-# pipelines rely on AQE RUNTIME stage reuse to execute their repeated
-# subtrees once — nothing pinned that until now. Minimums are the
-# counts probed at sf0.01 on Spark 4.1; re-probe with
+# r11 (VERDICT r10 item 3): the >25-static-Exchange diamond pipelines
+# rely on AQE RUNTIME stage reuse to execute their repeated subtrees
+# once — nothing pinned that until now. Minimums are the counts probed
+# at sf0.01 on Spark 4.1; re-probe with
 # `tools/measure.py bytes --sf-dir <sf0.01 dir> <op>`.
 _DIAMOND_REUSE_MIN = {
     "text_lang_divergence_tv": 8,
     "dedup_near_minhash": 6,
     "sim_recall_eval": 4,
     "customer_rfm_segments": 4,
-    "dedup_threshold_sweep": 3,
 }
 
 
