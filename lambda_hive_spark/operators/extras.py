@@ -102,21 +102,36 @@ def ivf_index(spark: SparkSession, sf_dir: str):
             F.transform("pc", lambda x: x.c).alias("centroid"),
         )
     )
-    scored = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "embedding",
-        "cell",
-        dot(F.col("embedding").cast("array<double>"), F.col("centroid")).alias("cdot"),
+    return cent, assign_cells(e, cent)
+
+
+def _cell_rank(df: DataFrame, key: str, vec: str, cent: DataFrame) -> DataFrame:
+    """Every (row, cell) pair of `df` x `cent` with `rn`, the cell's rank
+    for that `key`: dot(vec::array<double>, centroid) descending, ties
+    to the lower cell, a NULL cell after every non-NULL one (DuckDB's
+    default ASC order, which the IVF oracles replay)."""
+    w = Window.partitionBy(key).orderBy(F.col("cdot").desc(), F.col("cell").asc_nulls_last())
+    return (
+        df.crossJoin(F.broadcast(cent))
+        .select(
+            key, vec, "cell", dot(F.col(vec).cast("array<double>"), F.col("centroid")).alias("cdot")
+        )
+        .withColumn("rn", F.row_number().over(w))
     )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-    )
-    lists = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell")
-    )
-    return cent, lists
+
+
+def assign_cells(vecs: DataFrame, cent: DataFrame) -> DataFrame:
+    """Assign each (vec_id, embedding) row to its nearest centroid of
+    `cent` (cell, centroid): returns (vec_id, embedding, cell)."""
+    ranked = _cell_rank(vecs, "vec_id", "embedding", cent)
+    return ranked.filter(F.col("rn") == 1).select("vec_id", "embedding", "cell")
+
+
+def nearest_cells(queries: DataFrame, cent: DataFrame, nprobe: int = N_PROBE) -> DataFrame:
+    """The `nprobe` probe cells of each (query_id, qe) query, in
+    assign_cells' order: returns (query_id, qe, cell)."""
+    ranked = _cell_rank(queries, "query_id", "qe", cent)
+    return ranked.filter(F.col("rn") <= nprobe).select("query_id", "qe", "cell")
 
 
 def ivf_knn(spark: SparkSession, sf_dir: str, nprobe: int = N_PROBE) -> DataFrame:
@@ -127,25 +142,7 @@ def ivf_knn(spark: SparkSession, sf_dir: str, nprobe: int = N_PROBE) -> DataFram
     q = table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    qcells = (
-        q.crossJoin(F.broadcast(cent))
-        .select(
-            "query_id",
-            "qe",
-            "cell",
-            dot(F.col("qe").cast("array<double>"), F.col("centroid")).alias("cdot"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-                )
-            ),
-        )
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "qe", "cell")
-    )
+    qcells = nearest_cells(q, cent, nprobe)
     scored = (
         lists.join(F.broadcast(qcells), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from lambda_hive_spark import catalog as cat
 from lambda_hive_spark import lakehouse as lh
 from lambda_hive_spark.io import table
+from lambda_hive_spark.operators.extras import K_NN, N_PROBE, assign_cells, ivf_index, nearest_cells
 from lambda_hive_spark.operators.scans import _scratch
 from lambda_hive_spark.registry import op
 from lambda_hive_spark.streaming import core
@@ -1325,9 +1326,6 @@ def lake_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lh.read(spark, clone_path)
 
 
-_ANN_NPROBE = 3
-_ANN_K = 5
-
 _ANN_ORACLE = """
 WITH delta AS (
   SELECT vec_id + (SELECT MAX(vec_id) + 1 FROM embeddings) AS vec_id,
@@ -1393,7 +1391,7 @@ _ANN_DOTXY = _sql_dot("x.embedding", "y.embedding")
 
 @op(
     "lake_ann_index_probe",
-    oracle=_ANN_ORACLE.format(nprobe=_ANN_NPROBE, k=_ANN_K, dotxy=_ANN_DOTXY),
+    oracle=_ANN_ORACLE.format(nprobe=N_PROBE, k=K_NN, dotxy=_ANN_DOTXY),
     tags=("side_effect",),
 )
 def lake_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1431,16 +1429,9 @@ def lake_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle replays the whole pipeline — train-on-base,
     assign-the-union, probe, exact left-fold dot ranking — so the
     driver hash-gates the incremental maintenance path, not just the
-    output shape. Cites extras.py:120 (ivf_knn, the per-query-rebuild
-    twin); same query set / schema, value-identical when the corpus
+    output shape. Its twin is extras.ivf_knn, which rebuilds the index
+    per query; same query set / schema, value-identical when the corpus
     has no appends since training."""
-    from functools import reduce
-
-    from pyspark.sql.window import Window
-
-    from lambda_hive_spark.helpers import dot
-    from lambda_hive_spark.operators.extras import ivf_index
-
     base_path = _fresh_table_dir("ann_base", sf_dir)
     cent_path = _fresh_table_dir("ann_cent", sf_dir)
     lists_path = _fresh_table_dir("ann_lists", sf_dir)
@@ -1451,13 +1442,7 @@ def lake_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- build: train once on the pre-append snapshot, persist ---
     cent, lists = ivf_index(spark, sf_dir)
     lh.create(spark, cent_path, cent, key="cell")
-    lh.create(
-        spark,
-        lists_path,
-        lists.select("vec_id", "embedding", "cell"),
-        key="vec_id",
-        partition_by=["cell"],
-    )
+    lh.create(spark, lists_path, lists, key="vec_id", partition_by=["cell"])
 
     # --- append + O(delta) incremental index maintenance ---
     shift = e.agg(F.max("vec_id") + 1).collect()[0][0]
@@ -1471,97 +1456,16 @@ def lake_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert n_inc == delta.count(), "manifest diff over-delivered the append"
 
     cent_t = lh.read(spark, cent_path)
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-    )
-    assigned = (
-        inc.crossJoin(F.broadcast(cent_t))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            dot(F.col("embedding").cast("array<double>"), F.col("centroid")).alias(
-                "cdot"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell")
-    )
-    lh.append(spark, lists_path, assigned)
+    lh.append(spark, lists_path, assign_cells(inc, cent_t))
 
     # --- probe the PERSISTED index: no rebuild, pruned partition reads ---
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    qcells = (
-        q.crossJoin(F.broadcast(cent_t))
-        .select(
-            "query_id",
-            "qe",
-            "cell",
-            dot(F.col("qe").cast("array<double>"), F.col("centroid")).alias("cdot"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _ANN_NPROBE)
-        .select("query_id", "qe", "cell")
-    )
-    # A NULL cell (a corpus with NULL labels trains a NULL-label
-    # centroid) can reach the probe set, but `a.cell = qc.cell` never
-    # matches NULL on either engine — the oracle yields no candidates
-    # from it, so skipping its scan is value-identical (and sorted()
-    # cannot order None against ints — caught by the nulled variant).
-    probed = sorted(
-        r[0] for r in qcells.select("cell").distinct().collect() if r[0] is not None
-    )
-    n_files_total = len(lh.plan_files(lists_path))
-    scans = []
-    for c in probed:
-        plan = lh.plan_files(lists_path, point={"cell": c})
-        assert 0 < len(plan) < n_files_total, (
-            "cell probe did not prune at the manifest layer"
-        )
-        scans.append(lh.scan(spark, lists_path, point={"cell": c}))
-    lists_scan = reduce(DataFrame.unionByName, scans)
-
-    scored = (
-        lists_scan.join(F.broadcast(qcells), "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dot(F.col("qe").cast("array<double>"), F.col("embedding").cast("array<double>")).alias("cosine"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    result = scored.withColumn(
-        "rank", F.row_number().over(w_rank).cast("long")
-    ).filter(F.col("rank") <= _ANN_K)
+    result = _ivf_probe_lists(spark, q, cent_t, lists_path)
 
     # --- soundness: incremental index == from-scratch head assignment ---
-    head = lh.read(spark, base_path)
-    rebuilt = (
-        head.crossJoin(F.broadcast(cent_t))
-        .select(
-            "vec_id",
-            "cell",
-            dot(F.col("embedding").cast("array<double>"), F.col("centroid")).alias(
-                "cdot"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    )
+    rebuilt = assign_cells(lh.read(spark, base_path), cent_t).select("vec_id", "cell")
     persisted = lh.read(spark, lists_path).select("vec_id", "cell")
     drift = persisted.exceptAll(rebuilt).unionAll(rebuilt.exceptAll(persisted))
     assert drift.count() == 0, "incremental index drifted from full rebuild"
@@ -1614,7 +1518,7 @@ qcells AS (
     SELECT vec_id, cell,
            row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
     FROM vscore WHERE vec_id < 10
-  ) WHERE rn <= {_ANN_NPROBE}
+  ) WHERE rn <= {N_PROBE}
 ),
 sub AS (
   SELECT vec_id, s.s AS s, k.k AS k,
@@ -1656,7 +1560,7 @@ SELECT query_id, neighbor_id,
        CAST(row_number() OVER (PARTITION BY query_id
             ORDER BY adc ASC, neighbor_id ASC) AS BIGINT) AS rank
 FROM adc
-QUALIFY rank <= {_ANN_K}
+QUALIFY rank <= {K_NN}
 """
 
 
@@ -1689,12 +1593,8 @@ def lake_ann_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering vec_pq_recall_eval already proved hash-stable
     cross-engine; ADC itself is not emitted (POW-vs-multiply is
     engine-kitchen noise the contract does not expose)."""
-    from functools import reduce
-
     from pyspark.sql.window import Window
 
-    from lambda_hive_spark.helpers import dot
-    from lambda_hive_spark.operators.extras import ivf_index
     from lambda_hive_spark.operators.stats import _PQ_DIM, _PQ_SUB, _pq_code_cols
 
     base_path = _fresh_table_dir("pq_base", sf_dir)
@@ -1725,60 +1625,14 @@ def lake_ann_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert inc.count() == delta.count(), "manifest diff over-delivered the append"
 
     cent_t = lh.read(spark, cent_path)
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-    )
-    assigned = (
-        inc.crossJoin(F.broadcast(cent_t))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            dot(F.col("embedding").cast("array<double>"), F.col("centroid")).alias(
-                "cdot"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell")
-    )
-    lh.append(spark, codes_path, encode(assigned))
+    lh.append(spark, codes_path, encode(assign_cells(inc, cent_t)))
 
     # --- probe: centroids -> probed cells -> pruned CODE scans -> ADC ---
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    qcells = (
-        q.crossJoin(F.broadcast(cent_t))
-        .select(
-            "query_id",
-            "qe",
-            "cell",
-            dot(F.col("qe").cast("array<double>"), F.col("centroid")).alias("cdot"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _ANN_NPROBE)
-        .select("query_id", "qe", "cell")
-    )
-    probed = sorted(  # NULL cells never join candidates — see raw-lists twin
-        r[0] for r in qcells.select("cell").distinct().collect() if r[0] is not None
-    )
-    n_files_total = len(lh.plan_files(codes_path))
-    scans = []
-    for c in probed:
-        plan = lh.plan_files(codes_path, point={"cell": c})
-        assert 0 < len(plan) < n_files_total, (
-            "cell probe did not prune at the manifest layer"
-        )
-        scans.append(lh.scan(spark, codes_path, point={"cell": c}))
-    codes_scan = reduce(DataFrame.unionByName, scans)
+    qcells = nearest_cells(q, cent_t)
+    codes_scan = _cell_scan(spark, codes_path, qcells)
 
     def adc_sub(s: int):
         kcol = F.col(f"k{s}")
@@ -1806,26 +1660,12 @@ def lake_ann_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     result = (
         scored.withColumn("rank", F.row_number().over(w_rank).cast("long"))
-        .filter(F.col("rank") <= _ANN_K)
+        .filter(F.col("rank") <= K_NN)
         .select("query_id", "neighbor_id", "rank")
     )
 
     # soundness: incremental codes table == from-scratch head re-encode
-    head = lh.read(spark, base_path)
-    rebuilt = encode(
-        head.crossJoin(F.broadcast(cent_t))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            dot(F.col("embedding").cast("array<double>"), F.col("centroid")).alias(
-                "cdot"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell")
-    )
+    rebuilt = encode(assign_cells(lh.read(spark, base_path), cent_t))
     persisted = lh.read(spark, codes_path)
     drift = persisted.exceptAll(rebuilt).unionAll(rebuilt.exceptAll(persisted))
     assert drift.count() == 0, "incremental PQ codes drifted from full re-encode"
@@ -2124,77 +1964,45 @@ def lake_text_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-def _ivf_assign_cells(inc: DataFrame, cent_t: DataFrame) -> DataFrame:
-    """Assign a vector batch to its nearest persisted centroid —
-    the O(batch) maintenance kernel shared by the append-path op
-    (lake_ann_index_probe) and the streaming maintenance op below."""
-    from pyspark.sql.window import Window
+def _cell_scan(spark: SparkSession, path: str, qcells: DataFrame) -> DataFrame:
+    """The rows of the cell-partitioned lake table at `path` that lie in
+    the cells `qcells` probes: one manifest-pruned point scan per probed
+    cell, each plan asserted a strict subset of the table's files,
+    unioned. A NULL cell (a corpus with NULL labels trains a NULL-label
+    centroid) can reach the probe set, but `a.cell = qc.cell` never
+    matches NULL on either engine, so the oracles draw no candidates
+    from it and its scan is skipped (sorted() could not order None
+    against ints either)."""
+    from functools import reduce
 
-    from lambda_hive_spark.helpers import dot
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("cdot").desc(), F.col("cell").asc_nulls_last())
-    return (
-        inc.crossJoin(F.broadcast(cent_t))
-        .select(
-            "vec_id",
-            "embedding",
-            "cell",
-            dot(F.col("embedding").cast("array<double>"), F.col("centroid")).alias(
-                "cdot"
-            ),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell")
+    probed = sorted(
+        r[0] for r in qcells.select("cell").distinct().collect() if r[0] is not None
     )
+    n_files_total = len(lh.plan_files(path))
+    scans = []
+    for c in probed:
+        plan = lh.plan_files(path, point={"cell": c})
+        assert 0 < len(plan) < n_files_total, (
+            "cell probe did not prune at the manifest layer"
+        )
+        scans.append(lh.scan(spark, path, point={"cell": c}))
+    return reduce(DataFrame.unionByName, scans)
 
 
 def _ivf_probe_lists(
     spark: SparkSession, queries: DataFrame, cent_t: DataFrame, lists_path: str
 ) -> DataFrame:
-    """Probe the persisted inverted lists: nprobe cells per query via
-    the centroid table, one partition-pruned point scan per probed
-    cell (each plan asserted a strict subset of the table's files),
-    exact scoring within the candidates, top-k."""
-    from functools import reduce
-
+    """Probe the persisted inverted lists: the nprobe nearest cells per
+    query, their pruned cell scans, exact cosine scoring within the
+    candidates, top-k."""
     from pyspark.sql.window import Window
 
     from lambda_hive_spark.helpers import dot
 
-    qcells = (
-        queries.crossJoin(F.broadcast(cent_t))
-        .select(
-            "query_id",
-            "qe",
-            "cell",
-            dot(F.col("qe").cast("array<double>"), F.col("centroid")).alias("cdot"),
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("query_id").orderBy(
-                    F.col("cdot").desc(), F.col("cell").asc_nulls_last()
-                )
-            ),
-        )
-        .filter(F.col("rn") <= _ANN_NPROBE)
-        .select("query_id", "qe", "cell")
-    )
-    probed = sorted(
-        r[0] for r in qcells.select("cell").distinct().collect() if r[0] is not None
-    )
-    n_files_total = len(lh.plan_files(lists_path))
-    scans = []
-    for c in probed:
-        plan = lh.plan_files(lists_path, point={"cell": c})
-        assert 0 < len(plan) < n_files_total, (
-            "cell probe did not prune at the manifest layer"
-        )
-        scans.append(lh.scan(spark, lists_path, point={"cell": c}))
-    lists_scan = reduce(DataFrame.unionByName, scans)
+    qcells = nearest_cells(queries, cent_t)
     scored = (
-        lists_scan.join(F.broadcast(qcells), "cell")
+        _cell_scan(spark, lists_path, qcells)
+        .join(F.broadcast(qcells), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -2209,13 +2017,13 @@ def _ivf_probe_lists(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )
     return scored.withColumn("rank", F.row_number().over(w_rank).cast("long")).filter(
-        F.col("rank") <= _ANN_K
+        F.col("rank") <= K_NN
     )
 
 
 @op(
     "stream_ann_index_maintenance",
-    oracle=_ANN_ORACLE.format(nprobe=_ANN_NPROBE, k=_ANN_K, dotxy=_ANN_DOTXY),
+    oracle=_ANN_ORACLE.format(nprobe=N_PROBE, k=K_NN, dotxy=_ANN_DOTXY),
     tags=("side_effect",),
 )
 def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2248,7 +2056,6 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil as _shutil
 
     from lambda_hive_spark import catalog as _cat
-    from lambda_hive_spark.operators.extras import ivf_index
 
     base_path = _fresh_table_dir("sann_base", sf_dir)
     cent_path = _fresh_table_dir("sann_cent", sf_dir)
@@ -2260,13 +2067,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     lh.create(spark, base_path, e.repartition(4), key="vec_id")
     cent, lists = ivf_index(spark, sf_dir)
     lh.create(spark, cent_path, cent, key="cell")
-    lh.create(
-        spark,
-        lists_path,
-        lists.select("vec_id", "embedding", "cell"),
-        key="vec_id",
-        partition_by=["cell"],
-    )
+    lh.create(spark, lists_path, lists, key="vec_id", partition_by=["cell"])
     cent_t = lh.read(spark, cent_path)
     cat = _cat.Catalog(_fresh_table_dir("sann_catalog", sf_dir))
     cat.create_table("corpus", base_path)
@@ -2299,7 +2100,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         lh.append_idempotent(
             s,
             txn.path("ann_index"),
-            _ivf_assign_cells(rows, cent_t),
+            assign_cells(rows, cent_t),
             writer_id="sann",
             batch_id=bid,
         )
@@ -2315,13 +2116,11 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(os.path.join(land, "b*"))
         )
-        q = (
-            stream.writeStream.foreachBatch(maintain)
-            .option("checkpointLocation", os.path.join(land, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        core.drain(
+            stream.writeStream.foreachBatch(maintain),
+            "stream_ann_index_maintenance",
+            os.path.join(land, "_ckpt"),
         )
-        core.await_or_stop(q, 300, "stream_ann_index_maintenance")
 
     run_pass()
     v_base, v_lists = lh.current_version(base_path), lh.current_version(lists_path)
@@ -2348,9 +2147,7 @@ def stream_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = _ivf_probe_lists(spark, q, cent_t, lists_path)
 
     persisted = lh.read(spark, lists_path).select("vec_id", "cell")
-    rebuilt = _ivf_assign_cells(lh.read(spark, base_path), cent_t).select(
-        "vec_id", "cell"
-    )
+    rebuilt = assign_cells(lh.read(spark, base_path), cent_t).select("vec_id", "cell")
     drift = persisted.exceptAll(rebuilt).unionAll(rebuilt.exceptAll(persisted))
     assert drift.count() == 0, "streamed index drifted from full rebuild"
     return result

@@ -5,8 +5,8 @@ Each op applies a mode-agnostic plan builder from
 the driver's DuckDB gate hash-checks the *semantics*; the identical
 builders run as true Structured Streaming queries in
 tests/test_streaming.py. Ops that inherently require a streaming
-runtime (`scan_stream`, `stream_watermark`, `stream_sink`) execute a
-real `trigger(availableNow=True)` query inside the op and return the
+runtime (`scan_stream`, `stream_watermark`, `stream_sink`) drain a
+real availableNow query (`core.drain`) inside the op and return the
 materialized result.
 
 Reference file:line: N/A — empty reference dir (SURVEY.md §0).
@@ -265,15 +265,11 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     name = f"prog_{_uuid.uuid4().hex[:10]}"
-    query = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", core.scratch_dir("prog_ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    query = core.drain(
+        agg.writeStream.format("memory").queryName(name).outputMode("complete"),
+        "stream_progress_metrics",
+        core.scratch_dir("prog_ckpt"),
     )
-    core.await_or_stop(query, 300, "stream_progress_metrics")
     progress = query.recentProgress
     total_in = sum(int(p["numInputRows"]) for p in progress)
     n_batches = len([p for p in progress if int(p["numInputRows"]) > 0])
@@ -327,17 +323,15 @@ def stream_sink_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run_pass() -> None:
         stream = core.events_stream(spark, land).select(*cols)
-        q = (
+        core.drain(
             stream.writeStream.foreachBatch(
                 lambda batch, bid: lh.append_idempotent(
                     batch.sparkSession, tbl, batch, writer_id="lakesink", batch_id=bid
                 )
-            )
-            .option("checkpointLocation", core.scratch_dir("lakesink-ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            ),
+            "stream_sink_lake",
+            core.scratch_dir("lakesink-ckpt"),
         )
-        core.await_or_stop(q, 300, "stream_sink_lake")
 
     land = core.landing_dir(sf_dir)
     run_pass()

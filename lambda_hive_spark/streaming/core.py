@@ -25,6 +25,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 # Scratch root: env-overridable, else repo-relative (two levels above
 # this package), never a hardcoded absolute checkout path.
@@ -119,14 +120,19 @@ def events_stream(
     return _normalize_timestamps(df)
 
 
-def await_or_stop(query, timeout_s: float, name: str) -> None:
-    """Wait for a streaming query to finish; if it is still running at
-    `timeout_s`, stop it and raise TimeoutError — a sink read now would
-    return a partial mid-stream result, so fail loudly instead. The
-    checkpoint stays where it is."""
+def drain(
+    writer: DataStreamWriter, name: str, checkpoint: str, timeout_s: float = 300
+) -> StreamingQuery:
+    """Start `writer` with its checkpoint at `checkpoint` over all
+    currently available data (trigger availableNow) and wait for it to
+    finish. If it is still running at `timeout_s`, stop it and raise
+    TimeoutError — a sink read now would return a partial mid-stream
+    result, so fail loudly instead. The checkpoint stays where it is."""
+    query = writer.option("checkpointLocation", checkpoint).trigger(availableNow=True).start()
     if not query.awaitTermination(timeout_s):
         query.stop()
         raise TimeoutError(f"streaming query {name} did not finish in {timeout_s}s")
+    return query
 
 
 def run_available_now(
@@ -140,15 +146,8 @@ def run_available_now(
     the plan object is identical either way.
     """
     name = f"q_{uuid.uuid4().hex[:12]}"
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    await_or_stop(query, timeout_s, name)
+    writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
+    drain(writer, name, scratch_dir("ckpt"), timeout_s)
     return df.sparkSession.table(name)
 
 
@@ -156,16 +155,13 @@ def to_parquet_sink(df: DataFrame, out_dir: str, timeout_s: int = 300) -> None:
     """Production-shaped sink: exactly-once parquet append via the
     streaming committer + checkpoint. At 100 TB this is partitioned by
     event date so downstream readers get partition pruning."""
-    query = (
+    writer = (
         df.withColumn("event_date", F.to_date("ts"))
         .writeStream.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", scratch_dir("ckpt"))
         .partitionBy("event_date")
-        .trigger(availableNow=True)
-        .start()
     )
-    await_or_stop(query, timeout_s, f"parquet sink to {out_dir}")
+    drain(writer, f"parquet sink to {out_dir}", scratch_dir("ckpt"), timeout_s)
 
 
 def cleanup_scratch() -> None:

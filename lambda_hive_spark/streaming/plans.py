@@ -3,7 +3,7 @@
 Each function takes an `events`-shaped DataFrame — batch OR streaming,
 the caller chooses — and returns the transformed DataFrame. Batch mode
 feeds the driver's DuckDB hash-gate (operators/streams.py); streaming
-mode runs under `trigger(availableNow=True)` in tests/test_streaming.py.
+mode runs under an availableNow trigger in tests/test_streaming.py.
 One plan, two execution modes: Spark's unified semantics guarantee the
 batch result equals the streaming result once all data has arrived
 (watermark permitting), which is exactly what the tests assert.
@@ -329,11 +329,10 @@ def run_upsert(stream: DataFrame, state_dir: str, timeout_s: int = 300) -> str:
 
     from lambda_hive_spark.streaming import core as _core
 
-    query = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", _core.scratch_dir("ckpt"))
-        .trigger(availableNow=True)
-        .start()
+    _core.drain(
+        stream.writeStream.foreachBatch(merge_batch),
+        "run_upsert",
+        _core.scratch_dir("ckpt"),
+        timeout_s,
     )
-    _core.await_or_stop(query, timeout_s, "run_upsert")
     return state_path

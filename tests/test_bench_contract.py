@@ -20,13 +20,14 @@ pytestmark = pytest.mark.skipif(
 
 def test_bench_emits_contract_json():
     env = dict(os.environ, SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     out = subprocess.run(
-        [sys.executable, "/root/repo/bench.py"],
+        [sys.executable, os.path.join(repo, "bench.py")],
         capture_output=True,
         text=True,
         timeout=540,
         env=env,
-        cwd="/root/repo",
+        cwd=repo,
     )
     assert out.returncode == 0, out.stderr[-1000:]
     # LAST line = the compact summary the driver's tail window records

@@ -1553,11 +1553,8 @@ def test_ivf_probe_helper_full_probe_equals_brute_force(spark, tmp_path):
 
     from lambda_hive_spark import lakehouse as lh
     from lambda_hive_spark.helpers import dot
-    from lambda_hive_spark.operators.lake import (
-        _ANN_K,
-        _ivf_assign_cells,
-        _ivf_probe_lists,
-    )
+    from lambda_hive_spark.operators.extras import K_NN, assign_cells
+    from lambda_hive_spark.operators.lake import _ivf_probe_lists
 
     # toy corpus: 30 vectors in 3 well-separated 3-dim cells
     rows = []
@@ -1575,7 +1572,7 @@ def test_ivf_probe_helper_full_probe_equals_brute_force(spark, tmp_path):
     lh.create(
         spark,
         lists_path,
-        _ivf_assign_cells(e, cent),
+        assign_cells(e, cent),
         key="vec_id",
         partition_by=["cell"],
     )
@@ -1609,7 +1606,7 @@ def test_ivf_probe_helper_full_probe_equals_brute_force(spark, tmp_path):
             )
             .cast("long"),
         )
-        .filter(F.col("rank") <= _ANN_K)
+        .filter(F.col("rank") <= K_NN)
     )
     drift = got.exceptAll(brute).unionAll(brute.exceptAll(got))
     assert drift.count() == 0, "full-probe lake path diverged from brute force"

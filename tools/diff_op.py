@@ -3,9 +3,10 @@ DuckDB oracle at a given sf dir — triage companion to verify_driver.
 
 Usage: python tools/diff_op.py <sf_dir> <op> [max_rows]
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as e

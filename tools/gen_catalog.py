@@ -3,9 +3,11 @@ its oracle kind and docstring summary. Run: python tools/gen_catalog.py"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from collections import defaultdict
 
@@ -43,7 +45,7 @@ def main() -> None:
             kind = "sql" if op_.oracle else "rows"
             lines.append(f"| `{op_.name}` | {kind} | {summary} |")
         lines.append("")
-    with open("/root/repo/OPERATORS.md", "w") as f:
+    with open(os.path.join(_REPO, "OPERATORS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote OPERATORS.md: {len(ops)} ops in {len(families)} families")
 
@@ -52,7 +54,7 @@ def main() -> None:
     # 20 ops landed without a catalog regen (VERDICT r6 item 6).
     import re
 
-    with open("/root/repo/README.md") as f:
+    with open(os.path.join(_REPO, "README.md")) as f:
         readme = f.read()
     patched = re.sub(
         r"\*\*\d+ registered operators\*\*",
@@ -66,7 +68,7 @@ def main() -> None:
         patched,
     )
     if patched != readme:
-        with open("/root/repo/README.md", "w") as f:
+        with open(os.path.join(_REPO, "README.md"), "w") as f:
             f.write(patched)
         print("patched README.md op counts")
 

@@ -11,9 +11,10 @@ Writes {op: {"spark": md5, "duck": md5}}.
 """
 import hashlib
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as e

@@ -3,9 +3,12 @@ t1 smoke on entry(spark), then every queries()[name] vs oracle_sql()[name]
 via DuckDB at the given sf dir.
 Usage: python tools/verify_driver.py [sf_dir] [op_name ...]
 (op names restrict the run to that subset — fast iteration loop)."""
+import itertools
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 import duckdb
 
 import __spark_entry__ as e
@@ -19,9 +22,7 @@ _builder = (
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.ui.enabled", "false")
 )
-import os as _os
-
-_tz = _os.environ.get("SPARK_GRAFT_VERIFY_TZ")
+_tz = os.environ.get("SPARK_GRAFT_VERIFY_TZ")
 if _tz:  # hostile-driver-session probe: ops must pin UTC themselves
     _builder = _builder.config("spark.sql.session.timeZone", _tz)
 spark = _builder.getOrCreate()
@@ -50,8 +51,11 @@ for name, fn in sorted(qs.items()):  # t2
     if cols != sorted(ddf.columns) or s != d:
         bad.append(name)
         # post-mortem dump: first differing rows from each side
-        import itertools
-        with open(f"/tmp/verify_mismatch_{name}.txt", "w") as fh:
+        dump_dir = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(_REPO, ".tmp"))
+        os.makedirs(dump_dir, exist_ok=True)
+        dump = os.path.join(dump_dir, f"verify_mismatch_{name}.txt")
+        print(f"{name}: mismatch dump at {dump}")
+        with open(dump, "w") as fh:
             fh.write(f"spark cols {cols}\nduck cols {sorted(ddf.columns)}\n")
             fh.write(f"spark rows {len(s)} duck rows {len(d)}\n")
             ds, dd = set(d), set(s)
