@@ -6,21 +6,27 @@ sf0.01 the big money sums reach ~1e9, where accumulated ulp noise can
 exceed the `round(x, 4)` granularity — rounding alone does NOT
 guarantee hash-parity.
 
-Fix: sum through DECIMAL. `CAST(x AS DECIMAL(38, s))` rounds the
+Fix: sum through DECIMAL. `CAST(x AS DECIMAL(p, s))` rounds the
 identical IEEE double to the identical decimal on both engines (no
-halfway ties exist: no double is exactly *.5e-s), decimal addition is
-exact and order-independent, and the final `CAST(... AS DOUBLE)` is
-nearest-double of the same exact decimal → bit-identical results on
-both engines, at any parallelism, at any scale. This is also the right
-100 TB answer: exact aggregation independent of partitioning.
+halfway ties exist: no double is exactly *.5e-s) and decimal addition
+is exact and order-independent, so both engines hold the same exact
+total at any parallelism — the right 100 TB answer too. The final
+`CAST(... AS DOUBLE)` is nearest-double on Spark, but DuckDB 1.0.0's
+decimal→double cast is not correctly rounded past about 9e9 value
+units (a quarter or more of such totals land 1 ulp off): results are
+bit-identical on both engines only below that bound. ROADMAP
+direction 2 is the fix, in `sql_dbl`.
 
 Per-row arithmetic (e.g. `l_extendedprice*(1-l_discount)`) is safe in
 double: both engines execute the same IEEE ops on the same inputs.
 Only ACCUMULATION across rows needs the decimal detour.
 
-Helpers come in pairs: a PySpark Column builder and a DuckDB SQL
-string builder, generated from the same parameters so the two sides
-cannot drift.
+This module is the only place an exact sum is spelled. Builders come
+in pairs, a PySpark Column form and a SQL-text form generated from the
+same parameters so the two sides cannot drift: `dec` (per-row decimal
+cast), `dbl` (final cast to double), and `dsum`/`davg` built on them.
+The long-micros path (`sql_micros`, `sql_micros_emit`) is Spark SQL
+text for `F.expr`.
 
 One non-numeric primitive lives here too: `sorted_pairs`, the only
 "all i<j pairs of a sorted array" expansion in the operator layer.
@@ -45,13 +51,43 @@ def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def dsum(col: Column | str, scale: int = 6) -> Column:
-    """Order-independent exact sum of a double column → double."""
-    return F.sum(_c(col).cast(f"decimal({_PREC},{scale})")).cast("double")
+def dec(col: Column | str, scale: int = 6, *, prec: int = _PREC) -> Column:
+    """Per-row cast to DECIMAL(prec, scale) for exact accumulation."""
+    return _c(col).cast(f"decimal({prec},{scale})")
 
 
-def sql_dsum(expr: str, scale: int = 6) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL({_PREC},{scale}))) AS DOUBLE)"
+def sql_dec(expr: str, scale: int = 6, *, prec: int = _PREC) -> str:
+    return f"CAST({expr} AS DECIMAL({prec},{scale}))"
+
+
+def dbl(col: Column) -> Column:
+    """Final cast of an exact decimal total to double."""
+    return col.cast("double")
+
+
+def sql_dbl(expr: str) -> str:
+    return f"CAST({expr} AS DOUBLE)"
+
+
+def dsum(col: Column | str, scale: int = 6, *, prec: int = _PREC, over=None,
+         distinct: bool = False) -> Column:
+    """Order-independent exact sum of a double column → double. `over`
+    (a WindowSpec) frames the SUM itself, inside the final cast;
+    `distinct` sums each distinct decimal once."""
+    total = (F.sum_distinct if distinct else F.sum)(dec(col, scale, prec=prec))
+    return dbl(total if over is None else total.over(over))
+
+
+def sql_dsum(expr: str, scale: int = 6, *, prec: int = _PREC, over: str | None = None,
+             where: str | None = None, distinct: bool = False) -> str:
+    """SQL twin of `dsum`. `over` is a window name or a parenthesized
+    spec; `where` is the aggregate's FILTER predicate."""
+    total = f"SUM({'DISTINCT ' if distinct else ''}{sql_dec(expr, scale, prec=prec)})"
+    if where is not None:
+        total += f" FILTER (WHERE {where})"
+    if over is not None:
+        total += f" OVER {over}"
+    return sql_dbl(total)
 
 
 def davg(col: Column | str, scale: int = 6) -> Column:
@@ -109,28 +145,30 @@ def _micros_product(expr: str, scale: int) -> str:
     return f"(CAST(({expr}) AS DOUBLE) * {10**scale}.0D)"
 
 
-def sql_micros_sum(expr: str, scale: int = 6) -> str:
-    """Partial-level long-micros sum of a money expression (Spark SQL):
-    round-half-away(x·10^scale) accumulated as BIGINT, NULL outside
-    the 2^51 exact-arithmetic domain. Pair with `sql_micros_final` on
-    the partial column for the decimal-exact merge."""
+def sql_micros(expr: str, scale: int = 6) -> str:
+    """Guarded long micros of one money value (Spark SQL):
+    round-half-away(x·10^scale) as BIGINT, NULL outside the 2^51
+    exact-arithmetic domain."""
     m = _micros_product(expr, scale)
     half_away = f"CAST(SIGN({m}) * FLOOR(ABS({m}) + 0.5D) AS BIGINT)"
-    return f"SUM(CASE WHEN ABS({m}) < {MICROS_GUARD} THEN {half_away} END)"
+    return f"CASE WHEN ABS({m}) < {MICROS_GUARD} THEN {half_away} END"
 
 
 def sql_micros_count(expr: str, scale: int = 6) -> str:
-    """Denominator twin of `sql_micros_sum`: count exactly the rows
-    the sum admitted, so guard-nulled rows don't skew an avg low."""
+    """Denominator twin of `sql_micros`: count exactly the rows the
+    guard admits, so guard-nulled rows don't skew an avg low."""
     return f"COUNT(CASE WHEN ABS({_micros_product(expr, scale)}) < {MICROS_GUARD} THEN 1 END)"
 
 
-def sql_micros_final(partial_col: str, scale: int = 6) -> str:
-    """Final-level merge of long-micros partials: exact decimal sum,
-    one decimal division back to value units, nearest-double emit —
-    bit-identical to dsum on the same data."""
-    div = f"CAST({10**scale} AS DECIMAL(7,0))"
-    return f"CAST(SUM(CAST({partial_col} AS DECIMAL(38,0))) / {div} AS DOUBLE)"
+def sql_micros_emit(micros: str, scale: int = 6, *, merge: bool = False) -> str:
+    """A long micros total back to value units (Spark SQL): one exact
+    decimal division, nearest-double emit — the same double `dsum`
+    emits on the same data. `merge=True` first sums per-partition
+    partials exactly in DECIMAL(38,0) (hier_exact_agg's final level)."""
+    total = sql_dec(micros, 0, prec=38)
+    if merge:
+        total = f"SUM({total})"
+    return sql_dbl(f"{total} / CAST({10**scale} AS DECIMAL(7,0))")
 
 
 def flat_exact_agg(
@@ -194,26 +232,12 @@ def flat_exact_agg(
     finals: list[str] = []
     shared: dict[str, str] = {}  # source expr -> micros-total alias
     shared_counts: dict[str, str] = {}  # source expr -> guard-count alias
-    div = f"CAST({10**scale} AS DECIMAL(7,0))"
-
-    def _emit(alias: str) -> str:
-        # the group total is already in `alias` — one exact decimal
-        # division, nearest-double emit (same arithmetic as
-        # sql_micros_final, minus its merge-level SUM)
-        return f"CAST(CAST({alias} AS DECIMAL(38,0)) / {div} AS DOUBLE)"
 
     def _m_alias(expr: str) -> str:
         if expr not in shared:
             alias = f"__lhs_m{len(shared)}"
             shared[expr] = alias
-            m = _micros_product(expr, scale)
-            half_away = f"CAST(SIGN({m}) * FLOOR(ABS({m}) + 0.5D) AS BIGINT)"
-            aggs.append(
-                F.expr(
-                    f"try_sum(CASE WHEN ABS({m}) < {MICROS_GUARD} "
-                    f"THEN {half_away} END) AS {alias}"
-                )
-            )
+            aggs.append(F.expr(f"try_sum({sql_micros(expr, scale)}) AS {alias}"))
         return shared[expr]
 
     def _c_alias(expr: str) -> str:
@@ -224,9 +248,9 @@ def flat_exact_agg(
         return shared_counts[expr]
 
     for name, expr in sums:
-        finals.append(f"{_emit(_m_alias(expr))} AS {name}")
+        finals.append(f"{sql_micros_emit(_m_alias(expr), scale)} AS {name}")
     for name, expr in avgs:
-        finals.append(f"({_emit(_m_alias(expr))} / {_c_alias(expr)}) AS {name}")
+        finals.append(f"({sql_micros_emit(_m_alias(expr), scale)} / {_c_alias(expr)}) AS {name}")
     if count_star is not None:
         aggs.append(F.expr(f"COUNT(*) AS {count_star}"))
         finals.append(count_star)
@@ -306,19 +330,19 @@ def hier_exact_agg(
         if expr not in shared:
             alias = f"__lhs_m{len(shared)}"
             shared[expr] = alias
-            partials.append(F.expr(f"{sql_micros_sum(expr, scale)} AS {alias}"))
+            partials.append(F.expr(f"SUM({sql_micros(expr, scale)}) AS {alias}"))
         return shared[expr]
 
     # Internal aliases are `__lhs_`-prefixed (ADVICE r10: bare _m0/_pid
     # could collide with caller column names); all are dropped by the
     # final-level groupBy, so outputs are unchanged.
     for name, expr in sums:
-        finals.append(F.expr(f"{sql_micros_final(_m_col(expr), scale)} AS {name}"))
+        finals.append(F.expr(f"{sql_micros_emit(_m_col(expr), scale, merge=True)} AS {name}"))
     for name, expr in avgs:
         alias = _m_col(expr)
         partials.append(F.expr(f"{sql_micros_count(expr, scale)} AS __lhs_c_{name}"))
         finals.append(
-            F.expr(f"{sql_micros_final(alias, scale)} / SUM(__lhs_c_{name}) AS {name}")
+            F.expr(f"{sql_micros_emit(alias, scale, merge=True)} / SUM(__lhs_c_{name}) AS {name}")
         )
     if count_star is not None:
         partials.append(F.expr("COUNT(*) AS __lhs_n"))

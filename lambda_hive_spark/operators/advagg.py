@@ -20,12 +20,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lambda_hive_spark.helpers import (
-    MICROS_GUARD,
-    _micros_product,
     dsum,
     flat_exact_agg,
     hier_exact_agg,
+    sql_dbl,
+    sql_dec,
     sql_dsum,
+    sql_micros,
+    sql_micros_emit,
 )
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
@@ -33,11 +35,11 @@ from lambda_hive_spark.registry import op
 
 @op(
     "agg_distinct",
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag,
        COUNT(DISTINCT l_suppkey) AS n_suppliers,
        COUNT(DISTINCT l_partkey) AS n_parts,
-       CAST(SUM(DISTINCT CAST(l_quantity AS DECIMAL(38,6))) AS DOUBLE) AS sum_distinct_qty
+       {sql_dsum('l_quantity', prec=38, distinct=True)} AS sum_distinct_qty
 FROM lineitem
 GROUP BY l_returnflag
 """,
@@ -49,7 +51,7 @@ def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.groupBy("l_returnflag").agg(
         F.countDistinct("l_suppkey").alias("n_suppliers"),
         F.countDistinct("l_partkey").alias("n_parts"),
-        F.sum_distinct(F.col("l_quantity").cast("decimal(38,6)")).cast("double").alias("sum_distinct_qty"),
+        dsum("l_quantity", prec=38, distinct=True).alias("sum_distinct_qty"),
     )
 
 
@@ -208,7 +210,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+               {sql_dsum('o_totalprice', prec=38)} AS total
         FROM parquet.`{sf_dir}/orders.parquet`
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
@@ -267,7 +269,7 @@ _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
     "agg_pivot",
     oracle=f"""
 SELECT user_id,
-       {', '.join(f"CAST(SUM(CASE WHEN event_type = '{t}' THEN CAST(value AS DECIMAL(38,6)) END) AS DOUBLE) AS {t}" for t in _EVENT_TYPES)}
+       {', '.join(sql_dbl(f"SUM(CASE WHEN event_type = '{t}' THEN {sql_dec('value', prec=38)} END)") + f" AS {t}" for t in _EVENT_TYPES)}
 FROM events GROUP BY user_id
 """,
 )
@@ -284,7 +286,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarded micros value computes ONCE), then SIX conditional long
     sums — the exact conditional-aggregation shape DuckDB executes.
     Emission divides each long total back to value units through
-    DECIMAL(38,0), the same nearest-double as sql_dsum. Measured at
+    helpers.sql_micros_emit, the same nearest-double as sql_dsum. Measured at
     the 100x tier: 0.69 s vs 1.02 s two-level (1.47x), neutral at
     1000x (0.93 s both — the scan dominates); parity EXACT at sf0.01
     and scale100. History: sum(cast decimal) 3.2 s → two-level
@@ -303,11 +305,8 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         + " ".join(f"WHEN '{t}' THEN {i}" for i, t in enumerate(_EVENT_TYPES))
         + " ELSE 5 END"
     )
-    m = _micros_product("value", 6)
-    half_away = f"CAST(SIGN({m}) * FLOOR(ABS({m}) + 0.5D) AS BIGINT)"
-    guarded = f"CASE WHEN ABS({m}) < {MICROS_GUARD} THEN {half_away} END"
     pre = ev.select(
-        "user_id", F.expr(f"{code} AS _code"), F.expr(f"{guarded} AS _m")
+        "user_id", F.expr(f"{code} AS _code"), F.expr(f"{sql_micros('value')} AS _m")
     )
     agg = pre.groupBy("user_id").agg(
         *[
@@ -317,12 +316,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return agg.select(
         "user_id",
-        *[
-            F.expr(
-                f"CAST(CAST(_m{i} AS DECIMAL(38,0)) / CAST(1000000 AS DECIMAL(7,0)) AS DOUBLE)"
-            ).alias(t)
-            for i, t in enumerate(_EVENT_TYPES)
-        ],
+        *[F.expr(sql_micros_emit(f"_m{i}")).alias(t) for i, t in enumerate(_EVENT_TYPES)],
     )
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from lambda_hive_spark.helpers import dsum, sorted_pairs, sql_dsum
+from lambda_hive_spark.helpers import dbl, dec, dsum, sorted_pairs, sql_dsum
 from lambda_hive_spark.io import register_views, table
 from lambda_hive_spark.operators.scans import _scratch
 from lambda_hive_spark.registry import op
@@ -106,10 +106,10 @@ def join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
         "salt", F.pmod(F.xxhash64("event_id"), F.lit(_SALT_BUCKETS))
     )
     partial = ev.groupBy("event_type", "salt").agg(
-        F.count(F.lit(1)).alias("pn"), F.sum(F.col("value").cast("decimal(18,6)")).alias("pv")
+        F.count(F.lit(1)).alias("pn"), F.sum(dec("value")).alias("pv")
     )
     return partial.groupBy("event_type").agg(
-        F.sum("pn").alias("n"), F.sum("pv").cast("double").alias("total_value")
+        F.sum("pn").alias("n"), dbl(F.sum("pv")).alias("total_value")
     )
 
 
@@ -418,12 +418,12 @@ def funnel_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "customer_rfm_segments",
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT o_custkey,
          MAX(o_orderdate) AS last_order,
          CAST(COUNT(*) AS BIGINT) AS frequency,
-         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS monetary
+         {sql_dsum("o_totalprice")} AS monetary
   FROM orders GROUP BY o_custkey
 ),
 scored AS (
@@ -636,18 +636,18 @@ def events_burst_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "parts_abc_classification",
-    oracle="""
+    oracle=f"""
 WITH rev AS (
   SELECT l_partkey % 100 AS part_bucket,
-         CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+         {sql_dsum("l_extendedprice")} AS revenue
   FROM lineitem GROUP BY 1
 ),
-tot AS (SELECT CAST(SUM(CAST(revenue AS DECIMAL(18,6))) AS DOUBLE) AS total FROM rev),
+tot AS (SELECT {sql_dsum("revenue")} AS total FROM rev),
 ranked AS (
   SELECT part_bucket, revenue,
-         CAST(SUM(CAST(revenue AS DECIMAL(18,6))) OVER (
+         {sql_dsum("revenue", over='''(
            ORDER BY revenue DESC, part_bucket
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_rev
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''')} AS cum_rev
   FROM rev
 )
 SELECT r.part_bucket, r.revenue,
@@ -676,9 +676,7 @@ def parts_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.orderBy(F.col("revenue").desc(), "part_bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # dsum().over() would attach the frame to dsum's outer double cast
-    # instead of the SUM; spell the windowed decimal sum explicitly.
-    cum = F.sum(F.col("revenue").cast("decimal(18,6)")).over(w).cast("double")
+    cum = dsum("revenue", over=w)
     ranked = rev.withColumn("cum_rev", cum)
     share = F.col("cum_rev") / F.col("total")
     return (
@@ -979,7 +977,7 @@ def events_rolling_active_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "cohort_value_ltv",
-    oracle="""
+    oracle=f"""
 WITH first_seen AS (
   SELECT user_id, strftime(date_trunc('week', MIN(ts)), '%Y-%m-%d') AS cohort_week
   FROM events GROUP BY user_id
@@ -987,15 +985,15 @@ WITH first_seen AS (
 cell AS (
   SELECT f.cohort_week,
          strftime(date_trunc('week', e.ts), '%Y-%m-%d') AS activity_week,
-         CAST(SUM(CAST(e.value AS DECIMAL(18,6))) AS DOUBLE) AS week_value
+         {sql_dsum("e.value")} AS week_value
   FROM events e JOIN first_seen f USING (user_id)
   WHERE e.event_type = 'purchase'
   GROUP BY 1, 2
 )
 SELECT cohort_week, activity_week, week_value,
-       CAST(SUM(CAST(week_value AS DECIMAL(18,6))) OVER (
+       {sql_dsum("week_value", over='''(
          PARTITION BY cohort_week ORDER BY activity_week
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_value
+         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)''')} AS cum_value
 FROM cell
 """,
 )
@@ -1021,23 +1019,23 @@ def cohort_value_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("activity_week")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    cum = F.sum(F.col("week_value").cast("decimal(18,6)")).over(w).cast("double")
+    cum = dsum("week_value", over=w)
     return cell.withColumn("cum_value", cum)
 
 
 @op(
     "brand_share_trend",
-    oracle="""
+    oracle=f"""
 WITH rev AS (
   SELECT CAST(year(l.l_shipdate) AS BIGINT) AS ship_year, p.p_brand,
-         CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS brand_rev
+         {sql_dsum("l.l_extendedprice * (1 - l.l_discount)")} AS brand_rev
   FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
   WHERE p.p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
   GROUP BY 1, 2
 ),
 tot AS (
   SELECT CAST(year(l_shipdate) AS BIGINT) AS ship_year,
-         CAST(SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS year_rev
+         {sql_dsum("l_extendedprice * (1 - l_discount)")} AS year_rev
   FROM lineitem GROUP BY 1
 )
 SELECT r.ship_year, r.p_brand, r.brand_rev,
@@ -1129,13 +1127,13 @@ def events_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "regression_price_vs_size",
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(p_size AS DECIMAL(18,4))) AS DOUBLE) AS sx,
-         CAST(SUM(CAST(p_retailprice AS DECIMAL(18,4))) AS DOUBLE) AS sy,
-         CAST(SUM(CAST(p_size * p_size AS DECIMAL(18,4))) AS DOUBLE) AS sxx,
-         CAST(SUM(CAST(p_size * p_retailprice AS DECIMAL(18,4))) AS DOUBLE) AS sxy
+         {sql_dsum("p_size", 4)} AS sx,
+         {sql_dsum("p_retailprice", 4)} AS sy,
+         {sql_dsum("p_size * p_size", 4)} AS sxx,
+         {sql_dsum("p_size * p_retailprice", 4)} AS sxy
   FROM part
 )
 SELECT n,
@@ -1153,12 +1151,11 @@ def regression_price_vs_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     same five numbers drive an incremental re-fit when data arrives.
     Outputs rounded 8/6 decimals above residual division noise."""
     p = table(spark, sf_dir, "part")
-    d4 = lambda c: F.sum(c.cast("decimal(18,4)")).cast("double")  # noqa: E731
     x, y = F.col("p_size"), F.col("p_retailprice")
     s = p.agg(
         F.count(F.lit(1)).alias("n"),
-        d4(x).alias("sx"), d4(y).alias("sy"),
-        d4(x * x).alias("sxx"), d4(x * y).alias("sxy"),
+        dsum(x, 4).alias("sx"), dsum(y, 4).alias("sy"),
+        dsum(x * x, 4).alias("sxx"), dsum(x * y, 4).alias("sxy"),
     )
     n = F.col("n")
     slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
@@ -1327,11 +1324,11 @@ def events_heatmap_hour_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "lineitem_band_crosstab",
-    oracle="""
+    oracle=f"""
 SELECT CASE WHEN l_discount < 0.03 THEN 'low' WHEN l_discount < 0.07 THEN 'mid' ELSE 'high' END AS discount_band,
        CASE WHEN l_tax < 0.03 THEN 'low' WHEN l_tax < 0.06 THEN 'mid' ELSE 'high' END AS tax_band,
        CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS revenue
+       {sql_dsum("l_extendedprice")} AS revenue
 FROM lineitem GROUP BY 1, 2
 """,
 )
@@ -1362,7 +1359,7 @@ def lineitem_band_crosstab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "customer_balance_deciles",
-    oracle="""
+    oracle=f"""
 WITH ranked AS (
   SELECT c_acctbal,
          ntile(10) OVER (ORDER BY c_acctbal, c_custkey) AS decile
@@ -1371,7 +1368,7 @@ WITH ranked AS (
 SELECT CAST(decile AS BIGINT) AS decile,
        CAST(COUNT(*) AS BIGINT) AS n,
        MIN(c_acctbal) AS lo, MAX(c_acctbal) AS hi,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE) AS total_bal
+       {sql_dsum("c_acctbal")} AS total_bal
 FROM ranked GROUP BY decile
 """,
 )
@@ -1469,14 +1466,14 @@ def retention_day_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "part_price_premium",
-    oracle="""
+    oracle=f"""
 WITH per_type AS (
   SELECT p_type, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(p_retailprice AS DECIMAL(18,6))) AS DOUBLE) AS type_total
+         {sql_dsum("p_retailprice")} AS type_total
   FROM part GROUP BY p_type
 ),
 overall AS (
-  SELECT CAST(SUM(CAST(p_retailprice AS DECIMAL(18,6))) AS DOUBLE) AS all_total,
+  SELECT {sql_dsum("p_retailprice")} AS all_total,
          CAST(COUNT(*) AS BIGINT) AS all_n
   FROM part
 )

@@ -468,10 +468,10 @@ def sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "sql_window_clause",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_custkey,
        row_number() OVER w AS rn,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER w AS DOUBLE) AS running_spend,
+       {sql_dsum("o_totalprice", over="w")} AS running_spend,
        MAX(o_totalprice) OVER w AS max_so_far
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
@@ -488,10 +488,10 @@ def sql_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative value is deterministic."""
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT o_orderkey, o_custkey,
                row_number() OVER w AS rn,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) OVER w AS DOUBLE) AS running_spend,
+               {sql_dsum("o_totalprice", over="w")} AS running_spend,
                MAX(o_totalprice) OVER w AS max_so_far
         FROM orders
         WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey

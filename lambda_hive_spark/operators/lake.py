@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from lambda_hive_spark import catalog as cat
 from lambda_hive_spark import lakehouse as lh
+from lambda_hive_spark.helpers import dbl, dec, dot, dsum, sql_dot, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.operators.extras import K_NN, N_PROBE, assign_cells, ivf_index, nearest_cells
 from lambda_hive_spark.operators.scans import _scratch
@@ -1384,9 +1385,7 @@ QUALIFY rank <= {k}
 """
 
 
-from lambda_hive_spark.helpers import sql_dot as _sql_dot
-
-_ANN_DOTXY = _sql_dot("x.embedding", "y.embedding")
+_ANN_DOTXY = sql_dot("x.embedding", "y.embedding")
 
 
 @op(
@@ -1677,7 +1676,7 @@ def _text_index_oracle() -> str:
     text_bm25_topk formulation (retrieval.py) with documents extended
     by the delta batch — the persisted-index probe must equal the
     from-scratch ranking on the head corpus."""
-    from lambda_hive_spark.operators.retrieval import _QUERY_VALUES, _TOPK
+    from lambda_hive_spark.operators.retrieval import _QUERY_VALUES, _TOPK, _bm25_score
 
     return f"""
 WITH q(query_id, term) AS (VALUES {_QUERY_VALUES}),
@@ -1711,12 +1710,7 @@ dfq AS (
 ),
 scored AS (
   SELECT q.query_id, tf.doc_id,
-         CAST(SUM(CAST(
-           round(ln((stats.n - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0), 6)
-           * (CAST(tf.tf AS DOUBLE) * 2.2)
-           / (CAST(tf.tf AS DOUBLE)
-              + 1.2 * (1.0 - 0.75 + 0.75 * CAST(lens.dl AS DOUBLE) / stats.avgdl))
-         AS DECIMAL(18,6))) AS DOUBLE) AS score
+         {_bm25_score("stats")} AS score
   FROM tf
   JOIN dfq USING (term)
   JOIN lens USING (doc_id)
@@ -1938,12 +1932,10 @@ def lake_text_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "doc_id",
-            (idf_col * (tfd * F.lit(2.2)) / (tfd + norm))
-            .cast("decimal(18,6)")
-            .alias("part"),
+            dec(idf_col * (tfd * F.lit(2.2)) / (tfd + norm)).alias("part"),
         )
         .groupBy("query_id", "doc_id")
-        .agg(F.sum("part").cast("double").alias("score"))
+        .agg(dbl(F.sum("part")).alias("score"))
     )
     from pyspark.sql.window import Window
 
@@ -1996,8 +1988,6 @@ def _ivf_probe_lists(
     query, their pruned cell scans, exact cosine scoring within the
     candidates, top-k."""
     from pyspark.sql.window import Window
-
-    from lambda_hive_spark.helpers import dot
 
     qcells = nearest_cells(queries, cent_t)
     scored = (
@@ -2253,11 +2243,11 @@ def lake_deletion_vector(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lh.read(spark, path)
 
 
-CATALOG_TXN_ORACLE = """
+CATALOG_TXN_ORACLE = f"""
 WITH led AS (
   SELECT o_orderkey AS k, o_totalprice AS amt FROM orders WHERE o_orderkey % 4 = 1
 ), bal AS (
-  SELECT o_custkey AS k, CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS amt
+  SELECT o_custkey AS k, {sql_dsum("o_totalprice", prec=38)} AS amt
   FROM orders WHERE o_orderkey % 4 = 1 GROUP BY o_custkey
 ), delta AS (
   SELECT o_orderkey AS k, o_totalprice AS amt FROM orders WHERE o_orderkey % 4 = 3
@@ -2303,11 +2293,7 @@ def catalog_txn_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "orders")
         .filter("o_orderkey % 4 = 1")
         .groupBy(F.col("o_custkey").alias("k"))
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)"))
-            .cast("double")
-            .alias("amt")
-        )
+        .agg(dsum("o_totalprice", prec=38).alias("amt"))
     )
     lh.create(spark, led_path, seed.repartition(4), key="k")
     lh.create(spark, bal_path, bal_seed.repartition(4), key="k")

@@ -1331,8 +1331,7 @@ assign AS (
 ),
 upd AS (
   SELECT a.cid, t.pos,
-         ROUND(CAST(SUM(CAST(CAST(e.embedding[t.pos] AS DOUBLE)
-                             AS DECIMAL(38,12))) AS DOUBLE)
+         ROUND({sql_dsum("CAST(e.embedding[t.pos] AS DOUBLE)", 12, prec=38)}
                / COUNT(*), 6) AS coord,
          CAST(COUNT(DISTINCT a.vec_id) AS BIGINT) AS n_members
   FROM assign a
@@ -1385,8 +1384,7 @@ def cluster_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         exploded.groupBy("cid", (F.col("pos0") + 1).cast("bigint").alias("pos"))
         .agg(
             F.round(
-                F.sum(F.col("val").cast("double").cast("decimal(38,12)")).cast("double")
-                / F.count(F.lit(1)),
+                dsum(F.col("val").cast("double"), 12, prec=38) / F.count(F.lit(1)),
                 6,
             ).alias("coord"),
             F.count_distinct("vec_id").alias("n_members"),
@@ -1777,7 +1775,7 @@ def sim_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "text_lang_divergence_tv",
-    oracle="""
+    oracle=f"""
 WITH tok AS (
   SELECT lang, t.tok AS term
   FROM documents, unnest(string_split(text, ' ')) AS t(tok)
@@ -1804,7 +1802,7 @@ joined AS (
   WHERE NOT EXISTS (SELECT 1 FROM oth o2 WHERE o2.lang = l.lang AND o2.term = e.term)
 )
 SELECT lang,
-       round(CAST(SUM(CAST(d AS DECIMAL(18,15))) AS DOUBLE) / 2, 8) AS tv_distance
+       round({sql_dsum("d", 15)} / 2, 8) AS tv_distance
 FROM joined GROUP BY lang
 """,
 )
@@ -1843,9 +1841,7 @@ def text_lang_divergence_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
         shared.unionByName(en_only)
         .groupBy("lang")
         .agg(
-            F.round(
-                F.sum(F.col("d").cast("decimal(18,15)")).cast("double") / 2, 8
-            ).alias("tv_distance")
+            F.round(dsum("d", 15) / 2, 8).alias("tv_distance")
         )
     )
 

@@ -104,11 +104,11 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SX = "CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)"
-_SY = "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)"
-_SXX = "CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(18,4))) AS DOUBLE)"
-_SYY = "CAST(SUM(CAST(l_extendedprice * l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)"
-_SXY = "CAST(SUM(CAST(l_quantity * l_extendedprice AS DECIMAL(18,4))) AS DOUBLE)"
+_SX = sql_dsum("l_quantity", 4)
+_SY = sql_dsum("l_extendedprice", 4)
+_SXX = sql_dsum("l_quantity * l_quantity", 4)
+_SYY = sql_dsum("l_extendedprice * l_extendedprice", 4)
+_SXY = sql_dsum("l_quantity * l_extendedprice", 4)
 
 
 @op(
@@ -137,15 +137,14 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg_partial_final, just with 5 accumulators; this is also the
     merge-friendly form an incremental MV keeps (mv_agg_merge)."""
     li = table(spark, sf_dir, "lineitem")
-    d4 = lambda c: F.sum(c.cast("decimal(18,4)")).cast("double")  # noqa: E731
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     agg = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        d4(q).alias("sx"),
-        d4(p).alias("sy"),
-        d4(q * q).alias("sxx"),
-        d4(p * p).alias("syy"),
-        d4(q * p).alias("sxy"),
+        dsum(q, 4).alias("sx"),
+        dsum(p, 4).alias("sy"),
+        dsum(q * q, 4).alias("sxx"),
+        dsum(p * p, 4).alias("syy"),
+        dsum(q * p, 4).alias("sxy"),
     )
     n = F.col("n")
     cov_num = F.col("sxy") - F.col("sx") * F.col("sy") / n
@@ -329,7 +328,7 @@ SELECT l_returnflag,
        CAST(COUNT(*) AS BIGINT) AS n_all,
        CAST(COUNT(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_discounted,
        {sql_dsum('l_extendedprice')} AS rev_all,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) FILTER (WHERE l_discount > 0.05) AS DOUBLE) AS rev_discounted,
+       {sql_dsum('l_extendedprice', where='l_discount > 0.05')} AS rev_discounted,
        CAST(COUNT(DISTINCT l_suppkey) FILTER (WHERE l_quantity >= 40) AS BIGINT) AS bulk_suppliers
 FROM lineitem
 GROUP BY l_returnflag
@@ -346,10 +345,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_all"),
         F.expr("COUNT(*) FILTER (WHERE l_discount > 0.05)").alias("n_discounted"),
         dsum("l_extendedprice").alias("rev_all"),
-        F.expr(
-            "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6)))"
-            " FILTER (WHERE l_discount > 0.05) AS DOUBLE)"
-        ).alias("rev_discounted"),
+        F.expr(sql_dsum("l_extendedprice", where="l_discount > 0.05")).alias("rev_discounted"),
         F.expr(
             "COUNT(DISTINCT l_suppkey) FILTER (WHERE l_quantity >= 40)"
         ).alias("bulk_suppliers"),

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lambda_hive_spark.helpers import dsum, sql_dsum
 from lambda_hive_spark.io import par_table, table
 from lambda_hive_spark.operators.llm import _SQL_SHINGLES, _shingles, _tokens
 from lambda_hive_spark.registry import op
@@ -178,7 +179,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "text_unigram_logprob",
-    oracle="""
+    oracle=f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
 ),
@@ -192,7 +193,7 @@ scored AS (
 )
 SELECT doc_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
-       round(CAST(SUM(CAST(logp AS DECIMAL(18,8))) AS DOUBLE) / COUNT(*), 6)
+       round({sql_dsum("logp", 8)} / COUNT(*), 6)
          AS avg_logprob
 FROM scored GROUP BY doc_id
 """,
@@ -230,17 +231,14 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
-            F.round(
-                F.sum(F.col("logp").cast("decimal(18,8)")).cast("double") / F.count(F.lit(1)),
-                6,
-            ).alias("avg_logprob"),
+            F.round(dsum("logp", 8) / F.count(F.lit(1)), 6).alias("avg_logprob"),
         )
     )
 
 
 @op(
     "pipeline_mix_temperature",
-    oracle="""
+    oracle=f"""
 WITH counts AS (
   SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents GROUP BY source
 ),
@@ -250,7 +248,7 @@ raw AS (
   FROM counts, tot
 )
 SELECT source, n_docs,
-       round(w_raw / (SELECT CAST(SUM(CAST(w_raw AS DECIMAL(18,8))) AS DOUBLE) FROM raw), 6)
+       round(w_raw / (SELECT {sql_dsum("w_raw", 8)} FROM raw), 6)
          AS mix_weight
 FROM raw
 """,
@@ -278,7 +276,7 @@ def pipeline_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_docs",
         F.round(F.pow(F.col("n_docs") / F.col("n"), F.lit(0.7)), 8).alias("w_raw"),
     )
-    norm = raw.agg(F.sum(F.col("w_raw").cast("decimal(18,8)")).cast("double").alias("z"))
+    norm = raw.agg(dsum("w_raw", 8).alias("z"))
     return raw.crossJoin(F.broadcast(norm)).select(
         "source",
         "n_docs",

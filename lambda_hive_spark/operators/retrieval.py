@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lambda_hive_spark.helpers import dbl, dec, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
 
@@ -69,6 +70,17 @@ _QUERY_VALUES = ", ".join(
 )
 
 
+def _bm25_score(stats: str) -> str:
+    """Exact per-(query, doc) sum of the BM25 term scores; `stats`
+    names the CTE holding the corpus size `n` and mean length `avgdl`."""
+    return sql_dsum(f"""
+           round(ln(({stats}.n - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0), 6)
+           * (CAST(tf.tf AS DOUBLE) * 2.2)
+           / (CAST(tf.tf AS DOUBLE)
+              + 1.2 * (1.0 - 0.75 + 0.75 * CAST(lens.dl AS DOUBLE) / {stats}.avgdl))
+        """)
+
+
 _BM25_ORACLE = f"""
 WITH q(query_id, term) AS (VALUES {_QUERY_VALUES}),
 lens AS (
@@ -93,12 +105,7 @@ dfq AS (
 ),
 scored AS (
   SELECT q.query_id, tf.doc_id,
-         CAST(SUM(CAST(
-           round(ln((corpus.n - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0), 6)
-           * (CAST(tf.tf AS DOUBLE) * 2.2)
-           / (CAST(tf.tf AS DOUBLE)
-              + 1.2 * (1.0 - 0.75 + 0.75 * CAST(lens.dl AS DOUBLE) / corpus.avgdl))
-         AS DECIMAL(18,6))) AS DOUBLE) AS score
+         {_bm25_score("corpus")} AS score
   FROM tf
   JOIN dfq USING (term)
   JOIN lens USING (doc_id)
@@ -196,13 +203,13 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return idf(t) * (tfd * F.lit(2.2)) / (tfd + norm)
 
     def query_score(text: str):
-        # element-wise dsum: per-term scores quantized to DECIMAL(18,6)
-        # exactly like the oracle's SUM(CAST(.. AS DECIMAL(18,6)))
-        parts = [term_score(t).cast("decimal(18,6)") for t in text.split(" ")]
+        # element-wise dsum: per-term scores quantized by the same
+        # per-row decimal cast as the oracle's sql_dsum
+        parts = [dec(term_score(t)) for t in text.split(" ")]
         total = parts[0]
         for p in parts[1:]:
             total = total + p
-        return total.cast("double")
+        return dbl(total)
 
     wide = d.select("doc_id", dl_expr.alias("dl"), *tf_cols).select(
         "doc_id", *[query_score(text).alias(qid) for qid, text in _QUERIES]
@@ -382,12 +389,7 @@ dfq AS (
 ),
 scored AS (
   SELECT q.query_id, tf.doc_id,
-         CAST(SUM(CAST(
-           round(ln((corpus.n - dfq.df + 0.5) / (dfq.df + 0.5) + 1.0), 6)
-           * (CAST(tf.tf AS DOUBLE) * 2.2)
-           / (CAST(tf.tf AS DOUBLE)
-              + 1.2 * (1.0 - 0.75 + 0.75 * CAST(lens.dl AS DOUBLE) / corpus.avgdl))
-         AS DECIMAL(18,6))) AS DOUBLE) AS score
+         {_bm25_score("corpus")} AS score
   FROM tf
   JOIN dfq USING (term)
   JOIN lens USING (doc_id)

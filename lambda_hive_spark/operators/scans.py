@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from lambda_hive_spark.helpers import dsum, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
 
@@ -153,9 +154,9 @@ def source_csv_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "sink_parquet",
-    oracle="""
+    oracle=f"""
 SELECT o_orderstatus, COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+       {sql_dsum("o_totalprice", prec=38)} AS total
 FROM orders GROUP BY o_orderstatus
 """,
     tags=("side_effect",),
@@ -169,7 +170,7 @@ def sink_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("total"),
+            dsum("o_totalprice", prec=38).alias("total"),
         )
         .write.mode("overwrite")
         .parquet(out)
@@ -198,9 +199,9 @@ def source_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "sink_csv_json_roundtrip",
-    oracle="""
+    oracle=f"""
 SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) AS DOUBLE) AS total
+       {sql_dsum("o_totalprice", prec=38)} AS total
 FROM orders GROUP BY o_orderstatus
 """,
     tags=("side_effect",),
@@ -223,7 +224,7 @@ def sink_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).cast("double").alias("total"),
+            dsum("o_totalprice", prec=38).alias("total"),
         )
     )
     csv_out, json_out = _scratch("agg_csv"), _scratch("agg_json")

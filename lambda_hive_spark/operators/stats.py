@@ -357,7 +357,7 @@ def vec_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "stats_chi2_independence",
-    oracle="""
+    oracle=f"""
 WITH obs AS (
   SELECT c_mktsegment AS seg, c_nationkey AS nat,
          CAST(COUNT(*) AS BIGINT) AS o
@@ -374,7 +374,7 @@ cells AS (
              CROSS JOIN tot t
 )
 SELECT CAST(COUNT(*) AS BIGINT) AS n_cells,
-       round(CAST(SUM(CAST((o - e) * (o - e) / e AS DECIMAL(18,12))) AS DOUBLE), 6) AS chi2
+       round({sql_dsum("(o - e) * (o - e) / e", 12)}, 6) AS chi2
 FROM cells
 """,
 )
@@ -407,13 +407,13 @@ def stats_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     term = (F.col("o") - F.col("e")) * (F.col("o") - F.col("e")) / F.col("e")
     return cells.agg(
         F.count(F.lit(1)).alias("n_cells"),
-        F.round(F.sum(term.cast("decimal(18,12)")).cast("double"), 6).alias("chi2"),
+        F.round(dsum(term, 12), 6).alias("chi2"),
     )
 
 
 @op(
     "vec_norm_audit",
-    oracle="""
+    oracle=f"""
 WITH norms AS (
   SELECT label,
          sqrt(list_reduce(list_transform(embedding,
@@ -424,7 +424,7 @@ WITH norms AS (
 SELECT CAST(label AS BIGINT) AS label,
        CAST(COUNT(*) AS BIGINT) AS n,
        CAST(COUNT(CASE WHEN abs(l2 - 1.0) < 0.001 THEN 1 END) AS BIGINT) AS n_unit,
-       round(CAST(SUM(CAST(l2 AS DECIMAL(18,12))) AS DOUBLE) / COUNT(*), 8) AS mean_l2,
+       round({sql_dsum("l2", 12)} / COUNT(*), 8) AS mean_l2,
        MIN(l2) AS min_l2, MAX(l2) AS max_l2
 FROM norms GROUP BY label
 """,

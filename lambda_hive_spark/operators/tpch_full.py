@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lambda_hive_spark.helpers import dsum, sql_davg, sql_dsum
+from lambda_hive_spark.helpers import dec, dsum, sql_davg, sql_dec, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
 
@@ -452,7 +452,7 @@ JOIN lineitem ON o_orderkey = l_orderkey
 WHERE o_orderkey IN (
   SELECT l_orderkey FROM lineitem
   GROUP BY l_orderkey
-  HAVING SUM(CAST(l_quantity AS DECIMAL(18,6))) > 250
+  HAVING SUM({sql_dec("l_quantity")}) > 250
 )
 GROUP BY c_name, c_custkey, o_orderkey, strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d'), o_totalprice
 """,
@@ -466,7 +466,7 @@ def tpch_q18_large_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,6)")).alias("q"))
+        .agg(F.sum(dec("l_quantity")).alias("q"))
         .filter(F.col("q") > 250)
         .select("l_orderkey")
     )
@@ -731,7 +731,7 @@ WITH val AS (
 )
 SELECT ps_partkey, part_value
 FROM val
-WHERE part_value > (SELECT (CAST(SUM(CAST(part_value AS DECIMAL(38,6))) AS DOUBLE) / COUNT(*)) * 2 FROM val)
+WHERE part_value > (SELECT ({sql_dsum("part_value", prec=38)} / COUNT(*)) * 2 FROM val)
 """,
 )
 def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -770,7 +770,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     total = val.agg(
         (
-            (F.sum(F.col("part_value").cast("decimal(38,6)")).cast("double") / F.count(F.lit(1)))
+            (dsum("part_value", prec=38) / F.count(F.lit(1)))
             * F.lit(2.0)
         ).alias("threshold")
     )

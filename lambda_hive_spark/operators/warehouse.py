@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lambda_hive_spark.helpers import dbl, dec, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
 
@@ -143,10 +144,10 @@ def unpivot_long(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "mv_agg_merge",
-    oracle="""
+    oracle=f"""
 SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value,
-       CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_value
+       {sql_dsum("value")} AS total_value,
+       {sql_dsum("value")} / COUNT(*) AS avg_value
 FROM events GROUP BY user_id
 """,
 )
@@ -175,7 +176,7 @@ def mv_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,6)")).alias("dsum"),
+            F.sum(dec("value")).alias("dsum"),
         )
 
     state = partial(ev.filter(F.col("ts") < cutoff))
@@ -185,7 +186,7 @@ def mv_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.sum("cnt").alias("n_events"), F.sum("dsum").alias("dsum"))
     )
-    total = F.col("dsum").cast("double")
+    total = dbl(F.col("dsum"))
     return merged.select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),

@@ -17,10 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lambda_hive_spark.helpers import dsum, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
-
-_DSUM_VAL = "CAST(SUM(CAST(value AS DECIMAL(38,6))) OVER {w} AS DOUBLE)"
 
 
 @op(
@@ -100,7 +99,7 @@ def win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     "win_running",
     oracle=f"""
 SELECT event_id, user_id,
-       {_DSUM_VAL.format(w='w')} AS running_value,
+       {sql_dsum('value', prec=38, over='w')} AS running_value,
        CAST(COUNT(*) OVER w AS BIGINT) AS running_n
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
@@ -118,7 +117,7 @@ def win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.select(
         "event_id",
         "user_id",
-        F.sum(F.col("value").cast("decimal(38,6)")).over(w).cast("double").alias("running_value"),
+        dsum("value", prec=38, over=w).alias("running_value"),
         F.count(F.lit(1)).over(w).cast("long").alias("running_n"),
     )
 
@@ -127,7 +126,7 @@ def win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     "win_sliding_rows",
     oracle=f"""
 SELECT event_id, user_id,
-       ({_DSUM_VAL.format(w='w')} / COUNT(*) OVER w) AS moving_avg
+       ({sql_dsum('value', prec=38, over='w')} / COUNT(*) OVER w) AS moving_avg
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC
              ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
@@ -141,7 +140,7 @@ def win_sliding_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("ts").asc(), F.col("event_id").asc())
         .rowsBetween(-2, Window.currentRow)
     )
-    msum = F.sum(F.col("value").cast("decimal(38,6)")).over(w).cast("double")
+    msum = dsum("value", prec=38, over=w)
     return ev.select(
         "event_id",
         "user_id",
@@ -151,11 +150,11 @@ def win_sliding_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "win_range_frame",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_custkey,
        CAST(floor(o_totalprice * 100) AS BIGINT) AS price_cents,
        CAST(COUNT(*) OVER w AS BIGINT) AS n_within_10k,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(38,6))) OVER w AS DOUBLE) AS sum_within_10k
+       {sql_dsum('o_totalprice', prec=38, over='w')} AS sum_within_10k
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY CAST(floor(o_totalprice * 100) AS BIGINT) ASC
              RANGE BETWEEN 1000000 PRECEDING AND CURRENT ROW)
@@ -180,7 +179,7 @@ def win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey",
             "price_cents",
             F.count(F.lit(1)).over(w).cast("long").alias("n_within_10k"),
-            F.sum(F.col("o_totalprice").cast("decimal(38,6)")).over(w).cast("double").alias("sum_within_10k"),
+            dsum("o_totalprice", prec=38, over=w).alias("sum_within_10k"),
         )
     )
 
@@ -285,10 +284,9 @@ def win_distinct_running(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "win_ratio_to_report",
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_custkey, o_totalprice,
-       o_totalprice / CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6)))
-                           OVER (PARTITION BY o_custkey) AS DOUBLE) AS share
+       o_totalprice / {sql_dsum('o_totalprice', over='(PARTITION BY o_custkey)')} AS share
 FROM orders
 """,
 )
@@ -300,7 +298,7 @@ def win_ratio_to_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     then one IEEE division. One shuffle on o_custkey, no sort needed
     (unordered frame), state per partition is a single accumulator."""
     w = Window.partitionBy("o_custkey")
-    total = F.sum(F.col("o_totalprice").cast("decimal(18,6)")).over(w).cast("double")
+    total = dsum("o_totalprice", over=w)
     return table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",

@@ -21,6 +21,7 @@ _builder = (
     SparkSession.builder.master("local[8]")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.ui.enabled", "false")
+    .config("spark.ui.showConsoleProgress", "false")
 )
 _tz = os.environ.get("SPARK_GRAFT_VERIFY_TZ")
 if _tz:  # hostile-driver-session probe: ops must pin UTC themselves
