@@ -4,13 +4,14 @@ A warehouse user's first instinct against an ACID table is a SQL
 statement — ``MERGE INTO``, ``UPDATE … SET``, ``DELETE FROM``,
 ``SELECT … VERSION AS OF 3``, ``RESTORE TABLE`` — not a Python verb.
 This module closes that gap (the r9 judge's top-ranked residual):
-a small, deliberately strict compiler that maps the standard
+Spark's parser, decided on parsed nodes — the session's own SQL
+parser reads each statement, and the node it yields maps the standard
 DML/time-travel statement shapes onto the verbs that already own the
-semantics. It parses and DISPATCHES; it never re-implements a write
-path — every statement bottoms out in lakehouse.update_where /
-delete_where / merge_upsert / restore / read(version=/ref=), so all
-the ACID machinery (OCC commit loop, stats pruning, deletion vectors,
-CDC feeds, constraint recheck, vacuum horizon) applies unchanged.
+semantics. It DISPATCHES; it never re-implements a write path — every
+statement bottoms out in lakehouse.update_where / delete_where /
+merge_upsert / restore / read(version=/ref=), so all the ACID
+machinery (OCC commit loop, stats pruning, deletion vectors, CDC
+feeds, constraint recheck, vacuum horizon) applies unchanged.
 
 Supported statements (case-insensitive keywords; <table> is a name
 registered via ``register()`` or resolvable through a Catalog root):
@@ -49,9 +50,10 @@ ValueError that NAMES the unsupported construct and the verb-level
 escape hatch (e.g. a conditional ``WHEN MATCHED AND p`` refuses and
 points at update_where; ``TIMESTAMP AS OF`` refuses because manifests
 record no wall-clock — versions and refs are the time-travel keys).
-Predicates and SET expressions are NOT interpreted here — they pass
-verbatim to the verbs, which hand them to Spark's own parser, so the
-expression dialect is exactly Spark SQL with no second grammar.
+Predicates and SET expressions are NOT interpreted here — their text
+is sliced from the statement by the spans Spark's parse records and
+passed verbatim to the verbs, which hand them to Spark's own parser,
+so the expression dialect is exactly Spark SQL with no second grammar.
 
 DML statements return a one-row metrics DataFrame (statement, table,
 version) — the shape SQL clients expect from a write. Write-path
@@ -59,9 +61,10 @@ options that have no standard syntax (change tracking, deletion
 vectors) are per-call keyword arguments: ``sql(stmt,
 deletion_vectors=True)`` — an option rider, not a dialect fork.
 
-Scale: parsing is O(statement length) on the driver; execution cost
-is whichever verb runs, with the same 100 TB contracts those verbs
-already carry (stats-pruned COW, O(matched) DV writes, O(1) restore).
+Scale: Spark's parser, decided on parsed nodes — a few ms of driver
+time per statement on a warm session; execution cost is whichever
+verb runs, with the same 100 TB contracts those verbs already carry
+(stats-pruned COW, O(matched) DV writes, O(1) restore).
 
 Reference file:line: N/A — empty reference dir (SURVEY.md §0).
 """
@@ -71,74 +74,121 @@ from __future__ import annotations
 import re
 import uuid
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from lambda_hive_spark import lakehouse as lh
 
-_KEYWORDS = {
-    "as", "on", "where", "group", "order", "having", "limit", "union",
-    "join", "left", "right", "full", "inner", "cross", "outer", "semi",
-    "anti", "for", "version", "timestamp", "when", "using", "set",
-    "select", "from", "with", "qualify", "window", "lateral",
-    # set operators and table suffixes: a follower from this set is
-    # part of the enclosing query, never a user alias (missing entries
-    # made the rewrite treat `FROM t EXCEPT ...` as alias `except` and
-    # drop the AS <name> re-qualification — r10 review)
-    "except", "intersect", "minus", "tablesample", "pivot", "unpivot",
-    "sort", "cluster", "distribute", "fetch", "offset", "values",
-    "natural", "grouping",
-}
-
 _IDENT = r"[A-Za-z_][A-Za-z0-9_.$]*"
 
+# Spark's grammar has no RESTORE, VACUUM, OPTIMIZE or SHOW PARTITIONS
+# and reads DESCRIBE HISTORY as a DESCRIBE of a column: these five are
+# matched whole, by leading keyword, before anything reaches the
+# parser — (whole-statement pattern, shape).
+_LAKE_STATEMENTS = {
+    "RESTORE": (
+        rf"RESTORE\s+TABLE\s+({_IDENT})\s+TO\s+VERSION\s+AS\s+OF\s+(\d+|'(?:[^']|'')*')",
+        "RESTORE shape is: RESTORE TABLE <table> TO VERSION AS OF <n | 'ref'>",
+    ),
+    "DESCRIBE": (rf"DESCRIBE\s+HISTORY\s+({_IDENT})", "shape: DESCRIBE HISTORY <table>"),
+    "SHOW": (rf"SHOW\s+PARTITIONS\s+({_IDENT})", "shape: SHOW PARTITIONS <table>"),
+    "VACUUM": (
+        rf"VACUUM\s+({_IDENT})(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?",
+        "shape: VACUUM <table> [RETAIN n VERSIONS]",
+    ),
+    "OPTIMIZE": (
+        rf"OPTIMIZE\s+({_IDENT})(?:\s+ZORDER\s+BY\s+\(\s*({_IDENT}(?:\s*,\s*{_IDENT})*)\s*\))?",
+        "shape: OPTIMIZE <table> [ZORDER BY (c1, ...)]",
+    ),
+}
 
-class _Masked:
-    """Statement text with string literals stashed behind placeholders
-    so keyword regexes cannot be fooled by quoted content. Placeholders
-    are ``\x00<i>\x00`` — characters no SQL statement contains."""
+_SHAPES = {
+    "SELECT": "SELECT shape is: SELECT/WITH ... FROM <table> [[FOR] "
+    "VERSION AS OF <n | 'ref'>] ... — VERSION AS OF wants an integer "
+    "version or a quoted ref name",
+    "INSERT": "INSERT shape is: INSERT INTO <table> [(c1, ...)] "
+    "[REPLACE WHERE pred] <SELECT ... | VALUES ...>",
+    "UPDATE": "UPDATE shape is: UPDATE <table> SET c = expr [, ...] "
+    "[WHERE pred] — each SET assignment names one column",
+    "DELETE": "DELETE shape is: DELETE FROM <table> [WHERE pred]",
+    "MERGE": "MERGE shape is: MERGE INTO <table> [AS] t USING "
+    "<source | (subquery)> [AS] s ON t.<key> = s.<key> "
+    "WHEN MATCHED THEN UPDATE SET * "
+    "WHEN NOT MATCHED THEN INSERT *",
+    "ALTER": "ALTER shape is: ALTER TABLE <table> ADD CONSTRAINT <name> "
+    "CHECK (expr) | DROP CONSTRAINT <name>. Other ALTERs: schema "
+    "widening goes through append(merge_schema=True), partition "
+    "spec through repartition_table, renames through the Catalog",
+}
+_COVERS = (
+    "this surface covers SELECT/WITH (with VERSION AS OF), INSERT, "
+    "UPDATE, DELETE, MERGE, RESTORE TABLE, DESCRIBE HISTORY, VACUUM, "
+    "OPTIMIZE; DDL (CREATE/ALTER) goes through Engine.lake()/Catalog"
+)
 
-    def __init__(self, sql: str) -> None:
-        self.literals: list[str] = []
-
-        def _stash(mo: re.Match) -> str:
-            self.literals.append(mo.group(0))
-            return f"\x00{len(self.literals) - 1}\x00"
-
-        # '' escapes inside standard single-quoted literals; double
-        # quotes are identifiers in Spark SQL but stashing them too is
-        # strictly safer for keyword scans.
-        self.text = re.sub(r"'(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"", _stash, sql)
-
-    def restore(self, text: str) -> str:
-        return re.sub(
-            "\x00(\\d+)\x00", lambda mo: self.literals[int(mo.group(1))], text
-        )
-
-    def literal_at(self, token: str) -> str | None:
-        mo = re.fullmatch("\x00(\\d+)\x00", token)
-        return self.literals[int(mo.group(1))] if mo else None
-
-
-def _split_top(text: str, sep: str = ",") -> list[str]:
-    """Split on `sep` at paren depth 0 (literals already masked)."""
-    out, depth, cur = [], 0, []
-    for ch in text:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == sep and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
+# Spark's grammar takes MATCHED clauses before NOT MATCHED ones; the
+# accepted pair written the other way round is put back in that order.
+_INSERT_FIRST = re.compile(
+    r"(WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*)\s+"
+    r"(WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*)$",
+    re.I,
+)
 
 
-def _unquote(lit: str) -> str:
-    q = lit[0]
-    return lit[1:-1].replace(q + q, q)
+# -- Spark parse trees (py4j) -------------------------------------------
+def _seq(seq) -> list:
+    return [seq.apply(i) for i in range(seq.length())]
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _span(node) -> tuple[int, int]:
+    """(first, last) index of the statement text a node was read from."""
+    origin = node.origin()
+    return origin.startIndex().get(), origin.stopIndex().get()
+
+
+def _text(text: str, node) -> str:
+    """A node's statement text. TRUE and FALSE parse to shared literals
+    whose span is from whichever statement built them first, so they
+    are spelled from the node."""
+    if _kind(node) == "Literal" and node.dataType().typeName() == "boolean":
+        return node.toString()
+    start, stop = _span(node)
+    return text[start : stop + 1]
+
+
+def _query_text(text: str, plan) -> str:
+    """A parsed query's text. Its root may span only its last clause (a
+    Sort spans its ORDER BY), so take the extent of the whole tree."""
+    nodes, spans = [plan], []
+    while nodes:
+        node = nodes.pop()
+        if node.origin().startIndex().isDefined():
+            spans.append(_span(node))
+        nodes.extend(_seq(node.children()))
+    return text[min(a for a, _ in spans) : max(b for _, b in spans) + 1]
+
+
+def _name(rel) -> str:
+    return ".".join(_seq(rel.multipartIdentifier()))
+
+
+def _table_name(rel, shape: str) -> str:
+    """A DML target's name: a plain, unaliased table reference."""
+    if _kind(rel) not in ("UnresolvedRelation", "UnresolvedTable"):
+        raise ValueError(shape)
+    return _name(rel)
+
+
+def _unalias(plan):
+    """(the plan under an optional SubqueryAlias, its alias or None)."""
+    if _kind(plan) == "SubqueryAlias":
+        return plan.child(), plan.alias()
+    return plan, None
 
 
 class LakeSQL:
@@ -214,45 +264,44 @@ class LakeSQL:
         """Execute one statement. ``opts`` are write-path riders passed
         to the underlying verb (track_changes, deletion_vectors);
         read statements accept none."""
-        m = _Masked(statement.strip().rstrip(";"))
-        head = m.text.lstrip()
-        verb = head.split(None, 1)[0].upper() if head else ""
-        if verb in ("SELECT", "WITH"):
-            self._refuse_opts("SELECT", opts)
-            return self._select(m)
-        if verb == "INSERT":
-            return self._insert(m, opts)
-        if verb == "UPDATE":
-            return self._update(m, opts)
-        if verb == "DELETE":
-            return self._delete(m, opts)
+        text = statement.strip().rstrip(";").rstrip()
+        verb = text.split(None, 1)[0].upper() if text else ""
+        verb = "SELECT" if verb == "WITH" else verb
+        if verb in _LAKE_STATEMENTS:
+            self._refuse_opts(verb, opts)
+            pattern, shape = _LAKE_STATEMENTS[verb]
+            mo = re.fullmatch(pattern, text, re.I)
+            if not mo:
+                raise ValueError(shape)
+            return getattr(self, f"_{verb.lower()}")(*mo.groups())
         if verb == "MERGE":
-            return self._merge(m, opts)
-        if verb == "RESTORE":
-            self._refuse_opts("RESTORE", opts)
-            return self._restore(m)
+            text = _INSERT_FIRST.sub(r"\2 \1", text)
+        plan = self._parse(text, verb)
+        if verb == "SELECT":
+            self._refuse_opts("SELECT", opts)
+            return self._select(text, plan)
         if verb == "ALTER":
             self._refuse_opts("ALTER", opts)
-            return self._alter(m)
-        if verb == "DESCRIBE":
-            self._refuse_opts("DESCRIBE", opts)
-            return self._history(m)
-        if verb == "SHOW":
-            self._refuse_opts("SHOW", opts)
-            return self._show_partitions(m)
-        if verb == "VACUUM":
-            self._refuse_opts("VACUUM", opts)
-            return self._vacuum(m)
-        if verb == "OPTIMIZE":
-            self._refuse_opts("OPTIMIZE", opts)
-            return self._optimize(m)
-        raise ValueError(
-            f"unsupported statement {verb or statement!r}: this surface "
-            "covers SELECT/WITH (with VERSION AS OF), INSERT, UPDATE, "
-            "DELETE, MERGE, RESTORE TABLE, DESCRIBE HISTORY, VACUUM, "
-            "OPTIMIZE; DDL (CREATE/ALTER) goes through "
-            "Engine.lake()/Catalog"
-        )
+            return self._alter(plan)
+        dml = {
+            "InsertIntoStatement": self._insert,
+            "OverwriteByExpression": self._insert,
+            "UpdateTable": self._update,
+            "DeleteFromTable": self._delete,
+            "MergeIntoTable": self._merge,
+        }.get(_kind(plan))
+        if dml is None:
+            raise ValueError(f"unsupported statement {verb or statement!r}: {_COVERS}")
+        return dml(plan, text, opts)
+
+    def _parse(self, text: str, verb: str):
+        """Spark's logical plan for `text`; a statement Spark cannot
+        parse raises with the verb's shape and Spark's message."""
+        try:
+            return self.spark._jsparkSession.sessionState().sqlParser().parsePlan(text)
+        except ParseException as e:
+            shape = _SHAPES.get(verb) or f"unsupported statement {verb!r}: {_COVERS}"
+            raise ValueError(f"{shape}\n{e}") from None
 
     @staticmethod
     def _refuse_opts(verb: str, opts: dict) -> None:
@@ -271,228 +320,148 @@ class LakeSQL:
         )
 
     # -- SELECT with time travel --------------------------------------
-    def _resolve_version_token(self, path: str, token: str, m: _Masked) -> int:
-        lit = m.literal_at(token)
-        if lit is not None:
-            return lh.resolve_ref(path, _unquote(lit))
-        if token.isdigit():
-            return int(token)
-        raise ValueError(
-            f"VERSION AS OF wants an integer version or a quoted ref "
-            f"name, got {m.restore(token)!r}"
-        )
+    @staticmethod
+    def _version(path: str, token: str) -> int:
+        """Spark reads both VERSION AS OF 3 and '3' as "3", and ref
+        names start with a letter, so all-digit text is a version."""
+        return int(token) if token.isdigit() else lh.resolve_ref(path, token)
 
-    def _select(self, m: _Masked) -> DataFrame:
-        if re.search(r"\bTIMESTAMP\s+AS\s+OF\b", m.text, re.I):
-            raise ValueError(
-                "TIMESTAMP AS OF is unsupported: snapshot manifests record "
-                "no wall-clock; time-travel keys are versions and named "
-                "refs (VERSION AS OF <n | 'ref'>)"
-            )
-        text = m.text
-        views: dict[tuple[str, int | None], str] = {}
+    def _select(self, text: str, plan=None) -> DataFrame:
+        """Run a query with each lake name it reads spliced out for a
+        snapshot temp view. The relations come from Spark's parse:
+        children, CTE definitions and subquery plans alike."""
+        if plan is None:
+            plan = self._parse(text, "SELECT")
+        refs, shadowed = [], set()
 
-        # SQL scoping: a CTE (or named window) that shadows a lake-table
-        # name wins — those names must NOT be rewritten. `x AS (` at any
-        # depth is a definition, never a table reference (r10 review:
-        # without this, WITH t AS (...) SELECT FROM t silently read the
-        # lake table instead of the CTE).
-        shadowed = {
-            mo.group(1) for mo in re.finditer(r"\b(\w+)\s+AS\s*\(", text, re.I)
-        }
+        def walk(node, alias):  # alias: the parent SubqueryAlias's, if any
+            kind = _kind(node)
+            if kind == "UnresolvedWith":
+                # SQL scoping: a CTE that shadows a lake-table name wins
+                shadowed.update(cte.alias() for cte in _seq(node.innerChildren()))
+            if kind in ("UnresolvedRelation", "RelationTimeTravel", "UnresolvedTableValuedFunction"):
+                refs.append((node, kind, alias))
+            alias = node.alias() if kind == "SubqueryAlias" else None
+            # inner children: CTE definitions and subquery plans
+            for child in _seq(node.children()) + _seq(node.innerChildren()):
+                walk(child, alias)
 
-        # 0) change-feed table function: FROM/JOIN CHANGES(name, v)
-        cf = re.compile(
-            rf"\b(FROM|JOIN)\s+CHANGES\s*\(\s*({_IDENT})\s*,\s*"
-            rf"(\d+|\x00\d+\x00)\s*\)",
-            re.I,
-        )
-
-        def _sub_cf(mo: re.Match) -> str:
-            kw, name, tok = mo.group(1), mo.group(2), mo.group(3)
-            path = self._path(name)
-            v = self._resolve_version_token(path, tok, m)
-            key = (f"changes:{name}", v)
-            if key not in views:
-                view = f"_lake_changes_{name}_{v}_{uuid.uuid4().hex[:8]}"
-                lh.read_changes(self.spark, path, v).createOrReplaceTempView(view)
-                views[key] = view
-            return f"{kw} {views[key]} "
-
-        text = cf.sub(_sub_cf, text)
-
-        # 1) explicit time travel: FROM/JOIN name [FOR] VERSION AS OF x
-        # (optional trailing alias preserved; alias-less references
-        # keep qualifying columns by the original name via AS <name>)
-        tt = re.compile(
-            rf"\b(FROM|JOIN)\s+({_IDENT})\s+(?:FOR\s+)?VERSION\s+AS\s+OF\s+"
-            rf"(\x00\d+\x00|[\w.]+)(\s+AS\s+\w+|\s+\w+)?",
-            re.I,
-        )
-
-        def _sub_tt(mo: re.Match) -> str:
-            kw, name, tok, tail = mo.group(1), mo.group(2), mo.group(3), mo.group(4) or ""
-            if name in shadowed:
-                raise ValueError(
-                    f"VERSION AS OF on {name!r}, which a CTE in this "
-                    "statement shadows — time travel applies to lake "
-                    "tables, not CTEs; rename one of them"
+        walk(plan, None)
+        known = self._known()
+        views: dict[tuple, str] = {}
+        edits = []
+        try:
+            for node, kind, alias in refs:
+                if kind == "UnresolvedTableValuedFunction":
+                    if [p.lower() for p in _seq(node.name())] != ["changes"]:
+                        continue
+                    args = _seq(node.functionArgs())
+                    if [_kind(a) for a in args] != ["UnresolvedAttribute", "Literal"]:
+                        raise ValueError("CHANGES shape is: CHANGES(<table>, <n | 'ref'>)")
+                    name = ".".join(_seq(args[0].nameParts()))
+                    path = self._path(name)
+                    v = self._version(path, args[1].toString())
+                    view = self._view(
+                        views, ("changes", name, v), lambda: lh.read_changes(self.spark, path, v)
+                    )
+                    # the call's span takes in its alias
+                    edits.append((*_span(node), f"{view} {alias or ''}"))
+                    continue
+                if kind == "RelationTimeTravel":
+                    if node.timestamp().isDefined():
+                        raise ValueError(
+                            "TIMESTAMP AS OF is unsupported: snapshot manifests record "
+                            "no wall-clock; time-travel keys are versions and named "
+                            "refs (VERSION AS OF <n | 'ref'>)"
+                        )
+                    rel = node.relation()
+                    name = _name(rel)
+                    if name in shadowed:
+                        raise ValueError(
+                            f"VERSION AS OF on {name!r}, which a CTE in this "
+                            "statement shadows — time travel applies to lake "
+                            "tables, not CTEs; rename one of them"
+                        )
+                    path = self._path(name)  # time travel on a non-lake name is an error
+                    version = self._version(path, node.version().get())
+                    start = _span(rel)[0]
+                else:
+                    name = _name(node)
+                    if name in shadowed or name not in known:
+                        continue
+                    # catalog names read at their PINNED version (the
+                    # catalog's all-or-nothing snapshot contract);
+                    # register()'d paths read head
+                    path, version, _ = self._resolve(name)
+                    start = _span(node)[0]
+                view = self._view(
+                    views, (name, "head" if version is None else version),
+                    lambda: lh.read(self.spark, path, version),
                 )
-            path = self._path(name)  # time travel on a non-lake name is an error
-            v = self._resolve_version_token(path, tok, m)
-            view = self._snapshot_view(name, path, v, views)
-            follower = tail.strip().split()[0].lower() if tail.strip() else ""
-            if follower == "as" or (follower and follower not in _KEYWORDS):
-                return f"{kw} {view}{tail}"  # user alias present
-            return f"{kw} {view} AS {name}{tail}"
+                # alias-less references keep qualifying columns by the
+                # original name; a user alias stays where it is
+                edits.append((start, _span(node)[1], view if alias else f"{view} AS {name}"))
+            for start, stop, new in sorted(edits, reverse=True):
+                text = text[:start] + new + text[stop + 1 :]
+            return self.spark.sql(text)
+        finally:
+            # Analysis is complete (spark.sql resolves eagerly): drop the
+            # snapshot views now so repeated statements in a long-lived
+            # session don't grow the session catalog without bound, and a
+            # later statement can never be served a stale head view.
+            for view in views.values():
+                self.spark.catalog.dropTempView(view)
 
-        text = tt.sub(_sub_tt, text)
-
-        # 2) bare lake names: rewrite only names this registry claims
-        # (and the statement doesn't shadow); catalog-resolved names
-        # read at their PINNED version — the catalog's all-or-nothing
-        # snapshot contract — while register()'d paths read head.
-        # Alias-less references keep qualifying columns by the original
-        # name (AS <name>); existing aliases are preserved.
-        bare = re.compile(rf"\b(FROM|JOIN)\s+({_IDENT})(\s+AS\s+{_IDENT}|\s+\w+)?", re.I)
-
-        def _sub_bare(mo: re.Match) -> str:
-            kw, name, tail = mo.group(1), mo.group(2), mo.group(3) or ""
-            if (
-                name in shadowed
-                or name.startswith("_lake_")
-                or name not in self._known()
-            ):
-                return mo.group(0)
-            path, pin, _ = self._resolve(name)
-            view = self._snapshot_view(name, path, pin, views)
-            follower = tail.strip().split()[0].lower() if tail.strip() else ""
-            if follower and follower not in _KEYWORDS:
-                return f"{kw} {view}{tail}"  # user alias present
-            return f"{kw} {view} AS {name}{tail}"
-
-        text = bare.sub(_sub_bare, text)
-        df = self.spark.sql(m.restore(text))
-        # Analysis is complete (spark.sql resolves eagerly): drop the
-        # snapshot views now so repeated statements in a long-lived
-        # session don't grow the session catalog without bound, and a
-        # later statement can never be served a stale head view.
-        for view in views.values():
-            self.spark.catalog.dropTempView(view)
-        return df
-
-    def _snapshot_view(
-        self, name: str, path: str, version: int | None, views: dict
-    ) -> str:
-        key = (name, version)
+    @staticmethod
+    def _view(views: dict, key: tuple, read) -> str:
+        """The temp view over `read()` for one (table, version) or
+        change-feed read, made once per statement."""
         if key not in views:
-            view = f"_lake_{name}_{version if version is not None else 'head'}_{uuid.uuid4().hex[:8]}"
-            lh.read(self.spark, path, version).createOrReplaceTempView(view)
-            views[key] = view
+            views[key] = f"_lake_{'_'.join(map(str, key))}_{uuid.uuid4().hex[:8]}"
+            read().createOrReplaceTempView(views[key])
         return views[key]
 
     # -- INSERT --------------------------------------------------------
-    @staticmethod
-    def _find_query_start(text: str) -> int:
-        """Offset of the first top-level SELECT/WITH/VALUES keyword
-        (paren-depth 0; literals are masked) — the boundary between a
-        REPLACE WHERE predicate and the source query."""
-        depth = 0
-        for mo in re.finditer(r"[()]|\b(?:SELECT|WITH|VALUES)\b", text, re.I):
-            tok = mo.group(0)
-            if tok == "(":
-                depth += 1
-            elif tok == ")":
-                depth -= 1
-            elif depth == 0:
-                return mo.start()
-        return -1
-
-    def _table_columns(self, path: str) -> list[str]:
-        schema = lh._manifest_schema(lh.read_manifest(path))
-        if schema is not None:
-            return list(schema.fieldNames())
-        return list(lh.read(self.spark, path).columns)
-
-    def _insert(self, m: _Masked, opts: dict) -> DataFrame:
-        shape_err = ValueError(
-            "INSERT shape is: INSERT INTO <table> [(c1, ...)] "
-            "[REPLACE WHERE pred] <SELECT ... | VALUES ...>"
-        )
-        pre = re.match(rf"\s*INSERT\s+INTO\s+({_IDENT})\s*", m.text, re.I)
-        if not pre:
-            raise shape_err
-        name = pre.group(1)
+    def _insert(self, plan, text: str, opts: dict) -> DataFrame:
+        name = _table_name(plan.table(), _SHAPES["INSERT"])
         path = self._path(name)
-        rest = m.text[pre.end() :].lstrip()
-
-        cols: list[str] | None = None
-        if rest.startswith("(") and not re.match(
-            r"\(\s*(?:SELECT|WITH|VALUES)\b", rest, re.I
+        pred = cols = None
+        if _kind(plan) == "OverwriteByExpression":  # INSERT ... REPLACE WHERE
+            pred = _text(text, plan.deleteExpr())
+        elif (
+            plan.overwrite()
+            or plan.byName()
+            or plan.ifPartitionNotExists()
+            or not plan.partitionSpec().isEmpty()
         ):
-            end = self._scan_balanced(rest, 0)
-            cols = [c.strip() for c in _split_top(rest[1:end - 1])]
-            if not all(re.fullmatch(r"\w+", c) for c in cols):
-                raise ValueError(f"bad INSERT column list: {m.restore(rest[:end])}")
-            rest = rest[end:].lstrip()
-
-        pred: str | None = None
-        rw = re.match(r"REPLACE\s+WHERE\s+", rest, re.I)
-        if rw:
-            body = rest[rw.end() :]
-            qs = self._find_query_start(body)
-            if qs <= 0:
-                raise shape_err
-            pred = m.restore(body[:qs]).strip()
-            rest = body[qs:]
-        # unwrap a parenthesized source ONLY when the parens span the
-        # whole remainder — `(SELECT ...) UNION ALL (SELECT ...)` must
-        # stay intact (r10 review: unconditional unwrapping silently
-        # dropped everything after the first balanced close-paren)
-        while rest.startswith("(") and self._scan_balanced(rest, 0) == len(
-            rest.rstrip()
-        ):
-            rest = rest[1 : self._scan_balanced(rest, 0) - 1].strip()
-        if not re.match(r"(?:SELECT|WITH|VALUES|\()", rest, re.I):
-            raise shape_err
-        if re.match(r"VALUES\b", rest, re.I):
-            df = self.spark.sql(m.restore(rest))
+            raise ValueError(_SHAPES["INSERT"])
         else:
-            df = self._select(_Masked(m.restore(rest)))
+            cols = _seq(plan.userSpecifiedCols()) or None
+        df = self._select(_query_text(text, plan.query()))
 
         # strict column alignment: an INSERT must cover the WHOLE table
         # schema (a partial-column INSERT would silently null-fill —
         # refuse and say so); explicit lists map by name, bare
         # SELECT/VALUES map positionally.
-        tcols = self._table_columns(path)
-        if cols is not None:
-            if sorted(cols) != sorted(tcols):
-                raise ValueError(
-                    f"INSERT column list must cover the full table schema "
-                    f"{tcols} (partial-column INSERT would null-fill "
-                    f"unlisted columns); got {cols}"
-                )
-            if len(df.columns) != len(cols):
-                raise ValueError(
-                    f"INSERT source has {len(df.columns)} columns, "
-                    f"column list names {len(cols)}"
-                )
-            df = df.toDF(*cols).select(*tcols)
-        else:
-            if len(df.columns) != len(tcols):
-                raise ValueError(
-                    f"INSERT source has {len(df.columns)} columns, "
-                    f"table {name!r} has {len(tcols)} ({tcols})"
-                )
-            df = df.toDF(*tcols)
+        schema = lh._manifest_schema(lh.read_manifest(path))
+        tcols = schema.fieldNames() if schema is not None else lh.read(self.spark, path).columns
+        if sorted(cols or tcols) != sorted(tcols):
+            raise ValueError(
+                f"INSERT column list must cover the full table schema "
+                f"{tcols} (partial-column INSERT would null-fill "
+                f"unlisted columns); got {cols}"
+            )
+        if len(df.columns) != len(tcols):
+            raise ValueError(
+                f"INSERT source has {len(df.columns)} columns, "
+                f"table {name!r} has {len(tcols)} ({cols or tcols})"
+            )
+        df = df.toDF(*(cols or tcols)).select(*tcols)
         # standard SQL INSERT semantics: source values cast to the
         # table's column types (a VALUES literal like 1.5 parses as
         # DECIMAL(2,1); without the cast, append's strict schema check
         # would refuse what every SQL engine accepts)
-        schema = lh._manifest_schema(lh.read_manifest(path))
         if schema is not None:
-            from pyspark.sql import functions as F
-
             df = df.select(
                 *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
             )
@@ -504,139 +473,75 @@ class LakeSQL:
         return self._dml_result("INSERT", name, v)
 
     # -- UPDATE --------------------------------------------------------
-    def _update(self, m: _Masked, opts: dict) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*UPDATE\s+({_IDENT})\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?\s*",
-            m.text,
-            re.I | re.S,
-        )
-        if not mo:
-            raise ValueError(
-                "UPDATE shape is: UPDATE <table> SET c = expr [, ...] "
-                "[WHERE pred]"
-            )
-        name, set_text, pred = mo.group(1), mo.group(2), mo.group(3)
+    def _update(self, plan, text: str, opts: dict) -> DataFrame:
+        name = _table_name(plan.table(), _SHAPES["UPDATE"])
         path = self._path(name)
         set_exprs: dict[str, str] = {}
-        for part in _split_top(set_text):
-            amo = re.fullmatch(rf"\s*({_IDENT})\s*=\s*(.+?)\s*", part, re.S)
-            if not amo:
-                raise ValueError(f"bad SET assignment: {m.restore(part).strip()!r}")
-            col = amo.group(1)
+        for a in _seq(plan.assignments()):
+            # the key's span covers the whole SET list: use its name parts
+            parts = _seq(a.key().nameParts())
+            if len(parts) != 1:
+                raise ValueError(
+                    f"bad SET assignment target {'.'.join(parts)!r}: "
+                    f"name one column of {name!r}"
+                )
+            col = parts[0]
             if col in set_exprs:
                 raise ValueError(f"column {col!r} assigned twice in SET")
-            set_exprs[col] = m.restore(amo.group(2))
-        predicate = m.restore(pred).strip() if pred else "true"
+            set_exprs[col] = _text(text, a.value())
+        cond = plan.condition()
+        predicate = _text(text, cond.get()) if cond.isDefined() else "true"
         v = lh.update_where(
             self.spark, path, predicate, set_exprs, prune="auto", **opts
         )
         return self._dml_result("UPDATE", name, v)
 
     # -- DELETE --------------------------------------------------------
-    def _delete(self, m: _Masked, opts: dict) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*DELETE\s+FROM\s+({_IDENT})(?:\s+WHERE\s+(.*))?\s*",
-            m.text,
-            re.I | re.S,
-        )
-        if not mo:
-            raise ValueError("DELETE shape is: DELETE FROM <table> [WHERE pred]")
-        name, pred = mo.group(1), mo.group(2)
+    def _delete(self, plan, text: str, opts: dict) -> DataFrame:
+        name = _table_name(plan.table(), _SHAPES["DELETE"])
         path = self._path(name)
-        predicate = m.restore(pred).strip() if pred else "true"
+        predicate = _text(text, plan.condition())  # no WHERE parses as TRUE
         v = lh.delete_where(self.spark, path, predicate, prune="auto", **opts)
         return self._dml_result("DELETE", name, v)
 
     # -- MERGE ---------------------------------------------------------
-    @staticmethod
-    def _scan_balanced(text: str, start: int) -> int:
-        """Index one past the ')' matching the '(' at `start` (literals
-        are masked, so parens in strings cannot miscount)."""
-        depth = 0
-        for i in range(start, len(text)):
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    return i + 1
-        raise ValueError("unbalanced parentheses in MERGE source subquery")
-
-    def _merge(self, m: _Masked, opts: dict) -> DataFrame:
-        shape_err = ValueError(
-            "MERGE shape is: MERGE INTO <table> [AS] t USING "
-            "<source | (subquery)> [AS] s ON t.<key> = s.<key> "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-        pre = re.match(
-            rf"\s*MERGE\s+INTO\s+({_IDENT})(?:\s+AS)?(?:\s+(\w+))?\s+USING\s*",
-            m.text,
-            re.I,
-        )
-        if not pre:
-            raise shape_err
-        name, t_alias = pre.group(1), pre.group(2)
-        rest_at = pre.end()
-        if m.text[rest_at : rest_at + 1] == "(":
-            end = self._scan_balanced(m.text, rest_at)
-            src = m.text[rest_at:end]
-        else:
-            smo = re.match(_IDENT, m.text[rest_at:])
-            if not smo:
-                raise shape_err
-            src = smo.group(0)
-            end = rest_at + smo.end()
-        mo = re.fullmatch(
-            r"\s*(?:AS\s+)?(\w+)?\s*ON\s+(.*?)\s+(WHEN\s+.*)",
-            m.text[end:],
-            re.I | re.S,
-        )
-        if not mo:
-            raise shape_err
-        s_alias, on, whens = mo.groups()
-        if s_alias and s_alias.upper() == "ON":
-            s_alias = None
+    def _merge(self, plan, text: str, opts: dict) -> DataFrame:
+        target, t_alias = _unalias(plan.targetTable())
+        name = _table_name(target, _SHAPES["MERGE"])
         path = self._path(name)
 
         # -- WHEN clauses: exactly the keyed-upsert pair ----------------
-        clauses = [
-            c.strip()
-            for c in re.split(r"(?=\bWHEN\b)", whens, flags=re.I)
-            if c.strip()
-        ]
-        want = {"matched": False, "not_matched": False}
-        for c in clauses:
-            if re.fullmatch(
-                r"WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*", c, re.I
-            ):
-                want["matched"] = True
-            elif re.fullmatch(
-                r"WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*", c, re.I
-            ):
-                want["not_matched"] = True
-            elif re.match(r"WHEN\s+(NOT\s+)?MATCHED\s+AND\b", c, re.I):
+        actions = (
+            _seq(plan.matchedActions())
+            + _seq(plan.notMatchedActions())
+            + _seq(plan.notMatchedBySourceActions())
+        )
+        kinds = set()
+        for action in actions:
+            kind = _kind(action)
+            if action.condition().isDefined():
                 raise ValueError(
                     "conditional WHEN ... AND clauses are unsupported: "
                     "merge_upsert is whole-row keyed upsert; for "
                     "predicate-gated mutation use UPDATE ... WHERE / "
                     "DELETE ... WHERE (update_where / delete_where)"
                 )
-            elif re.search(r"\bDELETE\b", c, re.I):
+            if kind == "DeleteAction":
                 raise ValueError(
                     "WHEN MATCHED THEN DELETE is unsupported here: "
                     "express deletes as DELETE FROM ... WHERE key IN "
                     "(...) (delete_where), which prunes and DV-deletes"
                 )
-            else:
+            if kind not in ("UpdateStarAction", "InsertStarAction"):
                 raise ValueError(
-                    f"unsupported MERGE clause {m.restore(c)!r}: only "
+                    f"unsupported MERGE clause ({kind}): only "
                     "WHEN MATCHED THEN UPDATE SET * and WHEN NOT "
                     "MATCHED THEN INSERT * (column-subset SET/INSERT "
                     "lists would silently null unlisted columns — "
                     "project the source instead)"
                 )
-        if not (want["matched"] and want["not_matched"]):
+            kinds.add(kind)
+        if len(kinds) < 2:
             raise ValueError(
                 "MERGE needs BOTH clauses (WHEN MATCHED THEN UPDATE SET "
                 "* / WHEN NOT MATCHED THEN INSERT *): merge_upsert is "
@@ -645,97 +550,64 @@ class LakeSQL:
 
         # -- ON condition: target.key = source.key ----------------------
         key = lh.read_manifest(path)["key"]
-        t_names = {a for a in (t_alias, name) if a}
-        s_names = {a for a in (s_alias,) if a}
-        if re.fullmatch(rf"\s*{_IDENT}\s*", src):
-            s_names.add(src.strip())
-        omo = re.fullmatch(
-            r"\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*", on, re.S
-        )
-        sides = None
-        if omo:
-            l_tab, l_col, r_tab, r_col = omo.groups()
-            if l_tab in t_names and r_tab not in t_names:
-                sides = (l_col, r_col)
-            elif r_tab in t_names and l_tab not in t_names:
-                sides = (r_col, l_col)
-        if sides is None or sides[0] != key or sides[1] != key:
+        t_names = {name, t_alias} - {None}
+        on = plan.mergeCondition()
+        refs = [
+            _seq(c.nameParts()) if _kind(c) == "UnresolvedAttribute" else []
+            for c in _seq(on.children())
+        ]
+        # <qualifier>.key on both sides, exactly one qualified by the target
+        if not (
+            _kind(on) == "EqualTo"
+            and all(len(r) == 2 and r[1] == key for r in refs)
+            and sum(r[0] in t_names for r in refs) == 1
+        ):
             raise ValueError(
                 f"MERGE ON must be the key equality "
                 f"<target>.{key} = <source>.{key} (table key per its "
-                f"manifest); got {m.restore(on).strip()!r}. Non-key or "
+                f"manifest); got {_text(text, on)!r}. Non-key or "
                 "multi-column merge conditions are unsupported — "
                 "merge_upsert replaces whole rows by table key"
             )
 
         # -- source -----------------------------------------------------
-        if src.startswith("("):
-            updates = self._select(_Masked(m.restore(src[1:-1])))
-        elif src in self._known():
-            updates = lh.read(self.spark, self._path(src))
+        source, _ = _unalias(plan.sourceTable())
+        if _kind(source) != "UnresolvedRelation":
+            updates = self._select(_query_text(text, source))
+        elif _name(source) in self._known():
+            updates = lh.read(self.spark, self._path(_name(source)))
         else:
-            updates = self.spark.table(src)
+            updates = self.spark.table(_name(source))
         v = lh.merge_upsert(self.spark, path, updates, **opts)
         return self._dml_result("MERGE", name, v)
 
-    # -- RESTORE -------------------------------------------------------
-    def _restore(self, m: _Masked) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*RESTORE\s+TABLE\s+({_IDENT})\s+TO\s+VERSION\s+AS\s+OF\s+"
-            rf"(\x00\d+\x00|[\w.]+)\s*",
-            m.text,
-            re.I,
-        )
-        if not mo:
-            raise ValueError(
-                "RESTORE shape is: RESTORE TABLE <table> TO VERSION AS OF "
-                "<n | 'ref'>"
+    # -- ALTER TABLE ... CONSTRAINT ------------------------------------
+    def _alter(self, plan) -> DataFrame:
+        kind = _kind(plan)
+        if kind == "AddCheckConstraint":
+            # the table is the leaf under the Filter Spark wraps it in
+            name = _table_name(_seq(plan.collectLeaves())[0], _SHAPES["ALTER"])
+            check = plan.checkConstraint()
+            v = lh.add_constraint(
+                self.spark, self._path(name), check.name(), check.condition()
             )
-        name, tok = mo.group(1), mo.group(2)
+        elif kind == "DropConstraint" and not (plan.ifExists() or plan.cascade()):
+            name = _table_name(plan.table(), _SHAPES["ALTER"])
+            v = lh.drop_constraint(self._path(name), plan.name())
+        else:
+            raise ValueError(_SHAPES["ALTER"])
+        return self._dml_result("ALTER", name, v)
+
+    # -- lake statements (matched whole, see _LAKE_STATEMENTS) ----------
+    def _restore(self, name: str, token: str) -> DataFrame:
         path = self._path(name)
-        v = lh.restore(
-            self.spark, path, self._resolve_version_token(path, tok, m)
-        )
+        if token.startswith("'"):
+            token = token[1:-1].replace("''", "'")
+        v = lh.restore(self.spark, path, self._version(path, token))
         return self._dml_result("RESTORE", name, v)
 
-    # -- ALTER TABLE ... CONSTRAINT ------------------------------------
-    def _alter(self, m: _Masked) -> DataFrame:
-        add = re.fullmatch(
-            rf"\s*ALTER\s+TABLE\s+({_IDENT})\s+ADD\s+CONSTRAINT\s+(\w+)\s+"
-            rf"CHECK\s*(\(.*\))\s*",
-            m.text,
-            re.I | re.S,
-        )
-        if add:
-            name, cname, expr = add.groups()
-            v = lh.add_constraint(
-                self.spark, self._path(name), cname, m.restore(expr)
-            )
-            return self._dml_result("ALTER", name, v)
-        drop = re.fullmatch(
-            rf"\s*ALTER\s+TABLE\s+({_IDENT})\s+DROP\s+CONSTRAINT\s+(\w+)\s*",
-            m.text,
-            re.I,
-        )
-        if drop:
-            name, cname = drop.groups()
-            v = lh.drop_constraint(self._path(name), cname)
-            return self._dml_result("ALTER", name, v)
-        raise ValueError(
-            "ALTER shape is: ALTER TABLE <table> ADD CONSTRAINT <name> "
-            "CHECK (expr) | DROP CONSTRAINT <name>. Other ALTERs: schema "
-            "widening goes through append(merge_schema=True), partition "
-            "spec through repartition_table, renames through the Catalog"
-        )
-
-    # -- utilities -----------------------------------------------------
-    def _show_partitions(self, m: _Masked) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*SHOW\s+PARTITIONS\s+({_IDENT})\s*", m.text, re.I
-        )
-        if not mo:
-            raise ValueError("shape: SHOW PARTITIONS <table>")
-        path = self._path(mo.group(1))
+    def _show(self, name: str) -> DataFrame:
+        path = self._path(name)
         parts = lh.partitions(path)
         # column names from the manifest's spec, not parts[0] — an
         # empty partitioned table (all rows deleted) lists no
@@ -749,13 +621,7 @@ class LakeSQL:
             ", ".join(f"`{c}` string" for c in cols) + ", files long, rows long",
         )
 
-    def _history(self, m: _Masked) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*DESCRIBE\s+HISTORY\s+({_IDENT})\s*", m.text, re.I
-        )
-        if not mo:
-            raise ValueError("shape: DESCRIBE HISTORY <table>")
-        name = mo.group(1)
+    def _describe(self, name: str) -> DataFrame:
         rows = [
             (
                 h["version"],
@@ -773,15 +639,8 @@ class LakeSQL:
             "files_removed long, net_rows long",
         )
 
-    def _vacuum(self, m: _Masked) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*VACUUM\s+({_IDENT})(?:\s+RETAIN\s+(\d+)\s+VERSIONS)?\s*",
-            m.text,
-            re.I,
-        )
-        if not mo:
-            raise ValueError("shape: VACUUM <table> [RETAIN n VERSIONS]")
-        name, keep = mo.group(1), int(mo.group(2) or 1)
+    def _vacuum(self, name: str, keep: str | None) -> DataFrame:
+        keep = int(keep or 1)
         if keep < 1:
             raise ValueError(
                 "VACUUM ... RETAIN 0 VERSIONS would delete the current "
@@ -793,16 +652,7 @@ class LakeSQL:
             [(name, len(deleted))], "table string, files_deleted long"
         )
 
-    def _optimize(self, m: _Masked) -> DataFrame:
-        mo = re.fullmatch(
-            rf"\s*OPTIMIZE\s+({_IDENT})"
-            rf"(?:\s+ZORDER\s+BY\s+\(\s*({_IDENT}(?:\s*,\s*{_IDENT})*)\s*\))?\s*",
-            m.text,
-            re.I,
-        )
-        if not mo:
-            raise ValueError("shape: OPTIMIZE <table> [ZORDER BY (c1, ...)]")
-        name, cols = mo.group(1), mo.group(2)
+    def _optimize(self, name: str, cols: str | None) -> DataFrame:
         path = self._path(name)
         if cols:
             v = lh.zorder_cluster(

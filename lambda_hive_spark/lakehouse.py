@@ -86,6 +86,7 @@ import uuid
 from typing import Callable, NamedTuple
 from urllib.parse import unquote, urlparse
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -1107,80 +1108,58 @@ def scan(
     return df
 
 
-_NUM_RE = r"-?\d+(?:\.\d+)?"
-_STR_RE = r"'(?:[^']|'')*'"
-_LIT_RE = f"(?:{_NUM_RE}|{_STR_RE})"
-_ID_RE = r"[A-Za-z_][A-Za-z0-9_]*"
+# Spark's comparison classes: whether each bounds a column on its left
+# from below and from above (a literal on the left swaps the two).
+_BOUNDS = {
+    "EqualTo": (True, True),
+    "LessThan": (False, True),
+    "LessThanOrEqual": (False, True),
+    "GreaterThan": (True, False),
+    "GreaterThanOrEqual": (True, False),
+}
 
 
-def _parse_lit(s: str):
-    s = s.strip()
-    if s.startswith("'"):
-        return s[1:-1].replace("''", "'")
-    return float(s) if ("." in s or "e" in s or "E" in s) else int(s)
+def _parse_tree(predicate: str) -> dict | None:
+    """Spark's own parse of `predicate` as nested dicts (`kind`,
+    `children`), or None if Spark cannot parse it. toJSON() is a flat
+    pre-order list; each node's `num-children` rebuilds the tree. The
+    parser comes from SparkSession.active(): the DAG runner calls the
+    lake verbs on worker threads, where getActiveSession() is None."""
+    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
+    try:
+        flat = iter(json.loads(parser.parseExpression(predicate).toJSON()))
+    except ParseException:
+        return None  # the caller's own filter raises Spark's error
+
+    def build() -> dict:
+        node = next(flat)
+        node["kind"] = node["class"].rsplit(".", 1)[1]
+        node["children"] = [build() for _ in range(node["num-children"])]
+        return node
+
+    return build()
 
 
-def _split_top(s: str, word: str) -> list[str]:
-    """Split on the keyword `word` (AND / OR, any case) at paren depth
-    0, outside string literals, where it stands as a whole word:
-    letters, digits and `_` on either side make it part of an
-    identifier (`x_and`, `nd_and`, `order_id`). BETWEEN clauses are
-    placeholder-substituted before this runs, so their internal AND
-    never reaches here."""
-    parts, depth, in_str, start, i, n = [], 0, False, 0, 0, len(word)
-
-    def _ident(j: int) -> bool:
-        return 0 <= j < len(s) and (s[j].isalnum() or s[j] == "_")
-
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == "'":
-                in_str = s[i + 1 : i + 2] == "'"  # '' stays inside
-                i += 2 if in_str else 1
-                continue
-        elif c == "'":
-            in_str = True
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif (
-            depth == 0
-            and s[i : i + n].upper() == word
-            and not _ident(i - 1)
-            and not _ident(i + n)
-        ):
-            parts.append(s[start:i])
-            start = i = i + n
-            continue
-        i += 1
-    parts.append(s[start:])
-    return [p.strip() for p in parts if p.strip()]
+def _column(node: dict) -> str | None:
+    """The name of a single-part column reference, else None."""
+    if node["kind"] != "UnresolvedAttribute":
+        return None
+    name = node["nameParts"][1:-1]  # "[id]"; "[t, id]" is qualified
+    return None if ", " in name else name
 
 
-def _has_top_level_or(s: str) -> bool:
-    """True if an OR occurs at paren depth 0 outside string literals.
-    SQL's AND binds tighter than OR, so `a AND b OR c` is `(a AND b)
-    OR c` — splitting such an expression on AND would emit bounds the
-    predicate does NOT imply (unsound pruning). Any top-level OR
-    therefore voids the whole expression's contribution."""
-    return len(_split_top(s, "OR")) > 1
-
-
-def _strip_outer_parens(s: str) -> str:
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, c in enumerate(s):
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0 and i < len(s) - 1:
-                    return s  # the first paren closes early: not outer
-        s = s[1:-1].strip()
-    return s
+def _literal(node: dict):
+    """A literal's value as compile_prune_box takes it, else None."""
+    value, dtype = node.get("value"), node.get("dataType", "")
+    if node["kind"] != "Literal" or value is None:
+        return None
+    if dtype == "string":
+        return value
+    if dtype in ("byte", "short", "integer", "long") or dtype.startswith("decimal"):
+        return int(value) if value.lstrip("-").isdigit() else float(value)
+    if dtype in ("float", "double"):
+        return float(value)
+    return None
 
 
 def compile_prune_box(predicate: str) -> dict:
@@ -1190,31 +1169,22 @@ def compile_prune_box(predicate: str) -> dict:
     whole predicate implies are emitted, so a pruned file provably
     contains no qualifying row.
 
-    Handled (conjunctive, literal-vs-column): ``=  <  <=  >  >=``
-    (either operand order), ``BETWEEN``, ``IN (literals)`` (min/max
-    envelope), nested parenthesized conjunctions. Everything else —
-    OR branches, NOT, IS NULL, function calls, column-to-column —
-    contributes NOTHING (conservative: fewer files skipped, never a
-    lost row). A contradictory conjunction (x > 5 AND x < 3) yields
-    an empty-range box that prunes every file — correct, since the
-    predicate selects no rows. At 100 TB this is the difference
-    between "delete one day" rewriting a partition and rewriting the
-    table, without the caller hand-deriving bounds."""
-    import re
-
-    # 1. lift BETWEEN clauses out so their AND survives the split
-    betweens: list[tuple[str, str, str]] = []
-
-    def _stash(mo):
-        betweens.append((mo.group(1), mo.group(2), mo.group(3)))
-        return f" __BETWEEN_{len(betweens) - 1}__ "
-
-    s = re.sub(
-        rf"(?i)\b({_ID_RE})\s+BETWEEN\s+({_LIT_RE})\s+AND\s+({_LIT_RE})",
-        _stash,
-        predicate,
-    )
-
+    The predicate is read by Spark's own parser (one grammar: what the
+    residual filter runs is what was pruned on), and the walk descends
+    only through AND. Handled: ``=  <  <=  >  >=`` (either operand
+    order), ``BETWEEN``, ``IN (literals)`` (min/max envelope), each on
+    a single-part column against literals. Literal types: integral and
+    DECIMAL literals give int when Spark's value text is all digits,
+    else float; DOUBLE/FLOAT give float; strings give str. Everything
+    else — OR, NOT, IS NULL, NULL, function calls, qualified names,
+    column-to-column, and DATE/TIMESTAMP literals (typed bounds wait
+    for typed stats, ROADMAP direction 4) — contributes NOTHING
+    (conservative: fewer files skipped, never a lost row). A
+    contradictory conjunction (x > 5 AND x < 3) yields an empty-range
+    box that prunes every file — correct, since the predicate selects
+    no rows. At 100 TB this is the difference between "delete one day"
+    rewriting a partition and
+    rewriting the table, without the caller hand-deriving bounds."""
     box: dict[str, list] = {}
 
     def _bound(col: str, lo=None, hi=None):
@@ -1224,51 +1194,31 @@ def compile_prune_box(predicate: str) -> dict:
         if hi is not None and (cur[1] is None or hi < cur[1]):
             cur[1] = hi
 
-    cmp_re = re.compile(
-        rf"^({_ID_RE})\s*(=|>=|<=|>|<)\s*({_LIT_RE})$|"
-        rf"^({_LIT_RE})\s*(=|>=|<=|>|<)\s*({_ID_RE})$"
-    )
-    in_re = re.compile(rf"^({_ID_RE})\s+IN\s*\(\s*({_LIT_RE}(?:\s*,\s*{_LIT_RE})*)\s*\)$", re.I)
-    lit_split_re = re.compile(rf"{_LIT_RE}")
+    def _walk(node: dict):
+        kind, kids = node["kind"], node["children"]
+        if kind == "And":
+            for kid in kids:
+                _walk(kid)
+        elif kind in _BOUNDS:
+            col, lit, (lo, hi) = _column(kids[0]), _literal(kids[1]), _BOUNDS[kind]
+            if col is None:  # literal on the left: swap the bounds
+                col, lit, (hi, lo) = _column(kids[1]), _literal(kids[0]), (lo, hi)
+            if col is not None and lit is not None:
+                _bound(col, lo=lit if lo else None, hi=lit if hi else None)
+        elif kind == "UnresolvedFunction" and node["nameParts"].lower() == "[between]" and len(kids) == 3:
+            col, lo, hi = _column(kids[0]), _literal(kids[1]), _literal(kids[2])
+            if col is not None and lo is not None and hi is not None:
+                _bound(col, lo=lo, hi=hi)
+        elif kind == "In":
+            col, lits = _column(kids[0]), [_literal(k) for k in kids[1:]]
+            if col is not None and lits and None not in lits:
+                _bound(col, lo=min(lits), hi=max(lits))
+        # any other shape (OR, NOT, IS NULL, functions, column-to-
+        # column) contributes nothing — conservative
 
-    def _walk(expr: str):
-        expr = _strip_outer_parens(expr)
-        if _has_top_level_or(expr):
-            return  # (a AND b) OR c implies none of a, b, c
-        for part in _split_top(expr, "AND"):
-            part = _strip_outer_parens(part)
-            if len(_split_top(part, "AND")) > 1:  # (a AND b) nested group
-                _walk(part)  # re-enters with its own OR guard
-                continue
-            mo = re.match(r"^__BETWEEN_(\d+)__$", part)
-            if mo:
-                col, a, b = betweens[int(mo.group(1))]
-                _bound(col, lo=_parse_lit(a), hi=_parse_lit(b))
-                continue
-            mo = cmp_re.match(part)
-            if mo:
-                if mo.group(1) is not None:
-                    col, op, lit = mo.group(1), mo.group(2), _parse_lit(mo.group(3))
-                else:  # literal on the left: flip the operator
-                    lit, op, col = _parse_lit(mo.group(4)), mo.group(5), mo.group(6)
-                    op = {">": "<", "<": ">", ">=": "<=", "<=": ">="}.get(op, op)
-                if op == "=":
-                    _bound(col, lo=lit, hi=lit)
-                elif op in (">", ">="):
-                    _bound(col, lo=lit)
-                else:
-                    _bound(col, hi=lit)
-                continue
-            mo = in_re.match(part)
-            if mo:
-                lits = [_parse_lit(x.group(0)) for x in lit_split_re.finditer(mo.group(2))]
-                if lits:
-                    _bound(mo.group(1), lo=min(lits), hi=max(lits))
-                continue
-            # any other shape (OR branch, NOT, IS NULL, functions,
-            # column-to-column) contributes nothing — conservative
-
-    _walk(s)  # the BETWEEN-stashed form — its internal ANDs are safe
+    tree = _parse_tree(predicate)
+    if tree is not None:
+        _walk(tree)
     return {c: (lo, hi) for c, (lo, hi) in box.items()}
 
 

@@ -365,38 +365,15 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RRF_K = 60  # the standard reciprocal-rank-fusion damping constant
 
 
-_RRF_ORACLE = f"""
-WITH q(query_id, term) AS (VALUES {_QUERY_VALUES}),
-lens AS (
-  SELECT doc_id, len(string_split(text, ' ')) AS dl FROM documents
-),
-corpus AS (
-  SELECT CAST(COUNT(*) AS DOUBLE) AS n,
-         SUM(dl) / COUNT(*) AS avgdl
-  FROM lens
-),
-tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS (
-  SELECT term, doc_id, COUNT(*) AS tf
-  FROM tok
-  WHERE term IN (SELECT DISTINCT term FROM q)
-  GROUP BY term, doc_id
-),
-dfq AS (
-  SELECT term, CAST(COUNT(*) AS DOUBLE) AS df FROM tf GROUP BY term
-),
-scored AS (
-  SELECT q.query_id, tf.doc_id,
-         {_bm25_score("corpus")} AS score
-  FROM tf
-  JOIN dfq USING (term)
-  JOIN lens USING (doc_id)
-  JOIN q ON q.term = tf.term
-  CROSS JOIN corpus
-  GROUP BY q.query_id, tf.doc_id
-),
+# The fusion oracles re-embed the BM25 chain as CTEs.
+# _BM25_ORACLE is "WITH <ctes> SELECT <final>"; splitting at its final
+# projection turns the whole ranking into `bm25 AS (...)` verbatim —
+# the fused oracle provably ranks over the exact rows the graded BM25
+# formulation emits.
+_BM25_SPLIT_AT = "SELECT query_id, doc_id, CAST(rn AS INT) AS rnk, score"
+_BM25_CTES, _BM25_FINAL = _BM25_ORACLE.split(_BM25_SPLIT_AT, 1)
+
+_RRF_ORACLE = f"""{_BM25_CTES.rstrip()},
 bm25 AS (
   SELECT query_id, doc_id, rn AS r_bm25
   FROM (SELECT query_id, doc_id, score,
@@ -474,13 +451,6 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Hybrid lexical+semantic fusion: the BM25 chain re-embeds as a CTE.
-# _BM25_ORACLE is "WITH <ctes> SELECT <final>"; splitting at its final
-# projection turns the whole ranking into `bm25 AS (...)` verbatim —
-# the fused oracle provably ranks over the exact rows the graded BM25
-# formulation emits.
-_BM25_SPLIT_AT = "SELECT query_id, doc_id, CAST(rn AS INT) AS rnk, score"
-_BM25_CTES, _BM25_FINAL = _BM25_ORACLE.split(_BM25_SPLIT_AT, 1)
 _QMAP = {qid: i for i, (qid, _) in enumerate(_QUERIES)}
 _QMAP_VALUES = ", ".join(f"('{qid}', {v})" for qid, v in _QMAP.items())
 

@@ -76,6 +76,16 @@ def test_update_rider_deletion_vectors(env, spark):
     assert dict(_rows(lh.read(spark, path)))[3] == -1
 
 
+def test_boolean_literal_predicates(env, spark):
+    """TRUE and FALSE as a whole predicate mean what they say: WHERE
+    false deletes nothing, WHERE true updates every row."""
+    lsql, path = env
+    lsql.sql("DELETE FROM t WHERE false")
+    assert lh.read(spark, path).count() == 100
+    lsql.sql("UPDATE t SET val = -1 WHERE true")
+    assert {v for _, v in _rows(lh.read(spark, path))} == {-1}
+
+
 # -- INSERT ------------------------------------------------------------
 
 
@@ -179,6 +189,19 @@ def test_select_head_and_alias_qualification(env, spark):
         lsql.sql("SELECT x.val FROM t x WHERE x.id = 5").collect()[0]["val"]
         == 50
     )
+
+
+def test_select_lake_name_after_comma_or_unaliased_join(env, spark):
+    """A lake table named after a comma, or joined straight after a
+    non-lake relation with no alias, is still read from the lake."""
+    lsql, _ = env
+    spark.range(3).createOrReplaceTempView("u")
+    for stmt in (
+        "SELECT COUNT(*) AS n FROM u, t",
+        "SELECT COUNT(*) AS n FROM u JOIN t USING (id)",
+    ):
+        n = lsql.sql(stmt).collect()[0]["n"]
+        assert n == (300 if "," in stmt else 3), stmt
 
 
 def test_select_version_as_of(env, spark):

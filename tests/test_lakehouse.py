@@ -741,7 +741,7 @@ def test_bloom_multi_column_indexes_coexist_and_intersect(spark, tmp_path):
 # -------------------------------------------- sargable predicate compilation
 
 
-def test_compile_prune_box_shapes():
+def test_compile_prune_box_shapes(spark):
     c = lh.compile_prune_box
     assert c("id >= 5 AND id < 10") == {"id": (5, 10)}
     assert c("5 <= id AND 10 > id") == {"id": (5, 10)}  # flipped operands
@@ -755,10 +755,13 @@ def test_compile_prune_box_shapes():
     # `_` is an identifier character: AND inside a column name is no keyword
     assert c("x_and >= 5") == {"x_and": (5, None)}
     assert c("k > 3 AND nd_and < 10") == {"k": (3, None), "nd_and": (None, 10)}
-    assert lh._split_top("col_and = 5", "AND") == ["col_and = 5"]
+    # Spark's literal and identifier forms
+    assert c("x > 1e3") == {"x": (1000.0, None)}
+    assert c("`id` >= 5") == {"id": (5, None)}
+    assert c("name = 'a\\'b'") == {"name": ("a'b", "a'b")}
 
 
-def test_compile_prune_box_is_conservative():
+def test_compile_prune_box_is_conservative(spark):
     c = lh.compile_prune_box
     # a top-level OR voids everything: a AND b OR c == (a AND b) OR c
     assert c("id > 5 AND val = 1 OR id < 2") == {}
@@ -772,6 +775,9 @@ def test_compile_prune_box_is_conservative():
     assert c("(id = 1 OR id = 9) AND val > 0") == {"val": (0, None)}
     # BETWEEN inside an OR branch must not leak its bounds
     assert c("(id BETWEEN 1 AND 2) OR val = 3") == {}
+    # typed literals wait for typed stats; qualified names are opaque
+    assert c("ts >= TIMESTAMP '2024-01-01 00:00:00'") == {}
+    assert c("t.id > 5") == {}
 
 
 def test_scan_where_prunes_files_and_matches_filter(spark, tmp_path):

@@ -12,7 +12,11 @@ time   build_ms (driver-side plan assembly) and exec_s (noop-sink wall)
        adopt/reject decision rests on a contaminated run. --pairs N
        instead interleaves N single Spark and DuckDB runs per op, so VM
        weather hits both engines alike, and reports per-pair ratios.
-plan   explain("formatted") per op, written to DIR/<op>_<tag>.txt.
+plan   per op, to DIR/<op>_<tag>.txt: explain("formatted") before
+       execution, then, after running the op through its own
+       QueryExecution, the optimized logical plan and the AQE-final
+       executed plan, with #<n> expression ids masked — the plans a
+       refactor that claims "same plans" must keep.
 audit  the plan shape of every registered op (or the ops named) as JSON: exchanges,
        Python boundaries, cartesian and single-partition sites,
        sort-merge joins, and each scan's table, ReadSchema columns and
@@ -132,12 +136,25 @@ def _explain(spark, df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
+# The AQE-final plans of text_lang_divergence_tv (its broadcast join
+# builds either side) and stats_chi2_independence (its sibling shuffle
+# stages are numbered in racing order) differ from run to run of the
+# same code: fence on neither's string.
 def cmd_plan(spark, ops, corpus, names, args) -> int:
     os.makedirs(args.out, exist_ok=True)
     for name in names:
+        df = ops[name].fn(spark, corpus)
+        formatted = _explain(spark, df)
+        qe = _execute(df)
+        sections = {
+            "formatted (before execution)": formatted,
+            "optimized": qe.optimizedPlan().toString(),
+            "AQE-final executed": qe.executedPlan().toString(),
+        }
         path = os.path.join(args.out, f"{name}_{args.tag}.txt")
         with open(path, "w") as f:
-            f.write(_explain(spark, ops[name].fn(spark, corpus)))
+            for title, plan in sections.items():
+                f.write(f"== {title} ==\n{re.sub(r'#[0-9]+', '#n', plan)}\n")
         print(path)
     return 0
 
@@ -226,14 +243,21 @@ def _walk(node, out: list) -> None:
             _walk(children.apply(i), out)
 
 
-def exchange_bytes(df) -> dict:
-    """Execute `df` through its own QueryExecution (a noop write plans a
-    separate command whose metrics this df never sees), then read the
-    AQE-final plan: per-Exchange shuffle bytes and records, and the
-    reused stages. AQE reuses a stage by wrapping a ReusedExchange
-    leaf, so counting those leaves counts every reuse once."""
+def _execute(df):
+    """Run `df` through its own QueryExecution and return it: a noop
+    write plans a separate command whose metrics and AQE-final plan
+    this df never sees."""
     qe = df._jdf.queryExecution()
     qe.toRdd().count()
+    return qe
+
+
+def exchange_bytes(df) -> dict:
+    """Execute `df` (_execute), then read the AQE-final plan:
+    per-Exchange shuffle bytes and records, and the reused stages. AQE
+    reuses a stage by wrapping a ReusedExchange leaf, so counting those
+    leaves counts every reuse once."""
+    qe = _execute(df)
     nodes: list = []
     _walk(qe.executedPlan(), nodes)
     exchanges = [
