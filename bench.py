@@ -333,16 +333,9 @@ def _streaming_section(spark, sf_dir: str, ops: dict) -> dict:
     events fixture through the exactly-once parquet committer
     (checkpointed), reads the sink back and aggregates — op fn + noop
     sink, median-of-3 after warm-up, the same methodology as every
-    other tier. Each run re-streams into a fresh uuid-named landing
-    dir, sink and checkpoint, so nothing is cached across runs; all
-    of them are deleted once the timed runs finish."""
-    import shutil
-
-    from lambda_hive_spark.streaming import core as stream_core
-
-    root = stream_core._SCRATCH
-    os.makedirs(root, exist_ok=True)
-    before = set(os.listdir(root))
+    other tier. Each run re-streams into the op's one sink and checkpoint,
+    both wiped at its start (lambda_hive_spark/scratch.py), so nothing
+    is cached across runs and nothing piles up."""
     st0 = _proc_stat_sample()
     try:
         s_sec = round(_time_spark(ops["stream_sink"].fn, spark, sf_dir, 3), 4)
@@ -357,9 +350,6 @@ def _streaming_section(spark, sf_dir: str, ops: dict) -> dict:
             "metric": "streaming_availablenow_wall_sec",
             "error": f"{type(ex).__name__}: {ex}"[:300],
         }
-    finally:
-        for name in set(os.listdir(root)) - before:
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
 
 
 def compact_line(full: dict) -> str:
@@ -438,15 +428,11 @@ def _scale_corpus(
     from pyspark.sql import functions as F
 
     from lambda_hive_spark.io import TABLES
-    from lambda_hive_spark.operators.scans import mark_scratch_fresh, scratch_stale
+    from lambda_hive_spark.scratch import mark_scratch_fresh, named, scratch_stale
 
     tables = SCALE_TABLES if tables is None else tables
     shift_groups = SCALE_SHIFT_GROUPS if shift_groups is None else shift_groups
-    repo = os.path.dirname(os.path.abspath(__file__))
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(repo, ".tmp"))
-    out_dir = os.path.join(
-        scratch, f"bench_{tier}_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out_dir = named(f"bench_{tier}_{os.path.basename(sf_dir.rstrip('/'))}")
     os.makedirs(out_dir, exist_ok=True)
     for t in TABLES:
         dst = os.path.join(out_dir, f"{t}.parquet")
@@ -519,17 +505,13 @@ def _lake_write_bench(spark, corpus_dir: str) -> dict:
     Seconds are single-shot (a write can't re-run without mutating
     state); the COW/DV comparison stands on bytes + the interleaved
     pairing, not on median-of-N."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from lambda_hive_spark import lakehouse as lh
     from lambda_hive_spark.io import table as _table
+    from lambda_hive_spark.scratch import clear_scratch, fresh
 
-    repo = os.path.dirname(os.path.abspath(__file__))
-    scratch = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(repo, ".tmp"))
-    root = os.path.join(scratch, "bench_lake")
-    shutil.rmtree(root, ignore_errors=True)
+    root = fresh("bench_lake")
     path = os.path.join(root, "orders")
     base = _table(spark, corpus_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -592,7 +574,7 @@ def _lake_write_bench(spark, corpus_dir: str) -> dict:
             "bytes_ratio": round(dv["bytes"] / cow["bytes"], 4) if cow["bytes"] else None,
             "sec_ratio": round(dv["sec"] / cow["sec"], 3) if cow["sec"] else None,
         }
-    shutil.rmtree(root, ignore_errors=True)
+    clear_scratch(root)
     return out
 
 

@@ -1056,9 +1056,12 @@ def _prune(m: dict, *, key_min=None, key_max=None, predicates=None, point=None) 
                 if st is None:
                     continue  # no stats for this column: keep
                 fmin, fmax = st
-            if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
-                keep = False
-                break
+            try:
+                if (lo is not None and fmax < lo) or (hi is not None and fmin > hi):
+                    keep = False
+                    break
+            except TypeError:
+                pass  # incomparable bound type: conservatively keep
         if keep:
             for bits_map, pos in probes:
                 bits = bits_map.get(f["path"])
@@ -1178,7 +1181,8 @@ def compile_prune_box(predicate: str) -> dict:
     else float; DOUBLE/FLOAT give float; strings give str. Everything
     else — OR, NOT, IS NULL, NULL, function calls, qualified names,
     column-to-column, and DATE/TIMESTAMP literals (typed bounds wait
-    for typed stats, ROADMAP direction 4) — contributes NOTHING
+    for typed stats, ROADMAP direction 4) — contributes NOTHING, nor
+    does a column that meets both string and numeric literals
     (conservative: fewer files skipped, never a lost row). A
     contradictory conjunction (x > 5 AND x < 3) yields an empty-range
     box that prunes every file — correct, since the predicate selects
@@ -1186,6 +1190,11 @@ def compile_prune_box(predicate: str) -> dict:
     rewriting a partition and
     rewriting the table, without the caller hand-deriving bounds."""
     box: dict[str, list] = {}
+    kinds: dict[str, set] = {}  # per column: is-str of each literal met
+
+    def _typed(col: str, *lits) -> bool:
+        kinds.setdefault(col, set()).update(isinstance(v, str) for v in lits)
+        return len(kinds[col]) == 1
 
     def _bound(col: str, lo=None, hi=None):
         cur = box.setdefault(col, [None, None])
@@ -1203,15 +1212,15 @@ def compile_prune_box(predicate: str) -> dict:
             col, lit, (lo, hi) = _column(kids[0]), _literal(kids[1]), _BOUNDS[kind]
             if col is None:  # literal on the left: swap the bounds
                 col, lit, (hi, lo) = _column(kids[1]), _literal(kids[0]), (lo, hi)
-            if col is not None and lit is not None:
+            if col is not None and lit is not None and _typed(col, lit):
                 _bound(col, lo=lit if lo else None, hi=lit if hi else None)
         elif kind == "UnresolvedFunction" and node["nameParts"].lower() == "[between]" and len(kids) == 3:
             col, lo, hi = _column(kids[0]), _literal(kids[1]), _literal(kids[2])
-            if col is not None and lo is not None and hi is not None:
+            if col is not None and lo is not None and hi is not None and _typed(col, lo, hi):
                 _bound(col, lo=lo, hi=hi)
         elif kind == "In":
             col, lits = _column(kids[0]), [_literal(k) for k in kids[1:]]
-            if col is not None and lits and None not in lits:
+            if col is not None and lits and None not in lits and _typed(col, *lits):
                 _bound(col, lo=min(lits), hi=max(lits))
         # any other shape (OR, NOT, IS NULL, functions, column-to-
         # column) contributes nothing — conservative
@@ -1219,7 +1228,7 @@ def compile_prune_box(predicate: str) -> dict:
     tree = _parse_tree(predicate)
     if tree is not None:
         _walk(tree)
-    return {c: (lo, hi) for c, (lo, hi) in box.items()}
+    return {c: (lo, hi) for c, (lo, hi) in box.items() if len(kinds[c]) == 1}
 
 
 def scan_where(spark: SparkSession, path: str, predicate: str, *, version: int | None = None) -> DataFrame:

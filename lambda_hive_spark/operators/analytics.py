@@ -19,8 +19,8 @@ from pyspark.sql.window import Window
 
 from lambda_hive_spark.helpers import dbl, dec, dsum, sorted_pairs, sql_dsum
 from lambda_hive_spark.io import register_views, table
-from lambda_hive_spark.operators.scans import _scratch
 from lambda_hive_spark.registry import op
+from lambda_hive_spark.scratch import named as _scratch
 
 _SCALAR_SUBQ = f"""
 SELECT p_partkey, p_retailprice

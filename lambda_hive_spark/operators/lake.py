@@ -22,7 +22,6 @@ design (see lakehouse.py module doc).
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -32,15 +31,13 @@ from lambda_hive_spark import lakehouse as lh
 from lambda_hive_spark.helpers import dbl, dec, dot, dsum, sql_dot, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.operators.extras import K_NN, N_PROBE, assign_cells, ivf_index, nearest_cells
-from lambda_hive_spark.operators.scans import _scratch
 from lambda_hive_spark.registry import op
+from lambda_hive_spark.scratch import fresh
 from lambda_hive_spark.streaming import core
 
 
 def _fresh_table_dir(name: str, sf_dir: str) -> str:
-    path = _scratch(f"lake_{name}_{os.path.basename(sf_dir.rstrip('/'))}")
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+    return fresh(f"lake_{name}_{os.path.basename(sf_dir.rstrip('/'))}")
 
 
 @op(

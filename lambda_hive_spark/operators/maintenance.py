@@ -19,8 +19,8 @@ from pyspark.sql import functions as F
 
 from lambda_hive_spark.helpers import dsum, hier_exact_agg, sql_dsum
 from lambda_hive_spark.io import table
-from lambda_hive_spark.operators.scans import _scratch, mark_scratch_fresh, scratch_stale
 from lambda_hive_spark.registry import op
+from lambda_hive_spark.scratch import mark_scratch_fresh, named as _scratch, scratch_stale
 
 _N_BUCKETS = 8
 

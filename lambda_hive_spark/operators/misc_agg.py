@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from lambda_hive_spark.helpers import dsum, sql_dsum
 from lambda_hive_spark.io import table
-from lambda_hive_spark.operators.scans import _scratch, mark_scratch_fresh, scratch_stale
 from lambda_hive_spark.registry import op
+from lambda_hive_spark.scratch import mark_scratch_fresh, named as _scratch, scratch_stale
 
 
 @op(

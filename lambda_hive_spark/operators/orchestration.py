@@ -42,29 +42,14 @@ from pyspark.sql import functions as F
 from lambda_hive_spark.helpers import dsum, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.orchestrator import Dag
-from lambda_hive_spark.operators.scans import (
-    _scratch,
-    clear_scratch,
-    mark_scratch_fresh,
-    scratch_stale,
-)
 from lambda_hive_spark.registry import op
+from lambda_hive_spark.scratch import clear_scratch, mark_scratch_fresh, named as _scratch, scratch_stale
 
 # Each op invocation clears its node dir + stamp up front
 # (clear_scratch) so it demonstrates the full build→skip cycle
 # deterministically — a leftover stamp from a prior invocation would
-# make run 1 a skip and fail the self-assertion.
-#
-# CONSUMER CONTRACT (ADVICE r6): because of that up-front clear, the
-# DataFrame an op returns reads lazily from the scratch dir that the
-# NEXT invocation of the same op deletes. Collect (or copy) the result
-# BEFORE re-invoking the op; a plan held across invocations fails with
-# FILE_NOT_FOUND when finally executed. The driver's verify loop and
-# every test in tests/test_orchestrator.py already follow this
-# collect-before-reinvoke discipline, and it matches real schedulers:
-# a node's output location is owned by the node and is overwritten by
-# its next run — downstream readers pin a version (lakehouse.py) if
-# they need stability across runs.
+# make run 1 a skip and fail the self-assertion. Hence the consumer
+# contract in lambda_hive_spark/scratch.py: collect before re-invoking.
 
 
 @op(

@@ -10,7 +10,6 @@ distributed committer — no driver-side collect anywhere.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,74 +18,7 @@ from pyspark.sql import types as T
 from lambda_hive_spark.helpers import dsum, sql_dsum
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
-
-# Scratch space for sink/source round-trips: env-overridable, else
-# repo-relative (two levels above this package) — same pattern as
-# streaming/core.py, never a hardcoded absolute checkout path.
-_SCRATCH = os.environ.get(
-    "SPARK_GRAFT_SCRATCH",
-    os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp"),
-)
-
-
-def _scratch(name: str) -> str:
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return os.path.join(_SCRATCH, name)
-
-
-def _fixture_stamp(*fixtures: str) -> list[list]:
-    return [[f, os.path.getsize(f), os.path.getmtime(f)] for f in sorted(fixtures)]
-
-
-def _stamp_path(scratch_dir: str) -> str:
-    """The single definition of where a scratch dir's freshness stamp
-    lives — shared by scratch_stale / mark_scratch_fresh / clear_scratch
-    so no caller re-derives the naming convention."""
-    return scratch_dir.rstrip("/") + ".stamp"
-
-
-def clear_scratch(scratch_dir: str) -> None:
-    """Remove a scratch derivation AND its stamp, so the next
-    scratch_stale() is guaranteed True (used by ops that must
-    demonstrate a full build→skip cycle per invocation)."""
-    import shutil
-
-    shutil.rmtree(scratch_dir, ignore_errors=True)
-    try:
-        os.remove(_stamp_path(scratch_dir))
-    except OSError:
-        pass
-
-
-def scratch_stale(scratch_dir: str, *fixtures: str) -> bool:
-    """True when a cached scratch derivation of `fixtures` must be
-    rebuilt: the dir is missing/empty, or any source fixture's
-    (size, mtime) changed since `mark_scratch_fresh` last ran. The
-    driver regenerates the testdata parquet between rounds (ADVICE
-    r3 item 1), so existence alone is not a valid cache key — a stale
-    clustered/landing copy would silently diverge from the oracle's
-    fresh read. The stamp lives NEXT to the dir (overwrite-mode writes
-    clear the dir itself)."""
-    import json
-
-    try:
-        with open(_stamp_path(scratch_dir)) as fh:
-            return not (
-                json.load(fh) == _fixture_stamp(*fixtures)
-                and os.path.isdir(scratch_dir)
-                and os.listdir(scratch_dir)
-            )
-    except (OSError, ValueError):
-        return True
-
-
-def mark_scratch_fresh(scratch_dir: str, *fixtures: str) -> None:
-    """Record the fixture fingerprint AFTER a successful rebuild (a
-    rebuild that dies midway leaves no stamp → retried next call)."""
-    import json
-
-    with open(_stamp_path(scratch_dir), "w") as fh:
-        json.dump(_fixture_stamp(*fixtures), fh)
+from lambda_hive_spark.scratch import mark_scratch_fresh, named as _scratch, scratch_stale
 
 
 @op("scan_parquet", oracle="SELECT * FROM orders")

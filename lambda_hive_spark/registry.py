@@ -57,19 +57,11 @@ _OPS: dict[str, Op] = {}
 # exists for (bench's median-of-N loop, a driver re-invoking the same
 # query) are back-to-back, so a small LRU serves them at full hit
 # rate while a 320-op sweep evicts continuously and pins at most
-# SPARK_GRAFT_PLAN_CACHE_SIZE plans (default 32).
+# _PLAN_CACHE_SIZE plans.
 from collections import OrderedDict
 
 _PLAN_CACHE: OrderedDict[tuple, DataFrame] = OrderedDict()
-
-
-def _plan_cache_capacity() -> int:
-    import os
-
-    try:
-        return int(os.environ.get("SPARK_GRAFT_PLAN_CACHE_SIZE", "32"))
-    except ValueError:
-        return 32
+_PLAN_CACHE_SIZE = 32
 
 
 def _corpus_stamp(sf_dir: str) -> tuple:
@@ -118,7 +110,7 @@ def op(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()) -> Call
                 return hit
             df = fn(spark, sf_dir)
             _PLAN_CACHE[key] = df
-            while len(_PLAN_CACHE) > _plan_cache_capacity():
+            while len(_PLAN_CACHE) > _PLAN_CACHE_SIZE:
                 _PLAN_CACHE.popitem(last=False)
             return df
 

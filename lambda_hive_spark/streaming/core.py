@@ -18,8 +18,9 @@ see the same TimestampType column either way.
 
 from __future__ import annotations
 
+import hashlib
 import os
-import shutil
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,15 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-# Scratch root: env-overridable, else repo-relative (two levels above
-# this package), never a hardcoded absolute checkout path.
-_SCRATCH = os.path.join(
-    os.environ.get(
-        "SPARK_GRAFT_SCRATCH",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".tmp"),
-    ),
-    "streaming",
-)
+from lambda_hive_spark import scratch
 
 # Fixed by the parquet footers (FIXTURES.md) — streaming sources must
 # declare their schema up front; never inferred. `ts` is layout-
@@ -74,9 +67,16 @@ def _events_raw_schema(
 
 
 def scratch_dir(name: str) -> str:
-    path = os.path.join(_SCRATCH, f"{name}-{uuid.uuid4().hex[:8]}")
-    os.makedirs(path, exist_ok=True)
-    return path
+    """`<scratch root>/streaming/<name>`, wiped on each call: one sink,
+    state or checkpoint dir per stream op (lambda_hive_spark/scratch.py)."""
+    return scratch.fresh(os.path.join("streaming", name))
+
+
+def _digest(path: str) -> str:
+    return hashlib.sha256(os.path.abspath(path).encode()).hexdigest()[:8]
+
+
+_LANDING_LOCK = threading.Lock()  # stream ops on DAG threads share a farm
 
 
 def landing_dir(sf_dir: str) -> str:
@@ -84,15 +84,25 @@ def landing_dir(sf_dir: str) -> str:
     events fixture (symlinks — zero copy, fixture stays read-only).
     The file source does not descend into subdirectories, so an
     `events.parquet` that is a directory of part files (the bench
-    scale corpora) lands as one symlink per part file."""
-    land = scratch_dir("landing")
-    src = os.path.join(sf_dir, "events.parquet")
-    if not os.path.isdir(src):
-        os.symlink(src, os.path.join(land, "events.parquet"))
-        return land
-    for name in sorted(os.listdir(src)):
-        if name.endswith(".parquet") and not name.startswith(("_", ".")):
-            os.symlink(os.path.join(src, name), os.path.join(land, name))
+    scale corpora) lands as one symlink per part file.
+
+    One farm per corpus (keyed on its absolute path: corpora may share
+    a basename), rebuilt only when the fixture's stamp changes, so a
+    stream declared over it earlier keeps its files."""
+    src = os.path.join(os.path.abspath(sf_dir), "events.parquet")
+    land = scratch.named(os.path.join("streaming", f"landing-{_digest(sf_dir)}"))
+    with _LANDING_LOCK:
+        if not scratch.scratch_stale(land, src):
+            return land
+        scratch.clear_scratch(land)
+        os.makedirs(land)
+        if not os.path.isdir(src):
+            os.symlink(src, os.path.join(land, "events.parquet"))
+        else:
+            for name in sorted(os.listdir(src)):
+                if name.endswith(".parquet") and not name.startswith(("_", ".")):
+                    os.symlink(os.path.join(src, name), os.path.join(land, name))
+        scratch.mark_scratch_fresh(land, src)
     return land
 
 
@@ -143,26 +153,29 @@ def run_available_now(
 
     Memory sink is the dev/test harness only — it collects to the
     driver. Production sinks are `to_parquet_sink` (below) or Kafka;
-    the plan object is identical either way.
+    the plan object is identical either way. The checkpoint is removed
+    once the drain ends: the result is the in-memory table.
     """
     name = f"q_{uuid.uuid4().hex[:12]}"
     writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
-    drain(writer, name, scratch_dir("ckpt"), timeout_s)
+    ckpt = scratch_dir(name)
+    try:
+        drain(writer, name, ckpt, timeout_s)
+    finally:
+        scratch.clear_scratch(ckpt)
     return df.sparkSession.table(name)
 
 
 def to_parquet_sink(df: DataFrame, out_dir: str, timeout_s: int = 300) -> None:
     """Production-shaped sink: exactly-once parquet append via the
     streaming committer + checkpoint. At 100 TB this is partitioned by
-    event date so downstream readers get partition pruning."""
+    event date so downstream readers get partition pruning. The
+    checkpoint, `<scratch root>/streaming/ckpt-<digest of out_dir>`, is
+    replaced per call and kept after it (`commits/` count the batches)."""
     writer = (
         df.withColumn("event_date", F.to_date("ts"))
         .writeStream.format("parquet")
         .option("path", out_dir)
         .partitionBy("event_date")
     )
-    drain(writer, f"parquet sink to {out_dir}", scratch_dir("ckpt"), timeout_s)
-
-
-def cleanup_scratch() -> None:
-    shutil.rmtree(_SCRATCH, ignore_errors=True)
+    drain(writer, f"parquet sink to {out_dir}", scratch_dir(f"ckpt-{_digest(out_dir)}"), timeout_s)

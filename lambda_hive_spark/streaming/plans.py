@@ -332,7 +332,7 @@ def run_upsert(stream: DataFrame, state_dir: str, timeout_s: int = 300) -> str:
     _core.drain(
         stream.writeStream.foreachBatch(merge_batch),
         "run_upsert",
-        _core.scratch_dir("ckpt"),
+        os.path.join(state_dir, "ckpt"),
         timeout_s,
     )
     return state_path

@@ -778,6 +778,24 @@ def test_compile_prune_box_is_conservative(spark):
     # typed literals wait for typed stats; qualified names are opaque
     assert c("ts >= TIMESTAMP '2024-01-01 00:00:00'") == {}
     assert c("t.id > 5") == {}
+    # a column meeting string and numeric literals gets no bound
+    assert c("x IN (1, 'a')") == {}
+    assert c("id >= 5 AND id >= 'a' AND val < 3") == {"val": (None, 3)}
+    assert c("id BETWEEN 1 AND 'z'") == {}
+    # a bound that cannot be compared with a file's stats keeps the file
+    m = {"key": "id", "files": [{"path": "f", "min_key": 0, "max_key": 9, "cols": {"val": (0, 90)}}]}
+    assert len(lh._prune(m, predicates={"id": ("5", None)})) == 1
+    assert len(lh._prune(m, predicates={"val": (None, "z")})) == 1
+
+
+def test_scan_where_string_literal_on_int_column(spark, tmp_path):
+    """Spark casts `id >= '5'` and runs it; the pruner must not raise."""
+    path = str(tmp_path / "sws")
+    lh.create(spark, path, spark.range(20).repartitionByRange(4, "id"), key="id")
+    pred = "id >= '5'"
+    got = sorted(r["id"] for r in lh.scan_where(spark, path, pred).collect())
+    assert got == sorted(r["id"] for r in lh.read(spark, path).filter(pred).collect())
+    assert got == list(range(5, 20))
 
 
 def test_scan_where_prunes_files_and_matches_filter(spark, tmp_path):

@@ -125,7 +125,7 @@ def test_mid_build_death_leaves_no_stamp(spark, tmp_path):
     the next request — the stamp is written only AFTER success."""
     import os
 
-    from lambda_hive_spark.operators.scans import mark_scratch_fresh, scratch_stale
+    from lambda_hive_spark.scratch import clear_scratch, mark_scratch_fresh, scratch_stale
 
     fixture = os.path.join(SF_SMALL, "lineitem.parquet")
     node = str(tmp_path / "node")
@@ -138,8 +138,6 @@ def test_mid_build_death_leaves_no_stamp(spark, tmp_path):
     assert not scratch_stale(node, fixture)
     # clear_scratch must remove BOTH dir and stamp (shared _stamp_path
     # convention — the orchestration ops' per-invocation reset)
-    from lambda_hive_spark.operators.scans import clear_scratch
-
     clear_scratch(node)
     assert scratch_stale(node, fixture)
     import os as _os

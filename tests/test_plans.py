@@ -269,7 +269,7 @@ def test_cluster_by_produces_disjoint_ts_ranges(spark):
     """After repartitionByRange+sort, per-file ts ranges must be
     pairwise disjoint — the property parquet min/max skipping needs."""
     from lambda_hive_spark.registry import all_ops
-    from lambda_hive_spark.operators.scans import _scratch
+    from lambda_hive_spark.scratch import named as _scratch
     import os
 
     all_ops()["maintenance_cluster_by"].fn(spark, SF_DIR).collect()
@@ -332,7 +332,7 @@ def test_zorder_narrows_both_dimensions(spark):
     span — linear sort would nail one dimension and leave the other at
     ~full range in every file."""
     from lambda_hive_spark.registry import all_ops
-    from lambda_hive_spark.operators.scans import _scratch
+    from lambda_hive_spark.scratch import named as _scratch
     import os
     import pyarrow.parquet as pq
 

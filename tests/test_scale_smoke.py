@@ -12,6 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lambda_hive_spark.io import table
+from lambda_hive_spark.scratch import named
+
 SF_BASE = "/root/testdata/sf0.1"  # biggest fixture; replicate upward from here
 
 pytestmark = pytest.mark.skipif(
@@ -19,20 +21,12 @@ pytestmark = pytest.mark.skipif(
     reason="opt-in scale smoke (set SPARK_GRAFT_SCALE_SMOKE=1)",
 )
 
-_SCRATCH = os.path.join(
-    os.environ.get(
-        "SPARK_GRAFT_SCRATCH",
-        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"),
-    ),
-    "scale_smoke",
-)
-
 
 def _replicated(spark, name: str, copies: int, key: str):
     """Union `copies` shifted clones of a fixture table (distinct keys
     per clone so joins/dedups stay meaningful)."""
     base = table(spark, SF_BASE, name)
-    out = f"{_SCRATCH}/{name}_x{copies}"
+    out = named(f"scale_smoke/{name}_x{copies}")
     if not os.path.isdir(out):
         shift = base.agg(F.max(key)).collect()[0][0] + 1
         dfs = [base.withColumn(key, F.col(key) + F.lit(i * shift)) for i in range(copies)]
@@ -128,7 +122,7 @@ def _replica_dir(spark, copies: int = 3) -> str:
     `copies`× — surrogate keys shifted for uniqueness, but the PROFILED
     attributes (user_id, text, dates) kept identical, so profiling
     distributions must be exactly invariant and counts exactly ×N."""
-    out = f"{_SCRATCH}/repl{copies}"
+    out = named(f"scale_smoke/repl{copies}")
     if not os.path.isdir(out):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         for name, key in [("events", "event_id"), ("documents", "doc_id"), ("orders", "o_orderkey")]:
@@ -202,7 +196,7 @@ def test_countmin_estimates_scale_exactly_10x(spark):
     li10 = _replicated(spark, "lineitem", 10, "l_orderkey")
     import os as _os
 
-    big_dir = f"{_SCRATCH}/cms_sf"
+    big_dir = named("scale_smoke/cms_sf")
     _os.makedirs(big_dir, exist_ok=True)
     for t in ("part",):
         dst = f"{big_dir}/{t}.parquet"
@@ -210,7 +204,7 @@ def test_countmin_estimates_scale_exactly_10x(spark):
             _os.symlink(f"{SF_BASE}/{t}.parquet", dst)
     li_dst = f"{big_dir}/lineitem.parquet"
     if not _os.path.lexists(li_dst):
-        _os.symlink(f"{_SCRATCH}/lineitem_x10", li_dst)
+        _os.symlink(named("scale_smoke/lineitem_x10"), li_dst)
     big = {r.p_partkey: r.est_count for r in sketch_countmin(spark, big_dir).collect()}
     assert set(big) == set(base)
     assert all(big[k] == 10 * base[k] for k in base)
@@ -223,7 +217,7 @@ def test_bloom_no_false_negatives_at_10x_keys(spark):
     from lambda_hive_spark.operators.sketches import sketch_bloom_membership
     import os as _os
 
-    big_dir = f"{_SCRATCH}/bloom_sf"
+    big_dir = named("scale_smoke/bloom_sf")
     _os.makedirs(big_dir, exist_ok=True)
     for t, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
         dst = f"{big_dir}/{t}.parquet"
@@ -249,11 +243,11 @@ def test_chunk_dedup_finds_every_chunk_under_replication(spark):
     import os as _os
 
     docs3 = _replicated(spark, "documents", 3, "doc_id")
-    big_dir = f"{_SCRATCH}/chunk_sf"
+    big_dir = named("scale_smoke/chunk_sf")
     _os.makedirs(big_dir, exist_ok=True)
     dst = f"{big_dir}/documents.parquet"
     if not _os.path.lexists(dst):
-        _os.symlink(f"{_SCRATCH}/documents_x3", dst)
+        _os.symlink(named("scale_smoke/documents_x3"), dst)
     from lambda_hive_spark.operators.training import dedup_chunk_exact
 
     got = dedup_chunk_exact(spark, big_dir)
@@ -349,7 +343,7 @@ def test_interpolation_fixed_point_under_replication(spark):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{SF_BASE}/events.parquet")
     clones = raw.unionByName(raw).unionByName(raw)  # 3x volume, same keys
-    dup_dir = f"{_SCRATCH}/events_dup3_dir"
+    dup_dir = named("scale_smoke/events_dup3_dir")
     out = os.path.join(dup_dir, "events.parquet")
     if not os.path.isdir(out):
         clones.repartition(32).write.mode("overwrite").parquet(out)

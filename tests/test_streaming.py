@@ -9,6 +9,7 @@ asserting the streaming result converges to the batch result.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import time
@@ -173,6 +174,107 @@ def test_parquet_sink_timeout_stops_query_and_raises(spark, arrival_dirs, tmp_pa
     with pytest.raises(TimeoutError):
         core.to_parquet_sink(stream, str(tmp_path / "sink_out"), timeout_s=0.01)
     assert spark.streams.active == []
+
+
+def test_parquet_sink_checkpoint_per_sink_dir(spark, arrival_dirs, tmp_path, monkeypatch):
+    """Each to_parquet_sink call leaves exactly one checkpoint,
+    `<scratch>/streaming/ckpt-*`, whose commits/ count its micro-batches
+    (the benchmark reads a stream job's batches this way); a re-run
+    into the same sink dir replaces that checkpoint instead of adding
+    one."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    pattern = str(tmp_path / "scratch" / "streaming" / "ckpt-*")
+
+    def sink(out: str) -> set:
+        before = set(glob.glob(pattern))
+        stream = core.events_stream(spark, arrival_dirs, max_files_per_trigger=1)
+        core.to_parquet_sink(stream, str(tmp_path / out))
+        for ckpt in glob.glob(pattern):
+            assert len(glob.glob(os.path.join(ckpt, "commits", "[0-9]*"))) == 3
+        return set(glob.glob(pattern)) - before
+
+    first = sink("sink_a")
+    assert len(first) == 1
+    assert len(sink("sink_b")) == 1
+    assert sink("sink_a") == set()
+    assert first <= set(glob.glob(pattern)) and len(glob.glob(pattern)) == 2
+
+
+def _scratch_entries(root: str) -> set:
+    """Every path one or two levels under the scratch root: the op dirs
+    and, under streaming/, the landing, sink, state and checkpoint
+    dirs (deeper names are Spark's per-write part files)."""
+    return {
+        os.path.relpath(p, root)
+        for p in glob.glob(os.path.join(root, "*")) + glob.glob(os.path.join(root, "*", "*"))
+    }
+
+
+def test_stream_op_scratch_bounded_by_op_count(spark, tmp_path, monkeypatch):
+    """Re-running every scratch-writing stream op leaves the same set
+    of scratch entries as the first run: scratch grows with the number
+    of ops, not the number of calls."""
+    from lambda_hive_spark.registry import all_ops
+
+    root = str(tmp_path / "scratch")
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", root)
+    ops = all_ops()
+    names = (
+        "scan_stream", "stream_watermark", "stream_sink",
+        "stream_upsert_foreachbatch", "stream_progress_metrics", "stream_sink_lake",
+    )
+    rounds = []
+    for _ in range(2):
+        for name in names:
+            ops[name].fn(spark, SF_SMALL).collect()
+        rounds.append(_scratch_entries(root))
+    assert "streaming/sink" in rounds[0] and any(
+        e.startswith("streaming/landing-") for e in rounds[0]
+    )
+    assert rounds[1] == rounds[0], sorted(rounds[1] ^ rounds[0])
+
+
+def test_stream_results_held_across_reinvocation(spark, tmp_path, monkeypatch):
+    """Collect-before-reinvoke (lambda_hive_spark/scratch.py): a
+    stream_sink result collected before the op re-runs still equals
+    the oracle, and a stream declared over the corpus's landing dir
+    before scan_stream ran still drains every row afterwards."""
+    from lambda_hive_spark.registry import all_ops
+    from lambda_hive_spark.testing import duck_connection, normalize
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    ops = all_ops()
+    held = ops["stream_sink"].fn(spark, SF_SMALL).toPandas()
+    ops["stream_sink"].fn(spark, SF_SMALL).collect()
+    con = duck_connection(SF_SMALL)
+    assert normalize(held) == normalize(con.execute(ops["stream_sink"].oracle).fetchdf())
+    con.close()
+
+    stream = core.events_stream(spark, core.landing_dir(SF_SMALL))
+    ops["scan_stream"].fn(spark, SF_SMALL).collect()
+    assert core.run_available_now(stream).count() == table(spark, SF_SMALL, "events").count()
+
+
+def test_landing_dir_concurrent_first_build(tmp_path, monkeypatch):
+    """Threads asking at once for a corpus's not-yet-built landing farm
+    all get the one intact farm (no doubled rebuild)."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for i in range(10):
+            corpus = tmp_path / f"corpus{i}"
+            corpus.mkdir()
+            (corpus / "events.parquet").write_bytes(b"x")
+            with ThreadPoolExecutor(16) as pool:
+                lands = list(pool.map(lambda _: core.landing_dir(str(corpus)), range(16)))
+            assert len(set(lands)) == 1
+            assert os.listdir(lands[0]) == ["events.parquet"]
+    finally:
+        sys.setswitchinterval(old)
 
 
 def test_stream_ops_read_events_part_file_directory(spark, tmp_path):

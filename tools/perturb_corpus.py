@@ -34,8 +34,8 @@ Variants (all deterministic, seeded by row keys — no RNG state):
             e.g. agg_pivot's explicit values) stays parity-green by
             construction — that is the contract being checked.
 
-Usage: python tools/perturb_corpus.py <sf_dir> <variant> [out_root]
-Prints the variant dir; then:
+Usage: python tools/perturb_corpus.py <sf_dir> <variant>
+Prints the variant dir (under the scratch root); then:
     python tools/verify_driver.py <variant_dir>
 """
 from __future__ import annotations
@@ -47,6 +47,9 @@ import sys
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from lambda_hive_spark.scratch import named  # noqa: E402
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -242,10 +245,8 @@ def _inject_empty_text(tbl: pa.Table) -> pa.Table:
     return tbl.set_column(idx, tbl.field(idx), pa.array(out, type=pa.string()))
 
 
-def build(sf_dir: str, variant: str, out_root: str | None = None) -> str:
-    scratch = out_root or os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/spark_graft_scratch")
-    base = os.path.basename(sf_dir.rstrip("/"))
-    out_dir = os.path.join(scratch, f"perturb_{variant}_{base}")
+def build(sf_dir: str, variant: str) -> str:
+    out_dir = named(f"perturb_{variant}_{os.path.basename(sf_dir.rstrip('/'))}")
     os.makedirs(out_dir, exist_ok=True)
     for name in TABLES:
         src = os.path.join(sf_dir, f"{name}.parquet")
@@ -289,4 +290,4 @@ def build(sf_dir: str, variant: str, out_root: str | None = None) -> str:
 if __name__ == "__main__":
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     variant = sys.argv[2] if len(sys.argv) > 2 else "shuffled"
-    print(build(sf_dir, variant, sys.argv[3] if len(sys.argv) > 3 else None))
+    print(build(sf_dir, variant))

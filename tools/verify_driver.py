@@ -12,6 +12,7 @@ sys.path.insert(0, _REPO)
 import duckdb
 
 import __spark_entry__ as e
+from lambda_hive_spark.scratch import named
 from pyspark.sql import SparkSession
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -52,9 +53,7 @@ for name, fn in sorted(qs.items()):  # t2
     if cols != sorted(ddf.columns) or s != d:
         bad.append(name)
         # post-mortem dump: first differing rows from each side
-        dump_dir = os.environ.get("SPARK_GRAFT_SCRATCH", os.path.join(_REPO, ".tmp"))
-        os.makedirs(dump_dir, exist_ok=True)
-        dump = os.path.join(dump_dir, f"verify_mismatch_{name}.txt")
+        dump = named(f"verify_mismatch_{name}.txt")
         print(f"{name}: mismatch dump at {dump}")
         with open(dump, "w") as fh:
             fh.write(f"spark cols {cols}\nduck cols {sorted(ddf.columns)}\n")
