@@ -10,12 +10,11 @@ switches to:
     eng.ops()                            # the full operator inventory
     eng.stream_events(landing_dir)       # unbounded events source
     eng.dag()                            # workflow-DAG builder
-    eng.lake(path)                       # ACID lake table handle
-    #   .create(df, key, partition_by=[...], generated={...})
-    #   .append(df) .merge_upsert(updates) .replace_where(pred, df)
-    #   .read(version=N) .read(ref="prod") .partitions()
-    #   .create_ref/.set_ref/.drop_ref/.refs()  (tags + branches)
-    #   .clone_to(target) .compact() .vacuum() .history()
+    eng.lake(path)                       # ACID lake table handle: every
+    #   lakehouse verb bound to one table, e.g. .create(df, key)
+    #   .merge_upsert(updates, deletion_vectors=True) .update_where(...)
+    #   .read(version=N) .read(ref="prod") .refs() .clone_to(target)
+    #   .compact() .vacuum() .history()  (with n_files/n_rows)
     eng.lake_sql({"t": path})            # SQL DML/time-travel surface
     #   .sql("MERGE INTO t USING ...") .sql("UPDATE t SET ...")
     #   .sql("SELECT ... FROM t VERSION AS OF 3")
@@ -28,9 +27,12 @@ Reference file:line: N/A — empty reference dir (SURVEY.md §0).
 
 from __future__ import annotations
 
+import functools
+import inspect
+
 from pyspark.sql import DataFrame, SparkSession
 
-from lambda_hive_spark import io
+from lambda_hive_spark import io, lakehouse
 from lambda_hive_spark.orchestrator import Dag
 from lambda_hive_spark.registry import Op, all_ops
 from lambda_hive_spark.session import get_spark, tune_runtime
@@ -117,9 +119,11 @@ class Engine:
         return Catalog(root)
 
     def lake(self, path: str) -> "LakeTable":
-        """Handle to an ACID lake table at `path` (lakehouse.py):
-        versioned commits, snapshot reads / time travel, stats-pruned
-        MERGE, compaction, vacuum."""
+        """Handle to an ACID lake table at `path` that exposes every
+        lakehouse.py verb bound to this session and path: versioned
+        commits, snapshot reads / time travel, stats-pruned and DV
+        MERGE/UPDATE/DELETE, compaction, vacuum, and history(), whose
+        entries report each snapshot's n_files/n_rows."""
         return LakeTable(self.spark, path)
 
     def lake_sql(
@@ -138,199 +142,60 @@ class Engine:
         return LakeSQL(self.spark, tables, catalog_root)
 
 
+# The facade's own decisions about lakehouse verbs; everything else is
+# lakehouse's signature, defaults and docstring, bound to one table.
+_ALIASES = {"version": "current_version", "refs": "list_refs", "clone_to": "clone"}
+_DEFAULTS = {"delete_where": {"prune": "auto"}, "update_where": {"prune": "auto"}}
+# What a verb's leading parameters take from the handle. Public
+# lakehouse functions that start any other way (compile_prune_box)
+# are not table verbs.
+_LEADS = {
+    ("spark", "path"): ("spark", "path"),
+    ("spark", "source"): ("spark", "path"),
+    ("path",): ("path",),
+}
+
+
+def _lake_verbs() -> dict[str, tuple[str, ...]]:
+    out = {}
+    for name, fn in vars(lakehouse).items():
+        if name.startswith("_") or not inspect.isfunction(fn):
+            continue
+        if fn.__module__ != lakehouse.__name__:
+            continue  # imported helpers (urlparse, ...) are not verbs
+        params = tuple(inspect.signature(fn).parameters)
+        for lead, attrs in _LEADS.items():
+            if params[: len(lead)] == lead:
+                out[name] = attrs
+                break
+    return out
+
+
+_VERBS = _lake_verbs()
+
+
 class LakeTable:
-    """Bound (session, path) facade over lambda_hive_spark.lakehouse —
-    same thin-delegation contract as Engine itself."""
+    """Every lakehouse verb bound to one table: ``t.verb(*a, **kw)`` is
+    ``lakehouse.verb(spark, path, *a, **kw)`` (``lakehouse.verb(path,
+    ...)`` for the manifest-only verbs), with lakehouse's own signature,
+    defaults and docstring. The facade adds only the ``_ALIASES`` names
+    (``version``, ``refs``, ``clone_to``) and ``prune="auto"`` as the
+    default of ``delete_where``/``update_where``."""
 
     def __init__(self, spark: SparkSession, path: str) -> None:
-        from lambda_hive_spark import lakehouse
-
-        self._lh = lakehouse
         self.spark = spark
         self.path = path
 
-    def create(
-        self,
-        df: DataFrame,
-        key: str,
-        *,
-        constraints: dict | None = None,
-        partition_by: list | None = None,
-        generated: dict | None = None,
-    ) -> int:
-        return self._lh.create(
-            self.spark,
-            self.path,
-            df,
-            key,
-            constraints=constraints,
-            partition_by=partition_by,
-            generated=generated,
+    def __getattr__(self, name: str):
+        verb = _ALIASES.get(name, name)
+        if verb not in _VERBS:
+            raise AttributeError(f"{type(self).__name__!r} object has no attribute {name!r}")
+        fn = getattr(lakehouse, verb)
+        bound = functools.partial(
+            fn, *(getattr(self, a) for a in _VERBS[verb]), **_DEFAULTS.get(verb, {})
         )
+        bound.__doc__ = fn.__doc__
+        return bound
 
-    def clone_to(self, target: str) -> int:
-        """Zero-copy shallow clone of this table's head at `target`."""
-        return self._lh.clone(self.spark, self.path, target)
-
-    def append(self, df: DataFrame, *, merge_schema: bool = False) -> int:
-        return self._lh.append(self.spark, self.path, df, merge_schema=merge_schema)
-
-    def append_idempotent(self, df: DataFrame, *, writer_id: str, batch_id: int) -> int:
-        """Exactly-once append keyed by (writer_id, batch_id) — the
-        foreachBatch sink primitive; redelivered batches are no-ops."""
-        return self._lh.append_idempotent(
-            self.spark, self.path, df, writer_id=writer_id, batch_id=batch_id
-        )
-
-    def read(self, version: int | None = None, *, ref: str | None = None) -> DataFrame:
-        return self._lh.read(self.spark, self.path, version, ref=ref)
-
-    # -- named refs (tags immutable, branches re-pointable) -----------
-    def create_ref(self, name: str, version: int | None = None, *, kind: str = "tag") -> dict:
-        """Tag/branch `name` at `version` (default head); read(ref=name)
-        resolves it, vacuum never reaps its target until drop_ref."""
-        return self._lh.create_ref(self.path, name, version, kind=kind)
-
-    def set_ref(self, name: str, version: int) -> dict:
-        """Atomically re-point a branch (the promote step); tags refuse."""
-        return self._lh.set_ref(self.path, name, version)
-
-    def drop_ref(self, name: str) -> None:
-        return self._lh.drop_ref(self.path, name)
-
-    def refs(self) -> dict:
-        return self._lh.list_refs(self.path)
-
-    def scan(
-        self,
-        *,
-        key_min=None,
-        key_max=None,
-        predicates: dict | None = None,
-        point: dict | None = None,
-        version: int | None = None,
-    ) -> DataFrame:
-        """Snapshot scan with manifest-stats file skipping (key range,
-        any stats-tracked column box, or bloom-indexed point lookup)."""
-        return self._lh.scan(
-            self.spark,
-            self.path,
-            key_min=key_min,
-            key_max=key_max,
-            predicates=predicates,
-            point=point,
-            version=version,
-        )
-
-    def scan_where(self, predicate: str, *, version: int | None = None) -> DataFrame:
-        """Predicate scan with automatic sargable-bounds file pruning."""
-        return self._lh.scan_where(self.spark, self.path, predicate, version=version)
-
-    def bloom_index(self, col: str, *, bits_per_row: int = 10, k: int = 7) -> int:
-        """Build a per-file bloom point-lookup index on `col`."""
-        return self._lh.bloom_index(
-            self.spark, self.path, col, bits_per_row=bits_per_row, k=k
-        )
-
-    def delete_where(
-        self,
-        predicate: str,
-        *,
-        prune: dict | str | None = "auto",
-        track_changes: bool = False,
-        deletion_vectors: bool = False,
-    ) -> int:
-        """DELETE; pruning bounds compile from the predicate by
-        default (prune="auto"). ``deletion_vectors=True`` switches
-        from copy-on-write to merge-on-read (positions recorded in a
-        log sidecar, zero data files rewritten — the trickle-delete
-        path; compact()/optimize() materializes later)."""
-        return self._lh.delete_where(
-            self.spark,
-            self.path,
-            predicate,
-            prune=prune,
-            track_changes=track_changes,
-            deletion_vectors=deletion_vectors,
-        )
-
-    def restore(self, version: int) -> int:
-        """Rewind the table to snapshot `version` as a new commit."""
-        return self._lh.restore(self.spark, self.path, version)
-
-    def add_constraint(self, name: str, expr: str) -> int:
-        return self._lh.add_constraint(self.spark, self.path, name, expr)
-
-    def drop_constraint(self, name: str) -> int:
-        return self._lh.drop_constraint(self.path, name)
-
-    def read_incremental(self, since_version: int, to_version: int | None = None) -> DataFrame:
-        """Rows in files added after `since_version` (up to `to_version`/head)."""
-        return self._lh.read_incremental(self.spark, self.path, since_version, to_version)
-
-    def merge_upsert(
-        self,
-        updates: DataFrame,
-        *,
-        track_changes: bool = False,
-        merge_schema: bool = False,
-    ) -> int:
-        return self._lh.merge_upsert(
-            self.spark,
-            self.path,
-            updates,
-            track_changes=track_changes,
-            merge_schema=merge_schema,
-        )
-
-    def read_changes(self, version: int) -> DataFrame:
-        """Row-level change feed of one commit (`_change_type` tagged)."""
-        return self._lh.read_changes(self.spark, self.path, version)
-
-    def replace_where(
-        self, predicate: str, df: DataFrame, *, track_changes: bool = False
-    ) -> int:
-        """Dynamic partition overwrite: atomically swap the partitions
-        the predicate selects for `df` (the idempotent-backfill verb)."""
-        return self._lh.replace_where(
-            self.spark, self.path, predicate, df, track_changes=track_changes
-        )
-
-    def partitions(self, version: int | None = None) -> list[dict]:
-        """Partition listing with file/row counts (manifest-only)."""
-        return self._lh.partitions(self.path, version)
-
-    def repartition_table(self, partition_by: list | None) -> int:
-        """Evolve the partition spec (or None to un-partition) as a
-        rewrite commit."""
-        return self._lh.repartition_table(self.spark, self.path, partition_by)
-
-    def compact(self, num_files: int = 1) -> int:
-        return self._lh.compact(self.spark, self.path, num_files)
-
-    def zorder_cluster(self, cols: list, num_files: int = 8) -> int:
-        """Rewrite the snapshot clustered by the Z-value of `cols` so
-        multi-column predicates prune files (Delta OPTIMIZE ZORDER)."""
-        return self._lh.zorder_cluster(self.spark, self.path, cols, num_files)
-
-    def vacuum(self, keep_last: int = 1) -> list[str]:
-        return self._lh.vacuum(self.path, keep_last)
-
-    def version(self) -> int:
-        return self._lh.current_version(self.path)
-
-    def history(self) -> list[dict]:
-        """Commit metadata for every retained version, oldest first:
-        the engine's history() (action, parent, operation metrics)
-        enriched with each snapshot's file/row totals."""
-        out = []
-        for h in self._lh.history(self.path):
-            m = self._lh.read_manifest(self.path, h["version"])
-            out.append(
-                {
-                    **h,
-                    "n_files": len(m["files"]),
-                    "n_rows": sum(f["rows"] for f in m["files"]),
-                }
-            )
-        return out
+    def __dir__(self) -> list[str]:
+        return [*super().__dir__(), *_VERBS, *_ALIASES]

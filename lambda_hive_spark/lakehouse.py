@@ -77,6 +77,7 @@ only ever touches manifests and footers.
 from __future__ import annotations
 
 import base64
+import functools
 import hashlib
 import json
 import os
@@ -960,24 +961,15 @@ def _bloom_admits(bitset_b64: str, positions: list[int]) -> bool:
     return all(bits[p // 8] & (1 << (p % 8)) for p in positions)
 
 
-_SIDECAR_CACHE: dict[str, dict] = {}
-_SIDECAR_CACHE_MAX = 8
-
-
+@functools.lru_cache(maxsize=8)
 def _load_sidecar(path: str) -> dict:
     """Sidecars are immutable once written (uuid-named, published by
     the commit that references them), so caching by path is always
     coherent; a small LRU bounds driver memory (a 15M-row index's
     sidecar is ~45 MB of b64 — re-parsing it per point probe was the
     dominant probe cost)."""
-    hit = _SIDECAR_CACHE.pop(path, None)
-    if hit is None:
-        with open(path) as fh:
-            hit = json.load(fh)["files"]
-    _SIDECAR_CACHE[path] = hit  # re-insert: most-recently-used last
-    while len(_SIDECAR_CACHE) > _SIDECAR_CACHE_MAX:
-        _SIDECAR_CACHE.pop(next(iter(_SIDECAR_CACHE)))
-    return hit
+    with open(path) as fh:
+        return json.load(fh)["files"]
 
 
 def plan_files(
@@ -2067,8 +2059,10 @@ def history(path: str) -> list[dict]:
     action, parent, and the operation metrics recorded at commit time
     (file/row adds+removes and the logical net_rows delta, all derived
     from manifest diffs — reading history costs log reads only, never
-    data I/O). Vacuumed versions are absent: history reaches exactly
-    as far as time travel does."""
+    data I/O), plus the snapshot's totals: `n_files` and `n_rows`
+    (physical rows: rows a deletion vector masks still count). Vacuumed
+    versions are absent: history reaches exactly as far as time travel
+    does."""
     head = current_version(path)
     out = []
     for v in range(1, head + 1):
@@ -2082,6 +2076,8 @@ def history(path: str) -> list[dict]:
                 "action": m.get("action"),
                 "parent": m.get("parent"),
                 "metrics": m.get("metrics", {}),
+                "n_files": len(m["files"]),
+                "n_rows": sum(f["rows"] for f in m["files"]),
             }
         )
     return out

@@ -92,11 +92,7 @@ def op(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()) -> Call
             from lambda_hive_spark.session import tune_runtime
 
             tune_runtime(spark)
-            import os
-
-            if "side_effect" in tags or os.environ.get(
-                "SPARK_GRAFT_PLAN_CACHE"
-            ) == "0":
+            if "side_effect" in tags:
                 return fn(spark, sf_dir)
             key = (
                 spark.sparkContext.applicationId,

@@ -52,6 +52,17 @@ _BROADCAST_THRESHOLD = str(64 * 1024 * 1024)
 _SHJ_LOCAL_MAP_THRESHOLD = str(256 * 1024 * 1024)
 
 
+# Runtime-settable parity/perf confs: the builder sets them on a
+# session we create, tune_runtime on one the driver hands us.
+_RUNTIME_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.optimizer.excludedRules": _EXCLUDED_OPT_RULES,
+    "spark.sql.autoBroadcastJoinThreshold": _BROADCAST_THRESHOLD,
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": _BROADCAST_THRESHOLD,
+    "spark.sql.adaptive.shuffledHashJoinLocalMapThreshold": _SHJ_LOCAL_MAP_THRESHOLD,
+}
+
+
 def get_spark(app_name: str = "lambda_hive_spark", shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -59,14 +70,10 @@ def get_spark(app_name: str = "lambda_hive_spark", shuffle_partitions: int | Non
     return (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=_RUNTIME_CONFS)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES)
-        .config("spark.sql.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
-        .config("spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", _SHJ_LOCAL_MAP_THRESHOLD)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -75,13 +82,8 @@ def get_spark(app_name: str = "lambda_hive_spark", shuffle_partitions: int | Non
 
 
 def tune_runtime(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable parity/perf confs to a session we did not
-    create (the driver hands us its own session in `__spark_entry__`)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.optimizer.excludedRules", _EXCLUDED_OPT_RULES)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", _BROADCAST_THRESHOLD)
-    spark.conf.set(
-        "spark.sql.adaptive.shuffledHashJoinLocalMapThreshold", _SHJ_LOCAL_MAP_THRESHOLD
-    )
+    """Apply the runtime confs to a session we did not create (the
+    driver hands us its own session in `__spark_entry__`)."""
+    for key, value in _RUNTIME_CONFS.items():
+        spark.conf.set(key, value)
     return spark

@@ -154,16 +154,18 @@ def run_available_now(
     Memory sink is the dev/test harness only — it collects to the
     driver. Production sinks are `to_parquet_sink` (below) or Kafka;
     the plan object is identical either way. The checkpoint is removed
-    once the drain ends: the result is the in-memory table.
+    and the sink's temp view dropped once the drain ends: the returned
+    frame, resolved before the drop, still reads the in-memory rows.
     """
     name = f"q_{uuid.uuid4().hex[:12]}"
     writer = df.writeStream.format("memory").queryName(name).outputMode(mode)
     ckpt = scratch_dir(name)
     try:
         drain(writer, name, ckpt, timeout_s)
+        return df.sparkSession.table(name)
     finally:
         scratch.clear_scratch(ckpt)
-    return df.sparkSession.table(name)
+        df.sparkSession.catalog.dropTempView(name)
 
 
 def to_parquet_sink(df: DataFrame, out_dir: str, timeout_s: int = 300) -> None:

@@ -202,3 +202,89 @@ def test_engine_lake_facade_partition_verbs(spark, tmp_path):
     with _pt.raises(ValueError):
         t.partitions()
     assert clone.read().count() == 30  # clone untouched by the rewrite
+
+
+def test_lake_facade_binds_every_lakehouse_verb(monkeypatch):
+    """LakeTable declares no lakehouse parameter list: every public
+    lakehouse function whose leading parameters are (spark, path),
+    (spark, source) or (path) is reachable with those bound, keeps
+    lakehouse's signature and docstring, and forwards its arguments
+    unchanged. JVM-free: the session is a bare object."""
+    import inspect
+
+    from lambda_hive_spark import lakehouse
+    from lambda_hive_spark.api import LakeTable
+
+    public = {
+        n: f
+        for n, f in vars(lakehouse).items()
+        if not n.startswith("_") and inspect.isfunction(f) and f.__module__ == lakehouse.__name__
+    }
+    leads = [("spark", "path"), ("spark", "source"), ("path",)]
+    verbs = {}
+    for n, f in public.items():
+        params = tuple(inspect.signature(f).parameters)
+        for lead in leads:
+            if params[: len(lead)] == lead:
+                verbs[n] = len(lead)
+                break
+    assert {"merge_upsert", "update_where", "optimize_small_files", "plan_files",
+            "read_manifest", "resolve_ref", "clone", "history"} <= set(verbs)
+    assert "compile_prune_box" in public and "compile_prune_box" not in verbs
+
+    spark = object()
+    t = LakeTable(spark, "/t")
+    auto = {"delete_where", "update_where"}
+    for n, k in verbs.items():
+        sig = inspect.signature(public[n])
+        params = list(sig.parameters.values())[k:]
+        if n in auto:
+            params = [p.replace(default="auto") if p.name == "prune" else p for p in params]
+        assert inspect.signature(getattr(t, n)) == sig.replace(parameters=params), n
+        assert getattr(t, n).__doc__ == public[n].__doc__, n
+    assert set(verbs) | {"version", "refs", "clone_to"} <= set(dir(t))
+
+    calls = []
+    for n in public:
+        monkeypatch.setattr(
+            lakehouse, n, lambda *a, _n=n, **kw: calls.append((_n, a, kw)) or _n
+        )
+    assert {n for n in public if hasattr(t, n)} == set(verbs)
+    for n, k in verbs.items():
+        assert getattr(t, n)(1, "x", flag=2) == n
+        bound = (spark, "/t") if k == 2 else ("/t",)
+        kw = {"prune": "auto", "flag": 2} if n in auto else {"flag": 2}
+        assert calls[-1] == (n, (*bound, 1, "x"), kw), n
+    t.delete_where("id > 1", prune=None)
+    assert calls[-1] == ("delete_where", (spark, "/t", "id > 1"), {"prune": None})
+    t.version()
+    assert calls[-1] == ("current_version", ("/t",), {})
+    t.refs()
+    assert calls[-1] == ("list_refs", ("/t",), {})
+    t.clone_to("/c")
+    assert calls[-1] == ("clone", (spark, "/t", "/c"), {})
+
+
+def test_engine_lake_facade_dv_update_optimize(spark, tmp_path):
+    """Verbs the facade used to lack, through Engine.lake: a DV merge,
+    update_where (auto-pruned) and optimize_small_files; history
+    reports each snapshot's physical n_rows."""
+    from pyspark.sql import functions as F
+
+    eng = Engine(sf_dir=SF_SMALL, spark=spark)
+    t = eng.lake(str(tmp_path / "dv_tbl"))
+    t.create(spark.range(10).select("id", (F.col("id") * 2).alias("v")), key="id")
+    t.merge_upsert(
+        spark.createDataFrame([(3, -1), (10, 20)], "id long, v long"),
+        deletion_vectors=True,
+    )
+    t.update_where("id >= 8", {"v": "v + 100"})
+    t.append(spark.range(11, 13).select("id", (F.col("id") * 2).alias("v")))
+    t.optimize_small_files(target_rows=100)
+    got = {r["id"]: r["v"] for r in t.read().collect()}
+    assert len(got) == 13 and got[3] == -1 and got[8] == 116 and got[10] == 120
+    assert got[12] == 24
+    hist = t.history()
+    assert [h["action"] for h in hist][:2] == ["create", "merge_dv"]
+    assert hist[1]["n_rows"] == 12  # 10 base rows (one DV-masked) + 2 upserted
+    assert hist[-1]["n_files"] == 1 and hist[-1]["n_rows"] == 13

@@ -18,7 +18,12 @@ def _fresh_plans(monkeypatch):
     compile-time plan, but a cached DataFrame another test already
     EXECUTED shows its AQE-final plan (isFinalPlan=true — exchanges
     reused/renumbered), making assertions order-dependent."""
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    from collections import OrderedDict
+
+    from lambda_hive_spark import registry
+
+    monkeypatch.setattr(registry, "_PLAN_CACHE", OrderedDict())
+    monkeypatch.setattr(registry, "_PLAN_CACHE_SIZE", 0)
 
 
 def _plan(spark, name: str) -> str:

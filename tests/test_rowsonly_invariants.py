@@ -224,14 +224,18 @@ def test_analyze_stats_contract(spark):
 def test_dedup_embedding_guard_refuses_oversized_corpus(spark, monkeypatch):
     """The exact all-pairs sibling must refuse to launch a cartesian
     beyond its row guard (VERDICT r3 item 5)."""
+    from collections import OrderedDict
+
     import pytest
 
+    from lambda_hive_spark import registry
     from lambda_hive_spark.operators import llm
 
     # The guard fires at plan-build time; a cached plan for this
     # (session, corpus) was already admitted under the REAL guard, so
     # bypass the plan cache to see the monkeypatched limit.
-    monkeypatch.setenv("SPARK_GRAFT_PLAN_CACHE", "0")
+    monkeypatch.setattr(registry, "_PLAN_CACHE", OrderedDict())
+    monkeypatch.setattr(registry, "_PLAN_CACHE_SIZE", 0)
     monkeypatch.setattr(llm, "_EMB_EXACT_MAX_ROWS", 1)
     with pytest.raises(ValueError, match="all-pairs"):
         OPS["dedup_embedding"].fn(spark, SF_SMALL).collect()

@@ -255,6 +255,17 @@ def test_stream_results_held_across_reinvocation(spark, tmp_path, monkeypatch):
     assert core.run_available_now(stream).count() == table(spark, SF_SMALL, "events").count()
 
 
+def test_run_available_now_drops_its_memory_sink(spark, tmp_path, monkeypatch):
+    """Each drain's `q_<uuid>` memory table leaves the catalog when the
+    drain ends, and the frames it returned still read their rows."""
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    n = table(spark, SF_SMALL, "events").count()
+    stream = core.events_stream(spark, core.landing_dir(SF_SMALL))
+    held = [core.run_available_now(stream) for _ in range(3)]
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("q_")] == []
+    assert [df.count() for df in held] == [n, n, n]
+
+
 def test_landing_dir_concurrent_first_build(tmp_path, monkeypatch):
     """Threads asking at once for a corpus's not-yet-built landing farm
     all get the one intact farm (no doubled rebuild)."""
