@@ -220,7 +220,7 @@ def _read_snapshot_files(
         F.col("_metadata.row_index").alias("_dv_pos"),
     )
     if dv_dirs:
-        dv = spark.read.parquet(*dv_dirs).select("_dv_file", "_dv_pos")
+        dv = spark.read.schema(_DV_SCHEMA).parquet(*dv_dirs)
         df = df.join(dv, ["_dv_file", "_dv_pos"], "left_anti")
     return df if pos else df.drop("_dv_file", "_dv_pos")
 
@@ -1248,9 +1248,21 @@ def _write_change_files(df: DataFrame, path: str) -> list[str]:
 
 
 _DV_PREFIX = "dv-"
+# A sidecar's columns, given to every sidecar read so Spark plans it
+# without a schema-inference job over the part files' footers.
+_DV_SCHEMA = "_dv_file string, _dv_pos long"
 
 
-def _write_dv(spark: SparkSession, path: str, m: dict, doomed: DataFrame):
+def _dv_parts(sidecar: str) -> list[str]:
+    """A sidecar's parquet part files, in name order."""
+    return [
+        os.path.join(sidecar, n)
+        for n in sorted(os.listdir(sidecar))
+        if n.endswith(".parquet") and not n.startswith((".", "_"))
+    ]
+
+
+def _write_dv(path: str, m: dict, doomed: DataFrame):
     """Record the ``doomed`` rows (a ``_read_snapshot_files(pos=True)``
     selection over snapshot ``m``) as deletion vectors: ONE parquet
     sidecar under the log holds their positions plus the prior
@@ -1261,14 +1273,30 @@ def _write_dv(spark: SparkSession, path: str, m: dict, doomed: DataFrame):
     row matched), each touched file's new ``dv`` field, and the files
     whose cumulative deletions reach their row count — those entries
     are dropped outright (the physical file stays for time travel
-    until vacuum)."""
-    counts = {
-        r["_dv_file"]: r["n"]
-        for r in doomed.groupBy("_dv_file")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()  # bounded: one row per touched FILE
-    }
+    until vacuum).
+
+    ``doomed`` is scanned ONCE, by the one Spark job of this function:
+    its positions are written to a fresh, unpublished sidecar dir
+    first. The rest runs on the driver with pyarrow, batch by batch,
+    over sidecar rows only (one row per deleted position, not per
+    scanned row, and no Spark job to plan): the per-file counts are
+    read from the new part files, then the prior positions of the hit
+    files are copied from their old sidecars into one more part file
+    of the same dir. When nothing matched, the dir is deleted."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    sidecar = os.path.join(_log_dir(path), f"{_DV_PREFIX}{uuid.uuid4().hex}")
+    doomed.select("_dv_file", "_dv_pos").write.mode("errorifexists").parquet(sidecar)
+    counts: dict[str, int] = {}
+    for part in _dv_parts(sidecar):
+        with pq.ParquetFile(part) as pf:
+            for batch in pf.iter_batches(columns=["_dv_file"]):
+                for vc in batch.column(0).value_counts().to_pylist():
+                    counts[vc["values"]] = counts.get(vc["values"], 0) + vc["counts"]
     if not counts:
+        shutil.rmtree(sidecar)
         return None, {}, set()
     at_read = {f["path"]: f for f in m["files"]}
     plain = {u: _plain_path(u) for u in counts}
@@ -1279,15 +1307,21 @@ def _write_dv(spark: SparkSession, path: str, m: dict, doomed: DataFrame):
             if at_read.get(p, {}).get("dv")
         }
     )
-    merged = doomed.select("_dv_file", "_dv_pos")
     if prior_dirs:
-        merged = merged.unionByName(
-            spark.read.parquet(*prior_dirs)
-            .select("_dv_file", "_dv_pos")
-            .filter(F.col("_dv_file").isin(list(counts)))
-        )
-    sidecar = os.path.join(_log_dir(path), f"{_DV_PREFIX}{uuid.uuid4().hex}")
-    merged.write.mode("errorifexists").parquet(sidecar)
+        schema = pa.schema([("_dv_file", pa.string()), ("_dv_pos", pa.int64())])
+        hit = pa.array(list(counts), pa.string())
+        prior = os.path.join(sidecar, f"part-prior-{uuid.uuid4().hex}.parquet")
+        # positions are unique per file: only the file column repeats
+        with pq.ParquetWriter(prior, schema, use_dictionary=["_dv_file"]) as out:
+            for part in (p for d in prior_dirs for p in _dv_parts(d)):
+                with pq.ParquetFile(part) as pf:
+                    for batch in pf.iter_batches(columns=schema.names):
+                        cols = [batch.column(n) for n in schema.names]
+                        kept = pa.record_batch(cols, schema=schema).filter(
+                            pc.is_in(cols[0], value_set=hit)
+                        )
+                        if kept.num_rows:
+                            out.write_batch(kept)
     new_dv: dict[str, dict] = {}
     full_drop: set[str] = set()
     for u, n in counts.items():
@@ -1441,8 +1475,21 @@ def merge_upsert(
                     f"merge batch adds columns {[f.name for f in batch_new]}; "
                     "pass merge_schema=True to evolve"
                 )
-        lo, hi = updates.agg(F.min(k), F.max(k)).collect()[0]
+        lo = hi = None
+        data: list[dict] = []
+        if deletion_vectors:
+            # MERGE-ON-READ appends the batch as it is, so it is written
+            # first and its key range read from the written files'
+            # footer stats: no min/max pass over the batch. Keys whose
+            # stats are not ints or strings still take that pass.
+            data = _write_data_files(updates, path, k, m.get("partition_by"))
+            ends = [(f["min_key"], f["max_key"]) for f in data if f["rows"]]
+            if ends and all(type(v) in (int, str) for e in ends for v in e):
+                lo, hi = min(e[0] for e in ends), max(e[1] for e in ends)
         if lo is None:
+            lo, hi = updates.agg(F.min(k), F.max(k)).collect()[0]
+        if lo is None:
+            _discard(path, [f["path"] for f in data])
             raise ValueError("merge_upsert: updates batch is empty")
         touched = sorted(f["path"] for f in _prune(m, predicates={k: (lo, hi)}))
         # MERGE-source joins carry NO broadcast hint: the source is
@@ -1459,7 +1506,7 @@ def merge_upsert(
             doomed = _read_snapshot_files(spark, m, touched, pos=True).join(
                 updates.select(k), on=k, how="left_semi"
             )
-            sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
+            sidecar, new_dv, drop = _write_dv(path, m, doomed)
             pre = doomed.drop("_dv_file", "_dv_pos")
         elif touched:
             # Read under the snapshot schema so pre-evolution files
@@ -1470,7 +1517,8 @@ def merge_upsert(
             batch = affected.join(
                 updates.select(k), on=k, how="left_anti"
             ).unionByName(updates, allowMissingColumns=True)
-        data = _write_data_files(batch, path, k, m.get("partition_by"))
+        if not deletion_vectors:
+            data = _write_data_files(batch, path, k, m.get("partition_by"))
         changes = None
         if track_changes:
             feed = updates.withColumn("_change_type", F.lit("insert"))
@@ -1565,7 +1613,7 @@ def delete_where(
         drop = set(touched)
         if touched and deletion_vectors:
             doomed = _read_snapshot_files(spark, m, touched, pos=True).filter(hit)
-            sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
+            sidecar, new_dv, drop = _write_dv(path, m, doomed)
             doomed = doomed.drop("_dv_file", "_dv_pos") if sidecar else None
         elif touched:
             affected = _read_snapshot_files(spark, m, touched)
@@ -1713,7 +1761,7 @@ def update_where(
         drop = set(touched)
         if touched and deletion_vectors:
             doomed = _read_snapshot_files(spark, m, touched, pos=True).filter(hit)
-            sidecar, new_dv, drop = _write_dv(spark, path, m, doomed)
+            sidecar, new_dv, drop = _write_dv(path, m, doomed)
             if sidecar:
                 matched = doomed.drop("_dv_file", "_dv_pos")
                 data = _write_data_files(
@@ -2036,7 +2084,11 @@ def zorder_cluster(
 def compact(spark: SparkSession, path: str, num_files: int = 1) -> int:
     """Rewrite the current snapshot into `num_files` files as a
     normal commit; older versions still resolve to the old files
-    (time travel across compaction). On a PARTITIONED table the
+    (time travel across compaction). Rows are hash-partitioned on the
+    table key, so each key lands in one file and the shuffle needs no
+    sort (a round-robin repartition sorts every row first to stay
+    deterministic on retry); a table with fewer distinct keys than
+    `num_files` gets fewer files. On a PARTITIONED table the
     clustering write supersedes `num_files`: the result is one file
     per partition tuple — the densest layout the partition contract
     allows."""
@@ -2046,7 +2098,10 @@ def compact(spark: SparkSession, path: str, num_files: int = 1) -> int:
         # Compact under the snapshot schema: the rewrite MATERIALIZES
         # evolved columns (null-filled for pre-evolution rows) so the
         # output files are self-describing at the current schema.
-        df = _read_snapshot_files(spark, m, old_paths).repartition(num_files)
+        df = _read_snapshot_files(spark, m, old_paths)
+        if not m.get("partition_by"):
+            # a partitioned write does its own clustering shuffle
+            df = df.repartition(num_files, m["key"])
         data = _write_data_files(df, path, m["key"], m.get("partition_by"))
         return _Rewrite("compact", old_paths, data)
 

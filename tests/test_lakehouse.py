@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import os
 import threading
+import uuid
 
 import pytest
 
@@ -1145,6 +1146,34 @@ def test_partitioned_merge_delete_compact_preserve_layout(spark, tmp_path):
     # pruning still exact after the rewrite chain
     planned = lh.plan_files(path, point={"bucket": 2})
     assert planned and all(f["partition"]["bucket"] == 2 for f in planned)
+
+
+def test_partitioned_compact_skips_the_round_robin_shuffle(spark, tmp_path, monkeypatch):
+    """On a partitioned table the clustering write's own shuffle sets
+    the layout, so compact hands it the snapshot read with no
+    repartition in front; an unpartitioned compact hash-partitions on
+    the key into num_files (no round-robin, whose shuffle sorts every
+    row first)."""
+    ppath, _ = _mk_part(spark, tmp_path)
+    upath = _mk(spark, tmp_path)
+    real = lh._write_data_files
+    plans = []
+
+    def spy(df, *a, **kw):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(lh, "_write_data_files", spy)
+    lh.compact(spark, ppath, num_files=2)
+    lh.compact(spark, upath, num_files=2)
+    partitioned, plain = plans
+    assert "Repartition" not in partitioned
+    assert "RepartitionByExpression [id#" in plain and "], 2" in plain
+    assert "Repartition 2" not in plain
+    assert len(lh.read_manifest(upath)["files"]) == 2
+    assert _rows(lh.read(spark, upath)) == [(i, i * 10) for i in range(100)]
+    assert lh.read(spark, ppath).count() == 100
+    assert all("partition" in f for f in lh.read_manifest(ppath)["files"])
 
 
 def test_partitioned_vacuum_reclaims_nested_dirs(spark, tmp_path):
@@ -2353,6 +2382,172 @@ def test_empty_partitioned_write_leaves_no_marker_dir(spark, tmp_path):
     lh.delete_where(spark, path, "b = 1", prune="auto")
     assert sorted(r["id"] for r in lh.read(spark, path).collect()) == [0, 2, 4, 6]
     assert _unreferenced(path) == []
+
+
+def _input_records(spark, call):
+    """Run call() under a job group of its own; return the input
+    records its non-skipped stages read, from the status store once
+    the listener bus has applied every event."""
+    sc = spark.sparkContext
+    group = f"fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    total = 0
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        info = sc.statusTracker().getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            try:
+                sd = store.lastStageAttempt(sid)
+            except Exception:  # noqa: BLE001 - the stage never got an attempt
+                continue
+            if sd.status().toString() != "SKIPPED":
+                total += sd.inputRecords()
+    return total
+
+
+def test_dv_delete_and_merge_read_the_touched_files_once(spark, tmp_path):
+    """A DV delete and a DV merge each read their touched files once:
+    the sidecar is written first and the per-file counts come from it,
+    so each verb's jobs read fewer than two tables' worth of records
+    (the sidecar reads are one row per deleted position)."""
+    path = _mk(spark, tmp_path, n=4000, files=4)
+    rows = sum(f["rows"] for f in lh.read_manifest(path)["files"])
+    deleted = _input_records(
+        spark, lambda: lh.delete_where(spark, path, "id % 100 = 0", deletion_vectors=True)
+    )
+    ups = spark.createDataFrame([(i, -1) for i in range(0, 4000, 50)], "id long, val long")
+    assert {f["path"] for f in lh.plan_files(path, key_min=0, key_max=3950)} == {
+        f["path"] for f in lh.read_manifest(path)["files"]
+    }, "the merge must touch every file"
+    merged = _input_records(
+        spark, lambda: lh.merge_upsert(spark, path, ups, deletion_vectors=True)
+    )
+    assert rows <= deleted < 2 * rows
+    assert rows <= merged < 2 * rows
+    got = dict(_rows(lh.read(spark, path)))
+    # 40 deleted ids re-inserted, 40 live ids updated
+    assert len(got) == 4000 and all(got[i] == -1 for i in range(0, 4000, 50))
+
+
+def test_dv_merge_prunes_on_the_written_batch_footers(spark, tmp_path, monkeypatch):
+    """A DV merge writes its batch first and prunes on the key range of
+    the written files' footer stats, so it runs no min/max pass over
+    the batch (DataFrame.agg fails here) and touches only the file
+    whose key range meets the batch's."""
+    path = str(tmp_path / "t")
+    df = spark.range(100).select(F.col("id").cast("long"), (F.col("id") * 10).alias("val"))
+    lh.create(spark, path, df.repartitionByRange(4, "id"), key="id")
+    ups = spark.createDataFrame([(3, -1), (7, -2)], "id long, val long")
+    hit = {f["path"] for f in lh.plan_files(path, key_min=3, key_max=7)}
+    assert len(hit) == 1
+
+    def no_agg(*a, **kw):
+        raise AssertionError("DV merge ran a min/max pass over its batch")
+
+    monkeypatch.setattr(type(ups), "agg", no_agg)
+    lh.merge_upsert(spark, path, ups, deletion_vectors=True)
+    monkeypatch.undo()
+    assert {f["path"] for f in lh.read_manifest(path)["files"] if f.get("dv")} == hit
+    got = dict(_rows(lh.read(spark, path)))
+    assert len(got) == 100 and got[3] == -1 and got[7] == -2 and got[4] == 40
+
+
+def test_dv_merge_on_a_double_key_equals_cow_merge(spark, tmp_path):
+    """A key whose footer stats are not ints or strings (a double)
+    takes the min/max pass instead; the DV merge still equals the COW
+    one."""
+    df = spark.range(60).select(
+        (F.col("id") * 1.5).alias("k"), F.col("id").alias("val")
+    ).repartitionByRange(3, "k")
+    ups = spark.createDataFrame([(15.0, -1), (105.0, -2)], "k double, val long")
+    tables = {}
+    for name, dv in (("cow", False), ("dv", True)):
+        p = str(tmp_path / name)
+        lh.create(spark, p, df, key="k")
+        lh.merge_upsert(spark, p, ups, deletion_vectors=dv)
+        tables[name] = sorted(tuple(r) for r in lh.read(spark, p).collect())
+    assert tables["dv"] == tables["cow"] and len(tables["dv"]) == 61
+    assert (15.0, -1) in tables["dv"] and (105.0, -2) in tables["dv"]
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_dv_merge_of_an_empty_batch_raises_and_writes_nothing(spark, tmp_path, partitioned):
+    """An empty batch refuses as before; the DV merge's batch files,
+    written before the key range is known, are deleted."""
+    if partitioned:
+        path, df = _mk_part(spark, tmp_path)
+        empty = df.limit(0)
+    else:
+        path = _mk(spark, tmp_path)
+        empty = spark.createDataFrame([], "id long, val long")
+    data_dirs = set(os.listdir(os.path.join(path, "data")))
+    with pytest.raises(ValueError, match="batch is empty"):
+        lh.merge_upsert(spark, path, empty, deletion_vectors=True)
+    assert set(os.listdir(os.path.join(path, "data"))) == data_dirs
+    assert lh.current_version(path) == 1
+
+
+def _sidecar_positions(spark, sidecar):
+    """{manifest path: (positions, distinct positions)} a sidecar holds."""
+    return {
+        lh._plain_path(r["_dv_file"]): (r["n"], r["d"])
+        for r in spark.read.parquet(sidecar)
+        .groupBy("_dv_file")
+        .agg(F.count("_dv_pos").alias("n"), F.countDistinct("_dv_pos").alias("d"))
+        .collect()
+    }
+
+
+def test_dv_sidecar_holds_exactly_each_entry_deleted_count(spark, tmp_path):
+    """DV delete, repeat DV delete, DV merge, DV update on one table:
+    after every step each dv'd entry's ``deleted`` equals the distinct
+    positions its sidecar holds for it, and the table reads row for
+    row like its copy-on-write twin."""
+    p_cow, p_dv = str(tmp_path / "cow"), str(tmp_path / "dv")
+    df = spark.range(200).select(
+        F.col("id").cast("long"), (F.col("id") * 10).alias("val")
+    ).repartition(4)
+    lh.create(spark, p_cow, df, key="id")
+    lh.create(spark, p_dv, df, key="id")
+    steps = [
+        lambda p, dv: lh.delete_where(spark, p, "id % 7 = 0", deletion_vectors=dv),
+        lambda p, dv: lh.delete_where(spark, p, "id % 5 = 0", deletion_vectors=dv),
+        lambda p, dv: lh.merge_upsert(spark, p, _merge_batch(spark), deletion_vectors=dv),
+        lambda p, dv: lh.update_where(
+            spark, p, "id % 3 = 0", {"val": "val + 1"}, deletion_vectors=dv
+        ),
+    ]
+    for step in steps:
+        step(p_cow, False)
+        step(p_dv, True)
+        dvd = [f for f in lh.read_manifest(p_dv)["files"] if f.get("dv")]
+        assert dvd, "no dv recorded"
+        for f in dvd:
+            n, d = _sidecar_positions(spark, f["dv"]["sidecar"])[f["path"]]
+            assert n == d == f["dv"]["deleted"], f["path"]
+        assert _rows(lh.read(spark, p_dv)) == _rows(lh.read(spark, p_cow))
+
+
+def test_dv_verbs_matching_no_row_leave_no_sidecar(spark, tmp_path):
+    """A DV delete, update and merge whose touched files hold no
+    matching row write a sidecar first and must delete it: no
+    ``_log/dv-*`` dir is left, and no entry gains a dv."""
+    path = _mk(spark, tmp_path, n=100, files=4)
+    lh.delete_where(spark, path, "id = 50")  # a key gap inside every file's range
+    lh.delete_where(spark, path, "id = 50", deletion_vectors=True)
+    lh.update_where(spark, path, "id = 50", {"val": "-1"}, deletion_vectors=True)
+    lh.merge_upsert(
+        spark, path, spark.createDataFrame([(50, -1)], "id long, val long"),
+        deletion_vectors=True,
+    )
+    assert not [n for n in os.listdir(lh._log_dir(path)) if n.startswith(lh._DV_PREFIX)]
+    assert not any(f.get("dv") for f in lh.read_manifest(path)["files"])
+    assert _rows(lh.read(spark, path)) == [(i, -1 if i == 50 else i * 10) for i in range(100)]
 
 
 # ---------------------------------------------------------------------------
