@@ -158,6 +158,25 @@ def ivf_knn(spark: SparkSession, sf_dir: str, nprobe: int = N_PROBE) -> DataFram
     )
 
 
+# The cell assignment every IVF oracle replays, over a `vscore`
+# (vec_id, cell, cdot) CTE: each vector's nearest cell (`assign`) and
+# the first ten queries' `nprobe` nearest cells (`qcells`), ties to the
+# lower cell. A format template: the caller fills in `nprobe`.
+IVF_ASSIGN_CTES = """assign AS (
+  SELECT vec_id, cell FROM (
+    SELECT vec_id, cell,
+           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
+    FROM vscore
+  ) WHERE rn = 1
+),
+qcells AS (
+  SELECT vec_id AS query_id, cell FROM (
+    SELECT vec_id, cell,
+           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
+    FROM vscore WHERE vec_id < 10
+  ) WHERE rn <= {nprobe}
+)"""
+
 # IVF pipeline as composable DuckDB CTE text — reused verbatim by
 # sim_recall_eval's oracle so both engines replay the identical index.
 IVF_ORACLE_CTES = f"""ex AS (
@@ -171,20 +190,7 @@ vscore AS (
   FROM ex e JOIN cent c ON e.pos = c.pos
   GROUP BY e.vec_id, c.cell
 ),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
-    FROM vscore
-  ) WHERE rn = 1
-),
-qcells AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
-    FROM vscore WHERE vec_id < 10
-  ) WHERE rn <= {N_PROBE}
-),
+{IVF_ASSIGN_CTES.format(nprobe=N_PROBE)},
 cand AS (
   SELECT qc.query_id, a.vec_id AS neighbor_id
   FROM qcells qc JOIN assign a ON a.cell = qc.cell AND a.vec_id <> qc.query_id

@@ -18,17 +18,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lambda_hive_spark.operators.extras import RP_PAIRS_ORACLE
-from lambda_hive_spark.operators.llm import _SQL_SHINGLES, dedup_ngram_jaccard
+from lambda_hive_spark.operators.llm import (
+    _SQL_SHARED_PAIRS,
+    _SQL_SHINGLES,
+    dedup_ngram_jaccard,
+)
 from lambda_hive_spark.registry import op
 
 # Shared oracle prefix: the exact-Jaccard pair graph (doc_a < doc_b),
 # same construction as _JACCARD_ORACLE / _CLUSTERS_ORACLE in llm.py.
 _SQL_SIM_EDGES = f"""
 sh AS (SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM documents),
-e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+{_SQL_SHARED_PAIRS}
   GROUP BY a.doc_id, b.doc_id
 ),
 sim AS (

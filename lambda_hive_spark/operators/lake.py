@@ -30,7 +30,14 @@ from lambda_hive_spark import catalog as cat
 from lambda_hive_spark import lakehouse as lh
 from lambda_hive_spark.helpers import dbl, dec, dot, dsum, sql_dot, sql_dsum
 from lambda_hive_spark.io import table
-from lambda_hive_spark.operators.extras import K_NN, N_PROBE, assign_cells, ivf_index, nearest_cells
+from lambda_hive_spark.operators.extras import (
+    IVF_ASSIGN_CTES,
+    K_NN,
+    N_PROBE,
+    assign_cells,
+    ivf_index,
+    nearest_cells,
+)
 from lambda_hive_spark.registry import op
 from lambda_hive_spark.scratch import fresh
 from lambda_hive_spark.streaming import core
@@ -1353,20 +1360,7 @@ vscore AS (
   FROM cex e JOIN cent c ON e.pos = c.pos
   GROUP BY e.vec_id, c.cell
 ),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
-    FROM vscore
-  ) WHERE rn = 1
-),
-qcells AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
-    FROM vscore WHERE vec_id < 10
-  ) WHERE rn <= {nprobe}
-),
+""" + IVF_ASSIGN_CTES + """,
 cand AS (
   SELECT qc.query_id, a.vec_id AS neighbor_id
   FROM qcells qc JOIN assign a ON a.cell = qc.cell AND a.vec_id <> qc.query_id
@@ -1502,20 +1496,7 @@ vscore AS (
   FROM cex e JOIN cent c ON e.pos = c.pos
   GROUP BY e.vec_id, c.cell
 ),
-assign AS (
-  SELECT vec_id, cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
-    FROM vscore
-  ) WHERE rn = 1
-),
-qcells AS (
-  SELECT vec_id AS query_id, cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cdot DESC, cell ASC) AS rn
-    FROM vscore WHERE vec_id < 10
-  ) WHERE rn <= {N_PROBE}
-),
+{IVF_ASSIGN_CTES.format(nprobe=N_PROBE)},
 sub AS (
   SELECT vec_id, s.s AS s, k.k AS k,
          list_reduce(list_transform(range(1, {_PQ_DIM} + 1),

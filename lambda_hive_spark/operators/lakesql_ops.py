@@ -70,8 +70,8 @@ def lake_sql_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
     with time-travel SELECT COUNT(*) … VERSION AS OF n statements
     asserting each historical snapshot in between, DESCRIBE HISTORY
     asserting the commit ledger (UPDATE's net_rows = 0), and one
-    inline refusal probe (a conditional WHEN MATCHED AND must raise —
-    the strict grammar is part of the surface). The returned head is
+    inline refusal probe (a conditional WHEN MATCHED AND must raise
+    lake_sql's ValueError naming the construct). The returned head is
     the post-MERGE snapshot; the oracle composes the same three
     mutations relationally (CASE → WHERE NOT → NOT IN/UNION), so a
     parse bug, a mis-dispatched verb, or a drifted predicate semantics

@@ -58,6 +58,14 @@ _SQL_SHINGLES = (
     "i -> array_to_string((string_split(text,' '))[i:i+2], ' ')))"
 )
 
+# The exact-Jaccard pair CTEs every near-dup oracle shares, over an
+# `sh` (doc_id, shingles) CTE: `pairs` counts the shingles each two
+# docs share (doc_a < doc_b); the caller closes it with its GROUP BY.
+_SQL_SHARED_PAIRS = """e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+pairs AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
+  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id"""
+
 
 def _docs_with_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return par_table(spark, sf_dir, "documents").select(
@@ -96,10 +104,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JACCARD_ORACLE = f"""
 WITH sh AS (SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM documents),
-e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+{_SQL_SHARED_PAIRS}
   GROUP BY a.doc_id, b.doc_id
 )
 SELECT p.doc_a, p.doc_b,
@@ -1100,10 +1105,7 @@ def multimodal_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CLUSTERS_ORACLE = f"""
 WITH RECURSIVE
 sh AS (SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM documents),
-e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+{_SQL_SHARED_PAIRS}
   GROUP BY a.doc_id, b.doc_id
 ),
 sim AS (
@@ -1171,10 +1173,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH RECURSIVE
 sh AS (SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM documents),
-e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+{_SQL_SHARED_PAIRS}
   GROUP BY a.doc_id, b.doc_id
 ),
 sim AS (
@@ -1561,10 +1560,7 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_threshold_sweep",
     oracle=f"""
 WITH sh AS (SELECT doc_id, {_SQL_SHINGLES} AS shingles FROM documents),
-e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+{_SQL_SHARED_PAIRS}
   GROUP BY a.doc_id, b.doc_id
 ),
 jac AS (

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from lambda_hive_spark.helpers import sql_dsum
 from lambda_hive_spark.io import table
+from lambda_hive_spark.operators.llm import _SQL_SHARED_PAIRS
 from lambda_hive_spark.registry import op
 
 
@@ -425,7 +426,7 @@ def pipeline_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op(
     "pipeline_dedup_report",
-    oracle="""
+    oracle=f"""
 WITH sh AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, len(string_split(text,' ')) - 1),
@@ -437,10 +438,7 @@ exact_groups AS (
          CAST(SUM(CASE WHEN cnt > 1 THEN cnt - 1 ELSE 0 END) AS BIGINT) AS n_removable
   FROM (SELECT COUNT(*) AS cnt FROM documents GROUP BY md5(text))
 ),
-e AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS shared
-  FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+{_SQL_SHARED_PAIRS}
   GROUP BY 1, 2
 ),
 near AS (

@@ -259,10 +259,6 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_SUB, _PQ_K, _PQ_DIM = 4, 16, 16
 
 
-def _pq_centroid(s: int, k: int, d: int) -> float:
-    return ((s * 131 + k * 17 + d * 7) % 21 - 10) / 10.0
-
-
 # The ONE SQL definition of the PQ encoder (codebook distances +
 # argmin tie-break), shared by vec_pq_encode's oracle and
 # vec_pq_recall_eval's oracle so the recall gate provably evaluates

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lambda_hive_spark import lakehouse as lh
 from lambda_hive_spark.io import table
 from lambda_hive_spark.registry import op
 from lambda_hive_spark.streaming import core, plans
@@ -216,24 +217,24 @@ WHERE rn = 1
     tags=("side_effect",),
 )
 def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming MERGE/upsert via foreachBatch: each micro-batch is
-    merged into a keyed parquet state table (latest event per user,
-    ties on the µs timestamp broken by event_id) with read-merge-swap
-    — the canonical pattern for maintaining a serving table from a
-    stream when the sink has no native MERGE. The oracle recomputes
-    the same latest-per-user state relationally, so the gate proves
-    the stream upsert lost/duplicated nothing.
+    """Streaming MERGE/upsert via foreachBatch: the micro-batches'
+    latest event per user (ties on the µs timestamp broken by
+    event_id) is kept in a lake table keyed on user_id
+    (plans.run_upsert): the first batch creates it, and each later
+    batch looks up the stored rows of its key range and commits the
+    rows that beat them with the lake's deletion-vector MERGE. The
+    oracle recomputes the same latest-per-user state relationally, so
+    the gate proves the stream upsert lost/duplicated nothing.
 
-    Scale notes: per batch this shuffles only on user_id (window
-    dedup), and the swap is a directory rename — at 100 TB you'd swap
-    in a transactional table format (Delta/Iceberg MERGE) and
-    partition state by key bucket so each batch touches only dirty
-    partitions; the plan shape (dedup batch → merge into keyed state)
-    is identical. Ranks on µs-truncated event time to match the
-    ns→µs stream source conversion (streaming/core.py module doc)."""
+    Scale notes: each commit is one manifest publish, so readers never
+    see a missing or partial state. A batch reads and DV-stamps only
+    the state files its key range meets, which is fewer than all of
+    them only on a key-clustered state fed key-local batches. Ranks on
+    µs-truncated event time to match the ns→µs stream source
+    conversion (streaming/core.py module doc)."""
     stream = core.events_stream(spark, core.landing_dir(sf_dir))
     state_path = plans.run_upsert(stream, core.scratch_dir("upsert-state"))
-    return spark.read.parquet(state_path).select("user_id", "event_id", "value")
+    return lh.read(spark, state_path).select("user_id", "event_id", "value")
 
 
 @op(
@@ -265,11 +266,15 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
     name = f"prog_{_uuid.uuid4().hex[:10]}"
-    query = core.drain(
-        agg.writeStream.format("memory").queryName(name).outputMode("complete"),
-        "stream_progress_metrics",
-        core.scratch_dir("prog_ckpt"),
-    )
+    try:
+        query = core.drain(
+            agg.writeStream.format("memory").queryName(name).outputMode("complete"),
+            "stream_progress_metrics",
+            core.scratch_dir("prog_ckpt"),
+        )
+        n_types = spark.table(name).count()
+    finally:
+        spark.catalog.dropTempView(name)
     progress = query.recentProgress
     total_in = sum(int(p["numInputRows"]) for p in progress)
     n_batches = len([p for p in progress if int(p["numInputRows"]) > 0])
@@ -277,7 +282,6 @@ def stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     for p in progress:
         for so in p.get("stateOperators", []):
             state_rows = max(state_rows, int(so.get("numRowsTotal", 0)))
-    n_types = spark.table(name).count()
     return spark.createDataFrame(
         [(total_in, n_batches >= 1, state_rows == n_types, n_types)],
         "total_input_rows long, batches_ok boolean, state_ok boolean, n_groups long",
@@ -309,13 +313,8 @@ def stream_sink_lake(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern that replaces stream_sink's file-sink checkpoint coupling:
     dedup state lives in the TABLE, so any number of restarts, from
     any checkpoint state, cannot double-land a batch."""
-    import shutil as _shutil
-
-    from lambda_hive_spark import lakehouse as lh
-
     cols = ("event_id", "user_id", "event_type", "value")
     tbl = core.scratch_dir("lakesink")
-    _shutil.rmtree(tbl, ignore_errors=True)
     seed = spark.createDataFrame(
         [], "event_id long, user_id long, event_type string, value double"
     ).repartition(1)

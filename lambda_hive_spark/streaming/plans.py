@@ -14,16 +14,25 @@ watermark evicts closed windows; `dropDuplicates` state is likewise
 watermark-bounded. Without a watermark those operators would
 accumulate state forever at 100 TB — every streaming test runs them
 watermarked.
+
+The per-user state machine is one fold (`_fold`) shared by the batch
+twin and both streaming operators; `run_upsert` keeps its state in a
+lake table, one deletion-vector MERGE commit per micro-batch.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import os
+from typing import Iterable, Iterator
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
+
+from lambda_hive_spark import lakehouse as lh
+from lambda_hive_spark.streaming import core
 
 STATEFUL_SCHEMA = "user_id long, n_events long, purchases_since_error long"
 
@@ -142,22 +151,28 @@ def purchase_error_join(
     ).select("purchase_id", "user_id", "error_id", "p_ts", "e_ts")
 
 
-def _stateful_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Shared per-user state transition: fold events in ts order,
-    counting purchases and resetting on each error."""
-    pdf = pdf.sort_values("ts")
-    purchases = 0
-    for et in pdf["event_type"]:
+def _fold(
+    chunks: Iterable[pd.DataFrame], n_events: int = 0, purchases: int = 0
+) -> tuple[int, int]:
+    """The per-user state transition, shared by the batch twin and both
+    streaming operators: from the carried (n_events,
+    purchases_since_error), count the group's rows and fold their
+    event types in ts order, counting purchases and resetting on each
+    error. The chunks are concatenated before the one sort, so a group
+    delivered in any number of Arrow chunks, in any order, folds as one."""
+    rows = pd.concat(list(chunks)).sort_values("ts")
+    for et in rows["event_type"]:
         if et == "error":
             purchases = 0
         elif et == "purchase":
             purchases += 1
+    return n_events + len(rows), purchases
+
+
+def _state_row(user_id, state: tuple[int, int]) -> pd.DataFrame:
+    """One STATEFUL_SCHEMA output row."""
     return pd.DataFrame(
-        {
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n_events": [len(pdf)],
-            "purchases_since_error": [purchases],
-        }
+        [(user_id, *state)], columns=["user_id", "n_events", "purchases_since_error"]
     )
 
 
@@ -165,7 +180,9 @@ def stateful_batch(events: DataFrame) -> DataFrame:
     """Batch twin of the streaming stateful op: per-user running state
     (purchases since the last error), computed with Arrow-batched
     `applyInPandas` — one group per user, no driver collect."""
-    return events.groupBy("user_id").applyInPandas(_stateful_pdf, STATEFUL_SCHEMA)
+    return events.groupBy("user_id").applyInPandas(
+        lambda key, pdf: _state_row(key[0], _fold([pdf])), STATEFUL_SCHEMA
+    )
 
 
 def stateful_stream(events: DataFrame, timeout_conf: str = "NoTimeout") -> DataFrame:
@@ -187,22 +204,9 @@ def stateful_stream(events: DataFrame, timeout_conf: str = "NoTimeout") -> DataF
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        n_events, purchases = state.get if state.exists else (0, 0)
-        rows = pd.concat(list(pdfs)).sort_values("ts")
-        n_events += len(rows)
-        for et in rows["event_type"]:
-            if et == "error":
-                purchases = 0
-            elif et == "purchase":
-                purchases += 1
-        state.update((n_events, purchases))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n_events],
-                "purchases_since_error": [purchases],
-            }
-        )
+        folded = _fold(pdfs, *(state.get if state.exists else (0, 0)))
+        state.update(folded)
+        yield _state_row(key[0], folded)
 
     return events.groupBy("user_id").applyInPandasWithState(
         update,
@@ -258,25 +262,10 @@ def stateful_stream_tws(events: DataFrame) -> DataFrame:
             self._state = handle.getValueState("purchase_state", schema)
 
         def handleInputRows(self, key, rows, timerValues):
-            n_events, purchases = (
-                self._state.get() if self._state.exists() else (0, 0)
-            )
-            for pdf in rows:
-                pdf = pdf.sort_values("ts")
-                n_events += len(pdf)
-                for et in pdf["event_type"]:
-                    if et == "error":
-                        purchases = 0
-                    elif et == "purchase":
-                        purchases += 1
-            self._state.update((n_events, purchases))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "purchases_since_error": [purchases],
-                }
-            )
+            carried = self._state.get() if self._state.exists() else (0, 0)
+            folded = _fold(rows, *carried)
+            self._state.update(folded)
+            yield _state_row(key[0], folded)
 
         def close(self) -> None:
             pass
@@ -290,49 +279,59 @@ def stateful_stream_tws(events: DataFrame) -> DataFrame:
 
 
 def run_upsert(stream: DataFrame, state_dir: str, timeout_s: int = 300) -> str:
-    """foreachBatch MERGE runner: maintain a latest-event-per-user
-    parquet state table from an events stream (read-merge-swap per
-    micro-batch; ties on ts broken by event_id). Returns the state
-    table path. The swap is two renames, so a concurrent reader sees
-    either the old or the new state, never a partial write. At 100 TB
-    the same batch plan targets a transactional MERGE instead."""
-    import os
-    import shutil
+    """foreachBatch MERGE runner: keep the latest event per user (µs
+    ts, then event_id) in a lake table keyed on user_id at
+    `<state_dir>/state` and return its path. The first micro-batch's
+    latest row per user creates the table. Each later batch's latest
+    rows are compared with the stored rows of the batch's key range
+    (a `lakehouse.scan`, whose manifest stats admit only the files
+    that range touches) and the rows that beat them commit in one
+    deletion-vector MERGE, which appends them as one file. A batch
+    with no winning row, such as a replay from a fresh checkpoint,
+    commits nothing (latest-wins is idempotent: no batch ledger).
+    Once created, the table is never missing: readers see one whole
+    version or the next.
 
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    state_path = os.path.join(state_dir, "state")
+    The lookup and the MERGE's match scan read only the files whose
+    key range meets the batch's, so a batch costs the files its keys
+    touch only when the state is key-clustered and the batch
+    key-local; batches of users spread over the whole key range read
+    every file. The state gains one file per committing batch until
+    `lakehouse.compact` rewrites it."""
+    cols = ["user_id", "event_id", "value", "ts"]
+    state = os.path.join(state_dir, "state")
+    spark = stream.sparkSession
+    newest = F.struct("ts", "event_id")
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        cols = ["user_id", "event_id", "value", "ts"]
-        incoming = batch_df.select(*cols)
-        if os.path.isdir(state_path):
-            incoming = sess.read.parquet(state_path).select(*cols).unionByName(incoming)
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
+        batch = batch_df.select(*cols).withColumn("rn", F.row_number().over(w))
+        batch = batch.filter(F.col("rn") == 1).drop("rn")
+        if not lh.current_version(state):
+            lh.create(spark, state, batch.coalesce(1), key="user_id")
+            return
+        # Both frames are checkpointed: the batch feeds the key range
+        # and the lookup, the winners the check and both MERGE jobs.
+        batch = batch.localCheckpoint()
+        lo, hi = batch.agg(F.min("user_id"), F.max("user_id")).first()
+        if lo is None:
+            return
+        stored = lh.scan(spark, state, key_min=lo, key_max=hi).select(
+            "user_id", newest.alias("stored")
         )
-        merged = (
-            incoming.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
+        wins = (
+            batch.join(stored, "user_id", "left")
+            .filter(F.col("stored").isNull() | (newest > F.col("stored")))
+            .drop("stored")
+            .localCheckpoint()
         )
-        staging = state_path + f".staging-{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        old = state_path + f".old-{batch_id}"
-        if os.path.isdir(state_path):
-            os.rename(state_path, old)
-        os.rename(staging, state_path)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        if not wins.isEmpty():
+            lh.merge_upsert(spark, state, wins.coalesce(1), deletion_vectors=True)
 
-    from lambda_hive_spark.streaming import core as _core
-
-    _core.drain(
+    core.drain(
         stream.writeStream.foreachBatch(merge_batch),
         "run_upsert",
         os.path.join(state_dir, "ckpt"),
         timeout_s,
     )
-    return state_path
+    return state

@@ -268,23 +268,30 @@ def test_lake_facade_binds_every_lakehouse_verb(monkeypatch):
 def test_engine_lake_facade_dv_update_optimize(spark, tmp_path):
     """Verbs the facade used to lack, through Engine.lake: a DV merge,
     update_where (auto-pruned) and optimize_small_files; history
-    reports each snapshot's physical n_rows."""
+    reports each snapshot's physical n_rows. The base table is written
+    as one 10-row file, then as ten 1-row files: a DV that deletes a
+    file's only row drops its entry, so n_rows after the merge counts
+    that file's row out."""
     from pyspark.sql import functions as F
 
     eng = Engine(sf_dir=SF_SMALL, spark=spark)
-    t = eng.lake(str(tmp_path / "dv_tbl"))
-    t.create(spark.range(10).select("id", (F.col("id") * 2).alias("v")), key="id")
-    t.merge_upsert(
-        spark.createDataFrame([(3, -1), (10, 20)], "id long, v long"),
-        deletion_vectors=True,
-    )
-    t.update_where("id >= 8", {"v": "v + 100"})
-    t.append(spark.range(11, 13).select("id", (F.col("id") * 2).alias("v")))
-    t.optimize_small_files(target_rows=100)
-    got = {r["id"]: r["v"] for r in t.read().collect()}
-    assert len(got) == 13 and got[3] == -1 and got[8] == 116 and got[10] == 120
-    assert got[12] == 24
-    hist = t.history()
-    assert [h["action"] for h in hist][:2] == ["create", "merge_dv"]
-    assert hist[1]["n_rows"] == 12  # 10 base rows (one DV-masked) + 2 upserted
-    assert hist[-1]["n_files"] == 1 and hist[-1]["n_rows"] == 13
+    for n_files, merged_rows in ((1, 12), (10, 11)):
+        t = eng.lake(str(tmp_path / f"dv_tbl_{n_files}"))
+        base = spark.range(0, 10, 1, n_files)
+        t.create(base.select("id", (F.col("id") * 2).alias("v")), key="id")
+        assert len(t.plan_files()) == n_files
+        t.merge_upsert(
+            spark.createDataFrame([(3, -1), (10, 20)], "id long, v long"),
+            deletion_vectors=True,
+        )
+        t.update_where("id >= 8", {"v": "v + 100"})
+        t.append(spark.range(11, 13).select("id", (F.col("id") * 2).alias("v")))
+        t.optimize_small_files(target_rows=100)
+        got = {r["id"]: r["v"] for r in t.read().collect()}
+        assert len(got) == 13 and got[3] == -1 and got[8] == 116 and got[10] == 120
+        assert got[12] == 24
+        hist = t.history()
+        assert [h["action"] for h in hist][:2] == ["create", "merge_dv"]
+        # 10 base rows (id 3 DV-masked, or dropped with its 1-row file) + 2 upserted
+        assert hist[1]["n_rows"] == merged_rows
+        assert hist[-1]["n_files"] == 1 and hist[-1]["n_rows"] == 13

@@ -18,6 +18,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from lambda_hive_spark import lakehouse
 from lambda_hive_spark.io import table
 from lambda_hive_spark.streaming import core, plans
 from tests.conftest import SF_SMALL
@@ -115,6 +116,23 @@ def test_streaming_dedup_under_redelivery(spark, events_batch, arrival_dirs, tmp
     got = core.run_available_now(plans.dedup(stream, watermark="30 days"))
     assert got.count() == events_batch.count()
     assert got.select(F.count_distinct("event_id")).collect()[0][0] == events_batch.count()
+
+
+def test_fold_ignores_chunking_and_chunk_order():
+    """The per-user fold sorts a group's rows once, across its chunks:
+    a group delivered as out-of-order chunks folds to the same state
+    as the whole group (sorting each chunk on its own would end at 0
+    purchases here, counting the error last)."""
+    import pandas as pd
+
+    ts = pd.to_datetime(["2024-01-01 00:00", "2024-01-01 00:01", "2024-01-01 00:02",
+                         "2024-01-01 00:03", "2024-01-01 00:04"])
+    group = pd.DataFrame(
+        {"ts": ts, "event_type": ["purchase", "error", "view", "purchase", "purchase"]}
+    )
+    chunks = [group.iloc[[4, 2]], group.iloc[[3]], group.iloc[[1, 0]]]
+    assert plans._fold([group]) == plans._fold(chunks) == (5, 2)
+    assert plans._fold(chunks, 7, 4) == (12, 2)
 
 
 def test_stateful_stream_matches_batch_twin(spark, events_batch, arrival_dirs):
@@ -264,6 +282,18 @@ def test_run_available_now_drops_its_memory_sink(spark, tmp_path, monkeypatch):
     held = [core.run_available_now(stream) for _ in range(3)]
     assert [t.name for t in spark.catalog.listTables() if t.name.startswith("q_")] == []
     assert [df.count() for df in held] == [n, n, n]
+
+
+def test_stream_progress_metrics_drops_its_memory_sink(spark, tmp_path, monkeypatch):
+    """Each call's `prog_<uuid>` memory table leaves the catalog when
+    the op returns."""
+    from lambda_hive_spark.registry import all_ops
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", str(tmp_path / "scratch"))
+    op = all_ops()["stream_progress_metrics"]
+    for _ in range(3):
+        op.fn(spark, SF_SMALL).collect()
+    assert [t.name for t in spark.catalog.listTables() if t.name.startswith("prog_")] == []
 
 
 def test_landing_dir_concurrent_first_build(tmp_path, monkeypatch):
@@ -611,14 +641,20 @@ def test_foreachbatch_upsert_multi_batch(spark, events_batch, arrival_dirs, tmp_
     """The upsert state after 3 single-file micro-batches equals the
     batch latest-per-user twin — i.e. the incremental MERGE converges
     to the same table a full recompute would produce, across batch
-    boundaries (the single-batch case is covered by the op's oracle)."""
+    boundaries (the single-batch case is covered by the op's oracle).
+    Each batch adds exactly one data file to the state."""
     from pyspark.sql import Window
 
     stream = core.events_stream(spark, arrival_dirs, max_files_per_trigger=1)
     state_path = plans.run_upsert(stream, str(tmp_path / "upsert-state"))
-    got = _rows(
-        spark.read.parquet(state_path).select("user_id", "event_id", "value")
-    )
+    got = _rows(lakehouse.read(spark, state_path).select("user_id", "event_id", "value"))
+    files = [
+        {f["path"] for f in lakehouse.read_manifest(state_path, v)["files"]}
+        for v in range(1, lakehouse.current_version(state_path) + 1)
+    ]
+    assert len(files) == 3
+    added = [files[0]] + [b - a for a, b in zip(files, files[1:])]
+    assert [len(a) for a in added] == [1, 1, 1]
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
     )
@@ -628,6 +664,103 @@ def test_foreachbatch_upsert_multi_batch(spark, events_batch, arrival_dirs, tmp_
         .select("user_id", "event_id", "value")
     )
     assert got == want
+
+
+def _latest_rows(events):
+    """(user_id, event_id, value) of each user's latest event."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
+    return _rows(
+        events.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "event_id", "value")
+    )
+
+
+def test_upsert_state_complete_inside_commit_window(spark, arrival_dirs, tmp_path, monkeypatch):
+    """A reader of the upsert state at the moment a later batch's
+    commit publishes (everything written, manifest not yet in place)
+    reads the previous batch's complete state. A replay of the same landing
+    dir from a fresh checkpoint commits nothing and leaves the same
+    rows."""
+    from lambda_hive_spark.io import _normalize_timestamps
+
+    state_dir = str(tmp_path / "upsert-state")
+    state = os.path.join(state_dir, "state")
+    seen = []
+    publish = lakehouse._publish
+
+    def probe(target, entry):
+        if target.startswith(os.path.join(state, "")) and lakehouse.current_version(state):
+            seen.append(_rows(lakehouse.read(spark, state).select("user_id", "event_id", "value")))
+        return publish(target, entry)
+
+    monkeypatch.setattr(lakehouse, "_publish", probe)
+    stream = core.events_stream(spark, arrival_dirs, max_files_per_trigger=1)
+    plans.run_upsert(stream, state_dir)
+    files = sorted(glob.glob(os.path.join(arrival_dirs, "*.parquet")))
+    arrived = [_normalize_timestamps(spark.read.parquet(*files[:n])) for n in (1, 2)]
+    assert seen == [_latest_rows(df) for df in arrived]
+
+    head, final = lakehouse.current_version(state), _rows(lakehouse.read(spark, state))
+    shutil.rmtree(os.path.join(state_dir, "ckpt"))
+    plans.run_upsert(core.events_stream(spark, arrival_dirs, max_files_per_trigger=1), state_dir)
+    assert lakehouse.current_version(state) == head
+    assert _rows(lakehouse.read(spark, state)) == final
+
+
+def test_upsert_cost_follows_batch_keys(spark, tmp_path, monkeypatch):
+    """Two batches against a state of 800 users on eight key-clustered
+    files: each batch's lookup reads only the files plan_files admits
+    for its key range, and the second commit carries every file
+    outside that range by reference, same path and same deletion
+    vector."""
+    state_dir = str(tmp_path / "upsert-state")
+    state = os.path.join(state_dir, "state")
+    t0 = F.timestamp_micros(F.lit(1_700_000_000_000_000))
+    seed = spark.range(800).select(
+        F.col("id").alias("user_id"), F.col("id").alias("event_id"),
+        F.lit(0.0).alias("value"), t0.alias("ts"),
+    )
+    lakehouse.create(spark, state, seed.repartitionByRange(8, "user_id"), key="user_id")
+    assert len(lakehouse.read_manifest(state)["files"]) == 8
+    land = str(tmp_path / "landing")
+    for b, lo in ((1, 10), (2, 410)):
+        part = str(tmp_path / f"batch{b}")
+        spark.range(lo, lo + 5).select(
+            F.col("id").alias("user_id"), (F.col("id") + 1000 * b).alias("event_id"),
+            F.lit(float(b)).alias("value"), (t0 + F.expr(f"INTERVAL {b} HOURS")).alias("ts"),
+        ).repartition(1).write.parquet(part)
+        os.makedirs(land, exist_ok=True)
+        dst = os.path.join(land, f"batch-{b}.parquet")
+        shutil.copy(glob.glob(os.path.join(part, "*.parquet"))[0], dst)
+        _stamp_arrival(dst, b)
+
+    scan, lookups = lakehouse.scan, []
+
+    def spy(sess, path, **kw):
+        df = scan(sess, path, **kw)
+        admitted = lakehouse.plan_files(path, key_min=kw["key_min"], key_max=kw["key_max"])
+        read = {lakehouse._plain_path(u) for u in df.inputFiles()}
+        lookups.append((kw["key_min"], kw["key_max"], read, {f["path"] for f in admitted}))
+        return df
+
+    monkeypatch.setattr(lakehouse, "scan", spy)
+    plans.run_upsert(core.events_stream(spark, land, max_files_per_trigger=1), state_dir)
+    assert [(lo, hi) for lo, hi, _, _ in lookups] == [(10, 14), (410, 414)]
+    for _, _, read, admitted in lookups:
+        assert read == admitted and len(admitted) == 1
+
+    before, after = (lakehouse.read_manifest(state, v)["files"] for v in (2, 3))
+    assert lakehouse.read_manifest(state, 3)["action"] == "merge_dv"
+    outside = [f for f in before if f["max_key"] < 410 or f["min_key"] > 414]
+    assert len(outside) == len(before) - 1  # all but the seed file holding 410..414
+    assert any(f.get("dv") for f in outside)  # batch 1's deletions ride along
+    assert all(f in after for f in outside)
+    got = {r["user_id"]: r["value"] for r in lakehouse.read(spark, state).collect()}
+    assert len(got) == 800
+    assert {u for u, v in got.items() if v} == {*range(10, 15), *range(410, 415)}
 
 
 def test_stateful_rate_soak_state_bounded_and_recoverable(spark, tmp_path):

@@ -15,9 +15,8 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-import duckdb
-
 import __spark_entry__ as e
+from lambda_hive_spark.testing import duck_connection
 from pyspark.sql import SparkSession
 
 SF = sys.argv[1]
@@ -30,11 +29,7 @@ spark = (
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 )
-con = duckdb.connect()
-con.execute("SET TimeZone='UTC'")
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+con = duck_connection(SF)
 
 qs, os_ = e.queries(), e.oracle_sql()
 result = {}

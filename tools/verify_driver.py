@@ -9,10 +9,9 @@ import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-import duckdb
-
 import __spark_entry__ as e
 from lambda_hive_spark.scratch import named
+from lambda_hive_spark.testing import duck_connection
 from pyspark.sql import SparkSession
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -29,11 +28,7 @@ if _tz:  # hostile-driver-session probe: ops must pin UTC themselves
     _builder = _builder.config("spark.sql.session.timeZone", _tz)
 spark = _builder.getOrCreate()
 assert len(e.entry(spark).collect()) > 0  # t1
-con = duckdb.connect()
-con.execute("SET TimeZone='UTC'")
-for t in ["region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings"]:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+con = duck_connection(SF)
 qs, os_ = e.queries(), e.oracle_sql()
 if ONLY:
     qs = {n: f for n, f in qs.items() if n in ONLY}
